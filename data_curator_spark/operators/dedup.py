@@ -655,9 +655,11 @@ def connected_components(
     touched-vertex set, not the corpus. ``max_iter`` is a guard, and
     non-convergence raises rather than returning a partially
     propagated labeling. Pass a dict as ``stats`` to receive
-    ``rounds`` (iterations run) and ``peak_checkpoint_rdds`` (max
-    simultaneously-held checkpoint RDDs — the recycling invariant a
-    100x scale-up depends on; tests pin both).
+    ``driver_solve`` (True when the small-graph driver fast path
+    solved it, False for the distributed loop), ``rounds`` (iterations
+    run) and ``peak_checkpoint_rdds`` (max simultaneously-held
+    checkpoint RDDs — the recycling invariant a 100x scale-up depends
+    on; tests pin both).
 
     Scale notes: the edge table (near-dup PAIRS) is orders of magnitude
     smaller than the corpus, and the loop iterates ONLY over
@@ -759,6 +761,7 @@ def connected_components(
             else:
                 parent[ra] = rb
         if stats is not None:
+            stats["driver_solve"] = True
             stats["rounds"] = 0
             stats["peak_checkpoint_rdds"] = 0
         from pyspark.sql.types import StructField, StructType
@@ -798,6 +801,8 @@ def connected_components(
     prev_ids: set[int] = set()
 
     converged = False
+    if stats is not None:
+        stats["driver_solve"] = False
     for it in range(max_iter):
         prop = (
             edges.join(labels.withColumnRenamed("id", "src"), on="src")

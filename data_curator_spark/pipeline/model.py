@@ -29,6 +29,7 @@ against it deliberately, not via import luck.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import lru_cache
 
 import numpy as np
 
@@ -145,8 +146,18 @@ def _training_text(lang: str, rng: np.random.Generator) -> list[str]:
     return docs
 
 
+def _frozen(a: np.ndarray) -> np.ndarray:
+    # builders are memoized, so every caller shares one instance: a
+    # read-only array makes an accidental in-place edit raise
+    a.setflags(write=False)
+    return a
+
+
+@lru_cache(maxsize=None)
 def build_langid_model(seed: int = 7) -> LangIdModel:
-    """Train the NB trigram model on deterministic synthetic text."""
+    """Train the NB trigram model on deterministic synthetic text. A pure
+    function of ``seed``, memoized so a pipeline run does not retrain it
+    on the driver."""
     from data_curator_spark.pipeline.corpus import LANGS
 
     counts = np.ones((N_BUCKETS, len(LANGS)), dtype=np.float64)  # add-one
@@ -158,11 +169,13 @@ def build_langid_model(seed: int = 7) -> LangIdModel:
         np.add.at(counts[:, li], buckets, 1.0)
     weights = np.log(counts / counts.sum(axis=0, keepdims=True)).astype(np.float32)
     priors = np.zeros(len(LANGS), dtype=np.float32)
-    return LangIdModel(langs=LANGS, weights=weights, priors=priors)
+    return LangIdModel(langs=LANGS, weights=_frozen(weights), priors=_frozen(priors))
 
 
+@lru_cache(maxsize=None)
 def build_bigram_lm(seed: int = 11) -> BigramLM:
-    """Train the char-bigram LM on the union of all languages' clean text."""
+    """Train the char-bigram LM on the union of all languages' clean
+    text. Memoized like ``build_langid_model``."""
     from data_curator_spark.pipeline.corpus import LANGS
 
     counts = np.full(N_BUCKETS, 0.5, dtype=np.float64)
@@ -173,4 +186,4 @@ def build_bigram_lm(seed: int = 11) -> BigramLM:
         buckets, _ = _ngram_buckets(codes, lens, 2)
         np.add.at(counts, buckets, 1.0)
     logp = (np.log2(counts) - np.log2(counts.sum())).astype(np.float32)
-    return BigramLM(logp=logp)
+    return BigramLM(logp=_frozen(logp))

@@ -39,21 +39,23 @@ from __future__ import annotations
 
 import shutil
 import time
-import uuid
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_curator_spark.pipeline.runner import (
+    _PLAN_COLS,
     OUTPUT_COLS,
     _entries_path,
-    _latest_manifest_rows,
     _snapshots_path,
     attach_lineage_observation,
     commit_bucket_metrics,
-    completed_buckets,
+    commit_snapshot,
+    latest_entries,
+    latest_per_bucket,
     latest_snapshot_id,
+    new_run_id,
     with_bucket,
 )
 from data_curator_spark.pipeline.stages import run_stages
@@ -125,17 +127,43 @@ def _selection_predicate(pairs: list[tuple[str, int]]):
     return pred
 
 
+def _append_run(
+    spark: SparkSession, result: DataFrame, run_id: str, output_path: str
+) -> DataFrame:
+    """IMMUTABLE write: append ``result`` under this run's partition —
+    never touches other runs' files, so no overwrite mode gymnastics and
+    no torn reads for concurrent manifest-resolved readers. Returns the
+    run's files read back with the written schema (no inference job)."""
+    out = result.withColumn("run_id", F.lit(run_id))
+    (
+        out.sortWithinPartitions("bucket", "repo", "path")
+        .write.partitionBy("run_id", "bucket")
+        .mode("append")
+        .parquet(output_path)
+    )
+    return spark.read.schema(out.schema).parquet(output_path).filter(F.col("run_id") == run_id)
+
+
+def _pairs(latest: dict) -> list[tuple[str, int]]:
+    """A manifest plan (latest entry per bucket) as (run_id, bucket)."""
+    return [(e["run_id"], b) for b, e in sorted(latest.items())]
+
+
 def _current_pairs(spark: SparkSession, manifest_path: str) -> list[tuple[str, int]]:
-    rows = _latest_manifest_rows(spark, manifest_path).select("run_id", "bucket").collect()
-    return [(r["run_id"], int(r["bucket"])) for r in rows]
+    return _pairs(latest_entries(spark, manifest_path))
+
+
+def _read_selection(
+    spark: SparkSession, output_path: str, pairs: list[tuple[str, int]]
+) -> DataFrame:
+    df = _read_data(spark, output_path, pairs)
+    return df.filter(_selection_predicate(pairs)) if pairs else df.limit(0)
 
 
 def read_current(spark: SparkSession, output_path: str, manifest_path: str) -> DataFrame:
     """The table's CURRENT state: latest committed version of every
     bucket, resolved from the manifest, partition-pruned scan."""
-    pairs = _current_pairs(spark, manifest_path)
-    df = _read_data(spark, output_path, pairs)
-    return df.filter(_selection_predicate(pairs)) if pairs else df.limit(0)
+    return _read_selection(spark, output_path, _current_pairs(spark, manifest_path))
 
 
 def _pairs_as_of(
@@ -153,25 +181,14 @@ def _pairs_as_of(
         _read_manifest(spark, _entries_path(manifest_path))
         .filter((F.col("status") == "done") & (F.col("committed_at") <= cutoff))
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("bucket").orderBy(F.desc("committed_at"), F.desc("run_id"))
-    rows = (
-        m.withColumn("__rn", F.row_number().over(w))
-        .filter("__rn = 1")
-        .select("run_id", "bucket")
-        .collect()
-    )
-    return [(r["run_id"], int(r["bucket"])) for r in rows]
+    return _pairs(latest_per_bucket(m.select(*_PLAN_COLS).collect()))
 
 
 def read_snapshot(
     spark: SparkSession, output_path: str, manifest_path: str, snapshot_id: str
 ) -> DataFrame:
     """Time travel: the table as of ``snapshot_id``."""
-    pairs = _pairs_as_of(spark, manifest_path, snapshot_id)
-    df = _read_data(spark, output_path, pairs)
-    return df.filter(_selection_predicate(pairs)) if pairs else df.limit(0)
+    return _read_selection(spark, output_path, _pairs_as_of(spark, manifest_path, snapshot_id))
 
 
 def snapshot_diff(
@@ -253,57 +270,34 @@ def compact(
     — and the manifest commit reuses the same observe-gated integrity
     path as a normal run.
     """
-    # "r" prefix: a bare hex id like "8463e2231577" parses as a DOUBLE
-    # in scientific notation, and when EVERY run_id= directory name is
-    # number-parseable, partition-type inference flips the column to
-    # DOUBLE and string comparisons throw under ANSI (observed flake)
-    run_id = "r" + uuid.uuid4().hex[:11]
+    run_id = new_run_id()
     t0 = time.time()
-    pairs = _current_pairs(spark, manifest_path)
-    if not pairs:
+    latest = latest_entries(spark, manifest_path)
+    if not latest:
         raise ValueError("compact: empty manifest — nothing to compact")
     parent_snapshot = latest_snapshot_id(spark, manifest_path)
+    pairs = _pairs(latest)
     runs_before = sorted({r for r, _ in pairs})
-    buckets = sorted({b for _, b in pairs})
+    buckets = sorted(latest)
 
-    current = read_current(spark, output_path, manifest_path).drop("run_id")
+    current = _read_selection(spark, output_path, pairs).drop("run_id")
     result = current.select("bucket", *[c for c in OUTPUT_COLS if c in current.columns])
     observation, result = attach_lineage_observation(result, run_id)
-    (
-        result.withColumn("run_id", F.lit(run_id))
-        .sortWithinPartitions("bucket", "repo", "path")
-        .write.partitionBy("run_id", "bucket")
-        .mode("append")
-        .parquet(output_path)
+    written = _append_run(spark, result, run_id, output_path)
+    committed = commit_bucket_metrics(
+        spark, observation, written, buckets, run_id, t0, manifest_path
     )
-    written = spark.read.parquet(output_path).filter(F.col("run_id") == run_id)
-    commit_bucket_metrics(spark, observation, written, buckets, run_id, t0, manifest_path)
-
-    totals = (
-        _latest_manifest_rows(spark, manifest_path)
-        .agg(F.sum("rows").alias("rows"), F.sum("kept").alias("kept"))
-        .collect()[0]
+    totals = commit_snapshot(
+        spark, manifest_path, run_id, parent_snapshot, "compact", len(buckets), 0,
+        latest_per_bucket([*latest.values(), *committed]),
     )
-    snapshot = spark.createDataFrame(
-        [
-            (
-                run_id, parent_snapshot, "compact", len(buckets), 0,
-                int(totals["rows"] or 0), int(totals["kept"] or 0),
-                float(time.time()),
-            )
-        ],
-        "snapshot_id string, parent_snapshot_id string, operation string, "
-        "buckets_processed int, buckets_skipped int, rows_total long, "
-        "rows_kept long, committed_at double",
-    )
-    snapshot.write.mode("append").parquet(_snapshots_path(manifest_path))
     return {
         "run_id": run_id,
         "snapshot_id": run_id,
         "operation": "compact",
         "runs_compacted": len(runs_before),
         "buckets": len(buckets),
-        "rows_total": int(totals["rows"] or 0),
+        "rows_total": totals["rows_total"],
         "elapsed_sec": time.time() - t0,
     }
 
@@ -489,18 +483,16 @@ def run_pipeline_mvcc(
     under this run's id (their old versions stay time-travelable).
     ``crash_before_commit`` (tests) raises after the data write but
     before the manifest commit — the run directory becomes an orphan
-    that readers never see and ``vacuum`` removes.
+    that readers never see and ``vacuum`` removes; a no-op run writes
+    nothing and so never raises.
     """
-    # "r" prefix: a bare hex id like "8463e2231577" parses as a DOUBLE
-    # in scientific notation, and when EVERY run_id= directory name is
-    # number-parseable, partition-type inference flips the column to
-    # DOUBLE and string comparisons throw under ANSI (observed flake)
-    run_id = "r" + uuid.uuid4().hex[:11]
+    run_id = new_run_id()
     t0 = time.time()
 
     raw = with_bucket(spark.read.parquet(input_path), n_buckets)
     parent_snapshot = latest_snapshot_id(spark, manifest_path)
-    done = set(completed_buckets(spark, manifest_path))
+    latest = latest_entries(spark, manifest_path)
+    done = set(latest)
     redo = set(reprocess_buckets or ())
     skip = (done - redo) | set(fail_buckets or ())
     if repo_min_keep_bp is not None and skip:
@@ -514,70 +506,36 @@ def run_pipeline_mvcc(
             "run: this invocation skips committed buckets, so the "
             "per-repo rollup would see a biased subset"
         )
-    todo = raw.filter(~F.col("bucket").isin(list(skip))) if skip else raw
+    new_buckets = sorted(set(range(n_buckets)) - skip)
 
-    result = run_stages(
-        todo, spark, near_dup=near_dup, bench_hashes=bench_hashes,
-        span_dedup_bp=span_dedup_bp, cdc_dup_bp=cdc_dup_bp,
-        repo_min_keep_bp=repo_min_keep_bp,
-    ).select("bucket", *OUTPUT_COLS)
-    observation, result = attach_lineage_observation(result, run_id)
-    # IMMUTABLE write: append under this run's partition — never touches
-    # other runs' files, so no overwrite mode gymnastics and no torn
-    # reads for concurrent manifest-resolved readers
-    (
-        result.withColumn("run_id", F.lit(run_id))
-        .sortWithinPartitions("bucket", "repo", "path")
-        .write.partitionBy("run_id", "bucket")
-        .mode("append")
-        .parquet(output_path)
-    )
+    # no-op re-submit: no stage chain, no write, no entries append
+    if new_buckets:
+        todo = raw.filter(~F.col("bucket").isin(list(skip))) if skip else raw
+        result = run_stages(
+            todo, spark, near_dup=near_dup, bench_hashes=bench_hashes,
+            span_dedup_bp=span_dedup_bp, cdc_dup_bp=cdc_dup_bp,
+            repo_min_keep_bp=repo_min_keep_bp,
+        ).select("bucket", *OUTPUT_COLS)
+        observation, result = attach_lineage_observation(result, run_id)
+        written_new = _append_run(spark, result, run_id, output_path)
+        if crash_before_commit:
+            raise RuntimeError(f"injected crash after write, before commit (run {run_id})")
+        committed = commit_bucket_metrics(
+            spark, observation, written_new, new_buckets, run_id, t0, manifest_path
+        )
+        latest = latest_per_bucket([*latest.values(), *committed])
 
-    if crash_before_commit:
-        raise RuntimeError(f"injected crash after write, before commit (run {run_id})")
-
-    new_buckets = sorted(
-        (set(range(n_buckets)) - skip) if skip else set(range(n_buckets))
-    )
-    written_new = spark.read.parquet(output_path).filter(
-        (F.col("run_id") == run_id) & F.col("bucket").isin(new_buckets)
-    )
-    commit_bucket_metrics(
-        spark, observation, written_new, new_buckets, run_id, t0, manifest_path
-    )
-
-    totals = (
-        _latest_manifest_rows(spark, manifest_path)
-        .agg(F.sum("rows").alias("rows"), F.sum("kept").alias("kept"))
-        .collect()[0]
-    )
     operation = "append" if not done else ("backfill" if redo else "append-resume")
-    snapshot = spark.createDataFrame(
-        [
-            (
-                run_id,
-                parent_snapshot,
-                operation,
-                len(new_buckets),
-                len(skip),
-                int(totals["rows"] or 0),
-                int(totals["kept"] or 0),
-                float(time.time()),
-            )
-        ],
-        "snapshot_id string, parent_snapshot_id string, operation string, "
-        "buckets_processed int, buckets_skipped int, rows_total long, "
-        "rows_kept long, committed_at double",
+    totals = commit_snapshot(
+        spark, manifest_path, run_id, parent_snapshot, operation,
+        len(new_buckets), len(skip), latest,
     )
-    snapshot.write.mode("append").parquet(_snapshots_path(manifest_path))
-
     return {
         "run_id": run_id,
         "snapshot_id": run_id,
         "operation": operation,
         "buckets_processed": len(new_buckets),
         "buckets_skipped": len(skip),
-        "rows_total": int(totals["rows"] or 0),
-        "rows_kept": int(totals["kept"] or 0),
+        **totals,
         "elapsed_sec": time.time() - t0,
     }

@@ -257,6 +257,7 @@ def test_connected_components_deep_chain_logarithmic(spark):
 
     d = n - 1
     bound = 2 * math.log2(d) + 3
+    assert stats["driver_solve"] is False
     assert stats["rounds"] <= bound, (stats, bound)
     assert stats["peak_checkpoint_rdds"] <= 4, stats
 
@@ -645,7 +646,8 @@ def test_connected_components_driver_solve_matches_loop(spark):
     connected_components(
         verts, pairs, "doc_id", stats=stats_fast
     ).collect()
-    assert stats_fast["rounds"] == 0  # proves the fast path actually ran
+    assert stats_fast["driver_solve"] is True  # the fast path actually ran
+    assert stats_fast["rounds"] == 0
 
 
 def test_minhash_arrow_matches_expression_path(spark):

@@ -501,3 +501,158 @@ def test_repo_demotion_refuses_partial_runs(spark, corpus_path, tmp_path):
             spark, corpus_path, out_dir, manifest, n_buckets=8,
             repo_min_keep_bp=2500,
         )
+
+
+def _files_under(path: str) -> list[str]:
+    import os
+
+    return sorted(
+        os.path.relpath(os.path.join(d, f), path)
+        for d, _, names in os.walk(path)
+        for f in names
+    )
+
+
+def test_lifecycle_job_counts_and_noop_resubmit(spark, corpus_path, tmp_path):
+    """The manifest is planned on the driver: a 16-bucket crash →
+    resume → re-submit runs a pinned number of Spark jobs per call, and
+    the no-op re-submit runs no stage chain — it writes no output or
+    entries file and commits exactly one snapshot row."""
+    import uuid
+
+    out_dir = str(tmp_path / "out")
+    manifest = str(tmp_path / "manifest")
+    sc = spark.sparkContext
+    tag = uuid.uuid4().hex[:8]
+
+    def run(step, **kw):
+        group = f"lifecycle-{tag}-{step}"
+        sc.setJobGroup(group, step, True)
+        try:
+            res = run_pipeline(spark, corpus_path, out_dir, manifest, n_buckets=16, **kw)
+            return res, len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setJobGroup("", "", False)
+
+    crash, n_crash = run("crash", fail_buckets=set(range(0, 16, 2)))
+    resume, n_resume = run("resume")
+    out_before = _files_under(out_dir)
+    entries_before = _files_under(f"{manifest}/entries")
+    snaps_before = spark.read.parquet(f"{manifest}/snapshots").count()
+    resub, n_resub = run("resubmit")
+
+    assert (crash["buckets_processed"], resume["buckets_processed"]) == (8, 8)
+    assert resub["buckets_processed"] == 0 and resub["buckets_skipped"] == 16
+    assert (resub["rows_total"], resub["rows_kept"]) == (
+        resume["rows_total"], resume["rows_kept"]
+    )
+    assert resume["rows_total"] == spark.read.parquet(corpus_path).count()
+    assert (n_crash, n_resume, n_resub) == (6, 8, 4)
+    assert n_crash + n_resume + n_resub <= 22 and n_resub <= 5
+    assert _files_under(out_dir) == out_before
+    assert _files_under(f"{manifest}/entries") == entries_before
+    snaps = spark.read.parquet(f"{manifest}/snapshots")
+    assert snaps.count() == snaps_before + 1
+    noop = snaps.filter(F.col("snapshot_id") == resub["run_id"]).collect()[0]
+    assert (noop["operation"], noop["parent_snapshot_id"]) == ("append-resume", resume["run_id"])
+
+
+_LATEST_SQL = """
+    SELECT bucket, run_id, rows, kept FROM (
+        SELECT *, row_number() OVER (
+            PARTITION BY bucket ORDER BY committed_at DESC, run_id DESC
+        ) AS rn
+        FROM manifest_entries WHERE status = 'done'
+    ) WHERE rn = 1
+"""
+
+
+def _sql_latest(spark, manifest: str) -> dict:
+    """The manifest's latest-row-per-bucket rule, as the SQL window it
+    replaced."""
+    spark.read.parquet(f"{manifest}/entries").createOrReplaceTempView("manifest_entries")
+    return {
+        int(r["bucket"]): (r["run_id"], r["rows"], r["kept"])
+        for r in spark.sql(_LATEST_SQL).collect()
+    }
+
+
+def _assert_plan_matches_sql(spark, manifest: str, result: dict) -> dict:
+    from data_curator_spark.pipeline.runner import completed_buckets, latest_entries
+
+    want = _sql_latest(spark, manifest)
+    got = {b: (e["run_id"], e["rows"], e["kept"]) for b, e in latest_entries(spark, manifest).items()}
+    assert got == want
+    assert completed_buckets(spark, manifest) == sorted(want)
+    assert result["rows_total"] == sum(r for _, r, _ in want.values())
+    assert result["rows_kept"] == sum(k for _, _, k in want.values())
+    return want
+
+
+def test_manifest_plan_tie_break_parity_runner(spark, corpus_path, tmp_path):
+    """The driver-side latest-entry reduction, and the run totals built
+    from it, equal the row_number() window rule on a hand-built manifest
+    with a rewritten bucket, a committed_at tie broken by run_id, and
+    non-'done' rows — on a no-op re-submit and on a run that merges
+    freshly committed entries into the plan."""
+    from data_curator_spark.pipeline.runner import ENTRIES_SCHEMA
+
+    out_dir = str(tmp_path / "out")
+    manifest = str(tmp_path / "manifest")
+    rows = [
+        # (run_id, bucket, rows, kept, status, committed_at)
+        ("ra", 0, 10, 7, "done", 100.0),
+        ("rz", 0, 99, 99, "failed", 900.0),  # newer, but not done
+        ("ra", 1, 11, 5, "done", 100.0),
+        ("rb", 1, 12, 6, "done", 200.0),  # bucket 1 rewritten
+        ("rd", 2, 14, 3, "done", 300.0),  # tie on committed_at:
+        ("rc", 2, 13, 4, "done", 300.0),  # run_id desc picks rd
+        ("ra", 3, 15, 9, "done", 100.0),
+    ]
+    spark.createDataFrame(
+        [(r, b, n, k, n - k, 0, s, 1.0, t) for r, b, n, k, s, t in rows], ENTRIES_SCHEMA
+    ).write.parquet(f"{manifest}/entries")
+
+    noop = run_pipeline(spark, corpus_path, out_dir, manifest, n_buckets=4)
+    assert (noop["buckets_processed"], noop["buckets_skipped"]) == (0, 4)
+    want = _assert_plan_matches_sql(spark, manifest, noop)
+    assert {b: r for b, (r, _, _) in want.items()} == {0: "ra", 1: "rb", 2: "rd", 3: "ra"}
+
+    grown = run_pipeline(spark, corpus_path, out_dir, manifest, n_buckets=5)
+    assert (grown["buckets_processed"], grown["buckets_skipped"]) == (1, 4)
+    want = _assert_plan_matches_sql(spark, manifest, grown)
+    assert want[4][0] == grown["run_id"]
+
+
+def test_manifest_plan_tie_break_parity_mvcc_backfill(spark, corpus_path, tmp_path):
+    """Same parity for the MVCC layout: a backfill (reprocess_buckets)
+    over a manifest holding committed_at ties on two buckets — one won
+    by a higher run_id, one lost by a lower one. Totals and the
+    reader's (run_id, bucket) selection follow the window rule."""
+    from data_curator_spark.pipeline.mvcc import _current_pairs, run_pipeline_mvcc
+    from data_curator_spark.pipeline.runner import ENTRIES_SCHEMA
+
+    out_dir = str(tmp_path / "out")
+    manifest = str(tmp_path / "manifest")
+    r1 = run_pipeline_mvcc(spark, corpus_path, out_dir, manifest, n_buckets=4)
+    at = {
+        int(r["bucket"]): r["committed_at"]
+        for r in spark.read.parquet(f"{manifest}/entries").collect()
+    }
+    spark.createDataFrame(
+        [
+            ("r" + "f" * 11, 1, 5, 2, 3, 0, "done", 1.0, at[1]),  # wins the tie
+            ("r" + "0" * 11, 2, 6, 1, 5, 0, "done", 1.0, at[2]),  # loses it
+        ],
+        ENTRIES_SCHEMA,
+    ).write.mode("append").parquet(f"{manifest}/entries")
+
+    r2 = run_pipeline_mvcc(
+        spark, corpus_path, out_dir, manifest, n_buckets=4, reprocess_buckets={0}
+    )
+    assert r2["operation"] == "backfill" and r2["buckets_processed"] == 1
+    want = _assert_plan_matches_sql(spark, manifest, r2)
+    assert {b: r for b, (r, _, _) in want.items()} == {
+        0: r2["run_id"], 1: "r" + "f" * 11, 2: r1["run_id"], 3: r1["run_id"],
+    }
+    assert _current_pairs(spark, manifest) == [(want[b][0], b) for b in sorted(want)]
