@@ -172,16 +172,17 @@ def main(argv: list[str] | None = None) -> int:
 
     def _mvcc_guard(fn):
         # a fresh table has no manifest yet; surface a clear message
-        # instead of a raw AnalysisException stack (ADVICE r3). Scope:
-        # only an AnalysisException that actually names the MANIFEST
-        # path is a missing-manifest — a missing/corrupt DATA path (or
-        # any other analysis error) must surface as itself, not
+        # instead of a raw stack (ADVICE r3). Scope: only a missing-path
+        # error (Spark's AnalysisException, or FileNotFoundError from the
+        # driver-side Arrow manifest reads) that actually names the
+        # MANIFEST path is a missing-manifest — a missing/corrupt DATA
+        # path (or any other analysis error) must surface as itself, not
         # misdirect the operator at the manifest (review r4)
         from pyspark.errors import AnalysisException
 
         try:
             return fn(), 0
-        except AnalysisException as e:
+        except (AnalysisException, FileNotFoundError) as e:
             if args.manifest and args.manifest in str(e):
                 print(
                     f"no manifest found under {args.manifest!r} — run the "

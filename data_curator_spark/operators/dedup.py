@@ -744,8 +744,14 @@ def connected_components(
                 parent[x], x = root, parent[x]
             return root
 
-        for row in edges.collect():
-            a, b = row[0], row[1]
+        # both directions go through Arrow: up to cap edge Rows and 2·cap
+        # label tuples through the row-wise collect/createDataFrame paths
+        # would cost seconds and ~10x the memory near the cap (string ids)
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        collected = edges.toArrow()
+        for a, b in zip(collected["src"].to_pylist(), collected["dst"].to_pylist()):
             if a is None or b is None:
                 # a null endpoint joins nothing in the distributed
                 # rounds (SQL null semantics), so it carries no
@@ -764,16 +770,15 @@ def connected_components(
             stats["driver_solve"] = True
             stats["rounds"] = 0
             stats["peak_checkpoint_rdds"] = 0
-        from pyspark.sql.types import StructField, StructType
-
+        arrow_type = to_arrow_type(id_type)
+        ids = list(parent)
         labels = spark.createDataFrame(
-            [(x, find(x)) for x in parent],
-            StructType(
-                [
-                    StructField("id", id_type, True),
-                    StructField("label", id_type, True),
-                ]
-            ),
+            pa.table(
+                {
+                    "id": pa.array(ids, arrow_type),
+                    "label": pa.array([find(x) for x in ids], arrow_type),
+                }
+            )
         )
         return _cc_attach_labels(identity, labels, id_col, n_edges)
     # iterate ONLY over pair-touched vertices: at corpus scale the

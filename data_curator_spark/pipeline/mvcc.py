@@ -37,17 +37,21 @@ with history until vacuum/expiry, the same trade Iceberg makes.
 
 from __future__ import annotations
 
+import os
 import shutil
 import time
 
-from pyspark.errors import AnalysisException
+import pyarrow as pa
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_curator_spark.pipeline.runner import (
-    _PLAN_COLS,
+    ENTRIES_ARROW,
     OUTPUT_COLS,
+    SNAPSHOTS_ARROW,
     _entries_path,
+    _recover_swap,
     _snapshots_path,
     attach_lineage_observation,
     commit_bucket_metrics,
@@ -55,31 +59,13 @@ from data_curator_spark.pipeline.runner import (
     latest_entries,
     latest_per_bucket,
     latest_snapshot_id,
+    local_path,
     new_run_id,
+    read_manifest,
     with_bucket,
+    write_manifest_file,
 )
 from data_curator_spark.pipeline.stages import run_stages
-
-
-def _recover_swap(path: str) -> None:
-    """Crash recovery for ``_swap_rewrite``: a crash between its two
-    renames leaves the table ABSENT at ``path`` with only
-    ``<path>__old`` on disk. Rename the old table back into place so
-    every reader — and a retried expire — proceeds automatically
-    instead of raising AnalysisException until a human intervenes."""
-    import os
-
-    local = path[len("file:"):] if path.startswith("file:") else path
-    old = f"{local}__old"
-    if not os.path.exists(local) and os.path.isdir(old):
-        os.rename(old, local)
-
-
-def _read_manifest(spark: SparkSession, path: str) -> DataFrame:
-    """All manifest reads funnel through here so a crashed swap-rewrite
-    self-heals before the read (see _recover_swap)."""
-    _recover_swap(path)
-    return spark.read.parquet(path)
 
 
 def _read_data(
@@ -172,16 +158,14 @@ def _pairs_as_of(
     """The (run_id, bucket) selection as of ``snapshot_id`` — entries
     committed after that snapshot are invisible, so buckets rewritten
     since then resolve to the version the snapshot saw."""
-    snaps = _read_manifest(spark, _snapshots_path(manifest_path))
-    snap = snaps.filter(F.col("snapshot_id") == snapshot_id).collect()
-    if not snap:
-        raise ValueError(f"unknown snapshot_id {snapshot_id!r}")
-    cutoff = snap[0]["committed_at"]
-    m = (
-        _read_manifest(spark, _entries_path(manifest_path))
-        .filter((F.col("status") == "done") & (F.col("committed_at") <= cutoff))
+    snap = read_manifest(
+        _snapshots_path(manifest_path), SNAPSHOTS_ARROW, ["committed_at"],
+        ds.field("snapshot_id") == snapshot_id,
     )
-    return _pairs(latest_per_bucket(m.select(*_PLAN_COLS).collect()))
+    if not snap.num_rows:
+        raise ValueError(f"unknown snapshot_id {snapshot_id!r}")
+    cutoff = snap["committed_at"][0].as_py()
+    return _pairs(latest_entries(spark, manifest_path, committed_by=cutoff))
 
 
 def read_snapshot(
@@ -285,10 +269,10 @@ def compact(
     observation, result = attach_lineage_observation(result, run_id)
     written = _append_run(spark, result, run_id, output_path)
     committed = commit_bucket_metrics(
-        spark, observation, written, buckets, run_id, t0, manifest_path
+        observation, written, buckets, run_id, t0, manifest_path
     )
     totals = commit_snapshot(
-        spark, manifest_path, run_id, parent_snapshot, "compact", len(buckets), 0,
+        manifest_path, run_id, parent_snapshot, "compact", len(buckets), 0,
         latest_per_bucket([*latest.values(), *committed]),
     )
     return {
@@ -302,24 +286,22 @@ def compact(
     }
 
 
-def _swap_rewrite(spark: SparkSession, rows: list, schema, path: str) -> None:
+def _swap_rewrite(table: pa.Table, path: str) -> None:
     """Rewrite a (driver-small) manifest table via write-to-temp + rename
-    swap instead of mode('overwrite')'s delete-then-write — a crash mid-
+    swap instead of a delete-then-write overwrite — a crash mid-
     overwrite would leave NO manifest at all, while a crash between the
     two renames here leaves the old table recoverable at ``<path>__old``.
     On an object store this becomes the catalog's conditional metadata
     swap (the same contract real Iceberg gets from its catalog)."""
-    import os
-
     # a previous crash between the two renames leaves only <path>__old;
     # restore it first so the rewrite starts from a consistent table
     _recover_swap(path)
-    local = path[len("file:"):] if path.startswith("file:") else path
+    local = local_path(path)
     tmp, old = f"{local}__tmp", f"{local}__old"
     for stale in (tmp, old):
         if os.path.isdir(stale):
             shutil.rmtree(stale)
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(tmp)
+    write_manifest_file(tmp, table)
     os.rename(local, old)
     os.rename(tmp, local)
     shutil.rmtree(old)
@@ -345,32 +327,31 @@ def expire_snapshots(
     is either in (a) or coincides with (b).
 
     Both manifest tables are driver-small by design (runs × buckets
-    rows), so the rewrite collects and re-creates them; on an object
-    store this becomes a conditional metadata swap.
+    rows), so the rewrite reads and re-writes them with Arrow on the
+    driver; on an object store this becomes a conditional metadata swap.
     """
-    snaps_df = _read_manifest(spark, _snapshots_path(manifest_path))
-    snaps = snaps_df.collect()
     if keep_last < 1:
         raise ValueError("expire_snapshots: keep_last must be >= 1")
-    snaps_sorted = sorted(snaps, key=lambda r: (r["committed_at"], r["snapshot_id"]))
-    kept, expired = snaps_sorted[-keep_last:], snaps_sorted[:-keep_last]
-    if not expired:
+    snaps = read_manifest(_snapshots_path(manifest_path), SNAPSHOTS_ARROW).sort_by(
+        [("committed_at", "ascending"), ("snapshot_id", "ascending")]
+    )
+    n_expired = max(snaps.num_rows - keep_last, 0)
+    if not n_expired:
         return {"expired_snapshots": [], "removed_runs": []}
-    oldest_kept = kept[0]
+    oldest_kept = snaps.slice(n_expired, 1).to_pylist()[0]
     keep_pairs = set(_pairs_as_of(spark, manifest_path, oldest_kept["snapshot_id"]))
 
-    entries_df = _read_manifest(spark, _entries_path(manifest_path))
-    entries = entries_df.collect()
-    live_entries = [
-        r
-        for r in entries
+    entries = read_manifest(_entries_path(manifest_path), ENTRIES_ARROW)
+    entry_rows = entries.to_pylist()
+    live = [
+        i
+        for i, r in enumerate(entry_rows)
         if r["committed_at"] > oldest_kept["committed_at"]
         or (r["run_id"], int(r["bucket"])) in keep_pairs
     ]
-    # schemas come from the tables as READ (never a hardcoded copy —
-    # a manifest column added later must survive expiry untouched)
-    entry_fields = entries_df.schema.fieldNames()
-    snap_fields = snaps_df.schema.fieldNames()
+    # both tables are rewritten with the schemas they were READ with
+    # (never a hardcoded copy — a manifest column added later must
+    # survive expiry untouched)
     # snapshots rewrite FIRST: a crash between the two rewrites then
     # fails SAFE — the expired snapshot ids are already gone (readers
     # get 'unknown snapshot_id', never a silently-partial time travel),
@@ -378,27 +359,15 @@ def expire_snapshots(
     # surviving snapshot's per-bucket winner is unchanged by older rows.
     # The reverse order would leave expired snapshots readable over
     # already-pruned entries = silently empty/wrong content.
-    _swap_rewrite(
-        spark,
-        [tuple(r[f] for f in snap_fields) for r in kept],
-        snaps_df.schema,
-        _snapshots_path(manifest_path),
-    )
-    _swap_rewrite(
-        spark,
-        [tuple(r[f] for f in entry_fields) for r in live_entries],
-        entries_df.schema,
-        _entries_path(manifest_path),
-    )
+    _swap_rewrite(snaps.slice(n_expired), _snapshots_path(manifest_path))
+    _swap_rewrite(entries.take(live), _entries_path(manifest_path))
 
     # reclaim EXACTLY the runs this expiry unreferenced (was-referenced
     # minus still-referenced) — never a blanket orphan sweep, so an
     # in-flight writer's written-but-uncommitted run directory is safe
-    import os
-
-    was_referenced = {r["run_id"] for r in entries}
-    still_referenced = {r["run_id"] for r in live_entries}
-    root = output_path[len("file:"):] if output_path.startswith("file:") else output_path
+    was_referenced = {r["run_id"] for r in entry_rows}
+    still_referenced = {entry_rows[i]["run_id"] for i in live}
+    root = local_path(output_path)
     removed: list[str] = []
     for run_id in sorted(was_referenced - still_referenced):
         full = os.path.join(root, f"run_id={run_id}")
@@ -406,7 +375,7 @@ def expire_snapshots(
             shutil.rmtree(full)
             removed.append(run_id)
     return {
-        "expired_snapshots": [r["snapshot_id"] for r in expired],
+        "expired_snapshots": snaps["snapshot_id"].slice(0, n_expired).to_pylist(),
         "removed_runs": removed,
     }
 
@@ -430,24 +399,19 @@ def vacuum(
     than the threshold — far longer than any write→commit gap — are
     eligible. Pass 0 only when no writer can be running (tests,
     single-writer maintenance windows)."""
-    import os
-
     try:
-        referenced = {
-            r["run_id"]
-            for r in _read_manifest(spark, _entries_path(manifest_path))
-            .select("run_id")
-            .distinct()
-            .collect()
-        }
-    except AnalysisException:  # no manifest yet: everything is orphan-free
+        referenced = set(
+            read_manifest(_entries_path(manifest_path), ENTRIES_ARROW, ["run_id"])
+            .column("run_id").to_pylist()
+        )
+    except FileNotFoundError:  # no manifest yet: everything is orphan-free
         referenced = set()
     # any OTHER failure (corrupt footer, transient FS/Py4J error,
     # permissions) must ABORT the vacuum: proceeding with an empty
     # referenced set would make every committed run look unreferenced
     # and delete live data from a cleanup command
     removed: list[str] = []
-    root = output_path[len("file:"):] if output_path.startswith("file:") else output_path
+    root = local_path(output_path)
     if not os.path.isdir(root):
         return removed
     now = time.time()
@@ -521,13 +485,13 @@ def run_pipeline_mvcc(
         if crash_before_commit:
             raise RuntimeError(f"injected crash after write, before commit (run {run_id})")
         committed = commit_bucket_metrics(
-            spark, observation, written_new, new_buckets, run_id, t0, manifest_path
+            observation, written_new, new_buckets, run_id, t0, manifest_path
         )
         latest = latest_per_bucket([*latest.values(), *committed])
 
     operation = "append" if not done else ("backfill" if redo else "append-resume")
     totals = commit_snapshot(
-        spark, manifest_path, run_id, parent_snapshot, operation,
+        manifest_path, run_id, parent_snapshot, operation,
         len(new_buckets), len(skip), latest,
     )
     return {

@@ -11,12 +11,17 @@ Scale design (north_rule):
   holds ``entries/`` (one row per completed bucket with counts/timings —
   Iceberg's manifest-entry role) and ``snapshots/`` (one row per run
   with parent-snapshot linkage and summary counts — Iceberg's snapshot
-  log role). A restart reads entries, anti-joins completed buckets, and
+  log role). A restart reads entries, skips completed buckets, and
   only processes the remainder — the distributed rewrite of the
   reference's per-identifier log-and-continue loop
-  (data_curator.py:177-213). Real Iceberg catalog jars are absent in
-  this sandbox (install attempt recorded in BASELINE.md); the layout
-  mirrors Iceberg's metadata architecture so swapping in
+  (data_curator.py:177-213). As Iceberg commits metadata files through
+  its FileIO, the DRIVER commits every manifest append with Arrow: one
+  parquet file written under a hidden ``.part-<uuid>.parquet`` name and
+  atomically renamed into view, so no Spark job reads or writes the
+  manifest and a crash before the rename leaves only a file every
+  reader skips. Real Iceberg catalog jars are absent in this sandbox
+  (install attempt recorded in BASELINE.md); the layout mirrors
+  Iceberg's metadata architecture so swapping in
   ``writeTo(...).append()`` + the real snapshot log is a sink change,
   not a redesign.
 - **Idempotent bucket rewrites**: output parquet is partitioned by
@@ -24,24 +29,28 @@ Scale design (north_rule):
   was written but not committed to the manifest (crash in the gap) is
   simply REPLACED on resume — no duplicate rows, no cleanup pass.
 - **Manifest planned on the driver**: as Iceberg plans from its
-  manifest list, a run reads ``entries/`` with ONE narrow collect of at
-  most ``n_buckets × runs`` rows and reduces it on the driver to the
-  latest entry per bucket: the completed buckets, the MVCC selection
-  and the run totals. Per-bucket metrics come from a partition-pruned
-  read of ONLY the just-written buckets, so a resume at 100 TB never
-  re-reads completed output. A no-op re-submit commits only a
-  snapshot row.
+  manifest list, a run reads ``entries/`` once with Arrow on the driver
+  (the ``status = 'done'`` filter pushed into the scan, at most
+  ``n_buckets × runs`` rows) and reduces it to the latest entry per
+  bucket: the completed buckets, the MVCC selection and the run totals.
+  Per-bucket metrics come from a partition-pruned read of ONLY the
+  just-written buckets, so a resume at 100 TB never re-reads completed
+  output. A no-op re-submit runs no Spark job beyond the input's
+  schema read and commits only a snapshot row.
 """
 
 from __future__ import annotations
 
+import os
 import time
 import uuid
 from collections.abc import Iterable
 from typing import Any
 
-from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, Observation, Row, SparkSession
+import pyarrow as pa
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from data_curator_spark.pipeline.stages import run_stages
@@ -81,7 +90,24 @@ SNAPSHOTS_SCHEMA = (
     "rows_kept long, committed_at double"
 )
 # the narrow entry columns the driver-side plan needs
-_PLAN_COLS = ("bucket", "committed_at", "run_id", "rows", "kept")
+_PLAN_COLS = ["bucket", "committed_at", "run_id", "rows", "kept"]
+
+_ARROW_TYPES = {
+    "string": pa.string(), "int": pa.int32(), "bigint": pa.int64(),
+    "long": pa.int64(), "double": pa.float64(),
+}
+
+
+def _arrow_schema(ddl: str) -> pa.Schema:
+    """The Arrow twin of a flat ``name type, ...`` DDL string, so each
+    manifest schema is declared once."""
+    return pa.schema(
+        [(name, _ARROW_TYPES[typ]) for name, typ in (f.split() for f in ddl.split(","))]
+    )
+
+
+ENTRIES_ARROW = _arrow_schema(ENTRIES_SCHEMA)
+SNAPSHOTS_ARROW = _arrow_schema(SNAPSHOTS_SCHEMA)
 
 
 def new_run_id() -> str:
@@ -98,6 +124,52 @@ def _entries_path(manifest_root: str) -> str:
 
 def _snapshots_path(manifest_root: str) -> str:
     return f"{manifest_root}/snapshots"
+
+
+def local_path(path: str) -> str:
+    """The driver-visible filesystem path behind a ``file:`` URI — the
+    manifest is read and committed with driver file I/O."""
+    return path[len("file:"):] if path.startswith("file:") else path
+
+
+def _recover_swap(path: str) -> None:
+    """Crash recovery for mvcc's ``_swap_rewrite``: a crash between its
+    two renames leaves the table ABSENT at ``path`` with only
+    ``<path>__old`` on disk. Rename the old table back into place so
+    every reader — and a retried expire — proceeds automatically
+    instead of failing until a human intervenes."""
+    local = local_path(path)
+    old = f"{local}__old"
+    if not os.path.exists(local) and os.path.isdir(old):
+        os.rename(old, local)
+
+
+def read_manifest(
+    path: str, schema: pa.Schema, columns: list[str] | None = None, filter=None
+) -> pa.Table:
+    """Read one manifest table on the driver with Arrow — no Spark job.
+    A crashed swap-rewrite is healed first. Hidden ``.part-*`` files
+    (an append that died before its rename) are skipped, as Spark skips
+    them. ``schema`` leads; a column a later writer added to some files
+    follows it, null where absent, so a rewrite of the table as read
+    keeps it. Raises FileNotFoundError while the table does not exist."""
+    _recover_swap(path)
+    files = ds.dataset(local_path(path), format="parquet")
+    full = pa.unify_schemas([schema, *(f.physical_schema for f in files.get_fragments())])
+    return files.replace_schema(full).to_table(columns=columns, filter=filter)
+
+
+def write_manifest_file(path: str, table: pa.Table) -> None:
+    """Commit ``table`` as ONE new parquet file of the manifest table at
+    ``path`` (Iceberg's FileIO commit of a metadata file): written under
+    a hidden ``.part-<uuid>.parquet`` name, then atomically renamed into
+    view, so a reader sees the whole file or none of it."""
+    local = local_path(path)
+    os.makedirs(local, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    hidden = os.path.join(local, f".{name}")
+    pq.write_table(table, hidden)
+    os.replace(hidden, os.path.join(local, name))
 
 
 def latest_per_bucket(entries: Iterable) -> dict[int, Any]:
@@ -118,18 +190,22 @@ def latest_per_bucket(entries: Iterable) -> dict[int, Any]:
     return latest
 
 
-def latest_entries(spark: SparkSession, manifest_root: str) -> dict[int, Any]:
-    """Plan the manifest on the driver: ONE read of ``entries/`` that
-    collects the narrow columns of the 'done' rows (≤ n_buckets × runs)
-    and reduces them to the latest entry per bucket. The explicit schema
-    skips the schema-inference job."""
+def latest_entries(
+    spark: SparkSession, manifest_root: str, committed_by: float | None = None
+) -> dict[int, Any]:
+    """Plan the manifest on the driver: ONE Arrow read of ``entries/``
+    that scans the narrow columns of the 'done' rows (≤ n_buckets × runs)
+    and reduces them to the latest entry per bucket. ``committed_by``
+    hides entries committed after that time (time travel). ``spark`` is
+    unused; callers keep one signature for every manifest helper."""
+    done = ds.field("status") == "done"
+    if committed_by is not None:
+        done &= ds.field("committed_at") <= committed_by
     try:
-        m = spark.read.schema(ENTRIES_SCHEMA).parquet(_entries_path(manifest_root))
-    except AnalysisException:  # first run: no manifest yet
+        m = read_manifest(_entries_path(manifest_root), ENTRIES_ARROW, _PLAN_COLS, done)
+    except FileNotFoundError:  # first run: no manifest yet
         return {}
-    return latest_per_bucket(
-        m.filter(F.col("status") == "done").select(*_PLAN_COLS).collect()
-    )
+    return latest_per_bucket(m.to_pylist())
 
 
 def completed_buckets(spark: SparkSession, manifest_root: str) -> list[int]:
@@ -139,18 +215,20 @@ def completed_buckets(spark: SparkSession, manifest_root: str) -> list[int]:
 def latest_snapshot_id(spark: SparkSession, manifest_root: str) -> str | None:
     """Most recent snapshot id, or None on a fresh manifest — the parent
     pointer for the next run's snapshot row (Iceberg snapshot-log
-    analog)."""
+    analog). Order: ``committed_at`` desc, then ``snapshot_id`` desc."""
     try:
-        s = spark.read.schema(SNAPSHOTS_SCHEMA).parquet(_snapshots_path(manifest_root))
-    except AnalysisException:
+        s = read_manifest(
+            _snapshots_path(manifest_root), SNAPSHOTS_ARROW, ["committed_at", "snapshot_id"]
+        ).to_pydict()
+    except FileNotFoundError:
         return None
-    rows = s.orderBy(F.desc("committed_at"), F.desc("snapshot_id")).limit(1).collect()
-    return rows[0]["snapshot_id"] if rows else None
+    return max(zip(s["committed_at"], s["snapshot_id"]), default=(None, None))[1]
 
 
 def snapshot_lineage(spark: SparkSession, manifest_root: str) -> DataFrame:
     """The snapshot chain (snapshot_id, parent_snapshot_id, operation,
-    summary counts, committed_at) — Iceberg's snapshot history analog."""
+    summary counts, committed_at) — Iceberg's snapshot history analog,
+    as a Spark DataFrame for the CLI."""
     return spark.read.schema(SNAPSHOTS_SCHEMA).parquet(_snapshots_path(manifest_root))
 
 
@@ -170,14 +248,13 @@ def attach_lineage_observation(result: DataFrame, run_id: str):
 
 
 def commit_bucket_metrics(
-    spark: SparkSession,
     observation: Observation,
     written_new: DataFrame,
     new_buckets: list[int],
     run_id: str,
     t0: float,
     manifest_path: str,
-) -> list[Row]:
+) -> list[dict]:
     """Per-bucket lineage rows from ONE pruned aggregation over the
     just-written output, gated on the write-pass observation, appended
     to the manifest. Returns the appended entries, so the caller merges
@@ -212,21 +289,21 @@ def commit_bucket_metrics(
     now = time.time()
     counts = ("rows", "kept", "dropped", "scrubbed")
     entries = [
-        Row(
+        dict(
             run_id=run_id, bucket=int(b),
             **{c: int(by_bucket[b][c] or 0) if b in by_bucket else 0 for c in counts},
             status="done", elapsed_sec=float(now - t0), committed_at=float(now),
         )
         for b in new_buckets
     ]
-    spark.createDataFrame(entries, ENTRIES_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(_entries_path(manifest_path))
+    write_manifest_file(
+        _entries_path(manifest_path), pa.Table.from_pylist(entries, ENTRIES_ARROW)
+    )
     return entries
 
 
 def commit_snapshot(
-    spark: SparkSession, manifest_path: str, snapshot_id: str,
+    manifest_path: str, snapshot_id: str,
     parent_snapshot_id: str | None, operation: str,
     buckets_processed: int, buckets_skipped: int, latest: dict[int, Any],
 ) -> dict[str, int]:
@@ -238,13 +315,14 @@ def commit_snapshot(
         "rows_total": sum(int(e["rows"] or 0) for e in latest.values()),
         "rows_kept": sum(int(e["kept"] or 0) for e in latest.values()),
     }
-    row = (
-        snapshot_id, parent_snapshot_id, operation, buckets_processed,
-        buckets_skipped, totals["rows_total"], totals["rows_kept"], time.time(),
+    row = dict(
+        snapshot_id=snapshot_id, parent_snapshot_id=parent_snapshot_id,
+        operation=operation, buckets_processed=buckets_processed,
+        buckets_skipped=buckets_skipped, **totals, committed_at=time.time(),
     )
-    spark.createDataFrame([row], SNAPSHOTS_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(_snapshots_path(manifest_path))
+    write_manifest_file(
+        _snapshots_path(manifest_path), pa.Table.from_pylist([row], SNAPSHOTS_ARROW)
+    )
     return totals
 
 
@@ -343,12 +421,12 @@ def run_pipeline(
             F.col("bucket").isin(new_buckets)
         )
         committed = commit_bucket_metrics(
-            spark, observation, written_new, new_buckets, run_id, t0, manifest_path
+            observation, written_new, new_buckets, run_id, t0, manifest_path
         )
         latest = latest_per_bucket([*latest.values(), *committed])
 
     totals = commit_snapshot(
-        spark, manifest_path, run_id, parent_snapshot,
+        manifest_path, run_id, parent_snapshot,
         "append" if not done else "append-resume",
         len(new_buckets), len(done), latest,
     )

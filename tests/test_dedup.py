@@ -650,6 +650,34 @@ def test_connected_components_driver_solve_matches_loop(spark):
     assert stats_fast["rounds"] == 0
 
 
+def test_connected_components_driver_solve_matches_loop_long_ids(spark):
+    """The same fast-path parity on long ids, whose labels frame must
+    come back as LongType through the Arrow table."""
+    from pyspark.sql.types import LongType
+
+    from data_curator_spark.operators.dedup import connected_components
+
+    big = 1 << 40  # beyond int32: a narrowing cast would corrupt it
+    verts = spark.createDataFrame([(i,) for i in range(20)] + [(big,)], "doc_id long")
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (7, 8), (10, 11), (11, 12), (10, 12),
+         (15, 99), (16, 99), (18, None), (5, big)],
+        "id_a long, id_b long",
+    )
+
+    def run(cap):
+        out = connected_components(verts, pairs, "doc_id", driver_solve_edge_cap=cap)
+        assert out.schema["cluster_id"].dataType == LongType()
+        return sorted(tuple(r) for r in out.collect())
+
+    fast = run(1_000_000)
+    assert fast == run(0)
+    assert (big, 5, False) in fast
+    stats_fast: dict = {}
+    connected_components(verts, pairs, "doc_id", stats=stats_fast).collect()
+    assert stats_fast["driver_solve"] is True
+
+
 def test_minhash_arrow_matches_expression_path(spark):
     """The Arrow mapInPandas signature kernel must be bit-identical to
     the JVM expression pipeline — same tokenization (trim = 0x20 only,

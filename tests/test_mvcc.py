@@ -298,11 +298,11 @@ def test_expire_crash_between_rewrites_fails_safe(spark, corpus, tmp_path, monke
     real = mvcc_mod._swap_rewrite
     calls = {"n": 0}
 
-    def crash_on_second(spark_, rows, schema, path):
+    def crash_on_second(*args):
         calls["n"] += 1
         if calls["n"] == 2:
             raise RuntimeError("injected crash between manifest rewrites")
-        return real(spark_, rows, schema, path)
+        return real(*args)
 
     monkeypatch.setattr(mvcc_mod, "_swap_rewrite", crash_on_second)
     with pytest.raises(RuntimeError, match="injected crash"):
@@ -319,6 +319,36 @@ def test_expire_crash_between_rewrites_fails_safe(spark, corpus, tmp_path, monke
     assert read_snapshot(spark, out, man, r2["snapshot_id"]).count() == len(
         read_current(spark, out, man).collect()
     )
+
+
+def test_expire_keeps_a_later_manifest_column(spark, corpus, tmp_path):
+    """Expiry rewrites each manifest table with the schema it was read
+    with: a column that only a later writer's files carry survives,
+    null on the rows written before it."""
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_curator_spark.pipeline.mvcc import expire_snapshots
+    from data_curator_spark.pipeline.runner import ENTRIES_ARROW, write_manifest_file
+
+    out = str(tmp_path / "out")
+    man = str(tmp_path / "man")
+    r1 = run_pipeline_mvcc(spark, corpus, out, man, n_buckets=2, fail_buckets={1})
+    run_pipeline_mvcc(spark, corpus, out, man, n_buckets=2)
+    # a non-'done' row changes no bucket's winner; newer than every
+    # snapshot, it is kept by expiry
+    later = ENTRIES_ARROW.append(pa.field("note", pa.string()))
+    write_manifest_file(f"{man}/entries", pa.Table.from_pylist([dict(
+        run_id="rlater", bucket=0, rows=0, kept=0, dropped=0, scrubbed=0,
+        status="failed", elapsed_sec=0.0, committed_at=time.time(), note="later",
+    )], later))
+
+    assert expire_snapshots(spark, out, man, keep_last=1)["expired_snapshots"] == [r1["run_id"]]
+    entries = pq.read_table(f"{man}/entries").to_pylist()
+    assert {e["run_id"]: e["note"] for e in entries if e["note"]} == {"rlater": "later"}
+    assert len(entries) == 3
 
 
 def test_swap_rewrite_crash_recovery(spark, corpus, tmp_path):

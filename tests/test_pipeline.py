@@ -514,10 +514,10 @@ def _files_under(path: str) -> list[str]:
 
 
 def test_lifecycle_job_counts_and_noop_resubmit(spark, corpus_path, tmp_path):
-    """The manifest is planned on the driver: a 16-bucket crash →
-    resume → re-submit runs a pinned number of Spark jobs per call, and
-    the no-op re-submit runs no stage chain — it writes no output or
-    entries file and commits exactly one snapshot row."""
+    """The manifest is planned and committed on the driver: a 16-bucket
+    crash → resume → re-submit runs a pinned number of Spark jobs per
+    call, and the no-op re-submit runs no stage chain — it writes no
+    output or entries file and commits exactly one snapshot row."""
     import uuid
 
     out_dir = str(tmp_path / "out")
@@ -547,14 +547,62 @@ def test_lifecycle_job_counts_and_noop_resubmit(spark, corpus_path, tmp_path):
         resume["rows_total"], resume["rows_kept"]
     )
     assert resume["rows_total"] == spark.read.parquet(corpus_path).count()
-    assert (n_crash, n_resume, n_resub) == (6, 8, 4)
-    assert n_crash + n_resume + n_resub <= 22 and n_resub <= 5
+    # no Spark job reads or writes the manifest: what is left is the
+    # input's schema read, the write and the two-stage per-bucket
+    # aggregation; the no-op re-submit runs only the schema read
+    assert (n_crash, n_resume, n_resub) == (4, 4, 1)
+    assert n_crash + n_resume + n_resub <= 9 and n_resub <= 1
     assert _files_under(out_dir) == out_before
     assert _files_under(f"{manifest}/entries") == entries_before
     snaps = spark.read.parquet(f"{manifest}/snapshots")
     assert snaps.count() == snaps_before + 1
     noop = snaps.filter(F.col("snapshot_id") == resub["run_id"]).collect()[0]
     assert (noop["operation"], noop["parent_snapshot_id"]) == ("append-resume", resume["run_id"])
+
+
+def test_manifest_ignores_uncommitted_files_and_keeps_ddl_types(spark, corpus_path, tmp_path):
+    """A crash between a manifest file's write and its rename leaves a
+    hidden ``.part-*.parquet`` file: every manifest reader and the next
+    run ignore it. The driver-written tables read back through Spark's
+    schema inference (tests, the CLI) and ``pq.read_table`` with the
+    DDL's column types."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from data_curator_spark.pipeline.runner import (
+        ENTRIES_SCHEMA, SNAPSHOTS_SCHEMA, completed_buckets, latest_entries,
+        latest_snapshot_id, snapshot_lineage,
+    )
+
+    out_dir = str(tmp_path / "out")
+    manifest = str(tmp_path / "manifest")
+    r1 = run_pipeline(spark, corpus_path, out_dir, manifest, n_buckets=4, fail_buckets={3})
+    for table in ("entries", "snapshots"):
+        with open(os.path.join(manifest, table, ".part-crashed.parquet"), "wb") as fh:
+            fh.write(b"garbage bytes: written, never renamed")
+
+    assert completed_buckets(spark, manifest) == [0, 1, 2]
+    assert {e["run_id"] for e in latest_entries(spark, manifest).values()} == {r1["run_id"]}
+    assert latest_snapshot_id(spark, manifest) == r1["run_id"]
+    assert [r["snapshot_id"] for r in snapshot_lineage(spark, manifest).collect()] == [r1["run_id"]]
+
+    r2 = run_pipeline(spark, corpus_path, out_dir, manifest, n_buckets=4)
+    assert (r2["buckets_processed"], r2["buckets_skipped"]) == (1, 3)
+    assert r2["rows_total"] == spark.read.parquet(corpus_path).count()
+    assert latest_snapshot_id(spark, manifest) == r2["run_id"]
+    assert pq.read_table(f"{manifest}/snapshots").num_rows == 2
+
+    for table, ddl in (("entries", ENTRIES_SCHEMA), ("snapshots", SNAPSHOTS_SCHEMA)):
+        inferred = spark.read.parquet(f"{manifest}/{table}").schema
+        declared = spark.createDataFrame([], ddl).schema
+        assert [(f.name, f.dataType) for f in inferred] == [
+            (f.name, f.dataType) for f in declared
+        ]
+    assert sorted(
+        n for t in ("entries", "snapshots") for n in os.listdir(os.path.join(manifest, t))
+        if n.startswith(".part-")
+    ) == [".part-crashed.parquet"] * 2
 
 
 _LATEST_SQL = """
