@@ -31,57 +31,20 @@ portable to any engine.
 from __future__ import annotations
 
 import math
+from collections import Counter
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_curator_spark.engine.cache import persist_tracked
-from data_curator_spark.operators.dedup import hex_prefix_long, size_gated_broadcast
+from data_curator_spark.operators.dedup import size_gated_broadcast
+from data_curator_spark.operators.kernels import map_docs, md5_60
 from data_curator_spark.operators.lm import LP_SCALE_BITS, VOCAB_BROADCAST_CAP
 
 NB_DEFAULT_BUCKETS = 32768
 NB_DEFAULT_GRAM = 3
-
-
-def char_gram_buckets(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    gram_len: int = NB_DEFAULT_GRAM,
-    n_buckets: int = NB_DEFAULT_BUCKETS,
-    extra_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Explode documents into hashed character ``gram_len``-gram
-    feature rows: (id, [extra_cols...,] bucket) — one row per gram
-    occurrence. Docs shorter than ``gram_len`` chars emit nothing.
-    Bucket = 60-bit md5 prefix of the gram, mod ``n_buckets`` —
-    engine-portable. A stateless projection + explode; the char-gram
-    positions are generated JVM-side (no Python)."""
-    if gram_len < 1:
-        raise ValueError(f"gram_len must be >= 1, got {gram_len}")
-    if n_buckets < 2:
-        raise ValueError(f"n_buckets must be >= 2, got {n_buckets}")
-    g = F.explode(
-        F.transform(
-            F.sequence(F.lit(1), F.length(text_col) - gram_len + 1),
-            lambda i: F.substring(F.col(text_col), i, F.lit(gram_len)),
-        )
-    )
-    return (
-        df.filter(
-            F.col(text_col).isNotNull()
-            & (F.length(text_col) >= gram_len)
-        )
-        .select(F.col(id_col), *[F.col(c) for c in extra_cols], g.alias("g"))
-        .select(
-            id_col,
-            *extra_cols,
-            F.pmod(hex_prefix_long(F.col("g"), 15), F.lit(n_buckets)).alias(
-                "bucket"
-            ),
-        )
-    )
 
 
 @dataclass(frozen=True)
@@ -106,101 +69,33 @@ def _doc_feats(
     label_cols: tuple[str, ...],
     gram_len: int,
     n_buckets: int,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Per-doc hashed-gram counts: (id, [labels...,] bucket, cnt) —
-    ONE corpus pass.
+    ONE ``map_docs`` corpus pass. Docs shorter than ``gram_len`` chars
+    emit nothing.
 
-    ``use_arrow=True`` (default) computes the per-doc bucket Counters
-    in one Arrow-batched mapInPandas pass: the grouping key is the
-    document, so no explode and no gram shuffle exist at all, and a
-    bounded per-worker memo hashes each DISTINCT char gram once
-    (corpus trigram vocabularies repeat massively across docs — the
-    JVM path re-hashed every occurrence). Bucket ids are bit-identical:
-    int(md5(gram)[:15], 16) % n_buckets == pmod(hex_prefix_long(g, 15),
-    n_buckets) for the non-negative 60-bit prefix, and Python slicing
-    matches Spark substring on code points. Expression path retained
-    under ``use_arrow=False``; differential test in
-    tests/test_classifier.py pins the two identical."""
+    The grouping key is the document, so no explode and no gram
+    shuffle exist at all, and the core's bounded memo hashes each
+    DISTINCT char gram once (corpus trigram vocabularies repeat
+    massively across docs). The bucket of a gram is
+    ``md5_60(gram) % n_buckets`` == ``pmod(hex_prefix_long(gram, 15),
+    n_buckets)`` for the non-negative 60-bit prefix — engine-portable;
+    Python slicing matches Spark ``substring`` on code points."""
     if gram_len < 1:
         raise ValueError(f"gram_len must be >= 1, got {gram_len}")
     if n_buckets < 2:
         raise ValueError(f"n_buckets must be >= 2, got {n_buckets}")
-    if use_arrow:
-        import numpy as np
-        import pandas as pd  # noqa: F401
 
-        id_type = df.schema[id_col].dataType.simpleString()
-        label_types = [
-            (c, df.schema[c].dataType.simpleString()) for c in label_cols
-        ]
-        schema = ", ".join(
-            [f"{id_col} {id_type}"]
-            + [f"{c} {t}" for c, t in label_types]
-            + ["bucket long", "cnt long"]
+    def per_doc(txt):
+        return list(
+            Counter(
+                md5_60(txt[i : i + gram_len]) % n_buckets
+                for i in range(len(txt) - gram_len + 1)
+            ).items()
         )
 
-        def gen(batches):
-            import hashlib
-            from collections import Counter
-
-            import pandas as pd
-
-            memo: dict[str, int] = {}
-
-            def gb(g: str) -> int:
-                b = memo.get(g)
-                if b is None:
-                    if len(memo) >= 500_000:  # bound worker memory
-                        memo.clear()
-                    b = (
-                        int(hashlib.md5(g.encode("utf-8")).hexdigest()[:15], 16)
-                        % n_buckets
-                    )
-                    memo[g] = b
-                return b
-
-            for pdf in batches:
-                out_id, out_b, out_c = [], [], []
-                out_labels: list[list] = [[] for _ in label_cols]
-                for row in zip(
-                    pdf[id_col], *[pdf[c] for c in label_cols], pdf[text_col]
-                ):
-                    doc_id, labels, txt = row[0], row[1:-1], row[-1]
-                    if txt is None or len(txt) < gram_len:
-                        continue
-                    c = Counter(
-                        gb(txt[i : i + gram_len])
-                        for i in range(len(txt) - gram_len + 1)
-                    )
-                    for bucket, cnt in c.items():
-                        out_id.append(doc_id)
-                        for j, v in enumerate(labels):
-                            out_labels[j].append(v)
-                        out_b.append(bucket)
-                        out_c.append(cnt)
-                cols = {id_col: out_id}
-                for j, (name, _) in enumerate(label_types):
-                    cols[name] = out_labels[j]
-                cols["bucket"] = np.array(out_b, dtype=np.int64)
-                cols["cnt"] = np.array(out_c, dtype=np.int64)
-                yield pd.DataFrame(cols)
-
-        return df.select(
-            F.col(id_col), *[F.col(c) for c in label_cols], F.col(text_col)
-        ).mapInPandas(gen, schema)
-    return (
-        char_gram_buckets(
-            df,
-            id_col,
-            text_col,
-            gram_len=gram_len,
-            n_buckets=n_buckets,
-            extra_cols=label_cols,
-        )
-        .groupBy(id_col, *label_cols, "bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    out = [("bucket", pa.int64()), ("cnt", pa.int64())]
+    return map_docs(df, text_col, per_doc, out, keep=(id_col, *label_cols))
 
 
 def _train_from_feats(

@@ -1,17 +1,16 @@
 """Deduplication operators for large-scale training-data pipelines.
 
 Hot paths are JVM-side built-ins (explode + hash + groupBy) or
-Arrow-batched mapInPandas kernels (minhash signatures, the (id, pos,
-hash) producers) — nothing runs row-at-a-time Python, and every Arrow
-kernel has a JVM expression twin pinned bit-identical by differential
-tests. Scale notes per operator inline — these are
-the dedup stages a 10^12-file corpus pipeline actually shuffles on, so
-shuffle keys and pre-aggregation are chosen to keep data movement
-minimal:
+per-document kernels on the Arrow core of operators/kernels.py
+(minhash signatures, the (id, pos, hash) producers) — nothing runs
+row-at-a-time Python through pandas. Scale notes per operator inline —
+these are the dedup stages a 10^12-file corpus pipeline actually
+shuffles on, so shuffle keys and pre-aggregation are chosen to keep
+data movement minimal:
 
 - exact: one shuffle on a 256-bit content hash (no content moves).
-- MinHash/LSH: per-doc signatures via explode + single groupBy (map-side
-  partial min), then candidate pairs via an ids-only band-bucket
+- MinHash/LSH: per-doc signatures in one Arrow pass with no shuffle,
+  then candidate pairs via an ids-only band-bucket
   self-join — the standard shingle→minhash→band→bucket-join pipeline;
   only ids + band keys shuffle through the self-join, signatures are
   re-attached once per side afterwards.
@@ -29,13 +28,20 @@ MinHash/SimHash results exactly (VERDICT round 1, next-round item #3).
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from data_curator_spark.engine.cache import persist_tracked
+from data_curator_spark.operators.kernels import (
+    P31,
+    WS_RE,
+    map_docs,
+    md5_60,
+    tokens,
+    word_grams,
+)
 
-WS_RE = "[ \\n\\t\\r]+"
-P31 = 2_147_483_647  # Mersenne prime 2^31 - 1: affine-hash modulus
 # connected_components broadcasts its (id, label) frames into the corpus
 # joins only below this row count (~2×8B×5M ≈ 80 MB serialized — well
 # inside executor memory); a pathological pair graph above it falls back
@@ -79,112 +85,70 @@ def hex_prefix_long(c: Column, n_hex: int) -> Column:
     return F.conv(F.substring(F.md5(c), 1, n_hex), 16, 10).cast("long")
 
 
-def _pos_hash_rows_arrow(
+def _pos_hash_rows(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    splitter,
-    gram_fn,
+    units,
     emit_first: bool = False,
 ) -> DataFrame:
-    """Arrow twin of the (id, pos, 60-bit-md5-prefix-hash) producers:
-    ONE mapInPandas pass emits one row per unit (segment / span window)
-    instead of materializing unit STRINGS through interpreted explode
-    expressions (guide §4.2). ``splitter(text) -> list[str] | None``
-    tokenizes one doc (None = doc emits nothing), ``gram_fn(units) ->
-    iterable[(pos, gram_string)]`` yields the hashable units with their
-    1- or 0-based positions (caller's contract). Hashing is the
-    module's portable 15-hex md5 prefix with a bounded per-worker memo
-    — parity with the expression path is pinned by differential
-    tests."""
-    import pandas as pd  # noqa: F401
+    """(id, pos int, h long) — one row per unit of every non-null doc,
+    in ONE ``map_docs`` pass instead of materializing unit STRINGS
+    through interpreted explode expressions (guide §4.2). ``units(text)
+    -> iterable[(pos, gram_string)]`` yields a doc's hashable units with
+    their positions (caller's contract); ``h`` is ``md5_60(gram)``, the
+    module's portable 60-bit md5 prefix.
 
-    id_type = df.schema[id_col].dataType.simpleString()
-    schema = f"{id_col} {id_type}, pos int, h long"
+    ``emit_first`` adds ``first`` = this row is its doc's first
+    occurrence of h, so a consumer that needs per-doc-DISTINCT hashes
+    (document-frequency counting) shares this one pass with a consumer
+    that needs every position. Distinctness is by hash: two segments of
+    one doc colliding on the 60-bit prefix count once."""
+    out = [("pos", pa.int32()), ("h", pa.int64())]
     if emit_first:
-        # ``first`` = this row is its doc's first occurrence of h —
-        # lets a consumer that needs per-doc-DISTINCT hashes (document-
-        # frequency counting) share this one pass with a consumer that
-        # needs every position, instead of a second explode+distinct
-        schema += ", first boolean"
+        out.append(("first", pa.bool_()))
 
-    def gen(batches):
-        import hashlib
+        def per_doc(txt):
+            seen: set[int] = set()
+            rows = []
+            for pos, g in units(txt):
+                h = md5_60(g)
+                rows.append((pos, h, h not in seen))
+                seen.add(h)
+            return rows
 
-        import pandas as pd
+    else:
 
-        memo: dict[str, int] = {}
+        def per_doc(txt):
+            return [(pos, md5_60(g)) for pos, g in units(txt)]
 
-        def gh(g: str) -> int:
-            h = memo.get(g)
-            if h is None:
-                if len(memo) >= 200_000:  # bound worker memory
-                    memo.clear()
-                h = int(hashlib.md5(g.encode("utf-8")).hexdigest()[:15], 16)
-                memo[g] = h
-            return h
+    return map_docs(df, text_col, per_doc, out, keep=(id_col,))
 
-        for pdf in batches:
-            ids, poss, hs = [], [], []
-            firsts: list[bool] = []
-            for doc_id, txt in zip(pdf[id_col], pdf[text_col]):
-                units = splitter(txt)
-                if units is None:
-                    continue
-                seen: set[int] = set()
-                for pos, g in gram_fn(units):
-                    h = gh(g)
-                    ids.append(doc_id)
-                    poss.append(pos)
-                    hs.append(h)
-                    if emit_first:
-                        firsts.append(h not in seen)
-                        seen.add(h)
-            cols = {
-                id_col: ids,
-                "pos": np.array(poss, dtype=np.int32),
-                "h": np.array(hs, dtype=np.int64),
-            }
-            if emit_first:
-                cols["first"] = np.array(firsts, dtype=bool)
-            yield pd.DataFrame(cols)
 
-    return df.select(F.col(id_col), F.col(text_col)).mapInPandas(gen, schema)
+def _shingle_hash_rows(
+    df: DataFrame, id_col: str, text_col: str, n: int
+) -> DataFrame:
+    """(id, h) for every per-doc-DISTINCT word ``n``-gram shingle:
+    ``hex_prefix_long`` over ``explode(word_shingles(text, n))``."""
+
+    def per_doc(txt):
+        return [(md5_60(g),) for g in set(word_grams(tokens(txt), n))]
+
+    return map_docs(df, text_col, per_doc, [("h", pa.int64())], keep=(id_col,))
 
 
 def word_shingle_strings_arrow(
     df: DataFrame, text_col: str, n: int
 ) -> DataFrame:
     """Per-doc-DISTINCT word ``n``-gram shingle STRINGS as one ``ngram``
-    column — Arrow twin of ``explode(word_shingles(...))`` for consumers
-    that need the strings themselves (corpus-wide boilerplate mining),
-    with the same tokenization-parity argument as the other Arrow
-    kernels (pinned by tests/test_dedup.py)."""
-    import re as _re
+    column — the multiset of ``explode(word_shingles(...))``, for
+    consumers that need the strings themselves (corpus-wide
+    boilerplate mining)."""
 
-    import pandas as pd  # noqa: F401
+    def per_doc(txt):
+        return [(g,) for g in set(word_grams(tokens(txt), n))]
 
-    ws_pat = WS_RE
-
-    def gen(batches):
-        import re
-
-        import pandas as pd
-
-        ws = re.compile(ws_pat)
-        for pdf in batches:
-            out: list[str] = []
-            for txt in pdf[text_col]:
-                if txt is None:
-                    continue
-                words = ws.split(txt.strip(" "))
-                m = len(words) - n + 1
-                if m < 1:
-                    continue
-                out.extend({" ".join(words[i : i + n]) for i in range(m)})
-            yield pd.DataFrame({"ngram": pd.Series(out, dtype="object")})
-
-    return df.select(F.col(text_col)).mapInPandas(gen, "ngram string")
+    return map_docs(df, text_col, per_doc, [("ngram", pa.string())])
 
 
 def minhash_params(k: int, seed: int = 42) -> list[tuple[int, int]]:
@@ -236,111 +200,36 @@ def minhash_signatures(
     k: int = 32,
     shingle_n: int = 3,
     seed: int = 42,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """k-permutation MinHash signatures: per doc, the k mins of affine
     permutations (mod 2^31−1) over md5-prefix hashes of its word
     ``shingle_n``-gram shingles.
 
-    Two bit-identical implementations (pinned against each other by
-    tests/test_dedup.py):
-
-    - ``use_arrow=True`` (default): ONE Arrow-batched ``mapInPandas``
-      pass — tokenize, hash and min-reduce per document inside the
-      batch with numpy for the k permutations and a per-worker memo of
-      gram→hash (shingle vocabularies repeat heavily across docs).
-      No explode, no shuffle at all: the measured JVM cost was not the
-      hashing but materializing ~50 shingle STRINGS per doc through
-      interpreted transform/slice/array_join expressions (guide §4.2 —
-      hand whole batches to vectorized native code).
-    - ``use_arrow=False``: the original expression pipeline — explode
-      distinct shingles, ONE md5 base hash per shingle, k affine
-      permutations, one groupBy computing the k mins (map-side partial
-      aggregation → one narrow shuffle of k×8B per doc).
-
-    Tokenization parity is exact: Spark's trim strips 0x20 only
-    (Python ``.strip(' ')``), and ``re.split`` on WS_RE matches Java
-    ``split`` with limit −1 (both keep leading/trailing empty fields).
-    Docs with null text or fewer than ``shingle_n`` words emit no row
-    in either path."""
+    ONE ``map_docs`` pass — tokenize, hash and min-reduce per document
+    inside the batch, with numpy for the k permutations and the core's
+    bounded gram→hash memo (shingle vocabularies repeat heavily across
+    docs). No explode, no shuffle at all: the measured JVM cost of the
+    expression pipeline (explode distinct shingles → md5 base hash →
+    k affine permutations → groupBy mins) was not the hashing but
+    materializing ~50 shingle STRINGS per doc through interpreted
+    transform/slice/array_join expressions (guide §4.2 — hand whole
+    batches to vectorized native code). The base hash of a shingle is
+    ``md5[:8] % P31``, as in the DuckDB oracle. Docs with null text or
+    fewer than ``shingle_n`` words emit no row."""
     params = minhash_params(k, seed)
-    if use_arrow:
-        import pandas as pd  # noqa: F401  (mapInPandas contract)
+    a_vec = np.array([a for a, _ in params], dtype=np.int64)[:, None]
+    b_vec = np.array([b for _, b in params], dtype=np.int64)[:, None]
 
-        id_type = df.schema[id_col].dataType.simpleString()
-        schema = ", ".join(
-            [f"{id_col} {id_type}"] + [f"mh_{i} long" for i in range(k)]
-        )
-        a_vec = np.array([a for a, _ in params], dtype=np.int64)
-        b_vec = np.array([b for _, b in params], dtype=np.int64)
+    def per_doc(txt):
+        grams = set(word_grams(tokens(txt), shingle_n))
+        if not grams:
+            return ()
+        xs = (np.fromiter(map(md5_60, grams), np.int64, len(grams)) >> 28) % P31
+        # (k, G) affine permutations, exact in int64: a·x + b < 2^62 + 2^31
+        return [tuple(((a_vec * xs + b_vec) % P31).min(axis=1).tolist())]
 
-        def gen(batches):
-            import hashlib
-            import re as _re
-
-            import pandas as pd
-
-            ws = _re.compile(WS_RE)
-            memo: dict[str, int] = {}
-
-            def gram_x(g: str) -> int:
-                x = memo.get(g)
-                if x is None:
-                    if len(memo) >= 200_000:  # bound worker memory
-                        memo.clear()
-                    x = (
-                        int(hashlib.md5(g.encode("utf-8")).hexdigest()[:8], 16)
-                        % P31
-                    )
-                    memo[g] = x
-                return x
-
-            for pdf in batches:
-                out_ids, out_sigs = [], []
-                for doc_id, txt in zip(pdf[id_col], pdf[content_col]):
-                    if txt is None:
-                        continue
-                    words = ws.split(txt.strip(" "))
-                    n_grams = len(words) - shingle_n + 1
-                    if n_grams < 1:
-                        continue
-                    xs = np.fromiter(
-                        {
-                            gram_x(" ".join(words[i : i + shingle_n]))
-                            for i in range(n_grams)
-                        },
-                        dtype=np.int64,
-                    )
-                    # (k, G) affine permutations, exact in int64:
-                    # a·x + b < 2^62 + 2^31
-                    sig = ((a_vec[:, None] * xs[None, :] + b_vec[:, None]) % P31).min(
-                        axis=1
-                    )
-                    out_ids.append(doc_id)
-                    out_sigs.append(sig)
-                cols = {id_col: out_ids}
-                sig_mat = (
-                    np.vstack(out_sigs)
-                    if out_sigs
-                    else np.empty((0, len(a_vec)), dtype=np.int64)
-                )
-                for i in range(len(a_vec)):
-                    cols[f"mh_{i}"] = sig_mat[:, i]
-                yield pd.DataFrame(cols)
-
-        return df.select(F.col(id_col), F.col(content_col)).mapInPandas(
-            gen, schema
-        )
-    sh = df.select(
-        F.col(id_col), F.explode(word_shingles(F.col(content_col), shingle_n)).alias("s")
-    )
-    x = (hex_prefix_long(F.col("s"), 8) % F.lit(P31)).alias("x")
-    hx = sh.select(F.col(id_col), x)
-    aggs = [
-        F.min((F.lit(a) * F.col("x") + F.lit(b)) % F.lit(P31)).alias(f"mh_{i}")
-        for i, (a, b) in enumerate(params)
-    ]
-    return hx.groupBy(id_col).agg(*aggs)
+    out = [(f"mh_{i}", pa.int64()) for i in range(k)]
+    return map_docs(df, content_col, per_doc, out, keep=(id_col,))
 
 
 def lsh_candidate_ids(
@@ -929,7 +818,6 @@ def contamination_overlap(
     shingle_n: int = 5,
     min_overlap: int = 1,
     broadcast_benchmark: bool = True,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination: corpus documents sharing at least
     ``min_overlap`` distinct word ``shingle_n``-gram shingles with ANY
@@ -947,44 +835,12 @@ def contamination_overlap(
     benchmark union → shuffle join); the corpus side never self-joins.
     countDistinct collapses map-side per doc."""
 
-    def grams(df: DataFrame) -> DataFrame:
-        if use_arrow:
-            # Arrow twin of explode(word_shingles)+hex_prefix_long:
-            # per-doc DISTINCT shingles hashed in one mapInPandas pass
-            # (same tokenization-parity argument as minhash_signatures;
-            # pinned by tests/test_dedup.py)
-            import re as _re
-
-            ws_re = _re.compile(WS_RE)
-
-            def _split(txt):
-                if txt is None:
-                    return None
-                words = ws_re.split(txt.strip(" "))
-                return words if len(words) >= shingle_n else None
-
-            def _units(words):
-                n = len(words) - shingle_n + 1
-                return (
-                    (0, g)
-                    for g in {
-                        " ".join(words[i : i + shingle_n]) for i in range(n)
-                    }
-                )
-
-            return _pos_hash_rows_arrow(
-                df, id_col, content_col, _split, _units
-            ).select(id_col, "h")
-        return df.select(
-            F.col(id_col),
-            F.explode(word_shingles(F.col(content_col), shingle_n)).alias("s"),
-        ).select(id_col, hex_prefix_long(F.col("s"), 15).alias("h"))
-
-    bench = grams(benchmark).select("h").distinct()
+    bench = _shingle_hash_rows(benchmark, id_col, content_col, shingle_n)
+    bench = bench.select("h").distinct()
     if broadcast_benchmark:
         bench = F.broadcast(bench)
     return (
-        grams(corpus)
+        _shingle_hash_rows(corpus, id_col, content_col, shingle_n)
         .join(bench, on="h")
         .groupBy(id_col)
         .agg(F.count_distinct("h").alias("n_overlap_grams"))
@@ -999,7 +855,6 @@ def strip_hot_segments(
     min_df: int,
     delimiter: str = "\n",
     out_col: str = "text_stripped",
-    use_arrow: bool = True,
 ) -> DataFrame:
     """EXECUTE boilerplate removal (the mining half is
     ``q_boilerplate_ngrams``): drop every text segment — line for code/
@@ -1015,22 +870,25 @@ def strip_hot_segments(
     empty string. Callers needing other columns join on ``id_col``
     (keeping the operator's own plan to a single text shuffle).
 
-    Scale shape: two phases. (1) DF counting shuffles only 8-byte
-    md5-prefix hashes of per-doc-DISTINCT segments — document text
-    never enters the exchange, and map-side partial counts collapse
-    the hot keys. (2) The strip is posexplode → LEFT join against the
+    Document frequency is per-doc-distinct by the 60-bit md5-prefix
+    HASH of a segment: a segment repeated 10^4 times inside one doc
+    counts once, and two distinct segments of one doc that collide on
+    the prefix (~2^-60 per pair) would also count once.
+
+    Scale shape: ONE Arrow pass emits (id, pos, hash, first-in-doc)
+    per segment and is persisted for both phases. (1) DF counting
+    shuffles only the 8-byte hashes of the first-in-doc rows — document
+    text never enters the exchange, and map-side partial counts
+    collapse the hot keys. (2) Joining the same rows against the
     (tiny: at most total_segments/min_df rows, in practice far fewer)
-    hot-hash table to flag hot segments → ONE groupBy(id) reassembly
-    that filters the flagged segments inside the aggregate — so the
-    full text shuffles exactly ONCE, partitioned by doc id, and the
-    original table is never re-joined (an earlier draft anti-joined
-    then left-joined back to the input, which shuffled the corpus text
-    a second time just to recover all-stripped/null docs). Null-text
-    rows rejoin via a column-pruned union. The hot table's broadcast
-    hint is size-gated like every other small side in this module
-    (BROADCAST_LABEL_CAP) — an adversarial corpus where 'boilerplate'
-    is most of the data falls back to the AQE-planned shuffle join
-    instead of OOMing the driver.
+    hot-hash table gives per-doc HOT-POSITION arrays — only (id, pos)
+    rows of hot segments reach that aggregation — which LEFT-join the
+    unexploded segment arrays, so document text never shuffles and is
+    never reassembled. Null-text rows rejoin via a column-pruned union.
+    Both broadcast hints are size-gated like every other small side in
+    this module (BROADCAST_LABEL_CAP) — an adversarial corpus where
+    'boilerplate' is most of the data falls back to the AQE-planned
+    shuffle join instead of OOMing the driver.
 
     min_df is ABSOLUTE; callers wanting a fraction-of-corpus threshold
     compute it from a count (see queries.q_boilerplate_strip, which
@@ -1038,73 +896,35 @@ def strip_hot_segments(
     """
     if min_df < 1:
         raise ValueError(f"min_df must be >= 1, got {min_df}")
+    if not delimiter:
+        raise ValueError("delimiter must be a non-empty string")
     import re as _re
 
-    delim_re = _re.escape(delimiter)
-    segs = F.split(F.col(text_col), delim_re)
-
     base = df.select(F.col(id_col), F.col(text_col))
-    if use_arrow and delimiter:
-        # ONE Arrow pass serves BOTH phases: rows flagged first-in-doc
-        # give the per-doc-distinct hashes for DF counting, and the
-        # same persisted rows give the hot-position mapping — the
-        # expression path exploded (and hashed) the corpus twice
-        def _split(txt):
-            return None if txt is None else txt.split(delimiter)
-
-        def _units(units):
-            return enumerate(units)
-
-        rows = persist_tracked(
-            _pos_hash_rows_arrow(
-                base.filter(F.col(text_col).isNotNull()),
-                id_col, text_col, _split, _units, emit_first=True,
-            )
+    present = base.filter(F.col(text_col).isNotNull())
+    rows = persist_tracked(
+        _pos_hash_rows(
+            present, id_col, text_col,
+            lambda txt: enumerate(txt.split(delimiter)), emit_first=True,
         )
-        hot = persist_tracked(
-            rows.filter(F.col("first"))
-            .groupBy("h")
-            .count()
-            .filter(F.col("count") >= min_df)
-            .select("h")
-        )
-        hint = F.broadcast if hot.count() <= BROADCAST_LABEL_CAP else (lambda d: d)
-        hot_pos = (
-            rows.join(hint(hot), on="h", how="inner")
-            .groupBy(id_col)
-            .agg(F.collect_list("pos").alias("__hpos"))
-        )
-        arr = base.filter(F.col(text_col).isNotNull()).select(
-            F.col(id_col), segs.alias("__segs")
-        )
-    else:
-        # per-doc-distinct BEFORE the shuffle: a segment repeated 10^4
-        # times inside one doc is one (hash) row, and DF semantics want
-        # distinct docs anyway
-        doc_hashes = base.filter(F.col(text_col).isNotNull()).select(
-            F.explode(F.array_distinct(segs)).alias("seg")
-        ).select(hex_prefix_long(F.col("seg"), 15).alias("h"))
-        hot = persist_tracked(
-            doc_hashes.groupBy("h").count().filter(F.col("count") >= min_df).select("h")
-        )
-        hint = F.broadcast if hot.count() <= BROADCAST_LABEL_CAP else (lambda d: d)
-
-        # the rebuild joins per-doc HOT-POSITION arrays onto the
-        # UNEXPLODED segment arrays (the exact_substring_dedup shape)
-        # instead of reassembling the corpus text through a groupBy(id)
-        # collect_list — document text never shuffles: only (id, pos)
-        # rows of hot segments (bounded by boilerplate volume) reach
-        # the aggregation
-        arr = base.filter(F.col(text_col).isNotNull()).select(
-            F.col(id_col), segs.alias("__segs")
-        )
-        hot_pos = arr.select(
-            F.col(id_col), F.posexplode("__segs").alias("pos", "seg")
-        ).join(
-            hint(hot),
-            on=hex_prefix_long(F.col("seg"), 15) == F.col("h"),
-            how="inner",
-        ).groupBy(id_col).agg(F.collect_list("pos").alias("__hpos"))
+    )
+    hot = persist_tracked(
+        rows.filter(F.col("first"))
+        .groupBy("h")
+        .count()
+        .filter(F.col("count") >= min_df)
+        .select("h")
+    )
+    hint = F.broadcast if hot.count() <= BROADCAST_LABEL_CAP else (lambda d: d)
+    hot_pos = (
+        rows.join(hint(hot), on="h", how="inner")
+        .groupBy(id_col)
+        .agg(F.collect_list("pos").alias("__hpos"))
+    )
+    arr = present.select(
+        F.col(id_col),
+        F.split(F.col(text_col), _re.escape(delimiter)).alias("__segs"),
+    )
     kept = F.when(
         F.col("__hpos").isNull(), F.col("__segs")
     ).otherwise(
@@ -1121,6 +941,25 @@ def strip_hot_segments(
     return rebuilt.unionByName(null_rows)
 
 
+def _segment_hash_rows(
+    df: DataFrame, id_col: str, text_col: str, delimiter: str, min_len: int
+) -> DataFrame:
+    """(id, pos, h) for every segment of at least ``min_len`` characters:
+    ``posexplode(split(text, escaped delimiter))`` filtered by length.
+    ``str.split`` on the literal equals Java's regex split on the
+    escaped literal with limit −1: both keep leading/trailing empty
+    segments and both map "" to [""]."""
+
+    def units(txt):
+        return [
+            (pos, seg)
+            for pos, seg in enumerate(txt.split(delimiter))
+            if len(seg) >= min_len
+        ]
+
+    return _pos_hash_rows(df, id_col, text_col, units)
+
+
 def dedup_segments_global(
     df: DataFrame,
     id_col: str,
@@ -1128,7 +967,6 @@ def dedup_segments_global(
     delimiter: str = "\n",
     min_len: int = 1,
     out_col: str = "text_deduped",
-    use_arrow: bool = True,
 ) -> DataFrame:
     """CROSS-document segment dedup with global first-occurrence keep —
     the repeated-paragraph removal of C4/RefinedWeb-style pipelines
@@ -1154,57 +992,29 @@ def dedup_segments_global(
     ids-only exchange of (id, pos, 8-byte hash) partitioned by hash;
     a row_number window marks every occurrence after the global first
     — the "losers" table holds ONLY duplicate occurrences (in a mostly-
-    unique corpus, a small fraction). (2) The rebuild LEFT-joins the
-    posexploded corpus against the losers table — size-gated broadcast
-    with AQE shuffle-join fallback — and reassembles with ONE
-    groupBy(id) text shuffle, filtering dropped segments inside the
-    aggregate (the strip_hot_segments reassembly kernel). Worst case
-    (duplicate-saturated corpus past the broadcast cap) the corpus text
-    shuffles twice; typical case once.
+    unique corpus, a small fraction) and collapses to one row of loser
+    positions per affected doc. (2) Those rows LEFT-join the unexploded
+    segment arrays — size-gated broadcast with AQE shuffle-join
+    fallback — and the dropped segments are filtered out by position,
+    so document text never shuffles.
     """
     if min_len < 1:
         raise ValueError(f"min_len must be >= 1, got {min_len}")
+    if not delimiter:
+        raise ValueError("delimiter must be a non-empty string")
     import re as _re
 
     from pyspark.sql import Window
 
-    delim_re = _re.escape(delimiter)
-    segs = F.split(F.col(text_col), delim_re)
-
     base = df.select(F.col(id_col), F.col(text_col))
     # keep the UNEXPLODED segment arrays for the rebuild: only the hash
-    # pass explodes, so document text never shuffles at all (the earlier
-    # rebuild re-exploded the corpus and reassembled it through a
-    # groupBy(id) collect_list — a full text shuffle + per-doc sort that
-    # the per-doc loser-position arrays below replace; the
-    # exact_substring_dedup kernel already uses this shape)
+    # pass explodes, so document text never shuffles at all (the
+    # exact_substring_dedup kernel uses the same shape)
     arr = base.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col), segs.alias("__segs")
+        F.col(id_col),
+        F.split(F.col(text_col), _re.escape(delimiter)).alias("__segs"),
     )
-    if use_arrow and delimiter:
-        # str.split(delim) == Java regex split on the escaped literal
-        # with limit -1: both keep leading/trailing empty segments and
-        # both map "" -> [""]; positions are posexplode's 0-based ones
-        def _split(txt):
-            return None if txt is None else txt.split(delimiter)
-
-        def _units(units):
-            return (
-                (pos, seg)
-                for pos, seg in enumerate(units)
-                if len(seg) >= min_len
-            )
-
-        occ = _pos_hash_rows_arrow(
-            base.filter(F.col(text_col).isNotNull()),
-            id_col, text_col, _split, _units,
-        )
-    else:
-        occ = arr.select(
-            F.col(id_col), F.posexplode("__segs").alias("pos", "seg")
-        ).filter(F.length("seg") >= min_len).select(
-            F.col(id_col), "pos", hex_prefix_long(F.col("seg"), 15).alias("h")
-        )
+    occ = _segment_hash_rows(base, id_col, text_col, delimiter, min_len)
     w = Window.partitionBy("h").orderBy(
         F.col(id_col).asc(), F.col("pos").asc()
     )
@@ -1248,11 +1058,10 @@ def dedup_segments_global(
 def span_window_grams(ws: Column, span_len: int) -> Column:
     """Array of struct(pos, g) for every ``span_len``-token window of
     token array ``ws`` — 1-based start position, space-joined window
-    text. THE single definition of the ExactSubstr window layout:
-    shared by the batch kernel (exact_substring_dedup) and the
-    streaming producer (streaming.stateful.span_stream_rows) so
-    stream/batch window hashes agree by construction, not by
-    hand-synced copies."""
+    text: the window layout of the streaming ExactSubstr producer
+    (streaming.stateful.span_stream_rows). The batch kernel hashes the
+    same windows in ``_span_hash_rows``; stream/batch parity is pinned
+    by tests/test_streaming_span_dedup.py, not by shared code."""
     return F.transform(
         F.sequence(F.lit(1), F.size(ws) - span_len + 1),
         lambda i: F.struct(
@@ -1260,6 +1069,19 @@ def span_window_grams(ws: Column, span_len: int) -> Column:
             F.array_join(F.slice(ws, i, span_len), " ").alias("g"),
         ),
     )
+
+
+def _span_hash_rows(
+    df: DataFrame, id_col: str, text_col: str, span_len: int
+) -> DataFrame:
+    """(id, pos, h) for every ``span_len``-token window, 1-based ``pos``:
+    ``explode(span_window_grams(tokens, span_len))`` of every doc with
+    at least ``span_len`` tokens, hashed with ``hex_prefix_long(g, 15)``."""
+
+    def units(txt):
+        return enumerate(word_grams(tokens(txt), span_len), 1)
+
+    return _pos_hash_rows(df, id_col, text_col, units)
 
 
 def exact_substring_dedup(
@@ -1270,7 +1092,6 @@ def exact_substring_dedup(
     stats: bool = True,
     removal: bool = True,
     out_col: str = "text_despanned",
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Shared kernel for exact-substring deduplication (Lee et al. 2021
     "Deduplicating Training Data Makes Language Models Better",
@@ -1321,44 +1142,7 @@ def exact_substring_dedup(
         F.col(text_col).isNotNull() & (F.trim(F.col(text_col)) != "")
     ).select(F.col(id_col), words.alias("__ws"))
 
-    if use_arrow:
-        # tokenization parity with the expression path: Spark trim
-        # strips 0x20 only; re.split(WS_RE) == Java split limit -1
-        import re as _re
-
-        ws_re = _re.compile(WS_RE)
-
-        def _split(txt):
-            if txt is None:
-                return None
-            t = txt.strip(" ")
-            if t == "":
-                return None
-            return ws_re.split(t)
-
-        def _units(units):
-            n = len(units) - span_len + 1
-            return (
-                (i + 1, " ".join(units[i : i + span_len]))
-                for i in range(n)
-            )
-
-        grams = _pos_hash_rows_arrow(
-            df.filter(
-                F.col(text_col).isNotNull()
-                & (F.trim(F.col(text_col)) != "")
-            ),
-            id_col, text_col, _split, _units,
-        )
-    else:
-        grams = base.filter(F.size("__ws") >= span_len).select(
-            F.col(id_col),
-            F.explode(span_window_grams(F.col("__ws"), span_len)).alias("pg"),
-        ).select(
-            id_col,
-            F.col("pg.pos").alias("pos"),
-            hex_prefix_long(F.col("pg.g"), 15).alias("h"),
-        )
+    grams = _span_hash_rows(df, id_col, text_col, span_len)
     mark_cols = []
     w_rn = Window.partitionBy("h").orderBy(
         F.col(id_col).asc(), F.col("pos").asc()

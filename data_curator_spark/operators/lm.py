@@ -25,11 +25,15 @@ catches it deterministically rather than flaking).
 
 from __future__ import annotations
 
+from collections import Counter
+
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_curator_spark.engine.cache import persist_tracked
-from data_curator_spark.operators.dedup import WS_RE, size_gated_broadcast
+from data_curator_spark.operators.dedup import size_gated_broadcast
+from data_curator_spark.operators.kernels import WS_RE, map_docs, tokens
 
 # micro-nat quantization: FLOOR(ln(p) · 2^20). |ln(p)| < 50 for any
 # vocab above 1e-22 probability → |lp_q| < 2^26; a doc of 10^9 tokens
@@ -402,81 +406,30 @@ def bigram_repetition_stats(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Per-document word-bigram repetition counts — the Gopher-style
     signals' aggregation core: (id, n_bigrams, n_unique_bigrams,
     top_count) for every doc with ≥ 2 whitespace tokens.
 
-    ``use_arrow=True`` computes the whole thing in ONE mapInPandas pass
-    — the grouping key is the document, so per-doc Counters need no
-    shuffle at all; the expression path (explode bigrams →
-    groupBy(id, gram) → groupBy(id)) remains under ``use_arrow=False``
-    and the two are pinned identical by tests/test_lm.py. Tokenization
-    parity as the other Arrow kernels (trim strips 0x20 only; re.split
-    == Java split limit −1); bigram identity by token PAIR, which
-    equals the space-joined gram string because tokens cannot contain
+    ONE ``map_docs`` pass: the grouping key is the document, so per-doc
+    Counters need no explode and no shuffle at all. Tokens are
+    ``split(trim(text), WS_RE)``; bigram identity by token PAIR equals
+    the space-joined gram string because tokens cannot contain
     whitespace."""
-    if use_arrow:
-        import pandas as pd  # noqa: F401
 
-        id_type = df.schema[id_col].dataType.simpleString()
-        schema = (
-            f"{id_col} {id_type}, n_bigrams long, "
-            "n_unique_bigrams long, top_count long"
-        )
+    def per_doc(txt):
+        words = tokens(txt)
+        if len(words) < 2:
+            return ()
+        c = Counter(zip(words, words[1:]))
+        return [(len(words) - 1, len(c), max(c.values()))]
 
-        def gen(batches):
-            import re
-            from collections import Counter
-
-            import pandas as pd
-
-            ws = re.compile(WS_RE)
-            for pdf in batches:
-                ids, nb, nu, tc = [], [], [], []
-                for doc_id, txt in zip(pdf[id_col], pdf[text_col]):
-                    if txt is None:
-                        continue
-                    words = ws.split(txt.strip(" "))
-                    if len(words) < 2:
-                        continue
-                    c = Counter(zip(words, words[1:]))
-                    ids.append(doc_id)
-                    nb.append(len(words) - 1)
-                    nu.append(len(c))
-                    tc.append(max(c.values()))
-                yield pd.DataFrame(
-                    {
-                        id_col: ids,
-                        "n_bigrams": pd.Series(nb, dtype="int64"),
-                        "n_unique_bigrams": pd.Series(nu, dtype="int64"),
-                        "top_count": pd.Series(tc, dtype="int64"),
-                    }
-                )
-
-        return df.select(F.col(id_col), F.col(text_col)).mapInPandas(
-            gen, schema
-        )
-    words = F.split(F.trim(F.col(text_col)), WS_RE)
-    idx = F.sequence(F.lit(1), F.size(words) - 1)
-    grams = df.select(
-        F.col(id_col),
-        F.explode(
-            F.when(
-                F.size(words) >= 2,
-                F.transform(
-                    idx, lambda i: F.array_join(F.slice(words, i, 2), " ")
-                ),
-            ).otherwise(F.array().cast("array<string>"))
-        ).alias("g"),
-    )
-    counts = grams.groupBy(id_col, "g").agg(F.count(F.lit(1)).alias("n"))
-    return counts.groupBy(id_col).agg(
-        F.sum("n").alias("n_bigrams"),
-        F.count(F.lit(1)).alias("n_unique_bigrams"),
-        F.max("n").alias("top_count"),
-    )
+    out = [
+        ("n_bigrams", pa.int64()),
+        ("n_unique_bigrams", pa.int64()),
+        ("top_count", pa.int64()),
+    ]
+    return map_docs(df, text_col, per_doc, out, keep=(id_col,))
 
 
 def dsir_log_weights(

@@ -2584,7 +2584,7 @@ def q_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_curator_spark.operators.dedup import word_shingle_strings_arrow
 
     d = _spread(_t(spark, sf_dir, "documents"))
-    # Arrow shingle-string producer (differential-pinned twin of
+    # Arrow shingle-string producer (the multiset of
     # explode(word_shingles)); the doc count comes from a fresh
     # ids-only scan so it skips the repartition exchange
     grams = word_shingle_strings_arrow(d, "text", 3)
@@ -3354,8 +3354,7 @@ def q_repetition_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_curator_spark.operators.lm import bigram_repetition_stats
 
     # one Arrow pass — the grouping key is the doc, so the per-doc
-    # Counters replace the explode + two groupBys outright (expression
-    # twin retained in the operator, differential-pinned)
+    # Counters replace the explode + two groupBys outright
     return (
         bigram_repetition_stats(d, "doc_id", "text")
         .select(

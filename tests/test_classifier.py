@@ -5,10 +5,7 @@ from __future__ import annotations
 
 import pytest
 
-from data_curator_spark.operators.classifier import (
-    char_gram_buckets,
-    nb_langid,
-)
+from data_curator_spark.operators.classifier import _doc_feats, nb_langid
 
 
 def _mk(spark, rows):
@@ -94,12 +91,12 @@ def test_nb_langid_short_and_null_excluded(spark):
     assert [r["doc_id"] for r in out] == [1]
 
 
-def test_char_gram_buckets_validates(spark):
+def test_doc_feats_validates(spark):
     df = _mk(spark, [(1, "abc", "en")])
     with pytest.raises(ValueError, match="gram_len"):
-        char_gram_buckets(df, "doc_id", "text", gram_len=0)
+        _doc_feats(df, "doc_id", "text", ("lang",), 0, 64)
     with pytest.raises(ValueError, match="n_buckets"):
-        char_gram_buckets(df, "doc_id", "text", n_buckets=1)
+        _doc_feats(df, "doc_id", "text", ("lang",), 3, 1)
 
 
 def test_nb_langid_all_null_raises(spark):
@@ -185,9 +182,9 @@ def test_self_train_composition_matches_nb_langid(spark):
 
 def test_doc_feats_arrow_matches_expression(spark):
     """The Arrow per-doc bucket-count kernel must equal the JVM
-    explode+groupBy path exactly (same md5 buckets, same counts),
+    explode+groupBy reference exactly (same md5 buckets, same counts),
     adversarial docs + sf0.01 corpus."""
-    from data_curator_spark.operators.classifier import _doc_feats
+    from tests.kernel_references import doc_feats
 
     adversarial = [
         (1, "en", "plain text document with letters"),
@@ -200,16 +197,15 @@ def test_doc_feats_arrow_matches_expression(spark):
     ]
     df = spark.createDataFrame(adversarial, "doc_id long, lang string, text string")
 
-    def rows(frame, use_arrow):
+    def rows(frame, fn):
         return sorted(
             tuple(r)
-            for r in _doc_feats(
+            for r in fn(
                 frame.filter(frame.lang.isNotNull()),
                 "doc_id", "text", ("lang",), 3, 32768,
-                use_arrow=use_arrow,
             ).collect()
         )
 
-    assert rows(df, True) == rows(df, False)
+    assert rows(df, _doc_feats) == rows(df, doc_feats)
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    assert rows(docs, True) == rows(docs, False)
+    assert rows(docs, _doc_feats) == rows(docs, doc_feats)

@@ -317,6 +317,8 @@ def test_strip_hot_segments_threshold_and_order(spark):
 
     with _pytest.raises(ValueError):
         strip_hot_segments(df, "doc_id", "text", min_df=0)
+    with _pytest.raises(ValueError, match="delimiter"):
+        strip_hot_segments(df, "doc_id", "text", min_df=3, delimiter="")
 
 
 def test_strip_hot_segments_intra_doc_repeats_count_once(spark):
@@ -407,6 +409,8 @@ def test_dedup_segments_global_validates_min_len(spark):
     df = spark.createDataFrame([(1, "a")], "doc_id long, text string")
     with pytest.raises(ValueError, match="min_len"):
         dedup_segments_global(df, "doc_id", "text", min_len=0)
+    with pytest.raises(ValueError, match="delimiter"):
+        dedup_segments_global(df, "doc_id", "text", delimiter="")
 
 
 def test_duplicated_span_stats_cross_doc(spark):
@@ -679,11 +683,12 @@ def test_connected_components_driver_solve_matches_loop_long_ids(spark):
 
 
 def test_minhash_arrow_matches_expression_path(spark):
-    """The Arrow mapInPandas signature kernel must be bit-identical to
-    the JVM expression pipeline — same tokenization (trim = 0x20 only,
-    split keeps leading/trailing empties), same md5-prefix hashing,
-    same affine mins — on adversarial docs and on the sf0.01 corpus."""
+    """The Arrow signature kernel must be bit-identical to the JVM
+    expression reference — same tokenization (trim = 0x20 only, split
+    keeps leading/trailing empties), same md5-prefix hashing, same
+    affine mins — on adversarial docs and on the sf0.01 corpus."""
     from data_curator_spark.operators.dedup import minhash_signatures
+    from tests import kernel_references as ref
 
     adversarial = [
         (1, "plain three word shingle text here"),
@@ -701,22 +706,18 @@ def test_minhash_arrow_matches_expression_path(spark):
     ]
     df = spark.createDataFrame(adversarial, "doc_id long, text string")
 
-    def rows(use_arrow):
+    def rows(fn):
         return sorted(
-            tuple(r) for r in minhash_signatures(
-                df, "doc_id", "text", k=8, use_arrow=use_arrow
-            ).collect()
+            tuple(r) for r in fn(df, "doc_id", "text", k=8).collect()
         )
 
-    assert rows(True) == rows(False)
+    assert rows(minhash_signatures) == rows(ref.minhash_signatures)
 
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     a = sorted(tuple(r) for r in minhash_signatures(docs, "doc_id", "text").collect())
     b = sorted(
         tuple(r)
-        for r in minhash_signatures(
-            docs, "doc_id", "text", use_arrow=False
-        ).collect()
+        for r in ref.minhash_signatures(docs, "doc_id", "text").collect()
     )
     assert a == b
 
@@ -724,11 +725,12 @@ def test_minhash_arrow_matches_expression_path(spark):
 def test_pos_hash_arrow_paths_match_expression(spark):
     """The Arrow (id, pos, hash) producers behind dedup_segments_global
     and exact_substring_dedup must be output-identical to the JVM
-    expression paths on adversarial docs and the sf0.01 corpus."""
+    expression references on adversarial docs and the sf0.01 corpus."""
     from data_curator_spark.operators.dedup import (
-        dedup_segments_global,
-        exact_substring_dedup,
+        _segment_hash_rows,
+        _span_hash_rows,
     )
+    from tests import kernel_references as ref
 
     adversarial = [
         (1, "alpha beta gamma alpha beta gamma delta epsilon zeta eta theta"),
@@ -743,96 +745,74 @@ def test_pos_hash_arrow_paths_match_expression(spark):
     ]
     df = spark.createDataFrame(adversarial, "doc_id long, text string")
 
-    def seg_rows(use_arrow):
-        return sorted(
-            tuple(r)
-            for r in dedup_segments_global(
-                df.filter(df.text.isNotNull()), "doc_id", "text",
-                delimiter=" ", use_arrow=use_arrow,
-            ).collect()
-        )
-
-    def es_rows(use_arrow):
-        return sorted(
-            tuple(r)
-            for r in exact_substring_dedup(
-                df.filter(df.text.isNotNull()), "doc_id", "text",
-                span_len=8, stats=True, removal=True, use_arrow=use_arrow,
-            ).collect()
-        )
-
-    assert seg_rows(True) == seg_rows(False)
-    assert es_rows(True) == es_rows(False)
+    def rows(frame, fn, *args):
+        return sorted(tuple(r) for r in fn(frame, "doc_id", "text", *args).collect())
 
     docs = spark.read.parquet(
         "/root/testdata/sf0.01/documents.parquet"
     ).filter("text IS NOT NULL")
-    a = sorted(
-        tuple(r)
-        for r in dedup_segments_global(
-            docs, "doc_id", "text", delimiter=" "
-        ).collect()
-    )
-    b = sorted(
-        tuple(r)
-        for r in dedup_segments_global(
-            docs, "doc_id", "text", delimiter=" ", use_arrow=False
-        ).collect()
-    )
-    assert a == b
-    a = sorted(
-        tuple(r)
-        for r in exact_substring_dedup(docs, "doc_id", "text").collect()
-    )
-    b = sorted(
-        tuple(r)
-        for r in exact_substring_dedup(
-            docs, "doc_id", "text", use_arrow=False
-        ).collect()
-    )
-    assert a == b
+    for frame in (df, docs):
+        for min_len in (1, 3):
+            assert rows(frame, _segment_hash_rows, " ", min_len) == rows(
+                frame, ref.segment_hash_rows, " ", min_len
+            )
+        assert rows(frame, _span_hash_rows, 8) == rows(
+            frame, ref.span_hash_rows, 8
+        )
 
 
 def test_contamination_arrow_matches_expression(spark):
-    """contamination_overlap's Arrow shingle-hash path must match the
-    expression path exactly, adversarial docs and sf0.01 corpus."""
-    from data_curator_spark.operators.dedup import contamination_overlap
+    """contamination_overlap's Arrow shingle-hash producer must match
+    the expression reference exactly, adversarial docs and sf0.01
+    corpus."""
+    from data_curator_spark.operators.dedup import _shingle_hash_rows
+    from tests import kernel_references as ref
 
+    adversarial = spark.createDataFrame(
+        [
+            (1, "plain four word shingle text here"),
+            (2, None),
+            (3, ""),
+            (4, "   "),
+            (5, "one two three"),
+            (6, "\n\nleading newline then words follow"),
+            (7, "tab\tseparated\twords\tfour\tfive"),
+            (8, "multi   space    words   here"),
+            (9, "unicode wörds café naïve résumé"),
+            (10, "a b c d a b c d a b c d"),
+        ],
+        "doc_id long, text string",
+    )
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    corpus = docs.filter("doc_id % 50 != 0")
-    bench = docs.filter("doc_id % 50 = 0")
 
-    def rows(use_arrow):
-        return sorted(
-            tuple(r)
-            for r in contamination_overlap(
-                corpus, bench, "doc_id", "text",
-                shingle_n=4, min_overlap=1, use_arrow=use_arrow,
-            ).collect()
+    def rows(fn, frame):
+        return sorted(tuple(r) for r in fn(frame, "doc_id", "text", 4).collect())
+
+    for frame in (adversarial, docs):
+        assert rows(_shingle_hash_rows, frame) == rows(
+            ref.shingle_hash_rows, frame
         )
-
-    assert rows(True) == rows(False)
 
 
 def test_strip_hot_segments_arrow_matches_expression(spark):
     """strip_hot_segments' one-pass Arrow DF-count+position path must
-    match the two-explode expression path exactly."""
+    match the two-explode expression reference exactly."""
     from data_curator_spark.operators.dedup import strip_hot_segments
+    from tests import kernel_references as ref
 
     docs = spark.read.parquet(
         "/root/testdata/sf0.01/documents.parquet"
     ).select("doc_id", "text")
 
-    def rows(use_arrow):
+    def rows(fn):
         return sorted(
             tuple(r)
-            for r in strip_hot_segments(
-                docs, "doc_id", "text", min_df=5, delimiter=" ",
-                use_arrow=use_arrow,
+            for r in fn(
+                docs, "doc_id", "text", min_df=5, delimiter=" "
             ).collect()
         )
 
-    assert rows(True) == rows(False)
+    assert rows(strip_hot_segments) == rows(ref.strip_hot_segments)
 
 
 def test_word_shingle_strings_arrow_matches_expression(spark):

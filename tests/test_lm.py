@@ -233,8 +233,9 @@ def test_heldout_bigram_prefers_seen_transitions(spark):
 
 def test_bigram_repetition_stats_arrow_matches_expression(spark):
     """Arrow per-doc bigram Counter pass == explode+groupBy expression
-    path, adversarial docs + sf0.01 corpus."""
+    reference, adversarial docs + sf0.01 corpus."""
     from data_curator_spark.operators.lm import bigram_repetition_stats
+    from tests import kernel_references as ref
 
     adversarial = [
         (1, "a b c a b c a b"),
@@ -247,14 +248,13 @@ def test_bigram_repetition_stats_arrow_matches_expression(spark):
     ]
     df = spark.createDataFrame(adversarial, "doc_id long, text string")
 
-    def rows(frame, use_arrow):
-        return sorted(
-            tuple(r)
-            for r in bigram_repetition_stats(
-                frame, "doc_id", "text", use_arrow=use_arrow
-            ).collect()
-        )
+    def rows(frame, fn):
+        return sorted(tuple(r) for r in fn(frame, "doc_id", "text").collect())
 
-    assert rows(df, True) == rows(df, False)
+    assert rows(df, bigram_repetition_stats) == rows(
+        df, ref.bigram_repetition_stats
+    )
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    assert rows(docs, True) == rows(docs, False)
+    assert rows(docs, bigram_repetition_stats) == rows(
+        docs, ref.bigram_repetition_stats
+    )

@@ -239,7 +239,7 @@ def test_budget_sample_single_exchange(spark):
 def test_boilerplate_strip_text_never_reassembles(spark):
     """strip_hot_segments (Arrow shape): the hot-hash table broadcasts
     (never a sort-merge join against the corpus), the (id, pos, hash)
-    rows come from ONE MapInPandas pass, and document text is never
+    rows come from ONE MapInArrow pass, and document text is never
     reassembled through a collect_list of (pos, seg) structs — the only
     doc-keyed ENSURE_REQUIREMENTS exchange carries integer positions.
     A regression that re-joins/reassembles the original text would
@@ -249,7 +249,7 @@ def test_boilerplate_strip_text_never_reassembles(spark):
     plan = _plan(spark, "boilerplate_strip")
     assert "SortMergeJoin" not in plan
     assert "BroadcastHashJoin" in plan
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
     assert "collect_list(struct" not in plan
     # every doc_id hash exchange is either the user repartition (the
     # _spread) or the ints-only hot-position aggregation
