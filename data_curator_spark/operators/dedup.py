@@ -260,20 +260,15 @@ def lsh_candidate_ids(
     oracle-checked queries.
     """
     r = k // bands
-    banded = signatures.select(
-        id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.array(*[F.col(f"mh_{b * r + j}") for j in range(r)]).alias("key"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(id_col, "bb.band", "bb.key")
+    # one SQL projection, parsed once on the JVM, instead of ~3·k Column
+    # objects each built through its own py4j round trips
+    band_structs = ", ".join(
+        f"named_struct('band', {b}, 'key', array("
+        + ", ".join(f"mh_{b * r + j}" for j in range(r))
+        + "))"
+        for b in range(bands)
+    )
+    banded = signatures.selectExpr(f"`{id_col}`", f"inline(array({band_structs}))")
 
     if max_bucket is not None:
         sizes = banded.groupBy("band", "key").agg(F.count(F.lit(1)).alias("__n"))
@@ -301,23 +296,19 @@ def lsh_candidate_pairs(
     """lsh_candidate_ids + the Jaccard estimate: signatures are
     re-attached once per side AFTER the pair dedup, and est_jaccard is
     the fraction of equal minhash components (unbiased estimate)."""
-    mh_cols = [f"mh_{i}" for i in range(k)]
     pairs = lsh_candidate_ids(signatures, id_col, k, bands)
-    sig_a = signatures.select(
-        F.col(id_col).alias("id_a"), *[F.col(c).alias(f"a_{c}") for c in mh_cols]
+    sig_a, sig_b = (
+        signatures.selectExpr(
+            f"`{id_col}` AS id_{s}", *[f"mh_{i} AS {s}_mh_{i}" for i in range(k)]
+        )
+        for s in ("a", "b")
     )
-    sig_b = signatures.select(
-        F.col(id_col).alias("id_b"), *[F.col(c).alias(f"b_{c}") for c in mh_cols]
-    )
-    matches = sum(
-        F.when(F.col(f"a_{c}") == F.col(f"b_{c}"), 1).otherwise(0) for c in mh_cols
-    )
+    # a NULL component compares as NULL, which IF counts as a mismatch
+    matches = " + ".join(f"IF(a_mh_{i} = b_mh_{i}, 1, 0)" for i in range(k))
     return (
         pairs.join(sig_a, "id_a")
         .join(sig_b, "id_b")
-        .select(
-            "id_a", "id_b", (matches.cast("double") / F.lit(float(k))).alias("est_jaccard")
-        )
+        .selectExpr("id_a", "id_b", f"CAST({matches} AS DOUBLE) / {float(k)}D AS est_jaccard")
     )
 
 

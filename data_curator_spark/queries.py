@@ -24,9 +24,49 @@ from data_curator_spark.engine.cache import persist_tracked
 
 MONEY = "decimal(14,2)"  # covers all money/qty/rate columns in testdata
 
+# The ten testdata tables, each with exactly the schema Spark infers from
+# its parquet footer (identical at sf0.001, sf0.01, sf0.1 and in the
+# seeded tables perfbench generates; tests/test_query_build.py checks it).
+# A read with a declared schema is planned without the schema-inference
+# job (~100 ms) an undeclared read runs on every call, and a file whose
+# column types drift fails at scan instead of being planned with
+# whatever types it happens to carry.
+TABLE_SCHEMAS: dict[str, str] = {
+    "region": "r_regionkey INT, r_name STRING",
+    "nation": "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer": (
+        "c_custkey BIGINT, c_name STRING, c_nationkey INT, c_acctbal DOUBLE, "
+        "c_mktsegment STRING"
+    ),
+    "supplier": "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE",
+    "part": (
+        "p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, "
+        "p_size INT, p_retailprice DOUBLE"
+    ),
+    "orders": (
+        "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, "
+        "o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"
+    ),
+    "lineitem": (
+        "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, l_linenumber INT, "
+        "l_quantity DOUBLE, l_extendedprice DOUBLE, l_discount DOUBLE, l_tax DOUBLE, "
+        "l_returnflag STRING, l_linestatus STRING, l_shipdate TIMESTAMP_NTZ"
+    ),
+    "events": (
+        "event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, event_type STRING, "
+        "value DOUBLE, props STRING"
+    ),
+    "documents": "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+    "embeddings": "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
+}
+
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """The one reader of the testdata tables: ``name`` at ``sf_dir`` with
+    its declared schema. In production these are Iceberg tables
+    (``spark.read.format("iceberg").load(...)``); plain parquet exercises
+    the same columnar scan and pushdown path."""
+    return spark.read.schema(TABLE_SCHEMAS[name]).parquet(f"{sf_dir}/{name}.parquet")
 
 
 def _spread(df: DataFrame, by: str | None = None) -> DataFrame:

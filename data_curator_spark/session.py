@@ -1,9 +1,13 @@
 """SparkSession factory tuned for the engine.
 
-All knobs here are scale-oriented defaults: AQE on (runtime coalesce +
-skew-join splitting), Arrow for every pandas-UDF exchange, and shuffle
-partitions sized for the local test harness (overridden by cluster confs
-in a real spark-submit deployment).
+``build_session`` sets scale-oriented defaults: AQE on (runtime coalesce
++ skew-join splitting), Arrow for every pandas-UDF exchange, shuffle
+partitions sized for the local test harness, and no per-call Python
+call-site capture, which would cost py4j round trips on every
+DataFrame/Column call while a query is built. ``cluster_conf`` is the
+conf set that replaces the local defaults in a real spark-submit
+deployment. The testdata tables are read by ``queries._t``, with the
+declared schemas in ``queries.TABLE_SCHEMAS``.
 """
 
 from __future__ import annotations
@@ -23,6 +27,18 @@ def build_session(
 
     Parameters are overridable so the bench harness can pin ``local[8]``
     vs ``local[32]`` for the two-parallelism scaling measurement.
+
+    Python call-site capture (``spark.python.sql.dataFrameDebugging
+    .enabled``, on by default in PySpark 4.1) is off. With it on, every
+    ``Column``/``DataFrame`` call makes about five extra py4j round trips
+    to record the calling file and line, which is most of the time spent
+    building a query (~5,000 round trips for ``minhash_lsh``). The only
+    loss is that file:line in the query context of a DataFrame error;
+    the error itself is still raised. For a debugging session, turn it
+    back on with
+    ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``
+    (PySpark reads the setting once per process, at the first call that
+    could capture a call site, so pass it to the first session built).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
@@ -49,6 +65,8 @@ def build_session(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        # --- no per-call Python call-site capture (see docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -100,13 +118,3 @@ def cluster_conf(
         "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
         "spark.sql.session.timeZone": "UTC",
     }
-
-
-def read_table(spark: SparkSession, sf_dir: str, name: str):
-    """Read one of the testdata tables as a DataFrame.
-
-    In production these are Iceberg tables
-    (``spark.read.format("iceberg").load(...)``); the sandbox uses plain
-    parquet, which exercises the same columnar scan + pushdown path.
-    """
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")

@@ -1,10 +1,13 @@
-"""Spark-expression references for the Arrow text kernels.
+"""Spark-expression references for the Arrow text kernels and the
+SQL-text LSH projections.
 
-Each function is the JVM expression path (split/trim, explode, md5,
+Each text function is the JVM expression path (split/trim, explode, md5,
 groupBy) of one producer built on ``operators/kernels.py``, written
-with Spark built-ins only. The differential tests compare every
-producer with its reference on adversarial docs and the sf0.01 corpus;
-the library itself runs only the Arrow kernels.
+with Spark built-ins only. The two LSH functions are the Column-built
+form of ``dedup.lsh_candidate_ids``/``lsh_candidate_pairs``, which the
+library builds from SQL text. The differential tests compare every
+library function with its reference on adversarial inputs and sf0.01
+data; the library itself runs only the Arrow kernels and the SQL text.
 """
 
 from __future__ import annotations
@@ -228,4 +231,74 @@ def doc_feats(
         )
         .groupBy(id_col, *label_cols, "bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+
+
+def lsh_candidate_ids(
+    signatures: DataFrame,
+    id_col: str,
+    k: int = 32,
+    bands: int = 8,
+    max_bucket: int | None = None,
+) -> DataFrame:
+    """``dedup.lsh_candidate_ids``: the band structs built as Columns,
+    exploded, then the (band, key) self-join."""
+    r = k // bands
+    banded = signatures.select(
+        id_col,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        F.array(*[F.col(f"mh_{b * r + j}") for j in range(r)]).alias("key"),
+                    )
+                    for b in range(bands)
+                ]
+            )
+        ).alias("bb"),
+    ).select(id_col, "bb.band", "bb.key")
+
+    if max_bucket is not None:
+        sizes = banded.groupBy("band", "key").agg(F.count(F.lit(1)).alias("__n"))
+        banded = (
+            banded.join(
+                F.broadcast(sizes.filter(F.col("__n") > max_bucket)),
+                on=["band", "key"],
+                how="left_anti",
+            )
+        )
+
+    a = banded.select(F.col(id_col).alias("id_a"), "band", "key")
+    b = banded.select(F.col(id_col).alias("id_b"), "band", "key")
+    return (
+        a.join(b, on=["band", "key"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+        .dropDuplicates(["id_a", "id_b"])
+    )
+
+
+def lsh_candidate_pairs(
+    signatures: DataFrame, id_col: str, k: int = 32, bands: int = 8
+) -> DataFrame:
+    """``dedup.lsh_candidate_pairs``: 2×k aliased Columns per side and a
+    k-term ``F.when`` sum for the equal-component count."""
+    mh_cols = [f"mh_{i}" for i in range(k)]
+    pairs = lsh_candidate_ids(signatures, id_col, k, bands)
+    sig_a = signatures.select(
+        F.col(id_col).alias("id_a"), *[F.col(c).alias(f"a_{c}") for c in mh_cols]
+    )
+    sig_b = signatures.select(
+        F.col(id_col).alias("id_b"), *[F.col(c).alias(f"b_{c}") for c in mh_cols]
+    )
+    matches = sum(
+        F.when(F.col(f"a_{c}") == F.col(f"b_{c}"), 1).otherwise(0) for c in mh_cols
+    )
+    return (
+        pairs.join(sig_a, "id_a")
+        .join(sig_b, "id_b")
+        .select(
+            "id_a", "id_b", (matches.cast("double") / F.lit(float(k))).alias("est_jaccard")
+        )
     )

@@ -837,3 +837,56 @@ def test_word_shingle_strings_arrow_matches_expression(spark):
         ).collect()
     )
     assert a == b
+
+
+def test_lsh_sql_projections_match_column_reference(spark):
+    """The SQL-text band and pair projections give the rows and the
+    schema of the Column-built reference, on sf0.01 signatures and on a
+    hand-built frame with ids above 2^31 and one NULL component (which
+    keeps its band key from matching and counts as a mismatch)."""
+    from pathlib import Path
+
+    from __spark_entry__ import SF0001
+    from data_curator_spark.operators.dedup import (
+        lsh_candidate_ids,
+        lsh_candidate_pairs,
+        minhash_signatures,
+    )
+    from tests import kernel_references as ref
+
+    def same(got, want):
+        assert got.schema == want.schema
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+    big = 2**31
+    hand = spark.createDataFrame(
+        [
+            (big + 1, 1, 2, 3, 4, 5, 6, 7, 8),
+            (big + 5, 1, 2, 3, 4, 9, 9, 9, 9),
+            (2**40, 1, 2, None, 4, 5, 6, 7, 8),
+            (2**62 + 3, 11, 12, 3, 4, 13, 14, 15, 16),
+            (7, 21, 22, 23, 24, 25, 26, 27, 28),
+        ],
+        "doc_id long, " + ", ".join(f"mh_{i} long" for i in range(8)),
+    )
+    got = lsh_candidate_pairs(hand, "doc_id", k=8, bands=4)
+    same(got, ref.lsh_candidate_pairs(hand, "doc_id", k=8, bands=4))
+    est = {(r.id_a, r.id_b): r.est_jaccard for r in got.collect()}
+    assert est == {
+        (big + 1, big + 5): 0.5,
+        (big + 1, 2**40): 7 / 8,
+        (big + 5, 2**40): 3 / 8,
+        (big + 1, 2**62 + 3): 0.25,
+        (big + 5, 2**62 + 3): 0.25,
+    }
+
+    docs = spark.read.parquet(str(Path(SF0001).with_name("sf0.01") / "documents.parquet"))
+    sigs = minhash_signatures(docs, "doc_id", "text", k=32).cache()
+    try:
+        same(lsh_candidate_pairs(sigs, "doc_id"), ref.lsh_candidate_pairs(sigs, "doc_id"))
+        same(
+            lsh_candidate_ids(sigs, "doc_id", k=32, bands=16, max_bucket=3),
+            ref.lsh_candidate_ids(sigs, "doc_id", k=32, bands=16, max_bucket=3),
+        )
+    finally:
+        sigs.unpersist()

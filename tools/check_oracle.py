@@ -18,12 +18,8 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import duckdb  # noqa: E402
 
+from data_curator_spark.queries import TABLE_SCHEMAS  # noqa: E402
 from data_curator_spark.session import build_session  # noqa: E402
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 
 def canon(v):
@@ -84,7 +80,7 @@ def main() -> int:
 
     spark = build_session("oracle-check")
     con = duckdb.connect()
-    for t in TABLES:
+    for t in TABLE_SCHEMAS:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
