@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -28,9 +29,10 @@ MONEY = "decimal(14,2)"  # covers all money/qty/rate columns in testdata
 # its parquet footer (identical at sf0.001, sf0.01, sf0.1 and in the
 # seeded tables perfbench generates; tests/test_query_build.py checks it).
 # A read with a declared schema is planned without the schema-inference
-# job (~100 ms) an undeclared read runs on every call, and a file whose
+# job (~100 ms) an undeclared read runs on every call. A file whose
 # column types drift fails at scan instead of being planned with
-# whatever types it happens to carry.
+# whatever types it happens to carry; one that lacks a declared column
+# fails in ``_t`` (Spark would read the missing column as NULLs).
 TABLE_SCHEMAS: dict[str, str] = {
     "region": "r_regionkey INT, r_name STRING",
     "nation": "n_nationkey INT, n_name STRING, n_regionkey INT",
@@ -65,8 +67,18 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """The one reader of the testdata tables: ``name`` at ``sf_dir`` with
     its declared schema. In production these are Iceberg tables
     (``spark.read.format("iceberg").load(...)``); plain parquet exercises
-    the same columnar scan and pushdown path."""
-    return spark.read.schema(TABLE_SCHEMAS[name]).parquet(f"{sf_dir}/{name}.parquet")
+    the same columnar scan and pushdown path.
+
+    Raises ``ValueError`` if the file lacks a declared column: the
+    check reads only the parquet footer, on the driver, with no Spark
+    job."""
+    path = f"{sf_dir}/{name}.parquet"
+    df = spark.read.schema(TABLE_SCHEMAS[name]).parquet(path)
+    present = set(pq.read_schema(path).names)
+    missing = [c for c in df.columns if c not in present]
+    if missing:
+        raise ValueError(f"{path} lacks declared column(s) {missing}")
+    return df
 
 
 def _spread(df: DataFrame, by: str | None = None) -> DataFrame:

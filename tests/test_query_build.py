@@ -2,7 +2,8 @@
 
 - Every testdata table is read with its declared schema
   (``queries.TABLE_SCHEMAS``), which must equal what Spark infers from
-  the parquet footer; a file whose types drift fails loudly.
+  the parquet footer; a file whose types drift, or that lacks a declared
+  column, fails instead of being cast or padded with NULLs.
 - Building a gate query's DataFrame launches a pinned number of Spark
   jobs: none for the six perfbench ``operators`` queries, a ceiling for
   the queries that still train or probe on the driver.
@@ -69,6 +70,25 @@ def test_drifted_column_type_fails_instead_of_casting(spark, tmp_path):
     )
     with pytest.raises(Exception, match=r"DATA_TYPE_MISMATCH[^\n]*\[doc_id\]"):
         _t(spark, str(tmp_path), "documents").collect()
+
+
+def test_missing_column_fails_instead_of_reading_nulls(spark, tmp_path):
+    """A documents file without n_chars must fail in ``_t``, never be
+    read with n_chars as NULLs."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table({
+            "doc_id": pa.array([1, 2], pa.int64()),
+            "text": ["a b c", "d e f"],
+            "lang": ["en", "en"],
+            "source": ["s", "s"],
+        }),
+        tmp_path / "documents.parquet",
+    )
+    with pytest.raises(ValueError, match=r"lacks declared column\(s\) \['n_chars'\]"):
+        _t(spark, str(tmp_path), "documents")
 
 
 # Spark jobs launched while building each query, before any action

@@ -1,7 +1,7 @@
 """Per-query build and noop-sink profile of the gate queries.
 
-For every query in ``__spark_entry__.queries()`` (or the names given) at
-one sf dir, measured after untimed warm-up passes:
+For every query in ``__spark_entry__.queries()`` at one sf dir,
+measured after one untimed warm-up pass over all of them:
 
 - ``build_jobs``/``build_s``: Spark jobs launched, and wall time, while
   the query function builds its DataFrame, before any action;
@@ -14,7 +14,7 @@ The cache is cleared before each query, as the oracle harness does.
 Prints one JSON document with the sf, ``SPARK_GRAFT_CPUS`` and
 ``bench.py``'s host probe next to the per-query rows and their totals:
 
-    python tools/profile_queries.py SF_DIR [query ...] > layers.json
+    python tools/profile_queries.py SF_DIR > layers.json
 """
 
 from __future__ import annotations
@@ -58,8 +58,6 @@ def profile_one(spark, name: str, fn, sf_dir: str) -> dict[str, float | int]:
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("sf_dir", help="directory holding the ten testdata tables")
-    ap.add_argument("queries", nargs="*", help="query names (default: every gate query)")
-    ap.add_argument("--warmup", type=int, default=1, help="untimed passes first (default 1)")
     args = ap.parse_args(argv)
 
     import __spark_entry__ as entry
@@ -69,18 +67,13 @@ def main(argv: list[str] | None = None) -> int:
     # data-dependent oracles train on the same sf dir (see check_oracle.py)
     os.environ["SPARK_GRAFT_ORACLE_SF"] = args.sf_dir
     qs = entry.queries()
-    unknown = set(args.queries) - set(qs)
-    if unknown:
-        ap.error(f"unknown query name(s) {sorted(unknown)}")
-    names = args.queries or list(qs)
 
     spark = build_session("profile-queries")
     spark.sparkContext.setLogLevel("ERROR")
     try:
-        for _ in range(args.warmup):
-            for name in names:
-                profile_one(spark, name, qs[name], args.sf_dir)
-        rows = {name: profile_one(spark, name, qs[name], args.sf_dir) for name in names}
+        for name, fn in qs.items():  # warm-up pass, untimed
+            profile_one(spark, name, fn, args.sf_dir)
+        rows = {name: profile_one(spark, name, fn, args.sf_dir) for name, fn in qs.items()}
     finally:
         spark.stop()
 
@@ -93,7 +86,6 @@ def main(argv: list[str] | None = None) -> int:
         "sf": args.sf_dir.rstrip("/").rsplit("sf", 1)[-1],
         "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
         "host_probe_sec": host_probe_sec(),
-        "warmup_passes": args.warmup,
         "n_queries": len(rows),
         "totals": totals,
         "queries": rows,
