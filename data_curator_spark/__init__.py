@@ -11,15 +11,19 @@ capabilities of KaxaNuk/Data-Curator, re-expressed Spark-first:
                           (reference: services/data_provider_toolkit.py)
 - ``engine.contracts``    row-contract validation as boolean mask columns
                           (reference: entities/*.py __post_init__ checks)
-- ``plans.column_dag``    dependency-resolved derived-column planner
-                          (reference: services/column_builder.py)
 - ``operators.*``         dedup / similarity / asof primitives for
                           large-scale training-data pipelines
+- ``functions.calculations`` the derived-column library and its
+                          dependency-resolved planner (``_closure``;
+                          reference: services/column_builder.py)
 - ``functions.text``      language-ID, quality scoring, tokenization,
                           fingerprinting over document corpora
 - ``pipeline.*``          the north-rule quality-filter pipeline over
                           (repo, path, commit, lang, content) code corpora
-- ``sources`` / ``sinks`` pluggable readers and writers
+- ``streaming.quality_stream`` the corpus quality filter and
+                          contamination check as a Structured Streaming job
+- ``queries``             the gate and legacy query registry; ``queries._t``
+                          reads every testdata table with a declared schema
 """
 
 __version__ = "0.1.0"

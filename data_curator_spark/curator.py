@@ -7,8 +7,8 @@ identifier (:136-233). Here the same pipeline is ONE distributed job over
 all identifiers; per-row contract violations are counted into a metrics
 table instead of aborting a dataset.
 
-Inputs are DataFrames (from sources.readers) with the reference's column
-namespace:
+Inputs are DataFrames (read with a declared schema) with the reference's
+column namespace:
 
 - market:      main_identifier, m_date + m_* price/volume columns
 - fundamentals: main_identifier, f_filing_date, f_fiscal_year,

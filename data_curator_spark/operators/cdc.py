@@ -111,14 +111,11 @@ def cdc_chunks(
     min_len: int = CDC_MIN_LEN,
     avg_len: int = CDC_AVG_LEN,
     max_len: int = CDC_MAX_LEN,
-    carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Chunk every document at content-defined boundaries. Output: one
-    row per chunk — (doc_id, [carry_cols...,] chunk_idx, chunk_pos,
-    chunk_len, chunk_hash) with chunk_hash the 60-bit md5 prefix of the
-    chunk's UTF-8 bytes; doc_id and every carry column keep their INPUT
-    types (replicated per chunk row — how a stream producer threads its
-    seq through without a stateful join). Null-text docs emit nothing;
+    row per chunk — (doc_id, chunk_idx, chunk_pos, chunk_len,
+    chunk_hash) with chunk_hash the 60-bit md5 prefix of the chunk's
+    UTF-8 bytes; doc_id keeps its INPUT type. Null-text docs emit nothing;
     a doc shorter than min_len is one chunk. avg_len must be a power of
     two (the divisor is a bit mask, the FastCDC convention).
 
@@ -137,10 +134,8 @@ def cdc_chunks(
         )
     mask = avg_len - 1
 
-    in_fields = {f.name: f for f in df.schema.fields}
     schema = StructType(
-        [StructField("doc_id", in_fields[id_col].dataType, False)]
-        + [StructField(c, in_fields[c].dataType, True) for c in carry_cols]
+        [StructField("doc_id", df.schema[id_col].dataType, False)]
         + [
             StructField("chunk_idx", LongType(), False),
             StructField("chunk_pos", LongType(), False),
@@ -154,11 +149,7 @@ def cdc_chunks(
 
         for pdf in batches:
             ids, idxs, poss, lens, hs = [], [], [], [], []
-            carry_vals: list[list] = [[] for _ in carry_cols]
-            for row in zip(
-                pdf[id_col], pdf[text_col], *[pdf[c] for c in carry_cols]
-            ):
-                doc_id, text, extras = row[0], row[1], row[2:]
+            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
                 if text is None or (isinstance(text, float) and pd.isna(text)):
                     continue
                 raw = str(text).encode("utf-8")
@@ -170,8 +161,6 @@ def cdc_chunks(
                     _chunk_doc(len(raw), hashes, mask, min_len, max_len)
                 ):
                     ids.append(doc_id)
-                    for k, v in enumerate(extras):
-                        carry_vals[k].append(v)
                     idxs.append(i)
                     poss.append(start)
                     lens.append(length)
@@ -182,22 +171,17 @@ def cdc_chunks(
                             16,
                         )
                     )
-            out = {"doc_id": pd.Series(ids)}
-            for c, vals in zip(carry_cols, carry_vals):
-                out[c] = pd.Series(vals)
-            out.update(
+            yield pd.DataFrame(
                 {
+                    "doc_id": pd.Series(ids),
                     "chunk_idx": pd.Series(idxs, dtype="int64"),
                     "chunk_pos": pd.Series(poss, dtype="int64"),
                     "chunk_len": pd.Series(lens, dtype="int64"),
                     "chunk_hash": pd.Series(hs, dtype="int64"),
                 }
             )
-            yield pd.DataFrame(out)
 
-    return df.select(
-        F.col(id_col), F.col(text_col), *[F.col(c) for c in carry_cols]
-    ).mapInPandas(chunk, schema=schema)
+    return df.select(F.col(id_col), F.col(text_col)).mapInPandas(chunk, schema=schema)
 
 
 def cdc_dup_stats(

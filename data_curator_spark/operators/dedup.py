@@ -252,7 +252,8 @@ def lsh_candidate_ids(
     the self-join's output is quadratic in bucket size — AQE can split
     the shuffle partition but cannot shrink the m² pair explosion
     (measured: 90 identical docs in a 300-doc corpus → 4,005
-    boilerplate pairs from a single clique, tests/test_skew.py). With a
+    boilerplate pairs from a single clique,
+    tests/test_dedup.py::test_boilerplate_mega_bucket_band_join). With a
     cap, buckets larger than ``max_bucket`` are dropped before the join:
     exact duplicates are exact-hash dedup's job (dedup_exact), and a
     >max_bucket near-dup clique still surfaces via its other, unskewed
@@ -440,8 +441,7 @@ def band_layout(total_bits: int, max_hamming: int) -> list[tuple[int, int]]:
     (total_bits % nb) bands are one bit wider, so the pigeonhole
     guarantee (≤max_hamming flips ⇒ ≥1 untouched band) actually holds —
     a plain total_bits//nb split leaves remainder bits outside every
-    band and silently loses it. Single source of truth for the batch
-    operator AND streaming/near_dup.py (pinned by
+    band and silently loses it (pinned by
     tests/test_dedup_properties.py)."""
     nb = max_hamming + 1
     base_w, extra = divmod(total_bits, nb)
@@ -1049,10 +1049,10 @@ def dedup_segments_global(
 def span_window_grams(ws: Column, span_len: int) -> Column:
     """Array of struct(pos, g) for every ``span_len``-token window of
     token array ``ws`` — 1-based start position, space-joined window
-    text: the window layout of the streaming ExactSubstr producer
-    (streaming.stateful.span_stream_rows). The batch kernel hashes the
-    same windows in ``_span_hash_rows``; stream/batch parity is pinned
-    by tests/test_streaming_span_dedup.py, not by shared code."""
+    text. The batch kernel hashes the same windows in ``_span_hash_rows``
+    with the Arrow core; this Column form is the expression reference
+    (tests/kernel_references.py:span_hash_rows) and the span producer of
+    ``bench_extra.py``."""
     return F.transform(
         F.sequence(F.lit(1), F.size(ws) - span_len + 1),
         lambda i: F.struct(

@@ -339,9 +339,8 @@ def pack_sequences(
         .orderBy(order, F.col(id_col))
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    # clamp null/negative sizes to 0 (zero-width docs) — parity with
-    # streaming_pack, which clamps per row; a negative size shrinking
-    # the running offset would tear bin assignment between the two forms
+    # clamp null/negative sizes to 0 (zero-width docs): a negative size
+    # would shrink the running offset and tear bin assignment
     clamped = F.greatest(F.coalesce(F.col(size_col), F.lit(0)), F.lit(0))
     cum_prev = F.coalesce(F.sum(clamped).over(w), F.lit(0)).cast("long")
     return (
@@ -450,9 +449,8 @@ def budget_sample(
         .orderBy(order, F.col(id_col))
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    # clamp null/negative sizes to 0 — parity with streaming_budget_gate
-    # (a negative size must never REFUND budget, or the batch and
-    # streaming forms of the op admit different sets on the same input)
+    # clamp null/negative sizes to 0: a negative size must never REFUND
+    # budget
     clamped = F.greatest(F.coalesce(F.col(size_col), F.lit(0)), F.lit(0))
     cum_prev = F.coalesce(F.sum(clamped).over(w), F.lit(0)).cast("long")
     budget = _strata_case(strata_col, budgets, default_budget)

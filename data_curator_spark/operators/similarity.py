@@ -123,19 +123,29 @@ def plane_tables(
     ]
 
 
-def hyperplane_signature(vec: Column, planes: list[list[float]]) -> Column:
+def hyperplane_signature(vec_col: str, planes: list[list[float]]) -> Column:
     """LSH bucket id: sign pattern of dot products with fixed random
-    hyperplanes, packed into a long (pure column expression)."""
-    bits = [
-        F.when(dot(vec, F.array(*[F.lit(float(x)) for x in p])) >= 0, F.lit(1 << i)).otherwise(
-            F.lit(0)
+    hyperplanes, packed into a long.
+
+    One SQL expression, not ``dim`` literal Columns per plane: bit ``i``
+    is ``1 << i`` when the ``dot`` fold (double products summed left to
+    right) with plane ``i`` is >= 0, and 0 when it is NULL (a NULL
+    vector or element). Each plane is a string array cast to
+    ``ARRAY<DOUBLE>``, so every float round-trips exactly through its
+    ``repr``. The Column-built form is
+    ``tests/kernel_references.py:hyperplane_signature``."""
+
+    def bit(i: int, plane: list[float]) -> str:
+        w = ", ".join(f"'{float(x)!r}'" for x in plane)
+        d = (
+            f"aggregate(zip_with(`{vec_col}`, CAST(array({w}) AS ARRAY<DOUBLE>), "
+            "(x, y) -> CAST(x AS DOUBLE) * y), 0D, (acc, v) -> acc + v)"
         )
-        for i, p in enumerate(planes)
-    ]
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out.cast("long")
+        return f"IF({d} >= 0, {1 << i}, 0)"
+
+    return F.expr(
+        "CAST(" + " + ".join(bit(i, p) for i, p in enumerate(planes)) + " AS BIGINT)"
+    )
 
 
 def lsh_ann_topk(
@@ -173,7 +183,7 @@ def lsh_ann_topk(
                     *[
                         F.struct(
                             F.lit(t).alias("table"),
-                            hyperplane_signature(F.col(vec_col), planes).alias("bucket"),
+                            hyperplane_signature(vec_col, planes).alias("bucket"),
                         )
                         for t, planes in enumerate(tables)
                     ]
@@ -237,7 +247,7 @@ def embedding_near_dup_pairs(
                 *[
                     F.struct(
                         F.lit(t).alias("table"),
-                        hyperplane_signature(F.col(vec_col), planes).alias("bucket"),
+                        hyperplane_signature(vec_col, planes).alias("bucket"),
                     )
                     for t, planes in enumerate(tables)
                 ]

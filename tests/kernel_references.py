@@ -4,17 +4,19 @@ SQL-text LSH projections.
 Each text function is the JVM expression path (split/trim, explode, md5,
 groupBy) of one producer built on ``operators/kernels.py``, written
 with Spark built-ins only. The two LSH functions are the Column-built
-form of ``dedup.lsh_candidate_ids``/``lsh_candidate_pairs``, which the
-library builds from SQL text. The differential tests compare every
-library function with its reference on adversarial inputs and sf0.01
-data; the library itself runs only the Arrow kernels and the SQL text.
+form of ``dedup.lsh_candidate_ids``/``lsh_candidate_pairs``, and
+``hyperplane_signature`` that of ``similarity.hyperplane_signature``;
+the library builds all three from SQL text. The differential tests
+compare every library function with its reference on adversarial
+inputs and sf0.01 data; the library itself runs only the Arrow kernels
+and the SQL text.
 """
 
 from __future__ import annotations
 
 import re as _re
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from data_curator_spark.engine.cache import persist_tracked
@@ -29,6 +31,7 @@ from data_curator_spark.operators.dedup import (
     span_window_grams,
     word_shingles,
 )
+from data_curator_spark.operators.similarity import dot
 
 
 def minhash_signatures(
@@ -302,3 +305,18 @@ def lsh_candidate_pairs(
             "id_a", "id_b", (matches.cast("double") / F.lit(float(k))).alias("est_jaccard")
         )
     )
+
+
+def hyperplane_signature(vec: Column, planes: list[list[float]]) -> Column:
+    """LSH bucket id: sign pattern of dot products with fixed random
+    hyperplanes, packed into a long (pure column expression)."""
+    bits = [
+        F.when(dot(vec, F.array(*[F.lit(float(x)) for x in p])) >= 0, F.lit(1 << i)).otherwise(
+            F.lit(0)
+        )
+        for i, p in enumerate(planes)
+    ]
+    out = bits[0]
+    for b in bits[1:]:
+        out = out + b
+    return out.cast("long")

@@ -4,14 +4,18 @@ console-command analog (services/cli.py:155-203)."""
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
+from pathlib import Path
+
+ROOT = str(Path(__file__).resolve().parents[1])
 
 
 def _run(*args: str) -> str:
     out = subprocess.run(
         [sys.executable, "-m", "data_curator_spark", *args],
-        capture_output=True, text=True, cwd="/root/repo", timeout=300,
+        capture_output=True, text=True, cwd=ROOT, timeout=300,
     )
     assert out.returncode == 0, out.stderr[-1500:]
     return out.stdout.strip().splitlines()[-1]
@@ -82,8 +86,8 @@ def test_cli_mvcc_layout_snapshots_travel_vacuum(tmp_path):
     def run(*argv):
         r = subprocess.run(
             [sys.executable, "-m", "data_curator_spark", *argv],
-            capture_output=True, text=True, cwd="/root/repo",
-            env={**__import__("os").environ, "PYTHONPATH": "/root/repo"},
+            capture_output=True, text=True, cwd=ROOT,
+            env={**os.environ, "PYTHONPATH": ROOT},
         )
         assert r.returncode == 0, r.stderr[-2000:]
         return r.stdout.strip().splitlines()

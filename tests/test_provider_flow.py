@@ -15,8 +15,6 @@ from data_curator_spark.engine import consolidate as CN
 from data_curator_spark.engine import contracts as K
 from data_curator_spark.engine.features import irregular_filing_mask
 from data_curator_spark.functions.calculations import build_features
-from data_curator_spark.sources import readers as R
-from data_curator_spark.sources import sinks as S
 
 
 @pytest.fixture(scope="module")
@@ -47,22 +45,23 @@ def test_full_provider_flow(spark, endpoint_json, tmp_path):
     schema2 = "symbol string, date string, close_price_millions double, hi double, lo double"
 
     # 1. parse (explicit schema) + remap provider tags → entity fields
-    raw1 = R.read(spark, "json", p1, schema=schema1)
-    raw2 = R.read(spark, "json", p2, schema=schema2)
-    ep1 = R.remap_columns(
-        raw1,
-        {"symbol": ["main_identifier"], "date": ["m_date"],
-         "close_price_millions": ["m_close"], "vol": ["m_volume"]},
+    raw1 = spark.read.json(p1, schema=schema1)
+    raw2 = spark.read.json(p2, schema=schema2)
+    ep1 = raw1.select(
+        F.col("symbol").alias("main_identifier"), F.col("date").alias("m_date"),
+        F.col("close_price_millions").alias("m_close"), F.col("vol").alias("m_volume"),
     )
-    ep2 = R.remap_columns(
-        raw2,
-        {"symbol": ["main_identifier"], "date": ["m_date"],
-         "close_price_millions": ["m_close"], "hi": ["m_high"], "lo": ["m_low"]},
+    ep2 = raw2.select(
+        F.col("symbol").alias("main_identifier"), F.col("date").alias("m_date"),
+        F.col("close_price_millions").alias("m_close"),
+        F.col("hi").alias("m_high"), F.col("lo").alias("m_low"),
     )
     # 2. preprocess: millions→units, ISO date cast
-    steps = {"m_close": lambda c: c * 1e6, "m_date": lambda c: F.to_date(c)}
-    ep1 = R.preprocess_chain(ep1, steps)
-    ep2 = R.preprocess_chain(ep2, steps)
+    ep1, ep2 = (
+        ep.withColumn("m_close", F.col("m_close") * 1e6)
+        .withColumn("m_date", F.to_date("m_date"))
+        for ep in (ep1, ep2)
+    )
 
     # 3. missing-rows quality gate (null-safe anti-join)
     missing = CN.missing_rows(
@@ -108,7 +107,7 @@ def test_full_provider_flow(spark, endpoint_json, tmp_path):
 
     # 7. per-identifier partitioned output
     out = str(tmp_path / "curated")
-    S.write(feat, "parquet_per_identifier", out)
+    feat.write.partitionBy("main_identifier").mode("overwrite").parquet(out)
     assert spark.read.parquet(out).count() == 5
 
 

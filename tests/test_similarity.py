@@ -422,3 +422,50 @@ def test_semdedup_oversized_cluster_skips_pruning(spark):
     ).collect()
     assert len(out) == 5
     assert all(not r.semdedup_drop for r in out)  # guard degrades to keep-all
+
+
+
+def test_hyperplane_signature_sql_matches_column_reference(spark):
+    """The SQL-text hyperplane signature gives the buckets of the
+    Column-built reference, with the plane sets of both LSH queries, on
+    sf0.01 embeddings and on hand-built rows: a NULL vector, a NULL
+    element, a zero vector and a vector shorter than the planes."""
+    from pathlib import Path
+
+    from pyspark.sql import functions as F
+
+    from __spark_entry__ import SF0001
+    from data_curator_spark.operators.similarity import hyperplane_signature, plane_tables
+    from tests import kernel_references as ref
+
+    emb = spark.read.parquet(str(Path(SF0001).with_name("sf0.01") / "embeddings.parquet"))
+    hand = spark.createDataFrame(
+        [
+            (-1, None),
+            (-2, [0.25] * 10 + [None] + [-0.5] * 53),
+            (-3, [0.0] * 64),
+            (-4, [1.0, -2.0, 3.0]),
+            (-5, [float(i % 7) - 3.0 for i in range(64)]),
+        ],
+        "vec_id long, embedding array<float>",
+    )
+    frame = emb.select("vec_id", "embedding").unionByName(hand)
+    # lsh_ann_topk's and embedding_near_dup_pairs's default plane sets
+    planes = plane_tables(8, 4, 64, 42) + plane_tables(12, 6, 64, 7)
+    got = [hyperplane_signature("embedding", p).alias(f"s{t}") for t, p in enumerate(planes)]
+    want = [
+        ref.hyperplane_signature(F.col("embedding"), p).alias(f"r{t}")
+        for t, p in enumerate(planes)
+    ]
+    out = frame.select("vec_id", *got, *want)
+    assert {f.dataType.simpleString() for f in out.schema.fields} == {"bigint"}
+    rows = {r.vec_id: r for r in out.collect()}
+    assert len(rows) == emb.count() + 5
+    for r in rows.values():
+        assert [r[f"s{t}"] for t in range(len(planes))] == [
+            r[f"r{t}"] for t in range(len(planes))
+        ], r.vec_id
+    full = (1 << 12) - 1
+    assert rows[-1].s4 == rows[-2].s4 == rows[-4].s4 == 0  # NULL dot: bit off
+    assert rows[-3].s4 == full  # dot 0 >= 0: every bit on
+    assert 0 < rows[-5].s4 < full

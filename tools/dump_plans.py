@@ -7,8 +7,10 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from data_curator_spark.queries import QUERIES  # noqa: E402
 from data_curator_spark.session import build_session  # noqa: E402
@@ -36,7 +38,7 @@ def main() -> None:
         plan = re.sub(r"#\d+", "#", plan)  # strip expr ids for diffability
         n_ex = len(re.findall(r"\(\d+\) Exchange", plan))
         out.append(f"\n## {name}  (exchanges: {n_ex})\n\n```\n{plan.strip()}\n```\n")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(ROOT / "PLANS.md", "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md with {len(QUERIES)} plans")
 
