@@ -253,7 +253,7 @@ def lsh_candidate_ids(
     the shuffle partition but cannot shrink the m² pair explosion
     (measured: 90 identical docs in a 300-doc corpus → 4,005
     boilerplate pairs from a single clique,
-    tests/test_dedup.py::test_boilerplate_mega_bucket_band_join). With a
+    tests/test_skew.py::test_boilerplate_mega_bucket_band_join). With a
     cap, buckets larger than ``max_bucket`` are dropped before the join:
     exact duplicates are exact-hash dedup's job (dedup_exact), and a
     >max_bucket near-dup clique still surfaces via its other, unskewed

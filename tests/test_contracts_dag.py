@@ -1,6 +1,7 @@
 """Row-contract masks + derived-column DAG planner tests
 (reference layers: entity contracts SURVEY §5.6; dependency resolution
-§5.5)."""
+§5.5). The planner is ``functions/calculations.py:_closure`` over the
+``CALC_DEPS`` registry."""
 
 from __future__ import annotations
 
@@ -8,7 +9,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_curator_spark.engine import contracts as K
-from data_curator_spark.plans import column_dag as DAG
+from data_curator_spark.functions.calculations import (
+    ALL_CALCULATIONS,
+    CALC_DEPS,
+    _closure,
+    build_features,
+)
 
 
 def test_apply_contracts_split_and_metrics(spark):
@@ -35,37 +41,55 @@ def test_contract_null_passes_value_checks(spark):
     assert clean2.count() == 0
 
 
+
+def _fundamentals_frame(spark):
+    return spark.createDataFrame(
+        [("AAA", "2024-01-02", 10.0, 5.0, 25.0, 2023, "FY")],
+        "main_identifier string, m_date string, m_close_split_adjusted double, "
+        "fis_weighted_average_diluted_shares_outstanding double, fis_net_income double, "
+        "f_fiscal_year int, f_fiscal_period string",
+    ).withColumn("m_date", F.to_date("m_date"))
+
+
 def test_dag_topo_and_build(spark):
-    df = spark.createDataFrame([(2.0, 3.0)], "a double, b double")
-    registry = {
-        "c_sum": lambda a, b: a + b,
-        "c_double_sum": lambda c_sum: c_sum * 2,
-        "c_combo": lambda c_double_sum, a: c_double_sum + a,
-    }
-    out = DAG.build_columns(df, ["c_combo"], registry)
-    row = out.collect()[0]
-    assert row["c_sum"] == 5.0
-    assert row["c_double_sum"] == 10.0
-    assert row["c_combo"] == 12.0
+    requested = ["c_earnings_to_price"]
+    order = _closure(requested)
+    assert order == [
+        "c_last_twelve_months_net_income", "c_market_cap", "c_earnings_to_price"
+    ]
+    row = build_features(_fundamentals_frame(spark), requested, period="annual").collect()[0]
+    assert row["c_last_twelve_months_net_income"] == 25.0
+    assert row["c_market_cap"] == 50.0
+    assert row["c_earnings_to_price"] == 0.5
 
 
 def test_dag_requested_projection(spark):
-    df = spark.createDataFrame([(2.0, 3.0)], "a double, b double")
-    registry = {"c_sum": lambda a, b: a + b}
-    out = DAG.build_columns(df, ["c_sum"], registry, keep_only_requested=True)
-    assert out.columns == ["c_sum"]
+    df = _fundamentals_frame(spark)
+    out = build_features(df, ["c_earnings_to_price"], period="annual")
+    # exactly the requested column and its transitive c_ dependencies,
+    # appended in plan order; no helper columns leak
+    assert out.columns == df.columns + _closure(["c_earnings_to_price"])
 
 
-def test_dag_circular_dependency(spark):
-    df = spark.createDataFrame([(1.0,)], "a double")
-    registry = {
-        "c_x": lambda c_y: c_y,
-        "c_y": lambda c_x: c_x,
+def test_dag_circular_dependency():
+    # the registry is acyclic: over every calculation, each c_ dependency
+    # comes before its dependent (the seen-set DFS would emit a cycle out
+    # of order rather than loop)
+    order = _closure(ALL_CALCULATIONS)
+    assert sorted(order) == ALL_CALCULATIONS
+    pos = {name: i for i, name in enumerate(order)}
+    for name, deps in CALC_DEPS.items():
+        for d in deps:
+            if d.startswith("c_"):
+                assert pos[d] < pos[name], (d, name)
+
+
+def test_dag_unresolved_dependency():
+    with pytest.raises(KeyError):
+        _closure(["c_missing"])
+    # every c_ dependency the registry names is itself registered
+    unresolved = {
+        d for deps in CALC_DEPS.values() for d in deps
+        if d.startswith("c_") and d not in CALC_DEPS
     }
-    with pytest.raises(DAG.CircularDependencyError):
-        DAG.topo_order(["c_x"], registry, {"a"})
-
-
-def test_dag_unresolved_dependency(spark):
-    with pytest.raises(DAG.UnresolvedDependencyError):
-        DAG.topo_order(["c_missing"], {}, {"a"})
+    assert unresolved == set()

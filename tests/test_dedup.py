@@ -890,46 +890,3 @@ def test_lsh_sql_projections_match_column_reference(spark):
         )
     finally:
         sigs.unpersist()
-
-
-def test_boilerplate_mega_bucket_band_join(spark):
-    """Skew stress (VERDICT r2 #9): 30% of the corpus is ONE template →
-    one (band, key) bucket holds 90 docs and the band self-join's output
-    is quadratic in it. Uncapped: completes and yields the full 90·89/2
-    boilerplate clique (plus real near-dups). Capped (max_bucket): the
-    mega-bucket is dropped before the join, real near-dups survive via
-    their unskewed bands, and exact dups are dedup_exact's job."""
-    import numpy as np
-
-    from data_curator_spark.operators.dedup import (
-        lsh_candidate_ids,
-        minhash_signatures,
-    )
-
-    rng = np.random.default_rng(99)
-    vocab = [f"tok{i}" for i in range(500)]
-    template = " ".join(rng.choice(vocab, 80))
-    docs = [(i, template) for i in range(90)]  # 30% boilerplate
-    # a genuine near-dup pair, distinct from the template
-    base = " ".join(rng.choice(vocab, 80))
-    words = base.split(); words[3] = "CHANGED"
-    docs += [(1000, base), (1001, " ".join(words))]
-    docs += [(2000 + i, " ".join(rng.choice(vocab, 80))) for i in range(208)]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-
-    sigs = minhash_signatures(df, "doc_id", "text", k=32).persist()
-    try:
-        uncapped = lsh_candidate_ids(sigs, "doc_id", k=32, bands=16)
-        n_unc = uncapped.count()
-        clique = 90 * 89 // 2
-        assert n_unc >= clique  # the full boilerplate clique materialized
-        assert uncapped.filter("id_a = 1000 and id_b = 1001").count() == 1
-
-        capped = lsh_candidate_ids(sigs, "doc_id", k=32, bands=16, max_bucket=50)
-        capped_rows = capped.collect()
-        ids = {(r["id_a"], r["id_b"]) for r in capped_rows}
-        assert (1000, 1001) in ids          # real near-dup survives
-        assert len(capped_rows) < clique    # mega-clique suppressed
-        assert not any(a < 90 and b < 90 for a, b in ids)
-    finally:
-        sigs.unpersist()

@@ -1,80 +1,84 @@
-"""Skew operators: salted results must equal unsalted results, and the
-salt must actually spread the hot key."""
+"""Skew stress: a hot key must not land in one task. The pipeline's
+salted bucket id spreads a mega-repo over every bucket, AQE's skew-join
+split stands in for a hand-salted join, and the LSH band join's bucket
+cap keeps a boilerplate mega-bucket from exploding the self-join."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from data_curator_spark.operators.skew import salted_aggregate, salted_join
+from data_curator_spark.pipeline.runner import with_bucket
 
 
-@pytest.fixture(scope="module")
-def skewed(spark):
-    # key 'hot' has 5000 rows, 20 other keys have 10 each
+def test_salt_spreads_hot_key(spark):
+    # repo 'hot' holds 5000 files, 20 other repos hold 10 each
     hot = spark.range(5000).select(
-        F.lit("hot").alias("k"), (F.col("id") % 97).cast("double").alias("v")
+        F.lit("hot").alias("repo"), F.concat(F.lit("f"), F.col("id").cast("string")).alias("path")
     )
     rest = spark.range(200).select(
-        F.concat(F.lit("k"), (F.col("id") % 20).cast("string")).alias("k"),
-        F.col("id").cast("double").alias("v"),
+        F.concat(F.lit("r"), (F.col("id") % 20).cast("string")).alias("repo"),
+        F.concat(F.lit("f"), F.col("id").cast("string")).alias("path"),
     )
-    return hot.unionByName(rest)
-
-
-def test_salted_aggregate_matches_plain(spark, skewed):
-    plain = {
-        r["k"]: (r["s"], r["c"], r["mn"], r["mx"], r["a"])
-        for r in skewed.groupBy("k")
-        .agg(
-            F.sum("v").alias("s"), F.count("v").alias("c"),
-            F.min("v").alias("mn"), F.max("v").alias("mx"), F.avg("v").alias("a"),
-        )
-        .collect()
-    }
-    salted = {
-        r["k"]: (r["s"], r["c"], r["mn"], r["mx"], r["a"])
-        for r in salted_aggregate(
-            skewed,
-            ["k"],
-            {"s": ("sum", "v"), "c": ("count", "v"), "mn": ("min", "v"),
-             "mx": ("max", "v"), "a": ("avg", "v")},
-            n_salts=8,
-        ).collect()
-    }
-    assert plain.keys() == salted.keys()
-    for k in plain:
-        for p, s in zip(plain[k], salted[k]):
-            assert s == pytest.approx(p)
-
-
-def test_salt_spreads_hot_key(spark, skewed):
-    from data_curator_spark.operators.skew import _salt
-
-    hot = skewed.filter("k = 'hot'").withColumn("__salt", _salt(8, F.col("v")))
-    per_salt = hot.groupBy("__salt").count().collect()
-    assert len(per_salt) == 8  # all salt buckets used
-    counts = [r["count"] for r in per_salt]
+    df = with_bucket(hot.unionByName(rest), 8)
+    per_bucket = df.filter("repo = 'hot'").groupBy("bucket").count().collect()
+    assert len(per_bucket) == 8  # all buckets used
+    counts = [r["count"] for r in per_bucket]
     assert max(counts) < 5000 * 0.5  # no bucket holds the majority
+    # the path in the hash is what spreads it: keyed by repo alone, the
+    # hot repo would be one bucket
+    assert hot.select(F.pmod(F.xxhash64("repo"), F.lit(8))).distinct().count() == 1
 
 
-def test_salted_join_matches_plain(spark, skewed):
+def test_salted_join_matches_plain(spark):
+    """AQE's skew-join split stands in for a hand-salted join: the hot
+    key's shuffle partition is split and the other side's matching
+    partition replicated to each split. The session enables it; only the
+    size thresholds are lowered so a test-sized hot key counts as skewed.
+    The split join must equal the unsplit one, row for row."""
+    skewed = spark.range(5000).select(
+        F.lit("hot").alias("k"), (F.col("id") % 97).cast("double").alias("v")
+    ).unionByName(
+        spark.range(200).select(
+            F.concat(F.lit("k"), (F.col("id") % 20).cast("string")).alias("k"),
+            F.col("id").cast("double").alias("v"),
+        )
+    )
     dim = spark.createDataFrame(
         [("hot", 1.5)] + [(f"k{i}", float(i)) for i in range(20)], "k string, w double"
     )
-    plain = (
-        skewed.join(dim, "k")
-        .agg(F.sum(F.col("v") * F.col("w")).alias("t"))
-        .collect()[0]["t"]
-    )
-    salted = (
-        salted_join(skewed, dim, "k", n_salts=8)
-        .agg(F.sum(F.col("v") * F.col("w")).alias("t"))
-        .collect()[0]["t"]
-    )
-    assert salted == pytest.approx(plain)
-    # row counts preserved exactly (no dup/loss from replication)
-    assert salted_join(skewed, dim, "k", n_salts=8).count() == skewed.join(dim, "k").count()
+    assert spark.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true"
+
+    def run(skew_join: str):
+        conf = {
+            "spark.sql.adaptive.skewJoin.enabled": skew_join,
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "1k",
+            "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1k",
+            "spark.sql.adaptive.coalescePartitions.enabled": "false",
+        }
+        old = {k: spark.conf.get(k, None) for k in conf}
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        try:
+            out = skewed.join(dim, "k").agg(
+                F.sum(F.col("v") * F.col("w")).alias("t"), F.count("*").alias("n")
+            )
+            row = out.collect()[0]
+            return row, out._jdf.queryExecution().executedPlan().toString()
+        finally:
+            for k, v in old.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+
+    split, split_plan = run("true")
+    plain, plain_plan = run("false")
+    assert "skew=true" in split_plan and "skew=true" not in plain_plan
+    assert split["t"] == pytest.approx(plain["t"])
+    assert split["n"] == plain["n"] == 5200  # no row duplicated or lost
 
 
 def test_boilerplate_mega_bucket_band_join(spark):

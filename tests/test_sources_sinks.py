@@ -1,132 +1,25 @@
-"""Source readers / output sinks (SURVEY §2.1)."""
+"""Sources: the binaryFile reader feeds the multimodal operators.
+Every other read in the package is plain ``spark.read`` with a declared
+schema (``queries._t`` for the testdata tables)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
-from data_curator_spark.sources import readers as R
-from data_curator_spark.sources import sinks as S
-
-
-def test_parquet_reader_and_remap(spark, tmp_path):
-    p = str(tmp_path / "t.parquet")
-    spark.createDataFrame([(1, 2.5)], "tag_a int, tag_b double").write.parquet(p)
-    df = R.read(spark, "parquet", p)
-    out = R.remap_columns(df, {"tag_a": ["x"], "tag_b": ["y", "y_copy"]})
-    row = out.collect()[0]
-    assert (row["x"], row["y"], row["y_copy"]) == (1, 2.5, 2.5)
-
-
-def test_json_reader_requires_schema(spark, tmp_path):
-    p = str(tmp_path / "j")
-    with pytest.raises(ValueError, match="explicit schema"):
-        R.read(spark, "json", p)
-
-
-def test_json_reader_with_schema(spark, tmp_path):
-    p = str(tmp_path / "data.json")
-    with open(p, "w") as f:
-        f.write('{"a": 1, "b": "x"}\n{"a": 2, "b": null}\n')
-    df = R.read(spark, "json", p, schema="a long, b string")
-    assert [tuple(r) for r in df.orderBy("a").collect()] == [(1, "x"), (2, None)]
-
-
-def test_unknown_source(spark):
-    with pytest.raises(R.UnknownSourceError):
-        R.read(spark, "nope", "/x")
-
-
-def test_preprocess_chain_unit_scaling(spark):
-    df = spark.createDataFrame([(2.0,)], "millions double")
-    out = R.preprocess_chain(df, {"millions": lambda c: c * 1e6})
-    assert out.collect()[0]["millions"] == 2e6
-
-
-def test_parquet_per_identifier_sink(spark, tmp_path):
-    p = str(tmp_path / "out")
-    df = spark.createDataFrame(
-        [("A", 1, 1.0), ("A", 2, 2.0), ("B", 1, 3.0)], "main_identifier string, t int, v double"
-    )
-    S.write(df, "parquet_per_identifier", p)
-    import os
-
-    dirs = {d for d in os.listdir(p) if d.startswith("main_identifier=")}
-    assert dirs == {"main_identifier=A", "main_identifier=B"}
-    back = spark.read.parquet(p)
-    assert back.count() == 3
-
-
-def test_in_memory_sink_multiindex(spark):
-    df = spark.createDataFrame(
-        [("A", 1, 1.0), ("B", 1, 3.0)], "main_identifier string, d int, v double"
-    )
-    pdf = S.write(df, "in_memory", date_col="d")
-    assert list(pdf.index.names) == ["main_identifier", "d"]
-    assert pdf.loc[("A", 1), "v"] == 1.0
-
-
-def test_bucketed_join_is_shuffle_free(spark, tmp_path):
-    """Joining two tables bucketed on the same key must not shuffle —
-    the plan contains no Exchange (scale: pre-partitioned fact joins)."""
-    import re
-
-    from pyspark.sql import functions as F
-
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        a = spark.range(0, 1000).select(
-            F.col("id").alias("k"), (F.col("id") * 2).alias("va")
-        )
-        b = spark.range(0, 1000).select(
-            F.col("id").alias("k"), (F.col("id") * 3).alias("vb")
-        )
-        S.write(a, "bucketed_table", "t_bucket_a", ["k"], 8)
-        S.write(b, "bucketed_table", "t_bucket_b", ["k"], 8)
-        joined = spark.table("t_bucket_a").join(spark.table("t_bucket_b"), "k")
-        plan = joined._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        )
-        assert len(re.findall(r"\(\d+\) Exchange", plan)) == 0, plan
-        assert joined.count() == 1000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        spark.sql("DROP TABLE IF EXISTS t_bucket_a")
-        spark.sql("DROP TABLE IF EXISTS t_bucket_b")
-
-
-def test_orc_reader_roundtrip(spark, tmp_path):
-    from data_curator_spark.sources import readers as R
-
-    p = str(tmp_path / "t.orc")
-    spark.createDataFrame([(1, "a"), (2, "b")], "id int, s string").write.orc(p)
-    got = R.read(spark, "orc", p).orderBy("id").collect()
-    assert [(r["id"], r["s"]) for r in got] == [(1, "a"), (2, "b")]
-
-
-def test_text_reader_lines_and_wholetext(spark, tmp_path):
-    from data_curator_spark.sources import readers as R
-
-    f = tmp_path / "doc.txt"
-    f.write_text("line one\nline two\n")
-    lines = R.read(spark, "text", str(f)).collect()
-    assert sorted(r["value"] for r in lines) == ["line one", "line two"]
-    whole = R.read(spark, "text", str(f), wholetext="true").collect()
-    assert len(whole) == 1 and whole[0]["value"].startswith("line one\n")
+from data_curator_spark.operators.multimodal import extract_features
 
 
 def test_binary_reader_media_ingest(spark, tmp_path):
     """binaryFile source feeds the multimodal operator: bytes arrive
     opaque with per-file metadata, and extract_features consumes them."""
-    from pyspark.sql import functions as F
-
-    from data_curator_spark.operators.multimodal import extract_features
-    from data_curator_spark.sources import readers as R
-
     payload = bytes(range(48))
     (tmp_path / "a.bin").write_bytes(payload)
     (tmp_path / "b.bin").write_bytes(payload * 2)
-    df = R.read(spark, "binary", str(tmp_path), pathGlobFilter="*.bin")
+    df = (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", "*.bin")
+        .load(str(tmp_path))
+    )
     rows = {r["path"].rsplit("/", 1)[-1]: r for r in df.collect()}
     assert rows["a.bin"]["length"] == 48 and bytes(rows["a.bin"]["content"]) == payload
     media = df.select(
