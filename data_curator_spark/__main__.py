@@ -135,12 +135,13 @@ def main(argv: list[str] | None = None) -> int:
         spark = build_session("quality-filter-pipeline")
         bench_hashes = None
         if args.decontaminate:
+            from data_curator_spark.pipeline.runner import read_corpus
             from data_curator_spark.streaming.quality_stream import (
                 benchmark_shingle_hashes,
             )
 
             bench_hashes = benchmark_shingle_hashes(
-                spark.read.parquet(args.decontaminate), "content"
+                read_corpus(spark, args.decontaminate, ["content"]), "content"
             )
         if args.layout == "mvcc":
             from data_curator_spark.pipeline.mvcc import run_pipeline_mvcc

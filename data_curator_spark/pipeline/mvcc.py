@@ -54,6 +54,7 @@ from data_curator_spark.pipeline.runner import (
     _recover_swap,
     _snapshots_path,
     attach_lineage_observation,
+    bucket_in,
     commit_bucket_metrics,
     commit_snapshot,
     latest_entries,
@@ -61,11 +62,12 @@ from data_curator_spark.pipeline.runner import (
     latest_snapshot_id,
     local_path,
     new_run_id,
+    read_corpus,
     read_manifest,
+    stage_output,
     with_bucket,
     write_manifest_file,
 )
-from data_curator_spark.pipeline.stages import run_stages
 
 
 def _read_data(
@@ -453,7 +455,7 @@ def run_pipeline_mvcc(
     run_id = new_run_id()
     t0 = time.time()
 
-    raw = with_bucket(spark.read.parquet(input_path), n_buckets)
+    raw = with_bucket(read_corpus(spark, input_path), n_buckets)
     parent_snapshot = latest_snapshot_id(spark, manifest_path)
     latest = latest_entries(spark, manifest_path)
     done = set(latest)
@@ -474,12 +476,12 @@ def run_pipeline_mvcc(
 
     # no-op re-submit: no stage chain, no write, no entries append
     if new_buckets:
-        todo = raw.filter(~F.col("bucket").isin(list(skip))) if skip else raw
-        result = run_stages(
+        todo = raw.filter(f"NOT {bucket_in(skip)}") if skip else raw
+        result = stage_output(
             todo, spark, near_dup=near_dup, bench_hashes=bench_hashes,
             span_dedup_bp=span_dedup_bp, cdc_dup_bp=cdc_dup_bp,
             repo_min_keep_bp=repo_min_keep_bp,
-        ).select("bucket", *OUTPUT_COLS)
+        )
         observation, result = attach_lineage_observation(result, run_id)
         written_new = _append_run(spark, result, run_id, output_path)
         if crash_before_commit:

@@ -35,8 +35,9 @@ Scale design (north_rule):
   bucket: the completed buckets, the MVCC selection and the run totals.
   Per-bucket metrics come from a partition-pruned read of ONLY the
   just-written buckets, so a resume at 100 TB never re-reads completed
-  output. A no-op re-submit runs no Spark job beyond the input's
-  schema read and commits only a snapshot row.
+  output. The input is read with the declared ``CORPUS_SCHEMA``
+  (``read_corpus``), so a no-op re-submit runs no Spark job at all and
+  commits only a snapshot row.
 """
 
 from __future__ import annotations
@@ -66,6 +67,15 @@ OUTPUT_COLS = [
     "secret_entropy", "mojibake_chars", "comment_chars",
 ]
 
+# The declared input table: the columns generate_corpus writes and the
+# stages read. Extra input columns are not read (OUTPUT_COLS drops them).
+CORPUS_SCHEMA = "repo STRING, path STRING, commit STRING, lang STRING, content STRING"
+CORPUS_COLUMNS = [f.split()[0] for f in CORPUS_SCHEMA.split(", ")]
+
+# the runner's output projection as SQL text: a select of column names
+# costs about four py4j round trips per name, a selectExpr one
+_OUTPUT_SQL = [f"`{c}`" for c in ("bucket", *OUTPUT_COLS)]
+
 # 100-TB resume granularity: a lost bucket re-runs 1/n_buckets of the
 # input, so the default is sized for cluster-scale inputs (a 100 TB
 # corpus re-runs ~400 GB per lost bucket at 256), while staying cheap on
@@ -75,9 +85,42 @@ DEFAULT_N_BUCKETS = 256
 
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     """Salted bucket id: hash includes path so mega-repos spread."""
-    return df.withColumn(
-        "bucket", F.pmod(F.xxhash64(F.col("repo"), F.col("path")), F.lit(n_buckets))
-    )
+    return df.withColumn("bucket", F.expr(f"pmod(xxhash64(repo, path), {int(n_buckets)})"))
+
+
+def read_corpus(
+    spark: SparkSession, path: str, columns: list[str] | None = None
+) -> DataFrame:
+    """The one reader of a corpus table: ``path`` read with
+    ``CORPUS_SCHEMA`` (or the subset ``columns`` of it), so no Spark job
+    infers the schema.
+
+    Raises ``ValueError`` naming each declared column that the first
+    input file lacks or does not store as a string: a declared-schema
+    read would fill a missing column with NULLs, and would read an
+    unannotated BINARY column as STRING. The check reads that file's
+    parquet footer (the one Spark's schema inference read) on the
+    driver, with no Spark job."""
+    cols = columns or CORPUS_COLUMNS
+    df = spark.read.schema(", ".join(f"`{c}` STRING" for c in cols)).parquet(path)
+    files = df._jdf.inputFiles()  # a Java array: fetch only the first path
+    if len(files):
+        footer = pq.read_schema(files[0])
+        bad = {}
+        for c in cols:
+            if c not in footer.names:
+                bad[c] = "missing"
+            elif not pa.types.is_string(t := footer.field(c).type) and not pa.types.is_large_string(t):
+                bad[c] = str(t)
+        if bad:
+            raise ValueError(f"{files[0]}: declared STRING column(s) missing or mistyped: {bad}")
+    return df
+
+
+def stage_output(df: DataFrame, spark: SparkSession, **stage_opts) -> DataFrame:
+    """``run_stages`` over the bucketed input, projected to the runner's
+    output schema (``bucket`` + OUTPUT_COLS); shared by both layouts."""
+    return run_stages(df, spark, **stage_opts).selectExpr(*_OUTPUT_SQL)
 
 
 ENTRIES_SCHEMA = (
@@ -108,6 +151,11 @@ def _arrow_schema(ddl: str) -> pa.Schema:
 
 ENTRIES_ARROW = _arrow_schema(ENTRIES_SCHEMA)
 SNAPSHOTS_ARROW = _arrow_schema(SNAPSHOTS_SCHEMA)
+
+
+def bucket_in(buckets: Iterable[int]) -> str:
+    """SQL predicate: ``bucket`` is one of ``buckets``."""
+    return f"bucket IN ({', '.join(str(int(b)) for b in buckets)})"
 
 
 def new_run_id() -> str:
@@ -240,9 +288,9 @@ def attach_lineage_observation(result: DataFrame, run_id: str):
     observation = Observation(f"lineage_{run_id}")
     observed = result.observe(
         observation,
-        F.count(F.lit(1)).alias("rows"),
-        F.sum(F.col("keep").cast("long")).alias("kept"),
-        F.sum((F.size("scrub_rules_fired") > 0).cast("long")).alias("scrubbed"),
+        F.expr("count(1) AS `rows`"),
+        F.expr("sum(CAST(keep AS BIGINT)) AS `kept`"),
+        F.expr("sum(CAST(size(scrub_rules_fired) > 0 AS BIGINT)) AS `scrubbed`"),
     )
     return observation, observed
 
@@ -261,10 +309,10 @@ def commit_bucket_metrics(
     them into its plan instead of re-reading the manifest. Shared by
     both output layouts."""
     agg_rows = written_new.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("rows"),
-        F.sum(F.col("keep").cast("long")).alias("kept"),
-        F.sum((~F.col("keep")).cast("long")).alias("dropped"),
-        F.sum((F.size("scrub_rules_fired") > 0).cast("long")).alias("scrubbed"),
+        F.expr("count(1) AS `rows`"),
+        F.expr("sum(CAST(keep AS BIGINT)) AS `kept`"),
+        F.expr("sum(CAST(NOT keep AS BIGINT)) AS `dropped`"),
+        F.expr("sum(CAST(size(scrub_rules_fired) > 0 AS BIGINT)) AS `scrubbed`"),
     ).collect()  # <= n_buckets rows — the only action on the re-read
     by_bucket = {int(r["bucket"]): r for r in agg_rows}
 
@@ -352,7 +400,7 @@ def run_pipeline(
     run_id = new_run_id()
     t0 = time.time()
 
-    raw = with_bucket(spark.read.parquet(input_path), n_buckets)
+    raw = with_bucket(read_corpus(spark, input_path), n_buckets)
     parent_snapshot = latest_snapshot_id(spark, manifest_path)
     latest = latest_entries(spark, manifest_path)
     done = sorted(latest)
@@ -378,13 +426,13 @@ def run_pipeline(
     # re-read and no entries append — only the snapshot row below
     if new_buckets:
         todo = raw if len(new_buckets) == n_buckets else raw.filter(
-            F.col("bucket").isin(new_buckets)
+            bucket_in(new_buckets)
         )
-        result = run_stages(
+        result = stage_output(
             todo, spark, near_dup=near_dup, bench_hashes=bench_hashes,
             span_dedup_bp=span_dedup_bp, cdc_dup_bp=cdc_dup_bp,
             repo_min_keep_bp=repo_min_keep_bp,
-        ).select("bucket", *OUTPUT_COLS)
+        )
         # run-level lineage totals ride the WRITE pass for free and
         # cross-check the per-bucket metrics below. Per-bucket metrics do
         # NOT use observe: that needs ~3·n_buckets conditional sums
@@ -418,7 +466,7 @@ def run_pipeline(
         # only the just-written buckets — completed history is never
         # re-read; the written schema skips the inference job
         written_new = spark.read.schema(result.schema).parquet(output_path).filter(
-            F.col("bucket").isin(new_buckets)
+            bucket_in(new_buckets)
         )
         committed = commit_bucket_metrics(
             observation, written_new, new_buckets, run_id, t0, manifest_path

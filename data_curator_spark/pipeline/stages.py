@@ -9,9 +9,18 @@ Stage layout over the input table ``(repo, path, commit, lang, content)``:
                            model weights (the only Python exchange).
 3. ``with_scrub``        — regex PII/toxicity scrub as a chained
                            ``regexp_replace`` (JVM); per-rule fire flags
-                           via ``rlike``; sha256 preserved for untouched
-                           rows by construction.
+                           by change detection; sha256 preserved for
+                           untouched rows by construction.
 4. ``with_decision``     — keep/drop + first-failing drop_reason.
+
+Stages 1, 3 and 4 and the model gate are SQL text, one projection each
+(a ``selectExpr``, or a ``withColumn`` of one ``F.expr``). Each PySpark
+``Column``/``DataFrame`` call makes one or more py4j round trips to the
+driver JVM, so the chain built from Column calls (kept as the
+differential reference in ``tests/kernel_references.py``) makes about
+1,000 per build, while a ``selectExpr`` makes one per expression string
+plus five. The model-score UDF and its weight broadcasts are built once
+per SparkContext.
 
 The reference analog: validate (entity contracts → mask columns),
 homogenize (provider lang tag vs computed langid = the cross-endpoint
@@ -30,6 +39,53 @@ from data_curator_spark.pipeline import spec
 from data_curator_spark.pipeline.model import BigramLM, LangIdModel, build_bigram_lm, build_langid_model
 
 # ---------------------------------------------------------------------------
+# SQL text
+# ---------------------------------------------------------------------------
+
+_ESCAPED_LITERALS = "spark.sql.parser.escapedStringLiterals"
+
+
+def _q(name: str) -> str:
+    """A column name as a backquoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _lit(s: str) -> str:
+    """``s`` as a SQL string literal — the one writer of the literals
+    below (regexes, translate sets, replacements, rule names). Backslash
+    and quote are escaped, and the control chars of the mojibake set are
+    ``\\uXXXX`` escapes. Spark reads the text back to ``s`` only while
+    spark.sql.parser.escapedStringLiterals is off; the SQL text carries
+    no session, so ``_check_parser`` verifies that setting where the
+    text meets one."""
+    out = []
+    for ch in s:
+        if ch in "\\'":
+            out.append("\\" + ch)
+        elif ch < " " or ch == "\x7f":
+            out.append(f"\\u{ord(ch):04X}")
+        else:
+            out.append(ch)
+    return "'" + "".join(out) + "'"
+
+
+def _check_parser(spark: SparkSession) -> None:
+    """Refuse a session that parses string literals verbatim: there the
+    backslash escapes ``_lit`` writes would reach the regexes and
+    translate sets as literal backslashes."""
+    if spark.conf.get(_ESCAPED_LITERALS, "false").strip().lower() == "true":
+        raise ValueError(
+            f"the pipeline stages are SQL text written for {_ESCAPED_LITERALS}=false"
+        )
+
+
+def _num(x: float) -> str:
+    """A spec threshold as the SQL literal of the type ``F.lit`` gives it:
+    INT for an int, DOUBLE (``D`` suffix, not DECIMAL) for a float."""
+    return f"{x!r}D" if isinstance(x, float) else str(x)
+
+
+# ---------------------------------------------------------------------------
 # stage 1: heuristic statistics (pure SQL expressions)
 # ---------------------------------------------------------------------------
 
@@ -40,40 +96,66 @@ _ALNUM_CHARS = (
 _DIGIT_CHARS = "0123456789"
 
 
-def with_heuristics(df: DataFrame, content: str = "content") -> DataFrame:
-    c = F.col(content)
-    lines = F.split(c, "\n")
-    n_chars = F.length(c)
-    n_lines = F.size(lines)
-    # sum of line lengths = n_chars − (n_lines − 1) separators
-    avg_line = (n_chars - n_lines + 1).cast("double") / n_lines
-    return df.select(
-        "*",
-        n_chars.alias("n_chars"),
-        n_lines.alias("n_lines"),
-        F.array_max(F.transform(lines, lambda x: F.length(x))).alias("max_line_len"),
-        avg_line.alias("avg_line_len"),
+def _len_sum_sql(arr: str, acc: str = "acc", x: str = "x") -> str:
+    """Total length of the strings in array ``arr``; null → null."""
+    return f"aggregate({arr}, CAST(0 AS BIGINT), ({acc}, {x}) -> {acc} + length({x}))"
+
+
+def _superset_runs_sql(c: str) -> str:
+    return f"regexp_extract_all({c}, {_lit(spec.BLOB_SUPERSET_PATTERN)}, 0)"
+
+
+def _b64_chars_sql(c: str) -> str:
+    """Chars covered by B64_BLOB_PATTERN matches == superset runs of
+    length >= B64_BLOB_RUN (same alphabet, both maximal); null → null."""
+    runs = f"filter({_superset_runs_sql(c)}, r -> length(r) >= {spec.B64_BLOB_RUN})"
+    return _len_sum_sql(runs)
+
+
+def _hex_chars_sql(c: str) -> str:
+    """Chars covered by HEX_BLOB_PATTERN matches: the inner extraction
+    re-scans only the (rare) superset runs, never the document."""
+    inner = _len_sum_sql(f"regexp_extract_all(r, {_lit(spec.HEX_BLOB_PATTERN)}, 0)", "n", "y")
+    return f"aggregate({_superset_runs_sql(c)}, CAST(0 AS BIGINT), (acc, r) -> acc + {inner})"
+
+
+def _b64_chars_fused(c: Column) -> Column:
+    """``b64_blob_chars`` of with_heuristics over the column reference ``c``."""
+    return F.expr(_b64_chars_sql(_q(c._jc.toString())))
+
+
+def _hex_chars_fused(c: Column) -> Column:
+    """``hex_blob_chars`` of with_heuristics over the column reference ``c``."""
+    return F.expr(_hex_chars_sql(_q(c._jc.toString())))
+
+
+def _heuristics_sql(content: str) -> list[str]:
+    c = _q(content)
+    lines = f"split({c}, {_lit(chr(10))})"
+    n_chars = f"length({c})"
+    n_lines = f"size({lines})"
+
+    def ratio(chars: str) -> str:
         # translate()-delete, NOT regexp_count: Spark 4 lowers
         # regexp_count to size(regexp_extract_all(...)), materializing
         # one array element PER MATCHED CHARACTER — measured 1.9× slower
         # than the branch-free translate scan. Exact for these literal
         # ASCII classes (and the DuckDB oracle / pandas labeler count the
         # same chars by their own methods, so parity is on values).
-        (
-            (n_chars - F.length(F.translate(c, _ALNUM_CHARS, ""))).cast(
-                "double"
-            )
-            / F.greatest(n_chars, F.lit(1))
-        ).alias("alnum_ratio"),
-        (
-            (n_chars - F.length(F.translate(c, _DIGIT_CHARS, ""))).cast(
-                "double"
-            )
-            / F.greatest(n_chars, F.lit(1))
-        ).alias("digit_ratio"),
-        (
-            F.size(F.array_distinct(lines)).cast("double") / n_lines
-        ).alias("distinct_line_ratio"),
+        return (
+            f"CAST({n_chars} - length(translate({c}, {_lit(chars)}, {_lit('')})) AS DOUBLE)"
+            f" / greatest({n_chars}, 1)"
+        )
+
+    return [
+        f"{n_chars} AS `n_chars`",
+        f"{n_lines} AS `n_lines`",
+        f"array_max(transform({lines}, x -> length(x))) AS `max_line_len`",
+        # sum of line lengths = n_chars − (n_lines − 1) separators
+        f"CAST({n_chars} - {n_lines} + 1 AS DOUBLE) / {n_lines} AS `avg_line_len`",
+        f"{ratio(_ALNUM_CHARS)} AS `alnum_ratio`",
+        f"{ratio(_DIGIT_CHARS)} AS `digit_ratio`",
+        f"CAST(size(array_distinct({lines})) AS DOUBLE) / {n_lines} AS `distinct_line_ratio`",
         # blob chars via ONE fused regexp_extract_all + aggregates, NOT
         # length(regexp_replace(...)): extract_all materializes only the
         # matched runs (empty array for the typical blob-free file),
@@ -82,60 +164,81 @@ def with_heuristics(df: DataFrame, content: str = "content") -> DataFrame:
         # hex alphabets share a superset run extraction; spec.py has the
         # soundness argument). Catalyst subexpression elimination shares
         # the extraction between the two output columns.
-        _b64_chars_fused(c).alias("b64_blob_chars"),
-        _hex_chars_fused(c).alias("hex_blob_chars"),
-        F.substring(c, 1, spec.AUTOGEN_HEAD_CHARS)
-        .rlike(spec.AUTOGEN_PATTERN)
-        .alias("autogen_head"),
+        f"{_b64_chars_sql(c)} AS `b64_blob_chars`",
+        f"{_hex_chars_sql(c)} AS `hex_blob_chars`",
+        f"substring({c}, 1, {spec.AUTOGEN_HEAD_CHARS}) RLIKE {_lit(spec.AUTOGEN_PATTERN)}"
+        " AS `autogen_head`",
         # encoding damage via the same translate()-delete trick as the
         # ratio counts — branch-free, no regex, exact for the literal
         # char set (U+FFFD + C0 controls minus whitespace)
-        (n_chars - F.length(F.translate(c, spec.MOJIBAKE_CHARS, "")))
-        .cast("long")
-        .alias("mojibake_chars"),
+        f"CAST({n_chars} - length(translate({c}, {_lit(spec.MOJIBAKE_CHARS)}, {_lit('')}))"
+        " AS BIGINT) AS `mojibake_chars`",
         # chars covered by full-line / block comments, ONE fused
         # alternation scan (spec.COMMENT_PATTERN has the portability
         # argument); extract_all materializes one element per comment,
         # not per char, so the array stays small on normal code
-        _len_sum(F.regexp_extract_all(c, F.lit(spec.COMMENT_PATTERN), 0))
-        .alias("comment_chars"),
-    )
+        _len_sum_sql(f"regexp_extract_all({c}, {_lit(spec.COMMENT_PATTERN)}, 0)")
+        + " AS `comment_chars`",
+    ]
 
 
-def _superset_runs(c: Column) -> Column:
-    return F.regexp_extract_all(c, F.lit(spec.BLOB_SUPERSET_PATTERN), 0)
-
-
-def _len_sum(arr: Column) -> Column:
-    return F.aggregate(
-        arr, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x)
-    )
-
-
-def _b64_chars_fused(c: Column) -> Column:
-    """Chars covered by B64_BLOB_PATTERN matches == superset runs of
-    length >= B64_BLOB_RUN (same alphabet, both maximal); null → null."""
-    return _len_sum(
-        F.filter(
-            _superset_runs(c), lambda r: F.length(r) >= spec.B64_BLOB_RUN
-        )
-    )
-
-
-def _hex_chars_fused(c: Column) -> Column:
-    """Chars covered by HEX_BLOB_PATTERN matches: the inner extraction
-    re-scans only the (rare) superset runs, never the document."""
-    return F.aggregate(
-        _superset_runs(c),
-        F.lit(0).cast("long"),
-        lambda acc, r: acc
-        + _len_sum(F.regexp_extract_all(r, F.lit(spec.HEX_BLOB_PATTERN), 0)),
-    )
+def with_heuristics(df: DataFrame, content: str = "content") -> DataFrame:
+    _check_parser(df.sparkSession)
+    return df.selectExpr("*", *_heuristics_sql(content))
 
 
 # ---------------------------------------------------------------------------
-# stage 2: model scores (one Arrow-batched pandas UDF, broadcast weights)
+# rule conditions (SQL text over with_heuristics / model columns)
 # ---------------------------------------------------------------------------
+
+# The CONTENT heuristic rules as (name, fire condition) over
+# with_heuristics columns, in RULE_NAMES order — the single source shared
+# by the model gate, with_decision and the rule-ablation analytics query
+# (queries.py:q_rule_ablation, through content_rule_checks), so a
+# threshold or a new rule can never reach one consumer and miss the
+# other. vendored_path (needs a path column) and the model rules (need
+# stage-2 scores) are composed separately by with_decision.
+CONTENT_RULES: list[tuple[str, str]] = [
+    ("too_short", f"`n_chars` < {_num(spec.MIN_CHARS)}"),
+    ("long_line", f"`max_line_len` > {_num(spec.MAX_LINE_LENGTH)}"),
+    ("long_avg_line", f"`avg_line_len` > {_num(spec.MAX_AVG_LINE_LENGTH)}"),
+    ("low_alnum", f"`alnum_ratio` < {_num(spec.MIN_ALNUM_RATIO)}"),
+    ("high_digit", f"`digit_ratio` > {_num(spec.MAX_DIGIT_RATIO)}"),
+    (
+        "repetitive",
+        f"(`n_lines` >= {_num(spec.DISTINCT_LINE_MIN_LINES)})"
+        f" AND (`distinct_line_ratio` < {_num(spec.MIN_DISTINCT_LINE_RATIO)})",
+    ),
+    ("b64_blob", f"`b64_blob_chars` > `n_chars` * {_num(spec.MAX_B64_BLOB_RATIO)}"),
+    ("hex_blob", f"`hex_blob_chars` > `n_chars` * {_num(spec.MAX_HEX_BLOB_RATIO)}"),
+    ("autogenerated", "`autogen_head`"),
+    ("comment_heavy", f"`comment_chars` > `n_chars` * {_num(spec.MAX_COMMENT_RATIO)}"),
+    ("mojibake", f"`mojibake_chars` > `n_chars` * {_num(spec.MAX_MOJIBAKE_RATIO)}"),
+]
+
+
+def _any_sql(conds: list[str]) -> str:
+    """``c1 OR c2 OR …`` folded to the left: the parser would balance an
+    unparenthesized chain into a different (equal-valued) tree."""
+    out = f"({conds[0]})"
+    for cond in conds[1:]:
+        out = f"({out} OR ({cond}))"
+    return out
+
+
+# True where none of the content rules fires. NOT-OR equals the
+# AND-of-complements exactly, nulls included (De Morgan holds in Kleene
+# logic), and a rule added to CONTENT_RULES reaches the gate automatically.
+_HEURISTICS_PASS_SQL = f"NOT {_any_sql([cond for _, cond in CONTENT_RULES])}"
+
+
+def _vendored_path_sql(path: str) -> str:
+    return f"coalesce({_q(path)} RLIKE {_lit(spec.VENDORED_PATH_PATTERN)}, false)"
+
+
+def content_rule_checks() -> list[tuple[str, Column]]:
+    """CONTENT_RULES as (name, fire-condition Column) pairs."""
+    return [(name, F.expr(cond)) for name, cond in CONTENT_RULES]
 
 
 def heuristics_pass_expr() -> Column:
@@ -144,27 +247,34 @@ def heuristics_pass_expr() -> Column:
     drop_reason decided, so model scoring is skipped for them — they
     carry null model columns. On this corpus that's ~55% of character
     volume never shipped to Python."""
-    # derived from the SAME condition list with_decision consumes
-    # (content_rule_checks) — NOT-OR equals the old AND-of-complements
-    # exactly, nulls included (De Morgan holds in Kleene logic), and a
-    # wave-N rule added to the list reaches the gate automatically
-    fired = None
-    for _, cond in content_rule_checks():
-        fired = cond if fired is None else (fired | cond)
-    return ~fired
+    return F.expr(_HEURISTICS_PASS_SQL)
 
 
-def with_model_scores(
-    df: DataFrame,
-    spark: SparkSession,
-    content: str = "content",
-    langid: LangIdModel | None = None,
-    lm: BigramLM | None = None,
-    gate: Column | None = None,
-) -> DataFrame:
-    langid = langid or build_langid_model()
-    lm = lm or build_bigram_lm()
-    sc = spark.sparkContext
+def vendored_path_expr(path: str = "path") -> Column:
+    """True for vendored dependency trees / minified bundles by path
+    (spec.VENDORED_PATH_PATTERN); null paths are not vendored."""
+    _check_parser(SparkSession.active())
+    return F.expr(_vendored_path_sql(path))
+
+
+# ---------------------------------------------------------------------------
+# stage 2: model scores (one Arrow-batched pandas UDF, broadcast weights)
+# ---------------------------------------------------------------------------
+
+# (SparkContext, langid, lm, udf) of the last score UDF built
+_scorer: tuple | None = None
+
+
+def _score_udf(sc, langid: LangIdModel, lm: BigramLM):
+    """The model-score pandas UDF and its four weight broadcasts, built
+    once per live SparkContext and model pair: a build per call would
+    pickle and broadcast the same frozen arrays again and leave four
+    more broadcast files under ``sc._temp_dir`` each time. A new
+    context (the memo holds the old one, so it cannot be mistaken for
+    it) broadcasts again."""
+    global _scorer
+    if _scorer is not None and _scorer[0] is sc and _scorer[1] is langid and _scorer[2] is lm:
+        return _scorer[3]
     b_weights = sc.broadcast(langid.weights)
     b_priors = sc.broadcast(langid.priors)
     b_langs = sc.broadcast(list(langid.langs))
@@ -250,32 +360,44 @@ def with_model_scores(
             }
         )
 
+    _scorer = (sc, langid, lm, score)
+    return score
+
+
+def with_model_scores(
+    df: DataFrame,
+    spark: SparkSession,
+    content: str = "content",
+    langid: LangIdModel | None = None,
+    lm: BigramLM | None = None,
+    gate: Column | None = None,
+) -> DataFrame:
+    return _with_scores(df, spark, content, langid, lm, gate).drop("__scores")
+
+
+def _with_scores(
+    df: DataFrame,
+    spark: SparkSession,
+    content: str,
+    langid: LangIdModel | None,
+    lm: BigramLM | None,
+    gate: Column | None,
+) -> DataFrame:
+    """with_model_scores with the UDF's struct column ``__scores`` kept."""
+    score = _score_udf(
+        spark.sparkContext, langid or build_langid_model(), lm or build_bigram_lm()
+    )
     # gating happens INSIDE the one-pass UDF: splitting the frame and
     # re-unioning would recompute the scan+heuristics per branch, which
     # costs more than shipping the gated rows' bytes to Arrow
     gate_col = F.lit(True) if gate is None else gate
-    scored = df.withColumn("__scores", score(F.col(content), gate_col))
-    return scored.select(
-        "*",
-        "__scores.lang_pred",
-        "__scores.langid_margin",
-        "__scores.log_ppl",
-        "__scores.compress_ratio",
-        "__scores.secret_entropy",
-        "__scores.secret_redacted",
-    ).drop("__scores")
+    scored = df.withColumn("__scores", score(df[content], gate_col))
+    return scored.selectExpr("*", "`__scores`.*")
 
 
 # ---------------------------------------------------------------------------
 # stage 3: PII/toxicity scrub (chained regexp_replace, JVM-side)
 # ---------------------------------------------------------------------------
-
-
-def scrub_expr(content: Column) -> Column:
-    out = content
-    for _, pattern, repl in spec.SCRUB_RULES:
-        out = F.regexp_replace(out, pattern, repl)
-    return out
 
 
 def with_scrub(
@@ -293,7 +415,7 @@ def with_scrub(
     # construction.
     #
     # STRUCTURE MATTERS: each chain step is materialized as its own
-    # withColumn and downstream expressions reference the COLUMN, never
+    # projection and downstream expressions reference the COLUMN, never
     # the expression tree. Building the chain as one nested expression
     # inlined every prior replace into every fired flag and sha — the
     # executed plan carried 60 regexp_replace instances instead of 5
@@ -305,45 +427,48 @@ def with_scrub(
     # secret-entropy redaction) becomes the chain's BASE when present;
     # it registers in scrub_rules_fired as 'secret_literal' so the
     # "fired empty ⟺ sha unchanged" contract covers it.
-    out = df
+    _check_parser(df.sparkSession)
+    out, outputs, internal = _scrub_chain(df, content, pre_redacted)
+    return out.selectExpr("*", *outputs).drop(*internal)
+
+
+def _scrub_chain(
+    df: DataFrame, content: str, pre_redacted: str | None
+) -> tuple[DataFrame, list[str], list[str]]:
+    """The scrub chain's projections over ``df``; returns the frame, the
+    SQL of the four output columns over it, and its internal columns."""
+    out, prev, fired, internal = df, content, [], ["__fired", "__sha_orig"]
     if pre_redacted is not None:
-        out = out.withColumn(
-            "__scrub_base", F.coalesce(F.col(pre_redacted), F.col(content))
-        )
         prev = "__scrub_base"
-    else:
-        prev = content
-    steps: list[tuple[str, str, str]] = []  # (rule, prev_col, this_col)
+        out = out.withColumn(prev, F.expr(f"coalesce({_q(pre_redacted)}, {_q(content)})"))
+        fired.append(f"CASE WHEN {_q(pre_redacted)} IS NOT NULL THEN {_lit('secret_literal')} END")
+        internal.append(prev)
     for i, (name, pattern, repl) in enumerate(spec.SCRUB_RULES):
         col = f"__scrub{i}"
-        out = out.withColumn(col, F.regexp_replace(F.col(prev), pattern, repl))
-        steps.append((name, prev, col))
-        prev = col
-    fired = [F.when(F.col(c) != F.col(p), F.lit(n)) for n, p, c in steps]
-    if pre_redacted is not None:
-        fired.insert(
-            0,
-            F.when(
-                F.col(pre_redacted).isNotNull(), F.lit("secret_literal")
-            ),
+        out = out.withColumn(
+            col, F.expr(f"regexp_replace({_q(prev)}, {_lit(pattern)}, {_lit(repl)})")
         )
-    fired_arr = F.array_compact(F.array(*fired))
-    out = out.withColumn("__fired", fired_arr)
+        fired.append(f"CASE WHEN {_q(col)} != {_q(prev)} THEN {_lit(name)} END")
+        internal.append(col)
+        prev = col
     # no rule fired ⟹ scrubbed IS the original text: reuse its sha
     # instead of hashing the full content a second time (most docs are
     # untouched, and sha256 over content is one of the pass's largest
     # per-row costs; the value is identical by the fired ⟺ changed
     # contract above, so this is pure savings).
-    out = out.withColumn("__sha_orig", F.sha2(F.col(content), 256))
-    return out.select(
-        *df.columns,
-        F.col(prev).alias("content_scrubbed"),
-        F.col("__fired").alias("scrub_rules_fired"),
-        F.col("__sha_orig").alias("sha256_original"),
-        F.when(F.size(F.col("__fired")) == 0, F.col("__sha_orig"))
-        .otherwise(F.sha2(F.col(prev), 256))
-        .alias("sha256_scrubbed"),
+    out = out.selectExpr(
+        "*",
+        f"array_compact(array({', '.join(fired)})) AS `__fired`",
+        f"sha2({_q(content)}, 256) AS `__sha_orig`",
     )
+    outputs = [
+        f"{_q(prev)} AS `content_scrubbed`",
+        "`__fired` AS `scrub_rules_fired`",
+        "`__sha_orig` AS `sha256_original`",
+        f"CASE WHEN size(`__fired`) = 0 THEN `__sha_orig` ELSE sha2({_q(prev)}, 256) END"
+        " AS `sha256_scrubbed`",
+    ]
+    return out, outputs, internal
 
 
 # ---------------------------------------------------------------------------
@@ -351,80 +476,33 @@ def with_scrub(
 # ---------------------------------------------------------------------------
 
 
-def vendored_path_expr(path: str = "path") -> Column:
-    """True for vendored dependency trees / minified bundles by path
-    (spec.VENDORED_PATH_PATTERN); null paths are not vendored."""
-    return F.coalesce(
-        F.col(path).rlike(spec.VENDORED_PATH_PATTERN), F.lit(False)
-    )
-
-
-def content_rule_checks() -> list[tuple[str, Column]]:
-    """The CONTENT heuristic rules as (name, fire-condition) pairs over
-    with_heuristics columns, in RULE_NAMES order — the single source
-    shared by with_decision and the rule-ablation analytics query
-    (queries.py:q_rule_ablation), so a threshold or a new rule can never
-    reach one consumer and miss the other. vendored_path (needs a path
-    column) and the model rules (need stage-2 scores) are composed
-    separately by with_decision."""
-    return [
-        ("too_short", F.col("n_chars") < spec.MIN_CHARS),
-        ("long_line", F.col("max_line_len") > spec.MAX_LINE_LENGTH),
-        ("long_avg_line", F.col("avg_line_len") > spec.MAX_AVG_LINE_LENGTH),
-        ("low_alnum", F.col("alnum_ratio") < spec.MIN_ALNUM_RATIO),
-        ("high_digit", F.col("digit_ratio") > spec.MAX_DIGIT_RATIO),
-        (
-            "repetitive",
-            (F.col("n_lines") >= spec.DISTINCT_LINE_MIN_LINES)
-            & (F.col("distinct_line_ratio") < spec.MIN_DISTINCT_LINE_RATIO),
-        ),
-        (
-            "b64_blob",
-            F.col("b64_blob_chars") > spec.MAX_B64_BLOB_RATIO * F.col("n_chars"),
-        ),
-        (
-            "hex_blob",
-            F.col("hex_blob_chars") > spec.MAX_HEX_BLOB_RATIO * F.col("n_chars"),
-        ),
-        ("autogenerated", F.col("autogen_head")),
-        (
-            "comment_heavy",
-            F.col("comment_chars") > spec.MAX_COMMENT_RATIO * F.col("n_chars"),
-        ),
-        (
-            "mojibake",
-            F.col("mojibake_chars")
-            > spec.MAX_MOJIBAKE_RATIO * F.col("n_chars"),
-        ),
-    ]
-
-
 def with_decision(df: DataFrame, claimed_lang: str = "lang") -> DataFrame:
-    checks: list[tuple[str, Column]] = [
-        ("vendored_path", vendored_path_expr()),
-        *content_rule_checks(),
-        (
-            "compressible",
-            F.col("compress_ratio") < spec.MIN_COMPRESS_RATIO,
-        ),
-        (
-            "secret_entropy",
-            F.col("secret_entropy") > spec.MAX_SECRET_ENTROPY,
-        ),
-        ("high_perplexity", F.col("log_ppl") > spec.MAX_LOG_PERPLEXITY),
-        ("langid_low_margin", F.col("langid_margin") < spec.MIN_LANGID_MARGIN),
-        ("langid_mismatch", F.col("lang_pred") != F.col(claimed_lang)),
+    _check_parser(df.sparkSession)
+    return df.selectExpr("*", *_decision_sql(claimed_lang))
+
+
+def _decision_sql(claimed_lang: str) -> list[str]:
+    checks = [
+        ("vendored_path", _vendored_path_sql("path")),
+        *CONTENT_RULES,
+        ("compressible", f"`compress_ratio` < {_num(spec.MIN_COMPRESS_RATIO)}"),
+        ("secret_entropy", f"`secret_entropy` > {_num(spec.MAX_SECRET_ENTROPY)}"),
+        ("high_perplexity", f"`log_ppl` > {_num(spec.MAX_LOG_PERPLEXITY)}"),
+        ("langid_low_margin", f"`langid_margin` < {_num(spec.MIN_LANGID_MARGIN)}"),
+        ("langid_mismatch", f"`lang_pred` != {_q(claimed_lang)}"),
     ]
     # the decision order IS the drop_reason priority contract shared
     # with the labeler — a rule added to one list but not the other
     # would silently mis-prioritize
     assert [n for n, _ in checks] == spec.RULE_NAMES
-    reason = F.lit(None).cast("string")
+    reason = "CAST(NULL AS STRING)"
     for name, cond in reversed(checks):
-        reason = F.when(cond, F.lit(name)).otherwise(reason)
-    return df.select("*", reason.alias("drop_reason")).withColumn(
-        "keep", F.col("drop_reason").isNull()
-    )
+        reason = f"CASE WHEN {cond} THEN {_lit(name)} ELSE {reason} END"
+    # ``keep`` refers to drop_reason by its alias (a lateral column
+    # alias): the analyzer puts it in a projection of its own above the
+    # CASE chain, which is evaluated once
+    return [f"{reason} AS `drop_reason`", "`drop_reason` IS NULL AS `keep`"]
+
 
 
 # default boilerplate-bucket cap for the PIPELINE near-dup stage (r3
@@ -752,14 +830,15 @@ def run_stages(
     # UDF-stage projection (same CollapseProject trap the scrub chain
     # documents) — an attribute reference cannot be re-inlined
     out = out.withColumn(
-        "__gate", heuristics_pass_expr() & ~vendored_path_expr()
+        "__gate", F.expr(f"{_HEURISTICS_PASS_SQL} AND NOT {_vendored_path_sql('path')}")
     )
-    out = with_model_scores(out, spark, gate=F.col("__gate"))
-    out = out.drop("__gate")
-    out = with_scrub(out, pre_redacted="secret_redacted").drop(
-        "secret_redacted"
-    )
-    out = with_decision(out)
+    # with_model_scores → with_scrub → with_decision, with the internal
+    # columns dropped once at the end (fewer py4j round trips, the same
+    # optimized plan)
+    out = _with_scores(out, spark, "content", None, None, out["__gate"])
+    out, scrubbed, internal = _scrub_chain(out, "content", "secret_redacted")
+    out = out.selectExpr("*", *scrubbed).selectExpr("*", *_decision_sql("lang"))
+    out = out.drop("__gate", "__scores", "secret_redacted", *internal)
     if bench_hashes is not None:
         # function-level import: quality_stream imports run_stages at
         # module top, so a top-level import here would be circular.

@@ -7,7 +7,8 @@ call-site capture, which would cost py4j round trips on every
 DataFrame/Column call while a query is built. ``cluster_conf`` is the
 conf set that replaces the local defaults in a real spark-submit
 deployment. The testdata tables are read by ``queries._t``, with the
-declared schemas in ``queries.TABLE_SCHEMAS``.
+declared schemas in ``queries.TABLE_SCHEMAS``, and a pipeline corpus by
+``pipeline.runner.read_corpus``, with ``runner.CORPUS_SCHEMA``.
 """
 
 from __future__ import annotations

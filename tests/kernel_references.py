@@ -6,7 +6,9 @@ groupBy) of one producer built on ``operators/kernels.py``, written
 with Spark built-ins only. The two LSH functions are the Column-built
 form of ``dedup.lsh_candidate_ids``/``lsh_candidate_pairs``, and
 ``hyperplane_signature`` that of ``similarity.hyperplane_signature``;
-the library builds all three from SQL text. The differential tests
+the library builds all three from SQL text. The quality-filter stage
+functions at the end are the Column-built form of
+``pipeline/stages.py``, which builds each stage as one ``selectExpr``. The differential tests
 compare every library function with its reference on adversarial
 inputs and sf0.01 data; the library itself runs only the Arrow kernels
 and the SQL text.
@@ -32,6 +34,7 @@ from data_curator_spark.operators.dedup import (
     word_shingles,
 )
 from data_curator_spark.operators.similarity import dot
+from data_curator_spark.pipeline import spec
 
 
 def minhash_signatures(
@@ -320,3 +323,290 @@ def hyperplane_signature(vec: Column, planes: list[list[float]]) -> Column:
     for b in bits[1:]:
         out = out + b
     return out.cast("long")
+
+
+# ---------------------------------------------------------------------------
+# quality-filter stages: the Column-built form of pipeline/stages.py
+# ---------------------------------------------------------------------------
+
+
+_ALNUM_CHARS = (
+    "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789"
+)
+_DIGIT_CHARS = "0123456789"
+
+
+def with_heuristics(df: DataFrame, content: str = "content") -> DataFrame:
+    c = F.col(content)
+    lines = F.split(c, "\n")
+    n_chars = F.length(c)
+    n_lines = F.size(lines)
+    # sum of line lengths = n_chars − (n_lines − 1) separators
+    avg_line = (n_chars - n_lines + 1).cast("double") / n_lines
+    return df.select(
+        "*",
+        n_chars.alias("n_chars"),
+        n_lines.alias("n_lines"),
+        F.array_max(F.transform(lines, lambda x: F.length(x))).alias("max_line_len"),
+        avg_line.alias("avg_line_len"),
+        # translate()-delete, NOT regexp_count: Spark 4 lowers
+        # regexp_count to size(regexp_extract_all(...)), materializing
+        # one array element PER MATCHED CHARACTER — measured 1.9× slower
+        # than the branch-free translate scan. Exact for these literal
+        # ASCII classes (and the DuckDB oracle / pandas labeler count the
+        # same chars by their own methods, so parity is on values).
+        (
+            (n_chars - F.length(F.translate(c, _ALNUM_CHARS, ""))).cast(
+                "double"
+            )
+            / F.greatest(n_chars, F.lit(1))
+        ).alias("alnum_ratio"),
+        (
+            (n_chars - F.length(F.translate(c, _DIGIT_CHARS, ""))).cast(
+                "double"
+            )
+            / F.greatest(n_chars, F.lit(1))
+        ).alias("digit_ratio"),
+        (
+            F.size(F.array_distinct(lines)).cast("double") / n_lines
+        ).alias("distinct_line_ratio"),
+        # blob chars via ONE fused regexp_extract_all + aggregates, NOT
+        # length(regexp_replace(...)): extract_all materializes only the
+        # matched runs (empty array for the typical blob-free file),
+        # while replace would copy the whole document per pattern — and
+        # the fusion halves the full-document regex scans (the b64 and
+        # hex alphabets share a superset run extraction; spec.py has the
+        # soundness argument). Catalyst subexpression elimination shares
+        # the extraction between the two output columns.
+        _b64_chars_fused(c).alias("b64_blob_chars"),
+        _hex_chars_fused(c).alias("hex_blob_chars"),
+        F.substring(c, 1, spec.AUTOGEN_HEAD_CHARS)
+        .rlike(spec.AUTOGEN_PATTERN)
+        .alias("autogen_head"),
+        # encoding damage via the same translate()-delete trick as the
+        # ratio counts — branch-free, no regex, exact for the literal
+        # char set (U+FFFD + C0 controls minus whitespace)
+        (n_chars - F.length(F.translate(c, spec.MOJIBAKE_CHARS, "")))
+        .cast("long")
+        .alias("mojibake_chars"),
+        # chars covered by full-line / block comments, ONE fused
+        # alternation scan (spec.COMMENT_PATTERN has the portability
+        # argument); extract_all materializes one element per comment,
+        # not per char, so the array stays small on normal code
+        _len_sum(F.regexp_extract_all(c, F.lit(spec.COMMENT_PATTERN), 0))
+        .alias("comment_chars"),
+    )
+
+
+def _superset_runs(c: Column) -> Column:
+    return F.regexp_extract_all(c, F.lit(spec.BLOB_SUPERSET_PATTERN), 0)
+
+
+def _len_sum(arr: Column) -> Column:
+    return F.aggregate(
+        arr, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x)
+    )
+
+
+def _b64_chars_fused(c: Column) -> Column:
+    """Chars covered by B64_BLOB_PATTERN matches == superset runs of
+    length >= B64_BLOB_RUN (same alphabet, both maximal); null → null."""
+    return _len_sum(
+        F.filter(
+            _superset_runs(c), lambda r: F.length(r) >= spec.B64_BLOB_RUN
+        )
+    )
+
+
+def _hex_chars_fused(c: Column) -> Column:
+    """Chars covered by HEX_BLOB_PATTERN matches: the inner extraction
+    re-scans only the (rare) superset runs, never the document."""
+    return F.aggregate(
+        _superset_runs(c),
+        F.lit(0).cast("long"),
+        lambda acc, r: acc
+        + _len_sum(F.regexp_extract_all(r, F.lit(spec.HEX_BLOB_PATTERN), 0)),
+    )
+
+
+def heuristics_pass_expr() -> Column:
+    """True where none of the stage-1 heuristic rules fires (columns from
+    with_heuristics). Rows failing a heuristic already have their
+    drop_reason decided, so model scoring is skipped for them — they
+    carry null model columns. On this corpus that's ~55% of character
+    volume never shipped to Python."""
+    # derived from the SAME condition list with_decision consumes
+    # (content_rule_checks) — NOT-OR equals the old AND-of-complements
+    # exactly, nulls included (De Morgan holds in Kleene logic), and a
+    # wave-N rule added to the list reaches the gate automatically
+    fired = None
+    for _, cond in content_rule_checks():
+        fired = cond if fired is None else (fired | cond)
+    return ~fired
+
+
+def vendored_path_expr(path: str = "path") -> Column:
+    """True for vendored dependency trees / minified bundles by path
+    (spec.VENDORED_PATH_PATTERN); null paths are not vendored."""
+    return F.coalesce(
+        F.col(path).rlike(spec.VENDORED_PATH_PATTERN), F.lit(False)
+    )
+
+
+def content_rule_checks() -> list[tuple[str, Column]]:
+    """The CONTENT heuristic rules as (name, fire-condition) pairs over
+    with_heuristics columns, in RULE_NAMES order — the single source
+    shared by with_decision and the rule-ablation analytics query
+    (queries.py:q_rule_ablation), so a threshold or a new rule can never
+    reach one consumer and miss the other. vendored_path (needs a path
+    column) and the model rules (need stage-2 scores) are composed
+    separately by with_decision."""
+    return [
+        ("too_short", F.col("n_chars") < spec.MIN_CHARS),
+        ("long_line", F.col("max_line_len") > spec.MAX_LINE_LENGTH),
+        ("long_avg_line", F.col("avg_line_len") > spec.MAX_AVG_LINE_LENGTH),
+        ("low_alnum", F.col("alnum_ratio") < spec.MIN_ALNUM_RATIO),
+        ("high_digit", F.col("digit_ratio") > spec.MAX_DIGIT_RATIO),
+        (
+            "repetitive",
+            (F.col("n_lines") >= spec.DISTINCT_LINE_MIN_LINES)
+            & (F.col("distinct_line_ratio") < spec.MIN_DISTINCT_LINE_RATIO),
+        ),
+        (
+            "b64_blob",
+            F.col("b64_blob_chars") > spec.MAX_B64_BLOB_RATIO * F.col("n_chars"),
+        ),
+        (
+            "hex_blob",
+            F.col("hex_blob_chars") > spec.MAX_HEX_BLOB_RATIO * F.col("n_chars"),
+        ),
+        ("autogenerated", F.col("autogen_head")),
+        (
+            "comment_heavy",
+            F.col("comment_chars") > spec.MAX_COMMENT_RATIO * F.col("n_chars"),
+        ),
+        (
+            "mojibake",
+            F.col("mojibake_chars")
+            > spec.MAX_MOJIBAKE_RATIO * F.col("n_chars"),
+        ),
+    ]
+
+
+def with_decision(df: DataFrame, claimed_lang: str = "lang") -> DataFrame:
+    checks: list[tuple[str, Column]] = [
+        ("vendored_path", vendored_path_expr()),
+        *content_rule_checks(),
+        (
+            "compressible",
+            F.col("compress_ratio") < spec.MIN_COMPRESS_RATIO,
+        ),
+        (
+            "secret_entropy",
+            F.col("secret_entropy") > spec.MAX_SECRET_ENTROPY,
+        ),
+        ("high_perplexity", F.col("log_ppl") > spec.MAX_LOG_PERPLEXITY),
+        ("langid_low_margin", F.col("langid_margin") < spec.MIN_LANGID_MARGIN),
+        ("langid_mismatch", F.col("lang_pred") != F.col(claimed_lang)),
+    ]
+    # the decision order IS the drop_reason priority contract shared
+    # with the labeler — a rule added to one list but not the other
+    # would silently mis-prioritize
+    assert [n for n, _ in checks] == spec.RULE_NAMES
+    reason = F.lit(None).cast("string")
+    for name, cond in reversed(checks):
+        reason = F.when(cond, F.lit(name)).otherwise(reason)
+    return df.select("*", reason.alias("drop_reason")).withColumn(
+        "keep", F.col("drop_reason").isNull()
+    )
+
+
+def with_scrub(
+    df: DataFrame,
+    content: str = "content",
+    pre_redacted: str | None = None,
+) -> DataFrame:
+    # fire flag = CHANGE DETECTION on the progressively-scrubbed chain
+    # (rule fired ⟺ its replacement modified the text), the same
+    # intermediate the labeler tests (ADVICE r1). This both removes the
+    # earlier original-vs-progressive divergence when rules interact AND
+    # drops every per-rule rlike scan — the string inequality reuses the
+    # replace outputs the chain computes anyway. It also makes
+    # "scrub_rules_fired is empty ⟺ sha256 unchanged" exact by
+    # construction.
+    #
+    # STRUCTURE MATTERS: each chain step is materialized as its own
+    # withColumn and downstream expressions reference the COLUMN, never
+    # the expression tree. Building the chain as one nested expression
+    # inlined every prior replace into every fired flag and sha — the
+    # executed plan carried 60 regexp_replace instances instead of 5
+    # (measured 4.6× slower on the bench corpus). CollapseProject keeps
+    # these projections separate because regexp_replace is non-cheap and
+    # each intermediate is referenced more than once.
+    #
+    # ``pre_redacted`` (a nullable column of UDF-redacted text, e.g. the
+    # secret-entropy redaction) becomes the chain's BASE when present;
+    # it registers in scrub_rules_fired as 'secret_literal' so the
+    # "fired empty ⟺ sha unchanged" contract covers it.
+    out = df
+    if pre_redacted is not None:
+        out = out.withColumn(
+            "__scrub_base", F.coalesce(F.col(pre_redacted), F.col(content))
+        )
+        prev = "__scrub_base"
+    else:
+        prev = content
+    steps: list[tuple[str, str, str]] = []  # (rule, prev_col, this_col)
+    for i, (name, pattern, repl) in enumerate(spec.SCRUB_RULES):
+        col = f"__scrub{i}"
+        out = out.withColumn(col, F.regexp_replace(F.col(prev), pattern, repl))
+        steps.append((name, prev, col))
+        prev = col
+    fired = [F.when(F.col(c) != F.col(p), F.lit(n)) for n, p, c in steps]
+    if pre_redacted is not None:
+        fired.insert(
+            0,
+            F.when(
+                F.col(pre_redacted).isNotNull(), F.lit("secret_literal")
+            ),
+        )
+    fired_arr = F.array_compact(F.array(*fired))
+    out = out.withColumn("__fired", fired_arr)
+    # no rule fired ⟹ scrubbed IS the original text: reuse its sha
+    # instead of hashing the full content a second time (most docs are
+    # untouched, and sha256 over content is one of the pass's largest
+    # per-row costs; the value is identical by the fired ⟺ changed
+    # contract above, so this is pure savings).
+    out = out.withColumn("__sha_orig", F.sha2(F.col(content), 256))
+    return out.select(
+        *df.columns,
+        F.col(prev).alias("content_scrubbed"),
+        F.col("__fired").alias("scrub_rules_fired"),
+        F.col("__sha_orig").alias("sha256_original"),
+        F.when(F.size(F.col("__fired")) == 0, F.col("__sha_orig"))
+        .otherwise(F.sha2(F.col(prev), 256))
+        .alias("sha256_scrubbed"),
+    )
+
+
+def run_stages(df: DataFrame, spark) -> DataFrame:
+    """``stages.run_stages`` without the optional corpus-level stages,
+    built from the Column forms above and the library's model-score
+    stage."""
+    from data_curator_spark.pipeline.stages import with_model_scores
+
+    out = with_heuristics(df)
+    # materialize the gate as a COLUMN: passing the expression tree
+    # inlined the blob-counter extractions a second time into the
+    # UDF-stage projection (same CollapseProject trap the scrub chain
+    # documents) — an attribute reference cannot be re-inlined
+    out = out.withColumn(
+        "__gate", heuristics_pass_expr() & ~vendored_path_expr()
+    )
+    out = with_model_scores(out, spark, gate=F.col("__gate"))
+    out = out.drop("__gate")
+    out = with_scrub(out, pre_redacted="secret_redacted").drop(
+        "secret_redacted"
+    )
+    out = with_decision(out)
+    return out

@@ -547,11 +547,12 @@ def test_lifecycle_job_counts_and_noop_resubmit(spark, corpus_path, tmp_path):
         resume["rows_total"], resume["rows_kept"]
     )
     assert resume["rows_total"] == spark.read.parquet(corpus_path).count()
-    # no Spark job reads or writes the manifest: what is left is the
-    # input's schema read, the write and the two-stage per-bucket
-    # aggregation; the no-op re-submit runs only the schema read
-    assert (n_crash, n_resume, n_resub) == (4, 4, 1)
-    assert n_crash + n_resume + n_resub <= 9 and n_resub <= 1
+    # no Spark job reads or writes the manifest, and the input is read
+    # with its declared schema (no inference job): what is left is the
+    # write and the two-stage per-bucket aggregation; the no-op
+    # re-submit runs no Spark job at all
+    assert (n_crash, n_resume, n_resub) == (3, 3, 0)
+    assert n_crash + n_resume + n_resub <= 6 and n_resub == 0
     assert _files_under(out_dir) == out_before
     assert _files_under(f"{manifest}/entries") == entries_before
     snaps = spark.read.parquet(f"{manifest}/snapshots")
