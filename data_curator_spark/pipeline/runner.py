@@ -444,23 +444,21 @@ def run_pipeline(
         # idempotent bucket rewrite: dynamic partition overwrite replaces
         # exactly the partitions present in `result`; untouched
         # (completed) buckets survive, and an uncommitted bucket from a
-        # crashed run is overwritten instead of double-appended
-        prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            # sortWithinPartitions(bucket, repo, path): each task writes
-            # one contiguous run per bucket (one open writer at a time
-            # instead of one per bucket value) and row groups land sorted
-            # by (repo, path) — better compression + min/max skipping on
-            # the columns downstream jobs filter by
-            (
-                result.sortWithinPartitions("bucket", "repo", "path")
-                .write.partitionBy("bucket")
-                .mode("overwrite")
-                .parquet(output_path)
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+        # crashed run is overwritten instead of double-appended. The
+        # write option scopes the mode to this one write; the session
+        # conf, shared with any other query, is left untouched.
+        # sortWithinPartitions(bucket, repo, path): each task writes one
+        # contiguous run per bucket (one open writer at a time instead of
+        # one per bucket value) and row groups land sorted by (repo,
+        # path) — better compression + min/max skipping on the columns
+        # downstream jobs filter by
+        (
+            result.sortWithinPartitions("bucket", "repo", "path")
+            .write.partitionBy("bucket")
+            .mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .parquet(output_path)
+        )
 
         # lineage: per-bucket metrics from a PARTITION-PRUNED scan of
         # only the just-written buckets — completed history is never

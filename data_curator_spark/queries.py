@@ -1,7 +1,8 @@
 """Driver-contract operator queries + DuckDB oracle SQL.
 
 Each query exercises one operator family from SURVEY.md §2 over the
-TPC-H-ish testdata. Conventions for hash-stable oracle comparison:
+TPC-H-ish testdata, and is declared once, as a Query record in REGISTRY
+at the end of this file. Conventions for hash-stable oracle comparison:
 
 - Money/rate doubles in the testdata are exact 2-decimal values, so both
   engines cast them to DECIMAL before SUM/AVG (exact arithmetic), then
@@ -16,6 +17,7 @@ TPC-H-ish testdata. Conventions for hash-stable oracle comparison:
 from __future__ import annotations
 
 from collections.abc import Callable
+from typing import NamedTuple
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -319,7 +321,7 @@ WHERE c.event_type = 'click'
 
 
 # ---------------------------------------------------------------------------
-# §2.5 windows — SMA, volatility, log-returns over per-user event series
+# §2.5 windows — SMA and volatility over per-user event series
 # ---------------------------------------------------------------------------
 
 
@@ -372,80 +374,9 @@ WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN 20 PRECEDIN
 """
 
 
-def q_log_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ln(v_t / v_{t-1}) per user with ±Inf scrubbed to null
-    (features/helpers.py:333-359, 362-383)."""
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    # try_divide: zero lag value -> null (ANSI-safe; DuckDB x/0 is NULL too)
-    ratio = F.try_divide(F.col("value"), F.lag("value", 1).over(w))
-    # ln only defined for finite positive ratios; else null (Inf scrub)
-    scrub = F.when(
-        (ratio > 0) & ~F.isnan(ratio) & (ratio != float("inf")), F.round(F.ln(ratio), 6)
-    )
-    return ev.select("event_id", scrub.alias("log_ret"))
-
-
-SQL_LOG_RETURNS = """
-SELECT
-  event_id,
-  CASE WHEN r > 0 AND NOT isnan(r) AND r <> 'inf'::DOUBLE THEN ROUND(LN(r), 6) END AS log_ret
-FROM (
-  SELECT event_id, value / LAG(value, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS r
-  FROM events
-)
-"""
-
-
 # ---------------------------------------------------------------------------
 # §2.5 cumulative-min irregularity mask + posterior-duplicate mask
 # ---------------------------------------------------------------------------
-
-
-def q_irregular_filing_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cumulative-min irregularity: order dates that break the running
-    minimum scanned in descending totalprice order — the amended/late
-    filing detector shape (data_blocks/fundamentals/__init__.py:96-163)."""
-    o = _t(spark, sf_dir, "orders")
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy(F.desc("o_totalprice"), F.desc("o_orderkey"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cm = F.min("o_orderdate").over(w)
-    return o.select(
-        "o_orderkey", (cm != F.col("o_orderdate")).alias("is_irregular")
-    )
-
-
-SQL_IRREGULAR_FILING_MASK = """
-SELECT
-  o_orderkey,
-  MIN(o_orderdate) OVER (
-    PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey DESC
-    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-  ) <> o_orderdate AS is_irregular
-FROM orders
-"""
-
-
-def q_posterior_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """2nd+ occurrences of a duplicated value, in order — row_number
-    replaces the reference's per-row loop
-    (data_blocks/fundamentals/__init__.py:165-210)."""
-    o = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey", "o_orderdate").orderBy("o_orderkey")
-    return o.select(
-        "o_orderkey", (F.row_number().over(w) > 1).alias("is_posterior_dup")
-    )
-
-
-SQL_POSTERIOR_DUPLICATES = """
-SELECT
-  o_orderkey,
-  ROW_NUMBER() OVER (PARTITION BY o_custkey, o_orderdate ORDER BY o_orderkey) > 1 AS is_posterior_dup
-FROM orders
-"""
 
 
 def q_order_masks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -453,8 +384,8 @@ def q_order_masks(spark: SparkSession, sf_dir: str) -> DataFrame:
     the posterior-duplicate mask in one pass over orders (the driver
     gate caps at 50 rows — see tests/test_driver_gate.py). The two
     window specs partition on different keys, so the plan carries two
-    exchanges — the same shuffle work the separate queries did, one
-    scan fewer. Component queries remain in LEGACY_QUERIES."""
+    exchanges — the same shuffle work two separate queries would do,
+    one scan fewer."""
     o = _t(spark, sf_dir, "orders")
     w_irr = (
         Window.partitionBy("o_custkey")
@@ -671,63 +602,11 @@ SELECT * FROM (
 
 
 # ---------------------------------------------------------------------------
-# Registry
-# ---------------------------------------------------------------------------
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "pricing_summary": q_pricing_summary,
-    "revenue_by_nation": q_revenue_by_nation,
-    "coalescing_merge": q_coalescing_merge,
-    "missing_rows_antijoin": q_missing_rows,
-    "duplicate_pk": q_duplicate_pk,
-    "asof_join": q_asof_join,
-    # sma/volatility/log_returns live in the merged `rolling_features`
-    # query (and LEGACY_QUERIES) since r6 — the driver gate caps at 50
-    # rows, so per-event_id window features share one registration.
-    "order_masks": q_order_masks,
-    "indexed_rolling": q_indexed_rolling,
-    "contract_metrics": q_contract_metrics,
-    "null_semantics": q_null_semantics,
-    "discrepancy_scan": q_discrepancy_scan,
-}
-
-ORACLES: dict[str, str] = {
-    "pricing_summary": SQL_PRICING_SUMMARY,
-    "revenue_by_nation": SQL_REVENUE_BY_NATION,
-    "coalescing_merge": SQL_COALESCING_MERGE,
-    "missing_rows_antijoin": SQL_MISSING_ROWS,
-    "duplicate_pk": SQL_DUPLICATE_PK,
-    "asof_join": SQL_ASOF_JOIN,
-    "order_masks": SQL_ORDER_MASKS,
-    "indexed_rolling": SQL_INDEXED_ROLLING,
-    "contract_metrics": SQL_CONTRACT_METRICS,
-    "null_semantics": SQL_NULL_SEMANTICS,
-    "discrepancy_scan": SQL_DISCREPANCY_SCAN,
-}
-
-
-# ---------------------------------------------------------------------------
 # Training-data operators: text analysis over `documents`
 # ---------------------------------------------------------------------------
 
 
-def q_doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token counting + quality scoring as pure SQL expressions
-    (functions/text.py; training-data text-analysis ops)."""
-    from data_curator_spark.functions import text as T
-
-    d = _t(spark, sf_dir, "documents")
-    c = F.col("text")
-    return d.select(
-        "doc_id",
-        T.whitespace_token_count(c).alias("ws_tokens"),
-        T.bpe_token_count(c).alias("bpe_tokens"),
-        T.mean_word_length(c).alias("mean_word_len"),
-        T.punct_ratio(c).alias("punct_ratio"),
-        T.stopword_ratio(c, ["the", "a", "and", "of", "to"]).alias("stop_ratio"),
-    )
-
-
+# Fragment of SQL_DOC_QUALITY_STATS: token statistics (functions/text.py).
 SQL_DOC_TOKEN_STATS = r"""
 SELECT
   doc_id,
@@ -1251,32 +1130,6 @@ SELECT vec_id, label,
 FROM embeddings
 """
 
-QUERIES.update(
-    {
-        # doc_fingerprint + embedding_norms retired to LEGACY_QUERIES in
-        # r6 (subsumed by doc_token_stats / embedding_near_dup) to keep
-        # the registry inside the driver's 50-row gate window.
-        "dedup_exact": q_dedup_exact,
-        "ngram_jaccard": q_ngram_jaccard,
-        "minhash_lsh": q_minhash_lsh,
-        "simhash_near": q_simhash_near,
-        "ann_cosine_topk": q_ann_cosine_topk,
-        "ann_lsh": q_ann_lsh,
-        "embedding_near_dup": q_embedding_near_dup,
-    }
-)
-
-ORACLES.update(
-    {
-        "dedup_exact": SQL_DEDUP_EXACT,
-        "ngram_jaccard": SQL_NGRAM_JACCARD,
-        "minhash_lsh": SQL_MINHASH_LSH,
-        "simhash_near": SQL_SIMHASH_NEAR,
-        "ann_cosine_topk": SQL_ANN_COSINE_TOPK,
-        "ann_lsh": SQL_ANN_LSH,
-        "embedding_near_dup": SQL_EMBEDDING_NEAR_DUP,
-    }
-)
 
 
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1298,9 +1151,6 @@ SELECT
   COALESCE(CAST(octet_length(encode(text)) AS INT), 0) AS n_bytes
 FROM documents
 """
-
-QUERIES["multimodal_features"] = q_multimodal_features
-ORACLES["multimodal_features"] = SQL_MULTIMODAL_FEATURES
 
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1365,9 +1215,6 @@ FROM reach GROUP BY src
 
 
 SQL_DEDUP_CLUSTERS = _dedup_clusters_oracle_sql()
-
-QUERIES["dedup_clusters"] = q_dedup_clusters
-ORACLES["dedup_clusters"] = SQL_DEDUP_CLUSTERS
 
 
 # ---------------------------------------------------------------------------
@@ -1496,20 +1343,6 @@ FROM (
 """
 
 
-def q_ema_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EMA-12 per user over event values — seeded-SMA recursion with
-    null reset (features/helpers.py:154-225) via ONE grouped
-    Arrow-vectorized pandas pass. Oracled bit-exactly by a DuckDB recursive CTE
-    replicating the same sequential arithmetic (SQL_EMA_RECURSIVE)."""
-    from data_curator_spark.engine.features import apply_recursive_features
-
-    ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts", "value")
-    out = apply_recursive_features(
-        ev, "user_id", "ts", [("ema12", "ema", "value", 12)], tiebreak_col="event_id"
-    )
-    return out.select("event_id", "ema12")
-
-
 def _ema_oracle_sql(span: int, out_name: str) -> str:
     """DuckDB recursive-CTE oracle for the EMA kernel (_ema_array).
 
@@ -1556,21 +1389,6 @@ WITH RECURSIVE base AS (
 )
 SELECT event_id, ema AS {out_name} FROM rec
 """
-
-
-SQL_EMA_RECURSIVE = _ema_oracle_sql(12, "ema12")
-
-
-def q_rsi_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wilder RSI-14 per user (features/helpers.py:387-474). Oracled
-    bit-exactly by a DuckDB recursive CTE (SQL_RSI_RECURSIVE)."""
-    from data_curator_spark.engine.features import apply_recursive_features
-
-    ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts", "value")
-    out = apply_recursive_features(
-        ev, "user_id", "ts", [("rsi14", "rsi", "value", 14)], tiebreak_col="event_id"
-    )
-    return out.select("event_id", "rsi14")
 
 
 def _rsi_oracle_sql(days: int, out_name: str) -> str:
@@ -1629,15 +1447,11 @@ SELECT event_id, rsi AS {out_name} FROM rec
 """
 
 
-SQL_RSI_RECURSIVE = _rsi_oracle_sql(14, "rsi14")
-
-
 def q_recursions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merged r6 gate query: EMA-12 and Wilder RSI-14 computed in ONE
     grouped Arrow pass (apply_recursive_features takes a spec list) —
-    one repartition+sortWithinPartitions serves both kernels, where the
-    separate queries each paid the shuffle. Components remain in
-    LEGACY_QUERIES; both were driver-green individually since r2/r4."""
+    one repartition+sortWithinPartitions serves both kernels, where
+    separate queries would each pay the shuffle."""
     from data_curator_spark.engine.features import apply_recursive_features
 
     ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts", "value")
@@ -1662,27 +1476,6 @@ WITH ema_side AS MATERIALIZED (
 SELECT ema_side.event_id, ema12, rsi14
 FROM ema_side JOIN rsi_side ON ema_side.event_id = rsi_side.event_id
 """
-
-
-QUERIES.update(
-    {
-        "event_expansion": q_event_expansion,
-        "topk_orders": q_topk_orders,
-        "set_ops": q_set_ops,
-        "scalar_functions": q_scalar_functions,
-        "recursions": q_recursions,
-    }
-)
-
-ORACLES.update(
-    {
-        "event_expansion": SQL_EVENT_EXPANSION,
-        "topk_orders": SQL_TOPK_ORDERS,
-        "set_ops": SQL_SET_OPS,
-        "scalar_functions": SQL_SCALAR_FUNCTIONS,
-        "recursions": SQL_RECURSIONS,
-    }
-)
 
 
 def q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1747,48 +1540,8 @@ SQL_HYPERTABLE_ROLLUP = "\nUNION ALL\n".join(
 )
 
 
-QUERIES.update(
-    {
-        "interval_join": q_interval_join,
-        "hypertable_rollup": q_hypertable_rollup,
-    }
-)
-ORACLES.update(
-    {
-        "interval_join": SQL_INTERVAL_JOIN,
-        "hypertable_rollup": SQL_HYPERTABLE_ROLLUP,
-    }
-)
-
-
-def q_corpus_heuristics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The quality-filter pipeline's heuristic stage (pipeline/stages.py:
-    with_heuristics) + rule decisions, oracle-verified over documents —
-    the SQL-expressible core of the north-rule pipeline."""
-    from data_curator_spark.pipeline import spec
-    from data_curator_spark.pipeline.stages import with_heuristics
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", F.col("text").alias("content"))
-    h = with_heuristics(d)
-    return h.select(
-        "doc_id",
-        "n_chars",
-        "n_lines",
-        "max_line_len",
-        F.round("avg_line_len", 6).alias("avg_line_len"),
-        F.round("alnum_ratio", 6).alias("alnum_ratio"),
-        F.round("digit_ratio", 6).alias("digit_ratio"),
-        F.round("distinct_line_ratio", 6).alias("distinct_line_ratio"),
-        (
-            (F.col("n_chars") >= spec.MIN_CHARS)
-            & (F.col("max_line_len") <= spec.MAX_LINE_LENGTH)
-            & (F.col("avg_line_len") <= spec.MAX_AVG_LINE_LENGTH)
-            & (F.col("alnum_ratio") >= spec.MIN_ALNUM_RATIO)
-            & (F.col("digit_ratio") <= spec.MAX_DIGIT_RATIO)
-        ).alias("heuristics_pass"),
-    )
-
-
+# Fragment of SQL_DOC_QUALITY_STATS: the pipeline's heuristic columns
+# (pipeline/stages.py:with_heuristics).
 SQL_CORPUS_HEURISTICS = """
 WITH h AS (
   SELECT
@@ -1819,9 +1572,9 @@ FROM h
 
 def q_doc_quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merged r6 gate query: per-document token/quality statistics
-    (functions/text.py — the former doc_token_stats), the pipeline's
+    (functions/text.py; SQL_DOC_TOKEN_STATS), the pipeline's
     heuristic columns + rule decision (pipeline/stages.py:
-    with_heuristics — the former corpus_heuristics) in ONE scan of
+    with_heuristics; SQL_CORPUS_HEURISTICS) in ONE scan of
     documents, and — joined on doc_id — the supervised NB language-ID
     audit (operators/classifier.py:nb_langid): train multinomial NB on
     the corpus's own (text, lang) labels and score every doc,
@@ -1830,7 +1583,7 @@ def q_doc_quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthetic langs share one vocabulary, so predictions collapse to
     the prior-dominant class — the PARITY of train+score is what this
     row pins, accuracy is pinned by tests/test_classifier.py on
-    separable data). Components remain in LEGACY_QUERIES."""
+    separable data)."""
     from data_curator_spark.functions import text as T
     from data_curator_spark.operators.classifier import nb_langid
     from data_curator_spark.pipeline.stages import (
@@ -2046,9 +1799,6 @@ JOIN bl ON ts.doc_id = bl.doc_id
 LEFT JOIN nb ON ts.doc_id = nb.doc_id
 """
 
-QUERIES["doc_quality_stats"] = q_doc_quality_stats
-ORACLES["doc_quality_stats"] = SQL_DOC_QUALITY_STATS
-
 
 def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN: k-means coarse cells (trained distributed, centroids-only
@@ -2066,9 +1816,6 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.filter(F.col("vec_id") < 5), e, "vec_id", "embedding",
         k=3, n_centroids=8, n_probe=3, iters=3,
     )
-
-
-QUERIES["ann_ivf"] = q_ann_ivf
 
 
 def _ann_ivf_oracle_sql(
@@ -2335,80 +2082,6 @@ WHERE gate < CASE lang {case} ELSE 0 END
 """
 
 
-def get_legacy_oracles() -> dict[str, str]:
-    """LEGACY_ORACLES plus the data-dependent entries (pq_ann trains
-    its codebooks on the checked sf dir, like ann_ivf in
-    get_oracles)."""
-    import os
-
-    import duckdb
-
-    out = dict(LEGACY_ORACLES)
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01")
-    try:
-        out["pq_ann"] = _pq_ann_oracle_sql(sf_dir)
-        out["temperature_sample"] = _temperature_sample_oracle_sql(sf_dir)
-    except (FileNotFoundError, OSError, duckdb.IOException) as e:
-        # NARROW catch (same tuple as get_oracles): only missing/
-        # unreadable data downgrades to rows-only — a bug in the oracle
-        # generator must surface, not silently weaken the gate
-        import sys
-
-        print(f"get_legacy_oracles(): data-dependent oracle skipped: {e}", file=sys.stderr)
-    return out
-
-
-def get_oracles() -> dict[str, str]:
-    """Assemble the oracle dict, adding data-dependent oracles lazily.
-
-    Two oracles train on the actual data of the sf dir the driver
-    checks at (sf0.01 by default; override with SPARK_GRAFT_ORACLE_SF
-    for local runs at other scales): ann_ivf interpolates the trained
-    centroid matrix, bpe_encode the trained merge-table piece counts.
-    If the data is unreadable the entry is omitted → driver falls back
-    to the rows-only check."""
-    import os
-
-    import duckdb
-
-    out = dict(ORACLES)
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF")
-    if sf_dir is None:
-        sf_dir = "/root/testdata/sf0.01"
-        # the centroid literals (ann_ivf) and merge-table piece counts
-        # (bpe_encode) are trained on THIS dir — checking any other
-        # scale factor without setting the env var guarantees a
-        # "mismatch" on those two that is really a wrong-oracle artifact
-        import sys
-
-        print(
-            "get_oracles(): SPARK_GRAFT_ORACLE_SF unset — ann_ivf "
-            f"centroids and bpe_encode merges trained on default {sf_dir}; "
-            "set the env var to the sf dir you are checking or those two "
-            "queries will falsely mismatch",
-            file=sys.stderr,
-        )
-    try:
-        out["ann_ivf"] = _ann_ivf_oracle_sql(sf_dir)
-    except (FileNotFoundError, OSError, duckdb.IOException) as e:
-        # ONLY missing/unreadable testdata downgrades to the rows-only
-        # check; a bug in the oracle generator must surface, not silently
-        # weaken the gate
-        import sys
-
-        print(f"ann_ivf oracle skipped ({sf_dir} unreadable): {e}", file=sys.stderr)
-    try:
-        out["bpe_encode"] = _bpe_encode_oracle_sql(sf_dir)
-    except (FileNotFoundError, OSError, duckdb.IOException) as e:
-        import sys
-
-        print(
-            f"bpe_encode oracle skipped ({sf_dir} unreadable): {e}",
-            file=sys.stderr,
-        )
-    return out
-
-
 # ---------------------------------------------------------------------------
 # r3 additions: sessionization, deterministic sampling, corpus profiling
 # ---------------------------------------------------------------------------
@@ -2600,20 +2273,6 @@ GROUP BY lang
 """
 
 
-QUERIES.update(
-    {
-        "sessionize": q_sessionize,
-        "corpus_profile": q_corpus_profile,
-    }
-)
-ORACLES.update(
-    {
-        "sessionize": SQL_SESSIONIZE,
-        "corpus_profile": SQL_CORPUS_PROFILE,
-    }
-)
-
-
 # ---------------------------------------------------------------------------
 # r3 addition: corpus-wide boilerplate n-gram mining
 # ---------------------------------------------------------------------------
@@ -2664,126 +2323,27 @@ ORDER BY doc_freq DESC, ngram ASC
 LIMIT 40
 """
 
-QUERIES["boilerplate_ngrams"] = q_boilerplate_ngrams
-ORACLES["boilerplate_ngrams"] = SQL_BOILERPLATE_NGRAMS
-
 
 # ---------------------------------------------------------------------------
-# r4 additions: the last two §2.5 window ops get driver oracles
-# (r3 verdict item 10) — CMF and dividend back-adjustment
+# §2.5 per-event_id rolling features: SMA, volatility, log returns, CMF and
+# dividend back-adjustment in one select
 # ---------------------------------------------------------------------------
 
-
-def q_cmf_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chaikin Money Flow over a synthetic OHLCV view of the events
-    table (engine/features.py:chaikin_money_flow_ppm; reference
-    helpers.py:59-151). High/low/volume derive deterministically from
-    (event_id, value) with the SAME double expressions on both engines;
-    MFV is quantized to 6 decimals (exact DECIMAL window sum) because
-    windowed double sums are association-order-dependent across engines,
-    and the CMF itself is emitted as exact integer ppm — the rounded
-    decimal-aligned quotient hit a live .5e-6 HALF_UP/half-even tie at
-    sf0.1 (same migration as the registered rolling_features row)."""
-    from data_curator_spark.engine.features import chaikin_money_flow_ppm
-
-    ev = _t(spark, sf_dir, "events")
-    close = F.col("value")
-    high = close * (1.0 + (F.col("event_id") % 7).cast("double") / 100.0)
-    low = close * (1.0 - (F.col("event_id") % 5).cast("double") / 100.0)
-    volume = ((F.col("event_id") % 100) + 1).cast("long")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    cmf = chaikin_money_flow_ppm(high, low, close, volume, w, n=21)
-    return ev.select("event_id", cmf.alias("cmf21_ppm"))
-
-
-SQL_CMF_WINDOW = """
-WITH ohlcv AS (
-  SELECT event_id, user_id, ts, value AS close,
-         value * (1.0 + CAST(event_id % 7 AS DOUBLE) / 100.0) AS high,
-         value * (1.0 - CAST(event_id % 5 AS DOUBLE) / 100.0) AS low,
-         (event_id % 100) + 1 AS volume
-  FROM events
-), mf AS (
-  SELECT event_id, user_id, ts, volume,
-         CASE WHEN high <> low
-              THEN ((close - low) - (high - close)) / (high - low) * volume
-         END AS mfv
-  FROM ohlcv
-)
-SELECT event_id,
-       CASE WHEN COUNT(mfv) OVER w = 21
-            THEN CAST(FLOOR(
-                   CAST(SUM(CAST(ROUND(mfv, 6) AS DECIMAL(28,6)) * 1000000)
-                        OVER w AS DOUBLE)
-                   / SUM(volume) OVER w) AS BIGINT)
-       END AS cmf21_ppm
-FROM mf
-WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-             ROWS BETWEEN 20 PRECEDING AND CURRENT ROW)
-"""
-
-
-def q_dividend_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dividend back-adjustment factor exp(Σ ln(1−Div/Close)) over
-    future ex-dates (engine/features.py:dividend_adjustment_factor;
-    reference lseg_workspace.py:925-1034). Synthetic dividends on every
-    19th event derive from integer arithmetic (engine-identical
-    doubles); ln-factors quantized to 9 decimals before the exact
-    DECIMAL window sum, final factor rounded to 6."""
-    from data_curator_spark.engine.features import dividend_adjustment_factor
-
-    ev = _t(spark, sf_dir, "events")
-    div = F.when(
-        F.col("event_id") % 19 == 0,
-        ((F.col("event_id") % 90) + 5).cast("double") / 100.0,
-    )
-    adj = dividend_adjustment_factor(
-        "user_id", "ts", div, F.col("value"),
-        order_tiebreak=F.col("event_id"), decimal_grain=9,
-    )
-    return ev.select("event_id", F.round(adj, 6).alias("adj_factor"))
-
-
-SQL_DIVIDEND_ADJUSTMENT = """
-WITH base AS (
-  SELECT event_id, user_id, ts, value AS close,
-         CASE WHEN event_id % 19 = 0
-              THEN CAST((event_id % 90) + 5 AS DOUBLE) / 100.0
-         END AS div
-  FROM events
-), f AS (
-  SELECT event_id, user_id, ts,
-         CASE WHEN div IS NOT NULL AND close IS NOT NULL AND close <> 0
-                   AND (1.0 - div / close) > 0
-              THEN 1.0 - div / close
-         END AS fct
-  FROM base
-)
-SELECT event_id,
-       ROUND(
-         COALESCE(
-           EXP(CAST(SUM(CAST(ROUND(LN(fct), 9) AS DECIMAL(28,14))) OVER w AS DOUBLE)),
-           1.0),
-         6) AS adj_factor
-FROM f
-WINDOW w AS (PARTITION BY user_id ORDER BY ts DESC, event_id DESC
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-"""
 
 def q_rolling_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merged r6 gate query: all five per-event_id rolling features —
     SMA-5, annualized volatility-21, log returns, Chaikin Money Flow-21
     and the dividend back-adjustment factor — in ONE select over events
-    (driver gate caps at 50 rows; components in LEGACY_QUERIES, each
-    driver-green individually through r5).
+    (the driver gate caps at 50 rows; see Query). sma5 and vol21 are
+    also timed alone by the legacy sma_window/volatility_window.
 
     Scale note: every window partitions by user_id, so Catalyst plans a
     SINGLE hashpartitioning(user_id) exchange serving all five (the
     descending dividend window re-sorts within partitions, no second
     shuffle) — strictly less shuffle work than five separate queries.
-    Expressions are identical to the component queries
-    (engine/features.py chaikin_money_flow_ppm / dividend_adjustment_factor;
-    reference features/helpers.py:12-505, lseg_workspace.py:925-1034)."""
+    Library calls: engine/features.py chaikin_money_flow_ppm /
+    dividend_adjustment_factor (reference features/helpers.py:12-505,
+    lseg_workspace.py:925-1034)."""
     from data_curator_spark.engine.features import (
         chaikin_money_flow_ppm,
         dividend_adjustment_factor,
@@ -2888,10 +2448,6 @@ WINDOW w5 AS (PARTITION BY user_id ORDER BY ts, event_id
 """
 
 
-QUERIES["rolling_features"] = q_rolling_features
-ORACLES["rolling_features"] = SQL_ROLLING_FEATURES
-
-
 # ---------------------------------------------------------------------------
 # r4 additions: training-set assembly ops — split, decontaminate, pack
 # ---------------------------------------------------------------------------
@@ -2969,10 +2525,6 @@ SELECT doc_id, lang, source, n_chars,
                ELSE 300 END AS in_sample
 FROM g
 """
-
-
-QUERIES["sampling_gates"] = q_sampling_gates
-ORACLES["sampling_gates"] = _sampling_gates_oracle_sql()
 
 
 def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3067,20 +2619,6 @@ FROM g
 WINDOW w AS (PARTITION BY pack_shard ORDER BY ord, doc_id
              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
 """
-
-
-QUERIES.update(
-    {
-        "decontaminate": q_decontaminate,
-        "sequence_pack": q_sequence_pack,
-    }
-)
-ORACLES.update(
-    {
-        "decontaminate": _decontaminate_oracle_sql(),
-        "sequence_pack": _sequence_pack_oracle_sql(),
-    }
-)
 
 
 def q_macd_signal(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3188,10 +2726,6 @@ SELECT event_id, macd, sig AS macd_signal FROM rec2
 """
 
 
-QUERIES["macd_signal"] = q_macd_signal
-ORACLES["macd_signal"] = _macd_oracle_sql()
-
-
 def _lang_tokens(d: DataFrame) -> DataFrame:
     """(lang, tok) stream: the SHARED tokenization for vocab_stats and
     distinct_sketch — one definition, kept in lockstep with the
@@ -3235,9 +2769,6 @@ WHERE tok <> ''
 GROUP BY lang
 """
 
-QUERIES["vocab_stats"] = q_vocab_stats
-ORACLES["vocab_stats"] = SQL_VOCAB_STATS
-
 
 def q_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theta-sketch distinct-token estimate per language
@@ -3274,10 +2805,6 @@ SELECT g.lang,
 FROM (SELECT DISTINCT lang FROM hx) g
 LEFT JOIN agg a ON g.lang = a.lang
 """
-
-
-QUERIES["distinct_sketch"] = q_distinct_sketch
-ORACLES["distinct_sketch"] = _distinct_sketch_oracle_sql()
 
 
 def q_dedup_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3542,9 +3069,6 @@ LEFT JOIN sp ON dl.doc_id = sp.doc_id
 LEFT JOIN rm ON dl.doc_id = rm.doc_id
 """
 
-QUERIES["line_repetition"] = q_line_repetition
-ORACLES["line_repetition"] = SQL_LINE_REPETITION
-
 
 # ---------------------------------------------------------------------------
 # r5 additions: boilerplate execution + budgeted data mixing
@@ -3649,20 +3173,6 @@ WHERE cum_prev < CASE lang WHEN 'en' THEN 20000 WHEN 'zh' THEN 8000
 """
 
 
-QUERIES.update(
-    {
-        "boilerplate_strip": q_boilerplate_strip,
-        "budget_sample": q_budget_sample,
-    }
-)
-ORACLES.update(
-    {
-        "boilerplate_strip": _boilerplate_strip_oracle_sql(),
-        "budget_sample": _budget_sample_oracle_sql(),
-    }
-)
-
-
 def q_centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merged r6 gate query for the cluster-scoped embedding family
     (operators/similarity.py): semdedup_prune emits EVERY valid row
@@ -3762,10 +3272,6 @@ FROM r LEFT JOIN (SELECT xid, yid FROM d WHERE rn = 1) d
 """
 
 
-QUERIES["centroid_outliers"] = q_centroid_outliers
-ORACLES["centroid_outliers"] = _centroid_outliers_oracle_sql()
-
-
 def q_unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Self-trained unigram-LM surprisal per document
     (operators/lm.py:unigram_surprisal) — the KenLM-family statistical
@@ -3799,9 +3305,6 @@ SELECT toks.doc_id,
 FROM toks JOIN lp USING (w)
 GROUP BY toks.doc_id
 """
-
-QUERIES["unigram_surprisal"] = q_unigram_surprisal
-ORACLES["unigram_surprisal"] = SQL_UNIGRAM_SURPRISAL
 
 
 def q_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3840,9 +3343,6 @@ SELECT p.doc_id,
 FROM p JOIN lp ON p.l = lp.l AND p.r = lp.r
 GROUP BY p.doc_id
 """
-
-QUERIES["bigram_surprisal"] = q_bigram_surprisal
-ORACLES["bigram_surprisal"] = SQL_BIGRAM_SURPRISAL
 
 
 def q_bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3895,9 +3395,6 @@ WITH t AS (
 SELECT pair, CAST(SUM(c) AS BIGINT) AS cnt FROM p GROUP BY pair
 ORDER BY cnt DESC, pair ASC LIMIT 30
 """
-
-QUERIES["bpe_merge_candidates"] = q_bpe_merge_candidates
-ORACLES["bpe_merge_candidates"] = SQL_BPE_MERGE_CANDIDATES
 
 
 # ---------------------------------------------------------------------------
@@ -4024,10 +3521,6 @@ FROM uni LEFT JOIN bg USING (doc_id)
 """
 
 
-QUERIES["heldout_perplexity"] = q_heldout_perplexity
-ORACLES["heldout_perplexity"] = _heldout_perplexity_oracle_sql()
-
-
 # ---------------------------------------------------------------------------
 # r6 addition: PII/toxicity scrub as an oracled query
 # ---------------------------------------------------------------------------
@@ -4084,10 +3577,6 @@ SELECT doc_id,
        (c{n} = c0) AS untouched
 FROM {prev}
 """
-
-
-QUERIES["pii_scrub"] = q_pii_scrub
-ORACLES["pii_scrub"] = _pii_scrub_oracle_sql()
 
 
 # ---------------------------------------------------------------------------
@@ -4163,9 +3652,6 @@ FROM sc LEFT JOIN tlp ON sc.w = tlp.w LEFT JOIN slp ON sc.w = slp.w
 GROUP BY sc.doc_id
 """
 
-QUERIES["dsir_importance"] = q_dsir_importance
-ORACLES["dsir_importance"] = _SQL_DSIR
-
 
 # ---------------------------------------------------------------------------
 # r6 addition: full BPE train + distributed encode
@@ -4240,10 +3726,6 @@ FROM toks t JOIN pieces p USING (w)
 WHERE t.w <> ''
 GROUP BY t.doc_id
 """
-
-
-QUERIES["bpe_encode"] = q_bpe_encode
-# oracle added lazily in get_oracles() — it trains on the checked sf dir
 
 
 def q_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4477,68 +3959,161 @@ WITH h AS (
 
 
 # ---------------------------------------------------------------------------
-# Legacy (deregistered) queries
+# Registry
 # ---------------------------------------------------------------------------
-# The driver's correctness gate reads only the first 50 rows of QUERIES
-# (discovered r5: registrations 51+ silently get no correctness row). To
-# keep every DISTINCT operator inside that window, r6 merged the
-# per-event_id window-feature queries into `rolling_features`, the two
-# order masks into `order_masks`, EMA+RSI into `recursions`, and retired
-# two subsumed variants. The component queries stay available here —
-# bench.py's frozen CORE13 subtotal and the test suite still exercise
-# them — with their oracles, so tools/check_oracle.py can verify any of
-# them on demand (python tools/check_oracle.py <sf> <name> checks
-# registered queries; legacy ones are covered by the merged registrations
-# and by pytest).
 
+
+class Query(NamedTuple):
+    """One record of REGISTRY, the single declaration of every query.
+
+    The driver's correctness gate checks only the first 50 entries of
+    QUERIES, in order: a registration past the 50th silently gets no
+    correctness row. The ``gate`` records are therefore the gate's
+    priority list, and there may be at most 50 of them
+    (tests/test_driver_gate.py). To keep every distinct operator inside
+    that window, related features share one gate query (order_masks,
+    recursions, doc_quality_stats, rolling_features). The records with
+    ``gate=False`` (LEGACY_QUERIES) are checked on demand with
+    ``python tools/check_oracle.py <sf dir> --legacy``; bench.py's frozen
+    CORE13 subtotal times two of them (sma_window, volatility_window).
+
+    ``oracle`` is the DuckDB SQL text or, for an oracle that trains on
+    the data, a function of the sf dir that returns it (see
+    _resolve_oracles).
+    """
+
+    name: str
+    fn: Callable[[SparkSession, str], DataFrame]
+    oracle: str | Callable[[str], str]
+    gate: bool = True
+
+
+REGISTRY: tuple[Query, ...] = (
+    Query("pricing_summary", q_pricing_summary, SQL_PRICING_SUMMARY),
+    Query("revenue_by_nation", q_revenue_by_nation, SQL_REVENUE_BY_NATION),
+    Query("coalescing_merge", q_coalescing_merge, SQL_COALESCING_MERGE),
+    Query("missing_rows_antijoin", q_missing_rows, SQL_MISSING_ROWS),
+    Query("duplicate_pk", q_duplicate_pk, SQL_DUPLICATE_PK),
+    Query("asof_join", q_asof_join, SQL_ASOF_JOIN),
+    Query("order_masks", q_order_masks, SQL_ORDER_MASKS),
+    Query("indexed_rolling", q_indexed_rolling, SQL_INDEXED_ROLLING),
+    Query("contract_metrics", q_contract_metrics, SQL_CONTRACT_METRICS),
+    Query("null_semantics", q_null_semantics, SQL_NULL_SEMANTICS),
+    Query("discrepancy_scan", q_discrepancy_scan, SQL_DISCREPANCY_SCAN),
+    Query("dedup_exact", q_dedup_exact, SQL_DEDUP_EXACT),
+    Query("ngram_jaccard", q_ngram_jaccard, SQL_NGRAM_JACCARD),
+    Query("minhash_lsh", q_minhash_lsh, SQL_MINHASH_LSH),
+    Query("simhash_near", q_simhash_near, SQL_SIMHASH_NEAR),
+    Query("ann_cosine_topk", q_ann_cosine_topk, SQL_ANN_COSINE_TOPK),
+    Query("ann_lsh", q_ann_lsh, SQL_ANN_LSH),
+    Query("embedding_near_dup", q_embedding_near_dup, SQL_EMBEDDING_NEAR_DUP),
+    Query("multimodal_features", q_multimodal_features, SQL_MULTIMODAL_FEATURES),
+    Query("dedup_clusters", q_dedup_clusters, SQL_DEDUP_CLUSTERS),
+    Query("event_expansion", q_event_expansion, SQL_EVENT_EXPANSION),
+    Query("topk_orders", q_topk_orders, SQL_TOPK_ORDERS),
+    Query("set_ops", q_set_ops, SQL_SET_OPS),
+    Query("scalar_functions", q_scalar_functions, SQL_SCALAR_FUNCTIONS),
+    Query("recursions", q_recursions, SQL_RECURSIONS),
+    Query("interval_join", q_interval_join, SQL_INTERVAL_JOIN),
+    Query("hypertable_rollup", q_hypertable_rollup, SQL_HYPERTABLE_ROLLUP),
+    Query("doc_quality_stats", q_doc_quality_stats, SQL_DOC_QUALITY_STATS),
+    Query("ann_ivf", q_ann_ivf, _ann_ivf_oracle_sql),
+    Query("sessionize", q_sessionize, SQL_SESSIONIZE),
+    Query("corpus_profile", q_corpus_profile, SQL_CORPUS_PROFILE),
+    Query("boilerplate_ngrams", q_boilerplate_ngrams, SQL_BOILERPLATE_NGRAMS),
+    Query("rolling_features", q_rolling_features, SQL_ROLLING_FEATURES),
+    Query("sampling_gates", q_sampling_gates, _sampling_gates_oracle_sql()),
+    Query("decontaminate", q_decontaminate, _decontaminate_oracle_sql()),
+    Query("sequence_pack", q_sequence_pack, _sequence_pack_oracle_sql()),
+    Query("macd_signal", q_macd_signal, _macd_oracle_sql()),
+    Query("vocab_stats", q_vocab_stats, SQL_VOCAB_STATS),
+    Query("distinct_sketch", q_distinct_sketch, _distinct_sketch_oracle_sql()),
+    Query("line_repetition", q_line_repetition, SQL_LINE_REPETITION),
+    Query("boilerplate_strip", q_boilerplate_strip, _boilerplate_strip_oracle_sql()),
+    Query("budget_sample", q_budget_sample, _budget_sample_oracle_sql()),
+    Query("centroid_outliers", q_centroid_outliers, _centroid_outliers_oracle_sql()),
+    Query("unigram_surprisal", q_unigram_surprisal, SQL_UNIGRAM_SURPRISAL),
+    Query("bigram_surprisal", q_bigram_surprisal, SQL_BIGRAM_SURPRISAL),
+    Query("bpe_merge_candidates", q_bpe_merge_candidates, SQL_BPE_MERGE_CANDIDATES),
+    Query("heldout_perplexity", q_heldout_perplexity, _heldout_perplexity_oracle_sql()),
+    Query("pii_scrub", q_pii_scrub, _pii_scrub_oracle_sql()),
+    Query("dsir_importance", q_dsir_importance, _SQL_DSIR),
+    Query("bpe_encode", q_bpe_encode, _bpe_encode_oracle_sql),
+    Query("sma_window", q_sma_window, SQL_SMA_WINDOW, gate=False),
+    Query("volatility_window", q_volatility_window, SQL_VOLATILITY_WINDOW, gate=False),
+    Query("embedding_norms", q_embedding_norms, SQL_EMBEDDING_NORMS, gate=False),
+    Query("doc_fingerprint", q_doc_fingerprint, SQL_DOC_FINGERPRINT, gate=False),
+    Query("corpus_sample", q_corpus_sample, _corpus_sample_oracle_sql(), gate=False),
+    Query("corpus_split", q_corpus_split, _corpus_split_oracle_sql(), gate=False),
+    Query("dedup_lines", q_dedup_lines, SQL_DEDUP_LINES, gate=False),
+    Query("repetition_profile", q_repetition_profile, SQL_REPETITION_PROFILE, gate=False),
+    Query("shuffle_shards", q_shuffle_shards, SQL_SHUFFLE_SHARDS, gate=False),
+    Query("chunk_documents", q_chunk_documents, SQL_CHUNK_DOCUMENTS, gate=False),
+    Query("rule_ablation", q_rule_ablation, _rule_ablation_oracle_sql(), gate=False),
+    Query("fim_transform", q_fim_transform, _fim_oracle_sql(), gate=False),
+    Query("pq_ann", q_pq_ann, _pq_ann_oracle_sql, gate=False),
+    Query("source_rollup", q_source_rollup, _source_rollup_oracle_sql(), gate=False),
+    Query("temperature_sample", q_temperature_sample, _temperature_sample_oracle_sql, gate=False),
+)
+
+QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+    q.name: q.fn for q in REGISTRY if q.gate
+}
 LEGACY_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "sma_window": q_sma_window,
-    "volatility_window": q_volatility_window,
-    "log_returns": q_log_returns,
-    "cmf_window": q_cmf_window,
-    "dividend_adjustment": q_dividend_adjustment,
-    "irregular_filing_mask": q_irregular_filing_mask,
-    "posterior_duplicates": q_posterior_duplicates,
-    "ema_recursive": q_ema_recursive,
-    "rsi_recursive": q_rsi_recursive,
-    "embedding_norms": q_embedding_norms,
-    "doc_fingerprint": q_doc_fingerprint,
-    "doc_token_stats": q_doc_token_stats,
-    "corpus_heuristics": q_corpus_heuristics,
-    "corpus_sample": q_corpus_sample,
-    "corpus_split": q_corpus_split,
-    "dedup_lines": q_dedup_lines,
-    "repetition_profile": q_repetition_profile,
-    "shuffle_shards": q_shuffle_shards,
-    "chunk_documents": q_chunk_documents,
-    "rule_ablation": q_rule_ablation,
-    "fim_transform": q_fim_transform,
-    "pq_ann": q_pq_ann,
-    "source_rollup": q_source_rollup,
-    "temperature_sample": q_temperature_sample,
+    q.name: q.fn for q in REGISTRY if not q.gate
 }
 
-LEGACY_ORACLES: dict[str, str] = {
-    "sma_window": SQL_SMA_WINDOW,
-    "volatility_window": SQL_VOLATILITY_WINDOW,
-    "log_returns": SQL_LOG_RETURNS,
-    "cmf_window": SQL_CMF_WINDOW,
-    "dividend_adjustment": SQL_DIVIDEND_ADJUSTMENT,
-    "irregular_filing_mask": SQL_IRREGULAR_FILING_MASK,
-    "posterior_duplicates": SQL_POSTERIOR_DUPLICATES,
-    "ema_recursive": SQL_EMA_RECURSIVE,
-    "rsi_recursive": SQL_RSI_RECURSIVE,
-    "embedding_norms": SQL_EMBEDDING_NORMS,
-    "doc_fingerprint": SQL_DOC_FINGERPRINT,
-    "doc_token_stats": SQL_DOC_TOKEN_STATS,
-    "corpus_heuristics": SQL_CORPUS_HEURISTICS,
-    "corpus_sample": _corpus_sample_oracle_sql(),
-    "corpus_split": _corpus_split_oracle_sql(),
-    "dedup_lines": SQL_DEDUP_LINES,
-    "repetition_profile": SQL_REPETITION_PROFILE,
-    "shuffle_shards": SQL_SHUFFLE_SHARDS,
-    "chunk_documents": SQL_CHUNK_DOCUMENTS,
-    "rule_ablation": _rule_ablation_oracle_sql(),
-    "fim_transform": _fim_oracle_sql(),
-    "source_rollup": _source_rollup_oracle_sql(),
-}
+
+def _resolve_oracles(gate: bool) -> dict[str, str]:
+    """Oracle SQL of the gate (or the legacy) records, in registry order.
+
+    An oracle that trains on the data (ann_ivf's centroid matrix,
+    bpe_encode's merge table, pq_ann's codebooks, temperature_sample's
+    per-lang rates) is built from the sf dir the check runs at:
+    SPARK_GRAFT_ORACLE_SF, sf0.01 by default. If that data is missing or
+    unreadable the entry is omitted, and the driver falls back to its
+    rows-only check."""
+    import os
+    import sys
+
+    import duckdb
+
+    records = [q for q in REGISTRY if q.gate == gate]
+    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF")
+    if sf_dir is None:
+        sf_dir = "/root/testdata/sf0.01"
+        # checking any other scale factor without the env var guarantees
+        # a "mismatch" on these that is really a wrong-oracle artifact
+        trained = ", ".join(q.name for q in records if not isinstance(q.oracle, str))
+        print(
+            f"SPARK_GRAFT_ORACLE_SF unset — the {trained} "
+            f"oracles train on the default {sf_dir}; set the env var to "
+            "the sf dir you are checking or those queries will falsely "
+            "mismatch",
+            file=sys.stderr,
+        )
+    out = {}
+    for q in records:
+        if isinstance(q.oracle, str):
+            out[q.name] = q.oracle
+            continue
+        try:
+            out[q.name] = q.oracle(sf_dir)
+        except (FileNotFoundError, OSError, duckdb.IOException) as e:
+            # ONLY missing/unreadable data downgrades to the rows-only
+            # check; a bug in the oracle generator must surface, not
+            # silently weaken the gate
+            print(f"{q.name} oracle skipped ({sf_dir} unreadable): {e}", file=sys.stderr)
+    return out
+
+
+def get_oracles() -> dict[str, str]:
+    """Oracle SQL of the 50 gate queries. Only the gate's own
+    data-dependent oracles (ann_ivf, bpe_encode) are trained here."""
+    return _resolve_oracles(gate=True)
+
+
+def get_legacy_oracles() -> dict[str, str]:
+    """Oracle SQL of LEGACY_QUERIES (pq_ann and temperature_sample
+    train on the data, as in get_oracles)."""
+    return _resolve_oracles(gate=False)

@@ -215,6 +215,34 @@ def test_bucket_rewrite_idempotent_after_lost_manifest(spark, corpus_path, tmp_p
     assert written.groupBy("repo", "path", "commit").count().filter("count > 1").isEmpty()
 
 
+def test_resume_overwrites_only_its_buckets_and_leaves_session_conf(
+    spark, corpus_path, tmp_path, monkeypatch
+):
+    """The resume's dynamic overwrite is a write option: the buckets the
+    crashed run committed keep their files, and the session conf (shared
+    with any other query on the session) is never set."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    out_dir = str(tmp_path / "out")
+    manifest = str(tmp_path / "manifest")
+    key = "spark.sql.sources.partitionOverwriteMode"
+    mode_before = spark.conf.get(key)
+    run_pipeline(spark, corpus_path, out_dir, manifest, n_buckets=8, fail_buckets={1, 3, 5, 7})
+    done = {f"bucket={b}" for b in (0, 2, 4, 6)}
+    done_files = [f for f in _files_under(out_dir) if f.split("/")[0] in done]
+    conf_sets = []
+    orig_set = RuntimeConfig.set
+    monkeypatch.setattr(
+        RuntimeConfig, "set",
+        lambda self, k, v: (conf_sets.append(k), orig_set(self, k, v))[1],
+    )
+    r2 = run_pipeline(spark, corpus_path, out_dir, manifest, n_buckets=8)
+    assert r2["buckets_processed"] == 4
+    assert key not in conf_sets and spark.conf.get(key) == mode_before
+    assert done_files and set(done_files) <= set(_files_under(out_dir))
+    assert spark.read.parquet(out_dir).count() == spark.read.parquet(corpus_path).count()
+
+
 def test_snapshot_lineage_chain(spark, corpus_path, tmp_path):
     """Iceberg-analog snapshot log: each run appends a snapshot row whose
     parent_snapshot_id points at the previous run; a crash+resume pair

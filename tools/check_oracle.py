@@ -59,8 +59,9 @@ def main() -> int:
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     if legacy:
-        # the deregistered queries (outside the driver's 50-row gate
-        # window) with their oracles — same comparison, run on demand
+        # the gate=False records of queries.REGISTRY (outside the
+        # driver's 50-row gate window) with their oracles — same
+        # comparison, run on demand
         from data_curator_spark.queries import LEGACY_QUERIES, get_legacy_oracles
 
         qs = dict(LEGACY_QUERIES)
