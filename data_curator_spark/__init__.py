@@ -20,8 +20,6 @@ capabilities of KaxaNuk/Data-Curator, re-expressed Spark-first:
                           fingerprinting over document corpora
 - ``pipeline.*``          the north-rule quality-filter pipeline over
                           (repo, path, commit, lang, content) code corpora
-- ``streaming.quality_stream`` the corpus quality filter and
-                          contamination check as a Structured Streaming job
 - ``queries``             the gate and legacy query registry; ``queries._t``
                           reads every testdata table with a declared schema
 """

@@ -133,16 +133,11 @@ def main(argv: list[str] | None = None) -> int:
         from data_curator_spark.session import build_session
 
         spark = build_session("quality-filter-pipeline")
-        bench_hashes = None
+        benchmark = None
         if args.decontaminate:
             from data_curator_spark.pipeline.runner import read_corpus
-            from data_curator_spark.streaming.quality_stream import (
-                benchmark_shingle_hashes,
-            )
 
-            bench_hashes = benchmark_shingle_hashes(
-                read_corpus(spark, args.decontaminate, ["content"]), "content"
-            )
+            benchmark = read_corpus(spark, args.decontaminate, ["content"])
         if args.layout == "mvcc":
             from data_curator_spark.pipeline.mvcc import run_pipeline_mvcc
 
@@ -151,7 +146,7 @@ def main(argv: list[str] | None = None) -> int:
                 n_buckets=args.buckets,
                 reprocess_buckets=set(args.reprocess) if args.reprocess else None,
                 near_dup=args.near_dup,
-                bench_hashes=bench_hashes,
+                benchmark=benchmark,
                 span_dedup_bp=args.span_dedup_bp,
                 cdc_dup_bp=args.cdc_dup_bp,
                 repo_min_keep_bp=args.repo_min_keep_bp,
@@ -162,7 +157,7 @@ def main(argv: list[str] | None = None) -> int:
             stats = run_pipeline(
                 spark, args.input, args.output, args.manifest,
                 n_buckets=args.buckets, near_dup=args.near_dup,
-                bench_hashes=bench_hashes,
+                benchmark=benchmark,
                 span_dedup_bp=args.span_dedup_bp,
                 cdc_dup_bp=args.cdc_dup_bp,
                 repo_min_keep_bp=args.repo_min_keep_bp,

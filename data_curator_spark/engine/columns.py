@@ -12,8 +12,8 @@ Semantics contract (SURVEY.md §1.3):
   ``is_null(nan_is_null=True)``).
 - Division by zero yields null, never error/Inf
   (reference data_column.py:822-851).
-- Boolean AND/OR default to *null-poisoning* (either side null → null),
-  with opt-in Kleene logic (reference data_column.py:882-975).
+- Boolean AND defaults to *null-poisoning* (either side null → null);
+  OR has the opt-in Kleene form (reference data_column.py:882-975).
 - String concat supports per-element null replacement
   (reference data_column.py:977-1023).
 - ±Inf results are scrubbed to null
@@ -27,15 +27,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
 _DOUBLE = DoubleType()
-
-
-def nan_to_null(c: Column) -> Column:
-    """Normalize NaN to null (the reference's ``nan_is_null=True`` view).
-
-    Spark distinguishes NaN from null; the reference does not. Apply this
-    at the boundary of any float column entering engine arithmetic.
-    """
-    return F.nanvl(c, F.lit(None).cast(_DOUBLE))
 
 
 def _poison(result: Column, *operands: Column) -> Column:
@@ -68,11 +59,6 @@ def div(a: Column, b: Column) -> Column:
     return _poison(F.when(b != 0, a / b), a, b)
 
 
-def floordiv(a: Column, b: Column) -> Column:
-    """Floor division, zero divisor → null (data_column.py:140-173)."""
-    return _poison(F.when(b != 0, F.floor(a / b)), a, b)
-
-
 def mod(a: Column, b: Column) -> Column:
     """a mod b synthesized as a − (a // b)·b (data_column.py:328-351).
 
@@ -83,10 +69,6 @@ def mod(a: Column, b: Column) -> Column:
     return _poison(F.when(b != 0, a - F.floor(a / b) * b), a, b)
 
 
-def neg(a: Column) -> Column:
-    return _poison(-a, a)
-
-
 def and_(a: Column, b: Column) -> Column:
     """Null-poisoning AND — the reference default (data_column.py:917-920).
 
@@ -94,16 +76,6 @@ def and_(a: Column, b: Column) -> Column:
     default poisons instead.
     """
     return F.when(a.isNull() | b.isNull(), F.lit(None)).otherwise(a & b)
-
-
-def or_(a: Column, b: Column) -> Column:
-    """Null-poisoning OR (data_column.py:965-968)."""
-    return F.when(a.isNull() | b.isNull(), F.lit(None)).otherwise(a | b)
-
-
-def and_kleene(a: Column, b: Column) -> Column:
-    """Kleene AND — Spark native (reference opt-in, data_column.py:917)."""
-    return a & b
 
 
 def or_kleene(a: Column, b: Column) -> Column:
@@ -139,38 +111,3 @@ def safe_ln(c: Column) -> Column:
     (the reference computes pyarrow ln then scrubs, helpers.py:353,377).
     """
     return scrub_infinite(F.ln(c))
-
-
-def add_decimal_with_float_fallback(a: Column, b: Column, scale: int = 18) -> Column:
-    """Decimal addition that falls back to float64 on overflow — the
-    reference's decimal-overflow retry (data_column.py:54-63: decimal
-    +,−,× retried in float64 when the decimal128 range is exceeded).
-
-    Spark analog: ``try_add`` on decimal(38,scale) yields null on
-    overflow; rows where inputs were present but the decimal op nulled
-    re-compute in double.
-    """
-    t = f"decimal(38,{scale})"
-    dec = F.try_add(a.cast(t), b.cast(t))
-    flo = a.cast("double") + b.cast("double")
-    return F.when(a.isNull() | b.isNull(), F.lit(None).cast("double")).otherwise(
-        F.coalesce(dec.cast("double"), flo)
-    )
-
-
-APPROX_EPS_FACTOR = 128  # reference data_column.py:12
-
-
-def approx_equal_mask(a: Column, b: Column, null_equals_null: bool = False) -> Column:
-    """Approximate float equality: |a−b| ≤ (|a|+|b|)·128·ε
-    (data_column.py:1067-1114). Used by the test comparator.
-    """
-    import sys
-
-    eps = sys.float_info.epsilon * APPROX_EPS_FACTOR
-    base = F.abs(a - b) <= (F.abs(a) + F.abs(b)) * F.lit(eps)
-    if null_equals_null:
-        return F.when(a.isNull() & b.isNull(), F.lit(True)).otherwise(
-            F.coalesce(base, F.lit(False))
-        )
-    return base

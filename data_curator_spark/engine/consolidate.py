@@ -22,24 +22,14 @@ pre-``F.broadcast()`` by the caller.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-class DuplicatePrimaryKeysError(ValueError):
-    """Reference: exceptions.ConsolidationDuplicateKeysError."""
 
 
 def duplicate_pk_rows(df: DataFrame, pk: list[str]) -> DataFrame:
     """Rows of ``pk`` values appearing more than once
     (data_provider_toolkit.py:1556-1567)."""
     return df.groupBy(*pk).count().filter(F.col("count") > 1)
-
-
-def assert_unique_pk(df: DataFrame, pk: list[str]) -> None:
-    """Raise if any PK duplicates exist (consolidation precondition)."""
-    if not duplicate_pk_rows(df, pk).isEmpty():
-        raise DuplicatePrimaryKeysError(f"duplicate primary keys on {pk}")
 
 
 def missing_rows(common: DataFrame, subset: DataFrame, keys: list[str]) -> DataFrame:
@@ -156,42 +146,6 @@ def clear_rows_by_pk(
         else:
             out_cols.append(F.when(F.col("__bad").isNull(), F.col(c)).alias(c))
     return marked.select(*out_cols)
-
-
-def order_inconsistency(
-    endpoints: list[DataFrame], pk: list[str]
-) -> DataFrame:
-    """Detect endpoints whose internal row order contradicts the global
-    PK order — the failure the reference's topological PK merge raises as
-    ``CommonDataOrderError`` (data_provider_toolkit.py:1476-1636).
-
-    The reference needs a DAG + topo sort because it refuses to compare
-    PK values; our PKs are totally ordered (dates/keys), so inconsistency
-    reduces to: within an endpoint, does the arrival order (row_number by
-    a provided ``__arrival`` column) ever invert the PK order? Returns
-    one row per offending (endpoint, pk-pair boundary).
-    """
-    out = None
-    for i, ep in enumerate(endpoints):
-        if "__arrival" not in ep.columns:
-            raise ValueError("each endpoint needs an __arrival order column")
-        w = Window.orderBy("__arrival")
-        prev = [F.lag(k).over(w).alias(f"__prev_{k}") for k in pk]
-        with_prev = ep.select(*pk, "__arrival", *prev)
-        cond = None
-        # violation: previous arrival row has a strictly larger PK tuple
-        tuple_gt = None
-        eq_chain = F.lit(True)
-        for k in pk:
-            this_gt = eq_chain & (F.col(f"__prev_{k}") > F.col(k))
-            tuple_gt = this_gt if tuple_gt is None else (tuple_gt | this_gt)
-            eq_chain = eq_chain & (F.col(f"__prev_{k}") == F.col(k))
-        cond = tuple_gt & F.col(f"__prev_{pk[0]}").isNotNull()
-        bad = with_prev.filter(cond).select(
-            F.lit(i).alias("endpoint"), *[F.col(k) for k in pk]
-        )
-        out = bad if out is None else out.unionByName(bad)
-    return out
 
 
 def consolidate_with_repair(

@@ -138,18 +138,6 @@ def chaikin_money_flow_ppm(
     )
 
 
-def shift(c: Column, w: WindowSpec, n: int = 1) -> Column:
-    """Adjacent shift-by-n (helpers.py:279-292 concat([null], col[:-1]))."""
-    return F.lag(c, n).over(w)
-
-
-def cumulative_min(c: Column, w: WindowSpec) -> Column:
-    """Running minimum over the window order
-    (data_blocks/fundamentals/__init__.py:139-143 — used with a
-    period-end-descending order to flag amended/late filings)."""
-    return F.min(c).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-
-
 def irregular_filing_mask(
     filing_date: Column, period_end_order: WindowSpec
 ) -> Column:
@@ -160,30 +148,6 @@ def irregular_filing_mask(
         period_end_order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return cm != filing_date
-
-
-def posterior_duplicate_mask(c: Column, id_col: str, order_col: str) -> Column:
-    """True for the 2nd+ occurrence of a duplicated value, in order
-    (data_blocks/fundamentals/__init__.py:165-210 — the reference loops
-    per-row; row_number over a value-partitioned window replaces it)."""
-    w = Window.partitionBy(id_col, c).orderBy(order_col)
-    return F.row_number().over(w) > 1
-
-
-def is_sorted_strict_asc(c: Column, w: WindowSpec) -> Column:
-    """Per-row strictly-ascending check vs previous row
-    (base_data_block.py:304-340). AND-reduce with F.every for the column
-    verdict."""
-    prev = F.lag(c, 1).over(w)
-    return prev.isNull() | (prev < c)
-
-
-def forward_fill(c: Column, w: WindowSpec) -> Column:
-    """Forward-fill-as-of: latest non-null value at-or-before each row
-    (ColumnBuilder._infill_data, column_builder.py:507-569)."""
-    return F.last(c, ignorenulls=True).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
 
 
 def asof_join(

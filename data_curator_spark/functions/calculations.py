@@ -4,7 +4,7 @@ Mirrors features/calculations.py (2361 LoC) of the reference: same
 column names, same dependency structure (declared in CALC_DEPS exactly
 as the reference declares them via parameter names), same null/reset
 semantics — but each calc is a window expression or a batched
-``applyInPandas`` kernel instead of a per-row Python loop.
+partition-level ``mapInPandas`` kernel instead of a per-row Python loop.
 
 ``build_features(df, requested, ...)`` resolves dependencies
 topologically and materializes everything in three waves to minimize
@@ -12,8 +12,9 @@ shuffles:
 
 1. one ``withColumn`` pass for all expression/window calcs (zero
    shuffles beyond the single hash partition on the identifier),
-2. ONE grouped ``applyInPandas`` pass computing every needed EMA/RSI
-   recursion simultaneously (reference loops per column),
+2. ONE partition-level ``mapInPandas`` pass
+   (``engine.features.apply_recursive_features``) computing every needed
+   EMA/RSI recursion simultaneously (reference loops per column),
 3. a second expression pass for calcs downstream of recursions (MACD),
    then one more recursion pass for the MACD signal lines.
 

@@ -56,15 +56,6 @@ def fingerprint(text: Column) -> Column:
     return F.md5(F.encode(norm, "UTF-8"))
 
 
-def rolling_content_hash(text: Column, window: int = 64) -> Column:
-    """Winnowing-style fingerprint set: hashes of fixed-width character
-    windows sampled every ``window`` chars — an array column usable for
-    containment checks (overlap of fingerprint sets ≈ shared content)."""
-    n = F.length(text)
-    starts = F.sequence(F.lit(1), F.greatest(n - window + 1, F.lit(1)), F.lit(window))
-    return F.transform(starts, lambda i: F.xxhash64(text.substr(i, F.lit(window))))
-
-
 def dedup_lines(text: Column) -> Column:
     """Intra-document repetition removal: drop duplicate LINES keeping
     the first occurrence, preserving original order (the Gopher/

@@ -313,34 +313,6 @@ def lsh_candidate_pairs(
     )
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str,
-    content_col: str,
-    shingle_n: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Exact n-gram Jaccard similarity for all pairs sharing ≥1 shingle.
-
-    |A∩B| via a shingle equi-join + count, |A∪B| = |A|+|B|−|A∩B|.
-    Quadratic in the worst case — at scale use ngram_jaccard_verify over
-    LSH candidate pairs instead (lsh_candidate_pairs provides the
-    blocking); this all-pairs form exists for small corpora and tests."""
-    sh = df.select(
-        F.col(id_col), F.explode(word_shingles(F.col(content_col), shingle_n)).alias("s")
-    )
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.select(F.col(id_col).alias("id_a"), "s")
-    b = sh.select(F.col(id_col).alias("id_b"), "s")
-    common = (
-        a.join(b, "s")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    return _jaccard_from_common(common, sizes, id_col, threshold)
-
-
 def _jaccard_from_common(
     common: DataFrame, sizes: DataFrame, id_col: str, threshold: float
 ) -> DataFrame:
@@ -808,7 +780,6 @@ def contamination_overlap(
     content_col: str,
     shingle_n: int = 5,
     min_overlap: int = 1,
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination: corpus documents sharing at least
     ``min_overlap`` distinct word ``shingle_n``-gram shingles with ANY
@@ -822,14 +793,14 @@ def contamination_overlap(
     Scale shape: shingles are hashed to 15-hex md5-prefix longs
     (portable, 8B instead of arbitrary-width strings through the
     shuffle); the benchmark's distinct shingle-hash set is tiny next to
-    the corpus and broadcasts (``broadcast_benchmark=False`` for a huge
-    benchmark union → shuffle join); the corpus side never self-joins.
+    the corpus and broadcasts; the corpus side never self-joins.
     countDistinct collapses map-side per doc."""
 
-    bench = _shingle_hash_rows(benchmark, id_col, content_col, shingle_n)
-    bench = bench.select("h").distinct()
-    if broadcast_benchmark:
-        bench = F.broadcast(bench)
+    bench = F.broadcast(
+        _shingle_hash_rows(benchmark, id_col, content_col, shingle_n)
+        .select("h")
+        .distinct()
+    )
     return (
         _shingle_hash_rows(corpus, id_col, content_col, shingle_n)
         .join(bench, on="h")

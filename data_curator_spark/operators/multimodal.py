@@ -1,15 +1,15 @@
 """Multimodal (image/audio/video) column plumbing.
 
 Media are opaque ``binary`` columns with a typed metadata struct; decode
-/ feature-extract / resize / frame-sample run as Arrow-batched
-``mapInPandas`` stages. Decoders, in priority order: native pure-numpy
-BMP/PCM-WAV (always available), then PIL/librosa when installed (real
+and feature extraction run as one Arrow-batched ``mapInPandas`` stage.
+Decoders, in priority order: native pure-numpy BMP/PCM-WAV (always
+available), then PIL/librosa when installed (real
 compressed-format path, exercised via a monkeypatched codec in tests),
 then a clearly-marked deterministic fake so undecodable payloads degrade
 instead of killing the task — the Spark-side contract (schema, batching,
 partitioning) is identical on every path.
 
-Scale notes: media bytes never shuffle — every stage is a map-only
+Scale notes: media bytes never shuffle — the stage is a map-only
 projection; partition sizing comes from
 ``spark.sql.files.maxPartitionBytes`` at scan time, and batch memory is
 bounded by ``spark.sql.execution.arrow.maxRecordsPerBatch``.
@@ -127,11 +127,16 @@ def _decode_image(payload: bytes, width: int, height: int) -> np.ndarray:
     decodes through PIL when it is installed. Only when no codec applies
     (PIL absent, or the bytes are undecodable) does the row fall to the
     DETERMINISTIC FAKE: bytes tiled into the metadata shape, which
-    preserves the pipeline contract (shape, dtype) for tests.
+    preserves the pipeline contract (shape, dtype) for tests. A BMP
+    header declaring a zero width or height takes the fake path too.
     """
     if payload[:2] == b"BM":
         try:
-            return _decode_bmp(payload)
+            img = _decode_bmp(payload)
+            # a corrupt-but-parseable header can declare width or height
+            # 0; an empty array would fail every reduction downstream
+            if img.shape[0] > 0 and img.shape[1] > 0:
+                return img
         except Exception:  # noqa: BLE001 — corrupt/truncated header: fake path
             pass
     try:
@@ -296,144 +301,6 @@ def extract_features(df: DataFrame, batch_hint: int = 256) -> DataFrame:
             )
 
     return df.mapInPandas(compute, schema=FEATURE_SCHEMA)
-
-
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("media_id", StringType(), False),
-        StructField("kind", StringType(), False),
-        StructField("width", IntegerType(), False),
-        StructField("height", IntegerType(), False),
-        StructField("payload", BinaryType(), True),  # raw RGB8 row-major
-        StructField("mime", StringType(), False),
-    ]
-)
-
-
-def resize_images(df: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """Decode + nearest-neighbor resize every image row to (out_w,
-    out_h); output payloads are RAW row-major RGB8 bytes (mime
-    image/raw-rgb8) with the new dimensions in the metadata — the
-    normalized form a training pipeline feeds an embedding model.
-    Non-image rows are dropped (select upstream to keep them).
-
-    Nearest-neighbor via integer index maps (floor(i·in/out)) — fully
-    deterministic, no float filtering, identical on every engine/arch.
-    One map-only mapInPandas pass: media bytes never shuffle, the
-    resize is a numpy fancy-index per decoded-shape group."""
-    if out_w <= 0 or out_h <= 0:
-        raise ValueError(f"output dims must be positive, got {out_w}x{out_h}")
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf[pdf["kind"] == "image"]
-            if not len(pdf):
-                continue
-            widths = pdf["width"].fillna(8).to_numpy(dtype=np.int64)
-            widths = np.where(widths <= 0, 8, widths)
-            heights = pdf["height"].fillna(8).to_numpy(dtype=np.int64)
-            heights = np.where(heights <= 0, 8, heights)
-            payloads = [p if p is not None else b"" for p in pdf["payload"]]
-            decoded = [
-                _decode_image(p, int(w), int(h))
-                for p, w, h in zip(payloads, widths, heights)
-            ]
-            # degrade-don't-kill: a corrupt-but-parseable header can
-            # declare width or height 0 (decoded shape (h,0,3) etc.) —
-            # fancy-indexing that would IndexError the task. Route
-            # zero-dim decodes to the deterministic fake tile at the
-            # metadata shape, like _decode_image's own fallback.
-            decoded = [
-                img
-                if img.shape[0] > 0 and img.shape[1] > 0
-                else _fake_tile(p, int(w), int(h))
-                for img, p, w, h in zip(decoded, payloads, widths, heights)
-            ]
-            by_shape: dict[tuple, list] = {}
-            for pos, img in enumerate(decoded):
-                by_shape.setdefault(img.shape, []).append((pos, img))
-            out = [b""] * len(decoded)
-            for (in_h, in_w, _), items in by_shape.items():
-                rows = (np.arange(out_h, dtype=np.int64) * in_h) // out_h
-                cols = (np.arange(out_w, dtype=np.int64) * in_w) // out_w
-                arr = np.stack([img for _, img in items])
-                resized = arr[:, rows][:, :, cols]  # (n, out_h, out_w, 3)
-                for (pos, _), r in zip(items, resized):
-                    out[pos] = r.tobytes()
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].to_numpy(dtype=object),
-                    "kind": "image",
-                    "width": np.int32(out_w),
-                    "height": np.int32(out_h),
-                    "payload": out,
-                    "mime": "image/raw-rgb8",
-                }
-            )
-
-    return df.mapInPandas(compute, schema=RESIZED_SCHEMA)
-
-
-FRAME_SCHEMA = StructType(
-    [
-        StructField("media_id", StringType(), False),
-        StructField("frame_idx", IntegerType(), False),
-        StructField("n_frames", IntegerType(), False),
-        StructField("payload", BinaryType(), True),
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("mime", StringType(), True),
-    ]
-)
-
-
-def sample_frames(df: DataFrame, max_frames: int = 4) -> DataFrame:
-    """Deterministic frame sampling for video rows: up to ``max_frames``
-    evenly-spaced frames per video (indices floor(k·n/m) — always
-    includes frame 0, never repeats), one OUTPUT ROW PER FRAME with
-    kind-image-shaped metadata so the frames feed resize_images /
-    extract_features directly.
-
-    Frame extraction follows the repo's opaque-payload convention
-    (frame j of an n-frame payload is the byte stride payload[j::n],
-    the same slicing extract_features' video path uses); a real
-    container codec would slot into _decode_* without changing this
-    operator's schema or batching. Map-only, no shuffle; the fan-out
-    is bounded by max_frames per input row."""
-    if max_frames <= 0:
-        raise ValueError(f"max_frames must be positive, got {max_frames}")
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf[pdf["kind"] == "video"]
-            if not len(pdf):
-                continue
-            out: dict[str, list] = {
-                "media_id": [], "frame_idx": [], "n_frames": [],
-                "payload": [], "width": [], "height": [], "mime": [],
-            }
-            nframes = pdf["n_frames"].fillna(1).to_numpy(dtype=np.int64)
-            nframes = np.where(nframes <= 0, 1, nframes)
-            for (_, row), nf in zip(pdf.iterrows(), nframes):
-                payload = row["payload"] if row["payload"] is not None else b""
-                nf = int(nf)
-                m = min(nf, max_frames)
-                for k in range(m):
-                    j = (k * nf) // m
-                    out["media_id"].append(row["media_id"])
-                    out["frame_idx"].append(j)
-                    out["n_frames"].append(nf)
-                    # `or payload`: a payload shorter than n_frames has
-                    # empty stride slices for the tail frames — fall back
-                    # to the whole payload exactly like extract_features'
-                    # video path, so sample->extract equals extract-on-video
-                    out["payload"].append(payload[j::nf] or payload)
-                    out["width"].append(row["width"])
-                    out["height"].append(row["height"])
-                    out["mime"].append(row["mime"])
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(compute, schema=FRAME_SCHEMA)
 
 
 def media_from_documents(docs: DataFrame) -> DataFrame:

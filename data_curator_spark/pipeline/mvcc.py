@@ -438,7 +438,7 @@ def run_pipeline_mvcc(
     reprocess_buckets: set[int] | None = None,
     crash_before_commit: bool = False,
     near_dup: bool = False,
-    bench_hashes: list[int] | None = None,
+    benchmark: DataFrame | None = None,
     span_dedup_bp: int | None = None,
     cdc_dup_bp: int | None = None,
     repo_min_keep_bp: int | None = None,
@@ -478,7 +478,7 @@ def run_pipeline_mvcc(
     if new_buckets:
         todo = raw.filter(f"NOT {bucket_in(skip)}") if skip else raw
         result = stage_output(
-            todo, spark, near_dup=near_dup, bench_hashes=bench_hashes,
+            todo, spark, near_dup=near_dup, benchmark=benchmark,
             span_dedup_bp=span_dedup_bp, cdc_dup_bp=cdc_dup_bp,
             repo_min_keep_bp=repo_min_keep_bp,
         )

@@ -382,7 +382,7 @@ def run_pipeline(
     n_buckets: int = DEFAULT_N_BUCKETS,
     fail_buckets: set[int] | None = None,
     near_dup: bool = False,
-    bench_hashes: list[int] | None = None,
+    benchmark: DataFrame | None = None,
     span_dedup_bp: int | None = None,
     cdc_dup_bp: int | None = None,
     repo_min_keep_bp: int | None = None,
@@ -429,7 +429,7 @@ def run_pipeline(
             bucket_in(new_buckets)
         )
         result = stage_output(
-            todo, spark, near_dup=near_dup, bench_hashes=bench_hashes,
+            todo, spark, near_dup=near_dup, benchmark=benchmark,
             span_dedup_bp=span_dedup_bp, cdc_dup_bp=cdc_dup_bp,
             repo_min_keep_bp=repo_min_keep_bp,
         )

@@ -521,7 +521,8 @@ def _doc_identity(id_cols) -> "F.Column":
     path='a') would otherwise fuse into one identity and share a
     cluster/demotion fate. The \\x1f separator + \\x00 null marker is
     correctness-bearing and shared by every corpus-global stage
-    (with_near_dup, with_span_dedup) — change it HERE only."""
+    (with_decontamination, with_near_dup, with_span_dedup,
+    with_cdc_dedup) — change it HERE only."""
     return F.concat_ws(
         "\x1f",
         *[F.coalesce(F.col(c).cast("string"), F.lit("\x00")) for c in id_cols],
@@ -609,6 +610,38 @@ def with_near_dup(
     ).withColumn("keep", F.col("keep") & ~demoted)
 
 
+def with_decontamination(df: DataFrame, benchmark: DataFrame) -> DataFrame:
+    """Eval-benchmark decontamination stage: demote keep=true rows whose
+    ``content_scrubbed`` shares at least one distinct word 5-gram with
+    any ``content`` of ``benchmark``; they flip to keep=false /
+    drop_reason='contaminated'. The check is the gate query's operator,
+    ``dedup.contamination_overlap``, so the pipeline and the
+    ``decontaminate`` oracle share one tokenize→gram→hash contract.
+
+    Keyed per row by (repo, path, commit): two commits of one file are
+    judged on their own contents. NULL content and documents shorter
+    than 5 words have no grams, so they are never flagged.
+
+    Scale shape: the benchmark's distinct gram hashes broadcast; the
+    corpus side emits (id, hash) rows in one Arrow pass and only
+    contaminated ids join back."""
+    from data_curator_spark.operators.dedup import contamination_overlap
+
+    bench = benchmark.select(
+        F.lit("").alias("__doc_id"), F.col("content").alias("content_scrubbed")
+    )
+    return _demote_over_threshold(
+        df,
+        lambda keyed: contamination_overlap(
+            keyed, bench, "__doc_id", "content_scrubbed", shingle_n=5
+        ),
+        stat_col="n_overlap_grams",
+        reason="contaminated",
+        id_cols=("repo", "path", "commit"),
+        max_bp=1,
+    )
+
+
 def with_span_dedup(
     df: DataFrame,
     content: str = "content_scrubbed",
@@ -652,12 +685,12 @@ def _demote_over_threshold(
     stats_fn,
     stat_col: str,
     reason: str,
-    id_cols: tuple[str, str],
+    id_cols: tuple[str, ...],
     max_bp: int,
 ) -> DataFrame:
     """Shared demote-by-threshold skeleton of the corpus-global marking
-    stages (span-dedup, CDC-dedup): key with _doc_identity, compute
-    per-doc basis-point stats via ``stats_fn(keyed)``, filter to
+    stages (decontamination, span-dedup, CDC-dedup): key with
+    _doc_identity, compute per-doc stats via ``stats_fn(keyed)``, filter to
     over-threshold docs, size-gated-broadcast join back, and flip
     keep/drop_reason for previously-KEPT rows only. One definition so
     demotion semantics (null-keep handling, persist lifecycle) cannot
@@ -795,7 +828,7 @@ def run_stages(
     df: DataFrame,
     spark: SparkSession,
     near_dup: bool = False,
-    bench_hashes: list[int] | None = None,
+    benchmark: DataFrame | None = None,
     span_dedup_bp: int | None = None,
     cdc_dup_bp: int | None = None,
     repo_min_keep_bp: int | None = None,
@@ -808,12 +841,12 @@ def run_stages(
     (off by default: the reference's keep/drop label contract has no
     dedup dimension, and the F1 gate compares against those labels).
 
-    ``bench_hashes`` (from streaming.quality_stream.
-    benchmark_shingle_hashes) appends eval-benchmark decontamination
-    over the scrubbed content: contaminated rows flip to keep=false /
-    drop_reason='contaminated'. Runs BEFORE near-dup so canonical
-    selection (which prefers kept members) never elects a contaminated
-    copy as a cluster's survivor.
+    ``benchmark`` (a frame with a ``content`` column, None=off) appends
+    eval-benchmark decontamination over the scrubbed content
+    (with_decontamination): contaminated rows flip to keep=false /
+    drop_reason='contaminated'. Runs right after the decision and
+    BEFORE near-dup so canonical selection (which prefers kept members)
+    never elects a contaminated copy as a cluster's survivor.
 
     ``span_dedup_bp`` (basis points, None=off) appends the ExactSubstr
     duplicated-span demotion stage (with_span_dedup), after
@@ -839,16 +872,8 @@ def run_stages(
     out, scrubbed, internal = _scrub_chain(out, "content", "secret_redacted")
     out = out.selectExpr("*", *scrubbed).selectExpr("*", *_decision_sql("lang"))
     out = out.drop("__gate", "__scores", "secret_redacted", *internal)
-    if bench_hashes is not None:
-        # function-level import: quality_stream imports run_stages at
-        # module top, so a top-level import here would be circular.
-        # The check itself is engine-agnostic column logic (batch and
-        # streaming share one implementation).
-        from data_curator_spark.streaming.quality_stream import (
-            streaming_contamination,
-        )
-
-        out = streaming_contamination(out, bench_hashes)
+    if benchmark is not None:
+        out = with_decontamination(out, benchmark)
     if span_dedup_bp is not None:
         out = with_span_dedup(out, max_bp=span_dedup_bp)
     if cdc_dup_bp is not None:

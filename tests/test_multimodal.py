@@ -205,71 +205,15 @@ def test_codec_present_uses_real_decode_not_raise(monkeypatch):
     assert "image" not in calls  # PIL never consulted for native BMP
 
 
-def test_resize_images_nearest_neighbor_exact(spark):
-    """A 2x2 BMP resized to 4x4 must replicate each source pixel into a
-    2x2 block (nearest neighbor, integer index map) — verified
-    byte-exactly against a hand-built expectation."""
-    import numpy as np
-
-    from data_curator_spark.operators.multimodal import (
-        _decode_bmp,
-        resize_images,
-    )
-
-    src = np.array(
-        [[[255, 0, 0], [0, 255, 0]], [[0, 0, 255], [9, 9, 9]]],
-        dtype=np.uint8,
-    )
-    payload = _bmp_bytes(src)
-    assert (_decode_bmp(payload) == src).all()  # sanity on the fixture
-    df = spark.createDataFrame(
-        [("m1", "image", payload, "image/bmp", 2, 2, None, None),
-         ("a1", "audio", b"xx", None, None, None, 16000, None)],
-        "media_id string, kind string, payload binary, mime string, "
-        "width int, height int, sample_rate int, n_frames int",
-    )
-    rows = resize_images(df, 4, 4).collect()
-    assert len(rows) == 1  # non-image rows dropped
-    r = rows[0]
-    assert (r.width, r.height, r.mime) == (4, 4, "image/raw-rgb8")
-    got = np.frombuffer(bytes(r.payload), dtype=np.uint8).reshape(4, 4, 3)
-    exp = src.repeat(2, axis=0).repeat(2, axis=1)
-    assert (got == exp).all()
-
-
-def test_sample_frames_even_spacing_and_stride(spark):
-    from data_curator_spark.operators.multimodal import sample_frames
-
-    payload = bytes(range(60))  # 6 frames x 10 bytes, stride convention
-    df = spark.createDataFrame(
-        [("v1", "video", payload, "application/octet-stream", 8, 8, None, 6),
-         ("v2", "video", payload, None, 8, 8, None, 2),
-         ("i1", "image", payload, None, 8, 8, None, None)],
-        "media_id string, kind string, payload binary, mime string, "
-        "width int, height int, sample_rate int, n_frames int",
-    )
-    rows = sample_frames(df, max_frames=4).collect()
-    by = {}
-    for r in rows:
-        by.setdefault(r.media_id, []).append(r)
-    assert set(by) == {"v1", "v2"}
-    v1 = sorted(by["v1"], key=lambda r: r.frame_idx)
-    # floor(k*6/4) for k=0..3 -> 0,1,3,4
-    assert [r.frame_idx for r in v1] == [0, 1, 3, 4]
-    for r in v1:
-        assert bytes(r.payload) == payload[r.frame_idx :: 6]
-        assert r.n_frames == 6 and r.width == 8
-    assert [r.frame_idx for r in sorted(by["v2"], key=lambda r: r.frame_idx)] == [0, 1]
-
-
-def test_resize_images_degrades_on_zero_dim_bmp(spark):
+def test_zero_dim_bmp_degrades_to_fake_tile(spark):
     """A corrupt-but-parseable BMP declaring width=0 must DEGRADE (fake
-    tile at the metadata shape), never IndexError the task."""
+    tile at the metadata shape), never fail the task on an empty-array
+    reduction in extract_features."""
     import struct
 
     import numpy as np
 
-    from data_curator_spark.operators.multimodal import resize_images
+    from data_curator_spark.operators.multimodal import _decode_image, _fake_tile
 
     # minimal BMP header with width=0, height=2, 24bpp, no compression
     hdr = bytearray(54)
@@ -279,27 +223,12 @@ def test_resize_images_degrades_on_zero_dim_bmp(spark):
     struct.pack_into("<i", hdr, 22, 2)    # height = 2
     struct.pack_into("<H", hdr, 28, 24)   # bpp
     struct.pack_into("<I", hdr, 30, 0)    # compression
+    payload = bytes(hdr)
+    assert np.array_equal(_decode_image(payload, 4, 4), _fake_tile(payload, 4, 4))
     df = spark.createDataFrame(
-        [("z1", "image", bytes(hdr), "image/bmp", 4, 4, None, None)],
+        [("z1", "image", payload, "image/bmp", 4, 4, None, None)],
         "media_id string, kind string, payload binary, mime string, "
         "width int, height int, sample_rate int, n_frames int",
     )
-    rows = resize_images(df, 2, 2).collect()
-    assert len(rows) == 1
-    got = np.frombuffer(bytes(rows[0].payload), dtype=np.uint8)
-    assert got.shape == (2 * 2 * 3,)  # fake tile resized, task alive
-
-
-def test_sample_frames_short_payload_falls_back_whole(spark):
-    from data_curator_spark.operators.multimodal import sample_frames
-
-    df = spark.createDataFrame(
-        [("v3", "video", b"abc", None, 8, 8, None, 6)],
-        "media_id string, kind string, payload binary, mime string, "
-        "width int, height int, sample_rate int, n_frames int",
-    )
-    rows = sample_frames(df, max_frames=4).collect()
-    for r in rows:
-        want = b"abc"[r.frame_idx :: 6] or b"abc"
-        assert bytes(r.payload) == want
-        assert len(r.payload) > 0  # never an empty frame
+    (row,) = extract_features(df).collect()
+    assert row.n_bytes == 54 and len(row.feature) == 8  # task alive

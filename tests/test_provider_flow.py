@@ -111,18 +111,6 @@ def test_full_provider_flow(spark, endpoint_json, tmp_path):
     assert spark.read.parquet(out).count() == 5
 
 
-def test_order_inconsistency_detection(spark):
-    ok = spark.createDataFrame(
-        [(1, 1), (2, 2), (3, 3)], "pk int, __arrival int"
-    )
-    bad = spark.createDataFrame(
-        [(1, 1), (3, 2), (2, 3)], "pk int, __arrival int"  # 3 arrives before 2
-    )
-    out = CN.order_inconsistency([ok, bad], ["pk"]).collect()
-    assert len(out) == 1
-    assert out[0]["endpoint"] == 1 and out[0]["pk"] == 2
-
-
 def test_irregular_filing_gate_in_flow(spark):
     rows = [
         ("A", "2024-03-31", "2024-04-30"),

@@ -1,70 +1,11 @@
-"""Structured Streaming quality filter: incremental processing,
-checkpoint restart-safety, watermarked streaming dedup."""
+"""Stateless operators inside Structured Streaming: chunking, FIM and
+PQ encoding run unchanged on a streaming DataFrame and emit exactly the
+batch results."""
 
 from __future__ import annotations
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-
-from data_curator_spark.pipeline.corpus import generate_corpus
-from data_curator_spark.streaming.quality_stream import run_stream_once
-
-
-def _land(pdf, path, ts):
-    import pandas as pd
-
-    pdf = pdf.copy()
-    # microsecond precision: Spark's TimestampType cannot read ns INT64
-    pdf["ingested_at"] = pd.Series([ts] * len(pdf), index=pdf.index).astype("datetime64[us]")
-    pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), path)
-
-
-def test_stream_incremental_and_restart_safe(spark, tmp_path):
-    land = tmp_path / "land"
-    land.mkdir()
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    corpus = generate_corpus(120, seed=3)
-    import pandas as pd
-
-    ts = pd.Timestamp("2026-01-01")
-    _land(corpus.iloc[:60], str(land / "batch1.parquet"), ts)
-
-    run_stream_once(spark, str(land), out, ckpt)
-    n1 = spark.read.parquet(out).count()
-    assert n1 == 60
-
-    # second batch lands; restart picks up ONLY the new file
-    _land(corpus.iloc[60:], str(land / "batch2.parquet"), ts)
-    run_stream_once(spark, str(land), out, ckpt)
-    got = spark.read.parquet(out)
-    assert got.count() == len(corpus)
-    # no duplicates from reprocessing batch1
-    assert got.groupBy("repo", "path", "commit").count().filter("count > 1").isEmpty()
-    # decisions match the batch pipeline on the same data
-    assert set(got.columns) >= {"keep", "drop_reason", "content_scrubbed"}
-
-
-def test_streaming_dedup_within_watermark(spark, tmp_path):
-    import pandas as pd
-
-    land = tmp_path / "land"
-    land.mkdir()
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    corpus = generate_corpus(40, seed=4).iloc[:40]
-    dup = corpus.iloc[:10].copy()
-    dup["path"] = dup["path"] + ".reingested"
-    both = pd.concat([corpus, dup], ignore_index=True)
-    _land(both, str(land / "b.parquet"), pd.Timestamp("2026-01-01"))
-
-    run_stream_once(spark, str(land), out, ckpt, dedup=True)
-    got = spark.read.parquet(out)
-    # the 10 re-ingested identical contents are dropped by streaming dedup
-    assert got.count() == len(corpus)
-    assert got.select("sha256_original").distinct().count() == got.count()
 
 
 def test_chunk_and_fim_are_streaming_safe(spark, tmp_path):
