@@ -66,7 +66,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     p.add_argument(
         "--reprocess", type=int, nargs="*", default=None,
-        help="(mvcc) backfill these bucket ids under a new run",
+        help="backfill these bucket ids under a new run",
     )
 
     s = sub.add_parser("snapshots", help="list the manifest snapshot chain")
@@ -130,38 +130,25 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "pipeline":
+        from data_curator_spark.pipeline.mvcc import run_pipeline_mvcc
+        from data_curator_spark.pipeline.runner import read_corpus, run_pipeline
         from data_curator_spark.session import build_session
 
         spark = build_session("quality-filter-pipeline")
         benchmark = None
         if args.decontaminate:
-            from data_curator_spark.pipeline.runner import read_corpus
-
             benchmark = read_corpus(spark, args.decontaminate, ["content"])
-        if args.layout == "mvcc":
-            from data_curator_spark.pipeline.mvcc import run_pipeline_mvcc
-
-            stats = run_pipeline_mvcc(
-                spark, args.input, args.output, args.manifest,
-                n_buckets=args.buckets,
-                reprocess_buckets=set(args.reprocess) if args.reprocess else None,
-                near_dup=args.near_dup,
-                benchmark=benchmark,
-                span_dedup_bp=args.span_dedup_bp,
-                cdc_dup_bp=args.cdc_dup_bp,
-                repo_min_keep_bp=args.repo_min_keep_bp,
-            )
-        else:
-            from data_curator_spark.pipeline.runner import run_pipeline
-
-            stats = run_pipeline(
-                spark, args.input, args.output, args.manifest,
-                n_buckets=args.buckets, near_dup=args.near_dup,
-                benchmark=benchmark,
-                span_dedup_bp=args.span_dedup_bp,
-                cdc_dup_bp=args.cdc_dup_bp,
-                repo_min_keep_bp=args.repo_min_keep_bp,
-            )
+        write = run_pipeline_mvcc if args.layout == "mvcc" else run_pipeline
+        stats = write(
+            spark, args.input, args.output, args.manifest,
+            n_buckets=args.buckets,
+            reprocess_buckets=set(args.reprocess) if args.reprocess else None,
+            near_dup=args.near_dup,
+            benchmark=benchmark,
+            span_dedup_bp=args.span_dedup_bp,
+            cdc_dup_bp=args.cdc_dup_bp,
+            repo_min_keep_bp=args.repo_min_keep_bp,
+        )
         print(json.dumps(stats))
         spark.stop()
         return 0

@@ -1,11 +1,13 @@
 """MVCC (snapshot) output layout for the quality-filter pipeline.
 
-The default runner (pipeline/runner.py) keeps ONE physical copy of each
-bucket via dynamic partition overwrite — cheap, idempotent, but
-history-less. This module is the Iceberg-faithful alternative: data
-files are IMMUTABLE (every run appends under its own ``run_id=``
-partition) and the manifest decides which (run_id, bucket) pairs a
-reader sees. That buys, exactly like Iceberg's metadata architecture:
+Both layouts run through the runner's one plan → write → commit core
+(pipeline/runner.py: ``run_buckets`` → ``commit_run``) and differ only
+in the sink. The overwrite sink keeps ONE physical copy of each bucket
+via dynamic partition overwrite — cheap, idempotent, but history-less.
+This module's sink, ``_append_run``, is the Iceberg-faithful
+alternative: data files are IMMUTABLE (every run appends under its own
+``run_id=`` partition) and the manifest decides which (run_id, bucket)
+pairs a reader sees. That buys, exactly like Iceberg's metadata architecture:
 
 - **snapshot isolation**: a reader resolves its (run_id, bucket) set
   from the manifest once; concurrent writers appending new run
@@ -53,19 +55,11 @@ from data_curator_spark.pipeline.runner import (
     _entries_path,
     _recover_swap,
     _snapshots_path,
-    attach_lineage_observation,
-    bucket_in,
-    commit_bucket_metrics,
-    commit_snapshot,
+    commit_run,
     latest_entries,
-    latest_per_bucket,
-    latest_snapshot_id,
     local_path,
-    new_run_id,
-    read_corpus,
     read_manifest,
-    stage_output,
-    with_bucket,
+    run_buckets,
     write_manifest_file,
 )
 
@@ -118,9 +112,10 @@ def _selection_predicate(pairs: list[tuple[str, int]]):
 def _append_run(
     spark: SparkSession, result: DataFrame, run_id: str, output_path: str
 ) -> DataFrame:
-    """IMMUTABLE write: append ``result`` under this run's partition —
-    never touches other runs' files, so no overwrite mode gymnastics and
-    no torn reads for concurrent manifest-resolved readers. Returns the
+    """The MVCC layout's sink (``runner.Sink``). IMMUTABLE write: append
+    ``result`` under this run's partition — never touches other runs'
+    files, so no overwrite mode gymnastics and no torn reads for
+    concurrent manifest-resolved readers. Returns the
     run's files read back with the written schema (no inference job)."""
     out = result.withColumn("run_id", F.lit(run_id))
     (
@@ -253,39 +248,21 @@ def compact(
 
     Scale shape: one partition-pruned scan of the live selection, one
     sorted write — no shuffle beyond the write's ``sortWithinPartitions``
-    — and the manifest commit reuses the same observe-gated integrity
-    path as a normal run.
+    — committed through the runner's ``commit_run``, the same
+    observe-gated path as a normal run.
     """
-    run_id = new_run_id()
     t0 = time.time()
     latest = latest_entries(spark, manifest_path)
     if not latest:
         raise ValueError("compact: empty manifest — nothing to compact")
-    parent_snapshot = latest_snapshot_id(spark, manifest_path)
     pairs = _pairs(latest)
-    runs_before = sorted({r for r, _ in pairs})
-    buckets = sorted(latest)
-
     current = _read_selection(spark, output_path, pairs).drop("run_id")
     result = current.select("bucket", *[c for c in OUTPUT_COLS if c in current.columns])
-    observation, result = attach_lineage_observation(result, run_id)
-    written = _append_run(spark, result, run_id, output_path)
-    committed = commit_bucket_metrics(
-        observation, written, buckets, run_id, t0, manifest_path
+    out = commit_run(
+        spark, output_path, manifest_path, _append_run, result, sorted(latest), 0,
+        latest, "compact", t0,
     )
-    totals = commit_snapshot(
-        manifest_path, run_id, parent_snapshot, "compact", len(buckets), 0,
-        latest_per_bucket([*latest.values(), *committed]),
-    )
-    return {
-        "run_id": run_id,
-        "snapshot_id": run_id,
-        "operation": "compact",
-        "runs_compacted": len(runs_before),
-        "buckets": len(buckets),
-        "rows_total": totals["rows_total"],
-        "elapsed_sec": time.time() - t0,
-    }
+    return {**out, "runs_compacted": len({r for r, _ in pairs}), "buckets": len(latest)}
 
 
 def _swap_rewrite(table: pa.Table, path: str) -> None:
@@ -429,79 +406,15 @@ def vacuum(
 
 
 def run_pipeline_mvcc(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    manifest_path: str,
-    n_buckets: int = 64,
-    fail_buckets: set[int] | None = None,
-    reprocess_buckets: set[int] | None = None,
-    crash_before_commit: bool = False,
-    near_dup: bool = False,
-    benchmark: DataFrame | None = None,
-    span_dedup_bp: int | None = None,
-    cdc_dup_bp: int | None = None,
-    repo_min_keep_bp: int | None = None,
+    spark: SparkSession, input_path: str, output_path: str, manifest_path: str,
+    n_buckets: int = 64, **opts,
 ) -> dict:
-    """Run/resume the pipeline with the MVCC layout.
-
-    ``reprocess_buckets`` forces a backfill of already-committed buckets
-    under this run's id (their old versions stay time-travelable).
-    ``crash_before_commit`` (tests) raises after the data write but
-    before the manifest commit — the run directory becomes an orphan
-    that readers never see and ``vacuum`` removes; a no-op run writes
-    nothing and so never raises.
-    """
-    run_id = new_run_id()
-    t0 = time.time()
-
-    raw = with_bucket(read_corpus(spark, input_path), n_buckets)
-    parent_snapshot = latest_snapshot_id(spark, manifest_path)
-    latest = latest_entries(spark, manifest_path)
-    done = set(latest)
-    redo = set(reprocess_buckets or ())
-    skip = (done - redo) | set(fail_buckets or ())
-    if repo_min_keep_bp is not None and skip:
-        # repo demotion needs GLOBAL per-repo keep stats (salted
-        # bucketing spreads every repo across all buckets); a
-        # resume/backfill rollup over the bucket subset would FALSELY
-        # demote files of globally-healthy repos — same guard as
-        # runner.run_pipeline
-        raise ValueError(
-            "repo_min_keep_bp requires a full (non-resume, non-backfill) "
-            "run: this invocation skips committed buckets, so the "
-            "per-repo rollup would see a biased subset"
-        )
-    new_buckets = sorted(set(range(n_buckets)) - skip)
-
-    # no-op re-submit: no stage chain, no write, no entries append
-    if new_buckets:
-        todo = raw.filter(f"NOT {bucket_in(skip)}") if skip else raw
-        result = stage_output(
-            todo, spark, near_dup=near_dup, benchmark=benchmark,
-            span_dedup_bp=span_dedup_bp, cdc_dup_bp=cdc_dup_bp,
-            repo_min_keep_bp=repo_min_keep_bp,
-        )
-        observation, result = attach_lineage_observation(result, run_id)
-        written_new = _append_run(spark, result, run_id, output_path)
-        if crash_before_commit:
-            raise RuntimeError(f"injected crash after write, before commit (run {run_id})")
-        committed = commit_bucket_metrics(
-            observation, written_new, new_buckets, run_id, t0, manifest_path
-        )
-        latest = latest_per_bucket([*latest.values(), *committed])
-
-    operation = "append" if not done else ("backfill" if redo else "append-resume")
-    totals = commit_snapshot(
-        manifest_path, run_id, parent_snapshot, operation,
-        len(new_buckets), len(skip), latest,
+    """Run, resume or backfill the pipeline with the MVCC layout:
+    ``runner.run_buckets`` (which takes ``opts``) with the
+    ``_append_run`` sink. A backfill's (``reprocess_buckets``) old
+    bucket versions stay time-travelable; ``crash_before_commit``
+    leaves an orphan run directory that readers never see and
+    ``vacuum`` removes."""
+    return run_buckets(
+        spark, input_path, output_path, manifest_path, _append_run, n_buckets, **opts
     )
-    return {
-        "run_id": run_id,
-        "snapshot_id": run_id,
-        "operation": operation,
-        "buckets_processed": len(new_buckets),
-        "buckets_skipped": len(skip),
-        **totals,
-        "elapsed_sec": time.time() - t0,
-    }

@@ -1,43 +1,40 @@
 """End-to-end quality-filter pipeline runner with lineage + resume.
 
-Scale design (north_rule):
+One core, two sinks: ``run_buckets`` plans a run from the manifest and
+``commit_run`` writes and commits it, as Iceberg's append, overwrite
+and rewrite all commit through one snapshot producer. The output
+layout is a sink function: ``_overwrite_buckets`` here (``run_pipeline``:
+one physical copy of each bucket) or ``mvcc._append_run``
+(``run_pipeline_mvcc`` and ``mvcc.compact``: immutable run partitions).
 
-- **Salted repartition**: the corpus is bucketed by
-  ``pmod(xxhash64(repo, path), n_buckets)`` — path participates so a
-  mega-repo's files spread over all buckets instead of hot-spotting one
-  partition (the skew defusal the reference never needed at its
-  single-process scale).
-- **Lineage manifest (Iceberg-analog, two tables)**: the manifest root
-  holds ``entries/`` (one row per completed bucket with counts/timings —
-  Iceberg's manifest-entry role) and ``snapshots/`` (one row per run
-  with parent-snapshot linkage and summary counts — Iceberg's snapshot
-  log role). A restart reads entries, skips completed buckets, and
-  only processes the remainder — the distributed rewrite of the
-  reference's per-identifier log-and-continue loop
-  (data_curator.py:177-213). As Iceberg commits metadata files through
-  its FileIO, the DRIVER commits every manifest append with Arrow: one
-  parquet file written under a hidden ``.part-<uuid>.parquet`` name and
-  atomically renamed into view, so no Spark job reads or writes the
-  manifest and a crash before the rename leaves only a file every
-  reader skips. Real Iceberg catalog jars are absent in this sandbox
-  (install attempt recorded in BASELINE.md); the layout mirrors
-  Iceberg's metadata architecture so swapping in
-  ``writeTo(...).append()`` + the real snapshot log is a sink change,
-  not a redesign.
-- **Idempotent bucket rewrites**: output parquet is partitioned by
-  bucket and written with dynamic partition overwrite, so a bucket that
-  was written but not committed to the manifest (crash in the gap) is
-  simply REPLACED on resume — no duplicate rows, no cleanup pass.
-- **Manifest planned on the driver**: as Iceberg plans from its
-  manifest list, a run reads ``entries/`` once with Arrow on the driver
-  (the ``status = 'done'`` filter pushed into the scan, at most
-  ``n_buckets × runs`` rows) and reduces it to the latest entry per
-  bucket: the completed buckets, the MVCC selection and the run totals.
-  Per-bucket metrics come from a partition-pruned read of ONLY the
-  just-written buckets, so a resume at 100 TB never re-reads completed
-  output. The input is read with the declared ``CORPUS_SCHEMA``
-  (``read_corpus``), so a no-op re-submit runs no Spark job at all and
-  commits only a snapshot row.
+- **Salted buckets**: ``pmod(xxhash64(repo, path), n_buckets)`` — path
+  participates so a mega-repo's files spread over all buckets instead
+  of hot-spotting one partition.
+- **Lineage manifest (Iceberg analog, two tables)**: ``entries/`` holds
+  one row per committed bucket with counts/timings (Iceberg's manifest
+  entries), ``snapshots/`` one row per run with its parent snapshot and
+  summary counts (the snapshot log). A restart skips the committed
+  buckets — the distributed rewrite of the reference's per-identifier
+  log-and-continue loop (data_curator.py:177-213). As Iceberg commits
+  metadata files through its FileIO, the DRIVER commits every manifest
+  append with Arrow: one parquet file under a hidden
+  ``.part-<uuid>.parquet`` name, atomically renamed into view, so no
+  Spark job reads or writes the manifest and a crash before the rename
+  leaves only a file every reader skips. No Iceberg catalog is used
+  (BASELINE.md); ``writeTo(...).append()`` would be one more sink, not
+  a redesign.
+- **Idempotent bucket rewrites**: the overwrite sink writes with dynamic
+  partition overwrite, so a bucket that was written but not committed
+  (crash in the gap) is simply REPLACED on resume — no duplicate rows,
+  no cleanup pass.
+- **Manifest planned on the driver**: a run reads ``entries/`` once
+  with Arrow (``status = 'done'`` pushed into the scan) and reduces it
+  to the latest entry per bucket: the committed buckets, the MVCC
+  selection and the run totals. Per-bucket metrics come from a
+  partition-pruned read of ONLY the just-written buckets, so a resume
+  never re-reads completed output. The input is read with the declared
+  ``CORPUS_SCHEMA`` (``read_corpus``), so a no-op re-submit runs no
+  Spark job at all and commits only a snapshot row.
 """
 
 from __future__ import annotations
@@ -45,7 +42,7 @@ from __future__ import annotations
 import os
 import time
 import uuid
-from collections.abc import Iterable
+from collections.abc import Callable, Iterable
 from typing import Any
 
 import pyarrow as pa
@@ -283,8 +280,7 @@ def snapshot_lineage(spark: SparkSession, manifest_root: str) -> DataFrame:
 def attach_lineage_observation(result: DataFrame, run_id: str):
     """Attach the run-level lineage totals to the WRITE pass (3
     aggregate expressions via observe — no second job, no output
-    re-read). Shared by both output layouts (runner / mvcc) so the
-    integrity contract cannot drift between them."""
+    re-read)."""
     observation = Observation(f"lineage_{run_id}")
     observed = result.observe(
         observation,
@@ -306,8 +302,7 @@ def commit_bucket_metrics(
     """Per-bucket lineage rows from ONE pruned aggregation over the
     just-written output, gated on the write-pass observation, appended
     to the manifest. Returns the appended entries, so the caller merges
-    them into its plan instead of re-reading the manifest. Shared by
-    both output layouts."""
+    them into its plan instead of re-reading the manifest."""
     agg_rows = written_new.groupBy("bucket").agg(
         F.expr("count(1) AS `rows`"),
         F.expr("sum(CAST(keep AS BIGINT)) AS `kept`"),
@@ -374,112 +369,136 @@ def commit_snapshot(
     return totals
 
 
-def run_pipeline(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    manifest_path: str,
-    n_buckets: int = DEFAULT_N_BUCKETS,
-    fail_buckets: set[int] | None = None,
-    near_dup: bool = False,
-    benchmark: DataFrame | None = None,
-    span_dedup_bp: int | None = None,
-    cdc_dup_bp: int | None = None,
-    repo_min_keep_bp: int | None = None,
+# An output layout: ``sink(spark, result, run_id, output_path)`` writes
+# the run's rows and returns the output read back with the written
+# schema (no inference job); commit_run prunes it to the run's buckets.
+Sink = Callable[[SparkSession, DataFrame, str, str], DataFrame]
+
+
+def commit_run(
+    spark: SparkSession, output_path: str, manifest_path: str, sink: Sink,
+    result: DataFrame | None, buckets: list[int], skipped: int,
+    latest: dict[int, Any], operation: str, t0: float,
+    crash_before_commit: bool = False,
 ) -> dict:
-    """Run (or resume) the pipeline.
+    """The one write → commit path of every layout and operation: write
+    ``result``, the rows of ``buckets``, through ``sink``; commit one
+    entry per bucket; then commit the snapshot row, whose totals are the
+    plan ``latest`` merged with those entries. With no bucket to write,
+    only the snapshot row is committed. ``crash_before_commit`` (tests)
+    raises between the data write and the manifest commit, so no entry
+    references the written data.
 
-    ``fail_buckets`` injects failures for the resume test: those buckets
-    are skipped (not marked done), simulating a mid-job crash.
-    ``near_dup=True`` enables the corpus-level near-duplicate stage
-    (stages.with_near_dup). NOTE: in this incremental runner the stage
-    sees only the buckets processed in THIS run — near-dups that span a
-    resume boundary are not linked; run it on a full (non-resume) pass
-    or use the batch entry points for global dedup.
-    """
+    Returns run_id (= snapshot_id), operation, buckets_processed,
+    buckets_skipped (= ``skipped``), rows_total, rows_kept and
+    elapsed_sec (since ``t0``)."""
     run_id = new_run_id()
-    t0 = time.time()
-
-    raw = with_bucket(read_corpus(spark, input_path), n_buckets)
     parent_snapshot = latest_snapshot_id(spark, manifest_path)
-    latest = latest_entries(spark, manifest_path)
-    done = sorted(latest)
-    if repo_min_keep_bp is not None and (done or fail_buckets):
-        # repo demotion needs GLOBAL per-repo keep stats; a resume's
-        # rollup would see only the todo-buckets' slice of each repo
-        # (salted bucketing spreads every repo across all buckets) and
-        # FALSELY demote files of globally-healthy repos — unlike the
-        # near-dup per-run caveat, which only under-detects
-        raise ValueError(
-            "repo_min_keep_bp requires a full (non-resume) run: "
-            "completed buckets exist, so the per-repo rollup would see "
-            "a biased subset; re-run on a fresh manifest or use "
-            "with_repo_demotion as a batch post-pass over the output"
-        )
-    new_buckets = [
-        b
-        for b in range(n_buckets)
-        if b not in latest and not (fail_buckets and b in fail_buckets)
-    ]
-
-    # no-op re-submit: nothing to write, so no stage chain, no write, no
-    # re-read and no entries append — only the snapshot row below
-    if new_buckets:
-        todo = raw if len(new_buckets) == n_buckets else raw.filter(
-            bucket_in(new_buckets)
-        )
-        result = stage_output(
-            todo, spark, near_dup=near_dup, benchmark=benchmark,
-            span_dedup_bp=span_dedup_bp, cdc_dup_bp=cdc_dup_bp,
-            repo_min_keep_bp=repo_min_keep_bp,
-        )
+    if buckets:
         # run-level lineage totals ride the WRITE pass for free and
-        # cross-check the per-bucket metrics below. Per-bucket metrics do
-        # NOT use observe: that needs ~3·n_buckets conditional sums
-        # evaluated per row in the write path, measured 11× slower than
-        # the write pass itself at n_buckets=256 (8.35s vs 0.74s per 2M
-        # rows) — the column-pruned, partition-pruned re-read of 2 narrow
-        # columns is the cheaper plan at every scale.
-        observation, result = attach_lineage_observation(result, run_id)
-        # idempotent bucket rewrite: dynamic partition overwrite replaces
-        # exactly the partitions present in `result`; untouched
-        # (completed) buckets survive, and an uncommitted bucket from a
-        # crashed run is overwritten instead of double-appended. The
-        # write option scopes the mode to this one write; the session
-        # conf, shared with any other query, is left untouched.
-        # sortWithinPartitions(bucket, repo, path): each task writes one
-        # contiguous run per bucket (one open writer at a time instead of
-        # one per bucket value) and row groups land sorted by (repo,
-        # path) — better compression + min/max skipping on the columns
-        # downstream jobs filter by
-        (
-            result.sortWithinPartitions("bucket", "repo", "path")
-            .write.partitionBy("bucket")
-            .mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(output_path)
-        )
-
-        # lineage: per-bucket metrics from a PARTITION-PRUNED scan of
-        # only the just-written buckets — completed history is never
-        # re-read; the written schema skips the inference job
-        written_new = spark.read.schema(result.schema).parquet(output_path).filter(
-            bucket_in(new_buckets)
-        )
+        # cross-check the per-bucket metrics. Those do NOT use observe:
+        # ~3·n_buckets conditional sums per row in the write path measured
+        # 11× slower than the write itself at n_buckets=256 (8.35s vs
+        # 0.74s per 2M rows) — the column- and partition-pruned re-read
+        # of ONLY the just-written buckets is the cheaper plan.
+        observation, observed = attach_lineage_observation(result, run_id)
+        written = sink(spark, observed, run_id, output_path)
+        if crash_before_commit:
+            raise RuntimeError(f"injected crash after write, before commit (run {run_id})")
         committed = commit_bucket_metrics(
-            observation, written_new, new_buckets, run_id, t0, manifest_path
+            observation, written.filter(bucket_in(buckets)), buckets, run_id, t0,
+            manifest_path,
         )
         latest = latest_per_bucket([*latest.values(), *committed])
-
     totals = commit_snapshot(
-        manifest_path, run_id, parent_snapshot,
-        "append" if not done else "append-resume",
-        len(new_buckets), len(done), latest,
+        manifest_path, run_id, parent_snapshot, operation, len(buckets), skipped, latest
     )
     return {
-        "run_id": run_id,
-        "buckets_processed": len(new_buckets),
-        "buckets_skipped": len(done),
-        **totals,
-        "elapsed_sec": time.time() - t0,
+        "run_id": run_id, "snapshot_id": run_id, "operation": operation,
+        "buckets_processed": len(buckets), "buckets_skipped": skipped,
+        **totals, "elapsed_sec": time.time() - t0,
     }
+
+
+def run_buckets(
+    spark: SparkSession, input_path: str, output_path: str, manifest_path: str,
+    sink: Sink, n_buckets: int,
+    fail_buckets: set[int] | None = None,
+    reprocess_buckets: set[int] | None = None,
+    crash_before_commit: bool = False,
+    repo_min_keep_bp: int | None = None,
+    **stage_opts,
+) -> dict:
+    """Plan one run, resume or backfill over the bucketed input, then
+    write and commit it through ``commit_run``.
+
+    Skipped = (committed − ``reprocess_buckets``) ∪ ``fail_buckets``;
+    every other bucket of ``range(n_buckets)`` is staged, written and
+    committed. ``reprocess_buckets`` backfills committed buckets under
+    this run; ``fail_buckets`` (tests) stay uncommitted, as after a
+    mid-job crash. The operation is ``append`` on an empty manifest,
+    ``backfill`` with ``reprocess_buckets``, else ``append-resume``.
+    ``stage_opts`` go to ``run_stages``; its corpus-global stages see
+    only this run's buckets (see ``stages.with_near_dup``)."""
+    t0 = time.time()
+    raw = with_bucket(read_corpus(spark, input_path), n_buckets)
+    latest = latest_entries(spark, manifest_path)
+    redo = set(reprocess_buckets or ())
+    skip = (set(latest) - redo) | set(fail_buckets or ())
+    if repo_min_keep_bp is not None and skip:
+        # salted bucketing spreads every repo across all buckets, so a
+        # rollup over a bucket subset would FALSELY demote files of
+        # globally-healthy repos (stages.with_repo_demotion)
+        raise ValueError(
+            "repo_min_keep_bp requires a full (non-resume, non-backfill) run; "
+            "re-run on a fresh manifest or use with_repo_demotion as a batch "
+            "post-pass over the output"
+        )
+    new_buckets = [b for b in range(n_buckets) if b not in skip]
+    result = None  # a no-op re-submit builds no stage chain
+    if new_buckets:
+        todo = raw if len(new_buckets) == n_buckets else raw.filter(bucket_in(new_buckets))
+        result = stage_output(todo, spark, repo_min_keep_bp=repo_min_keep_bp, **stage_opts)
+    operation = "append" if not latest else ("backfill" if redo else "append-resume")
+    return commit_run(
+        spark, output_path, manifest_path, sink, result, new_buckets, len(skip),
+        latest, operation, t0, crash_before_commit,
+    )
+
+
+def _overwrite_buckets(
+    spark: SparkSession, result: DataFrame, run_id: str, output_path: str
+) -> DataFrame:
+    """The overwrite layout's sink: ONE physical copy of each bucket
+    (``run_id`` is not part of the layout)."""
+    # idempotent bucket rewrite: dynamic partition overwrite replaces
+    # exactly the partitions present in `result`; untouched
+    # (completed) buckets survive, and an uncommitted bucket from a
+    # crashed run is overwritten instead of double-appended. The
+    # write option scopes the mode to this one write; the session
+    # conf, shared with any other query, is left untouched.
+    # sortWithinPartitions(bucket, repo, path): each task writes one
+    # contiguous run per bucket (one open writer at a time instead of
+    # one per bucket value) and row groups land sorted by (repo,
+    # path) — better compression + min/max skipping on the columns
+    # downstream jobs filter by
+    (
+        result.sortWithinPartitions("bucket", "repo", "path")
+        .write.partitionBy("bucket")
+        .mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(output_path)
+    )
+    return spark.read.schema(result.schema).parquet(output_path)
+
+
+def run_pipeline(
+    spark: SparkSession, input_path: str, output_path: str, manifest_path: str,
+    n_buckets: int = DEFAULT_N_BUCKETS, **opts,
+) -> dict:
+    """Run, resume or backfill the pipeline with the overwrite layout:
+    ``run_buckets`` (which takes ``opts``) with the ``_overwrite_buckets``
+    sink."""
+    return run_buckets(
+        spark, input_path, output_path, manifest_path, _overwrite_buckets, n_buckets, **opts
+    )

@@ -515,24 +515,28 @@ def _decision_sql(claimed_lang: str) -> list[str]:
 DEFAULT_MAX_BUCKET = 200
 
 
-def _doc_identity(id_cols) -> "F.Column":
-    """Composite doc identity with explicit null sentinels — concat_ws
-    silently SKIPS nulls, so (repo='a', path=NULL) and (repo=NULL,
-    path='a') would otherwise fuse into one identity and share a
-    cluster/demotion fate. The \\x1f separator + \\x00 null marker is
-    correctness-bearing and shared by every corpus-global stage
-    (with_decontamination, with_near_dup, with_span_dedup,
-    with_cdc_dedup) — change it HERE only."""
+# one document of the corpus: two commits of one file are judged apart
+# by every corpus-global stage (with_decontamination, with_near_dup,
+# with_span_dedup, with_cdc_dedup)
+DOC_ID_COLS = ("repo", "path", "commit")
+
+
+def _doc_identity() -> "F.Column":
+    """Composite doc identity over DOC_ID_COLS with explicit null
+    sentinels — concat_ws silently SKIPS nulls, so (repo='a', path=NULL)
+    and (repo=NULL, path='a') would otherwise fuse into one identity and
+    share a cluster/demotion fate. The \\x1f separator + \\x00 null
+    marker is correctness-bearing and shared by every corpus-global
+    stage — change it HERE only."""
     return F.concat_ws(
         "\x1f",
-        *[F.coalesce(F.col(c).cast("string"), F.lit("\x00")) for c in id_cols],
+        *[F.coalesce(F.col(c).cast("string"), F.lit("\x00")) for c in DOC_ID_COLS],
     )
 
 
 def with_near_dup(
     df: DataFrame,
     content: str = "content_scrubbed",
-    id_cols: tuple[str, str] = ("repo", "path"),
     max_bucket: int | None = DEFAULT_MAX_BUCKET,
     max_iter: int = 25,
 ) -> DataFrame:
@@ -548,6 +552,12 @@ def with_near_dup(
     cluster failed — otherwise a cluster whose min-id member was
     quality-dropped would lose every copy of its content.
 
+    Per-run caveat, shared by every corpus-global stage: the stage sees
+    only the rows it is given. Under the bucketed writers
+    (runner.run_buckets) those are this run's buckets, so near-dups that
+    span a resume or backfill boundary are not linked; run it on a full
+    (non-resume) pass for global dedup.
+
     Scale shape: signatures shuffle k×8B per doc; the band self-join
     carries ids only; the CC loop and the canonical groupBy are
     pair-graph sized (singletons never enter them). The corpus streams
@@ -561,7 +571,7 @@ def with_near_dup(
         minhash_signatures,
     )
 
-    keyed = df.withColumn("__doc_id", _doc_identity(id_cols))
+    keyed = df.withColumn("__doc_id", _doc_identity())
     sigs = minhash_signatures(keyed, "__doc_id", content)
     # persist: `pairs` feeds four plan branches below (touched ×2, the
     # CC edge union ×2) — unpersisted, the signature+band-join chain
@@ -618,8 +628,7 @@ def with_decontamination(df: DataFrame, benchmark: DataFrame) -> DataFrame:
     ``dedup.contamination_overlap``, so the pipeline and the
     ``decontaminate`` oracle share one tokenize→gram→hash contract.
 
-    Keyed per row by (repo, path, commit): two commits of one file are
-    judged on their own contents. NULL content and documents shorter
+    Keyed per document (DOC_ID_COLS). NULL content and documents shorter
     than 5 words have no grams, so they are never flagged.
 
     Scale shape: the benchmark's distinct gram hashes broadcast; the
@@ -637,7 +646,6 @@ def with_decontamination(df: DataFrame, benchmark: DataFrame) -> DataFrame:
         ),
         stat_col="n_overlap_grams",
         reason="contaminated",
-        id_cols=("repo", "path", "commit"),
         max_bp=1,
     )
 
@@ -645,7 +653,6 @@ def with_decontamination(df: DataFrame, benchmark: DataFrame) -> DataFrame:
 def with_span_dedup(
     df: DataFrame,
     content: str = "content_scrubbed",
-    id_cols: tuple[str, str] = ("repo", "path"),
     span_len: int = 8,
     max_bp: int = 5000,
 ) -> DataFrame:
@@ -660,8 +667,7 @@ def with_span_dedup(
     row; text corpora wanting the cut-and-rebuild behavior use
     operators.dedup.exact_substring_dedup directly.
 
-    Corpus-global stage — same full-pass caveat as ``with_near_dup``
-    (an incremental resume sees only this run's buckets).
+    Corpus-global stage — same per-run caveat as ``with_near_dup``.
 
     Scale shape: the marking kernel shuffles (id, pos, 8-byte hash)
     only; the demotion table is filtered to OVER-threshold docs before
@@ -675,7 +681,6 @@ def with_span_dedup(
         ),
         stat_col="dup_span_bp",
         reason="dup_spans",
-        id_cols=id_cols,
         max_bp=max_bp,
     )
 
@@ -685,7 +690,6 @@ def _demote_over_threshold(
     stats_fn,
     stat_col: str,
     reason: str,
-    id_cols: tuple[str, ...],
     max_bp: int,
 ) -> DataFrame:
     """Shared demote-by-threshold skeleton of the corpus-global marking
@@ -698,7 +702,7 @@ def _demote_over_threshold(
     from data_curator_spark.engine.cache import persist_tracked
     from data_curator_spark.operators.dedup import size_gated_broadcast
 
-    keyed = df.withColumn("__doc_id", _doc_identity(id_cols))
+    keyed = df.withColumn("__doc_id", _doc_identity())
     flagged = persist_tracked(
         stats_fn(keyed)
         .filter(F.col(stat_col) >= max_bp)
@@ -719,7 +723,6 @@ def _demote_over_threshold(
 def with_cdc_dedup(
     df: DataFrame,
     content: str = "content_scrubbed",
-    id_cols: tuple[str, str] = ("repo", "path"),
     max_bp: int = 5000,
     min_len: int = 16,
     avg_len: int = 64,
@@ -735,7 +738,7 @@ def with_cdc_dedup(
     granularity for minified/binary-ish content. Content is NOT
     rewritten (sha256 contract holds for every row).
 
-    Corpus-global stage — same full-pass caveat as ``with_near_dup``.
+    Corpus-global stage — same per-run caveat as ``with_near_dup``.
 
     Scale shape: chunk rows carry ids + 8-byte hashes only; duplication
     is one count window on chunk_hash; the demotion table is filtered to
@@ -759,7 +762,6 @@ def with_cdc_dedup(
         ),
         stat_col="dup_chunk_bp",
         reason="dup_chunks",
-        id_cols=id_cols,
         max_bp=max_bp,
     )
 
@@ -791,9 +793,9 @@ def with_repo_demotion(
     REQUIRES GLOBAL INPUT: the rollup must see every file of a repo.
     Unlike the near-dup per-run caveat (which only under-detects), a
     bucket-subset rollup would FALSELY demote files of globally-healthy
-    repos, so both incremental runners refuse repo_min_keep_bp on a
-    resume/backfill; run it on a full pass or as a batch post-pass over
-    the completed output."""
+    repos, so the bucketed writers (runner.run_buckets) refuse
+    repo_min_keep_bp on a resume/backfill; run it on a full pass or as
+    a batch post-pass over the completed output."""
     from data_curator_spark.engine.cache import persist_tracked
     from data_curator_spark.operators.dedup import size_gated_broadcast
 

@@ -46,6 +46,25 @@ def test_cli_corpus_and_pipeline(tmp_path):
     assert r3["buckets_skipped"] == 4 and r3["buckets_processed"] == 0
 
 
+def test_cli_overwrite_layout_backfill(spark, tmp_path):
+    """--reprocess backfills under the default overwrite layout too:
+    bucket 0 is rewritten in place under a new run, so the totals and
+    the output's row count stay the input's."""
+    from data_curator_spark.pipeline.corpus import write_corpus_parquet
+    from data_curator_spark.pipeline.runner import run_pipeline
+
+    corpus = write_corpus_parquet(str(tmp_path / "c.parquet"), 200, 42)
+    out, man = str(tmp_path / "out"), str(tmp_path / "m")
+    first = run_pipeline(spark, corpus, out, man, n_buckets=4)
+    r = json.loads(_run(
+        "pipeline", "--input", corpus, "--output", out, "--manifest", man,
+        "--buckets", "4", "--reprocess", "0",
+    ))
+    assert (r["operation"], r["buckets_processed"]) == ("backfill", 1)
+    assert (r["rows_total"], r["rows_kept"]) == (first["rows_total"], first["rows_kept"])
+    assert spark.read.parquet(out).count() == spark.read.parquet(corpus).count() == 222
+
+
 def test_cluster_conf_shapes():
     """cluster_conf scales with fleet size and keeps the invariants the
     engine relies on (AQE, Arrow, dynamic partition overwrite)."""

@@ -300,16 +300,16 @@ def test_near_dup_stage_boilerplate_guard_default(spark):
     near_a = " ".join(f"alpha{i} beta{i} gamma{i}" for i in range(20))
     near_b = near_a + " trailing extra"
     rows = [
-        (f"r{i}", f"boiler/{i}.py", True, None, boiler) for i in range(250)
+        (f"r{i}", f"boiler/{i}.py", "c0", True, None, boiler) for i in range(250)
     ] + [
-        ("rx", "near/a.py", True, None, near_a),
-        ("rx", "near/b.py", True, None, near_b),
-        ("rx", "unique/c.py", True, None, "completely unrelated content " * 5),
-        ("rx", "dropped/d.py", False, "too_short", near_a),
+        ("rx", "near/a.py", "c0", True, None, near_a),
+        ("rx", "near/b.py", "c0", True, None, near_b),
+        ("rx", "unique/c.py", "c0", True, None, "completely unrelated content " * 5),
+        ("rx", "dropped/d.py", "c0", False, "too_short", near_a),
     ]
     df = spark.createDataFrame(
-        rows, "repo string, path string, keep boolean, drop_reason string, "
-        "content_scrubbed string"
+        rows, "repo string, path string, commit string, keep boolean, "
+        "drop_reason string, content_scrubbed string"
     )
     out = with_near_dup(df).collect()
     by_path = {r["path"]: r for r in out}
@@ -363,19 +363,19 @@ def test_span_dedup_stage_demotes_over_threshold(spark):
     unique_tail = " ".join(f"u{i}" for i in range(12))
     rows = [
         # fully duplicated pair: coverage 10000 bp in both
-        ("r1", "a.py", True, None, shared),
-        ("r2", "b.py", True, None, shared),
+        ("r1", "a.py", "c0", True, None, shared),
+        ("r2", "b.py", "c0", True, None, shared),
         # half-covered: 12 shared + 12 unique tokens -> 5000 bp
-        ("r3", "c.py", True, None, shared + " " + unique_tail),
+        ("r3", "c.py", "c0", True, None, shared + " " + unique_tail),
         # unique file: 0 bp (genuinely distinct tokens — a repeated
         # phrase would self-mark via intra-doc windows)
-        ("r4", "d.py", True, None, " ".join(f"only{i} once{i}" for i in range(9))),
+        ("r4", "d.py", "c0", True, None, " ".join(f"only{i} once{i}" for i in range(9))),
         # dropped earlier: reason preserved even though fully duplicated
-        ("r5", "e.py", False, "too_short", shared),
+        ("r5", "e.py", "c0", False, "too_short", shared),
     ]
     df = spark.createDataFrame(
-        rows, "repo string, path string, keep boolean, drop_reason string, "
-        "content_scrubbed string"
+        rows, "repo string, path string, commit string, keep boolean, "
+        "drop_reason string, content_scrubbed string"
     )
     out = {r["path"]: r for r in with_span_dedup(df, max_bp=6000).collect()}
     assert not out["a.py"]["keep"] and out["a.py"]["drop_reason"] == "dup_spans"
@@ -386,6 +386,39 @@ def test_span_dedup_stage_demotes_over_threshold(spark):
     assert not out["e.py"]["keep"] and out["e.py"]["drop_reason"] == "too_short"
     # content untouched
     assert out["a.py"]["content_scrubbed"] == shared
+
+
+@pytest.mark.parametrize("stage", ["near_dup", "span_dedup", "cdc_dedup", "decontamination"])
+def test_corpus_global_stages_key_each_commit_apart(spark, stage):
+    """Two commits of one file are two documents to every corpus-global
+    stage: a.py@c1 and b.py@c1 share their 40 tokens, a.py@c2 has 40
+    tokens of its own. Keyed by (repo, path) alone, a.py's commits
+    shared one id: the near-dup stage returned 9 rows, the span stage 5,
+    and the CDC stage demoted a.py@c2 for its sibling's duplication."""
+    from data_curator_spark.pipeline import stages
+
+    shared = " ".join(f"tok{i}" for i in range(40))
+    rows = [
+        ("r", "a.py", "c1", True, None, shared),
+        ("r", "b.py", "c1", True, None, shared),
+        ("r", "a.py", "c2", True, None, " ".join(f"own{i}" for i in range(40))),
+    ]
+    df = spark.createDataFrame(
+        rows, "repo string, path string, commit string, keep boolean, "
+        "drop_reason string, content_scrubbed string"
+    )
+    run = {
+        "near_dup": lambda: stages.with_near_dup(df),
+        "span_dedup": lambda: stages.with_span_dedup(df, max_bp=5000),
+        "cdc_dedup": lambda: stages.with_cdc_dedup(df, max_bp=5000),
+        "decontamination": lambda: stages.with_decontamination(
+            df, spark.createDataFrame([(shared,)], "content string")
+        ),
+    }[stage]
+    out = run().collect()
+    assert len(out) == 3
+    by_doc = {(r["path"], r["commit"]): r for r in out}
+    assert by_doc[("a.py", "c2")]["keep"] and by_doc[("a.py", "c2")]["drop_reason"] is None
 
 
 def test_run_stages_span_dedup_end_to_end(spark, corpus_path):
@@ -570,6 +603,8 @@ def test_lifecycle_job_counts_and_noop_resubmit(spark, corpus_path, tmp_path):
     resub, n_resub = run("resubmit")
 
     assert (crash["buckets_processed"], resume["buckets_processed"]) == (8, 8)
+    # skipped = the buckets this call did not write, failed ones included
+    assert crash["buckets_skipped"] == 8
     assert resub["buckets_processed"] == 0 and resub["buckets_skipped"] == 16
     assert (resub["rows_total"], resub["rows_kept"]) == (
         resume["rows_total"], resume["rows_kept"]
@@ -587,6 +622,8 @@ def test_lifecycle_job_counts_and_noop_resubmit(spark, corpus_path, tmp_path):
     assert snaps.count() == snaps_before + 1
     noop = snaps.filter(F.col("snapshot_id") == resub["run_id"]).collect()[0]
     assert (noop["operation"], noop["parent_snapshot_id"]) == ("append-resume", resume["run_id"])
+    crash_snap = snaps.filter(F.col("snapshot_id") == crash["run_id"]).collect()[0]
+    assert crash_snap["buckets_skipped"] == 8
 
 
 def test_manifest_ignores_uncommitted_files_and_keeps_ddl_types(spark, corpus_path, tmp_path):

@@ -1,8 +1,8 @@
 """The quality-filter stages as SQL text (pipeline/stages.py) against
 their Column-built form (tests/kernel_references.py): same schema, same
-value in every output column, same optimized plan; the build makes a
-bounded number of py4j round trips, and the model-score broadcasts are
-made once per SparkContext."""
+value in every output column, same optimized plan; the build, and a
+whole pipeline call, make a bounded number of py4j round trips, and the
+model-score broadcasts are made once per SparkContext."""
 
 from __future__ import annotations
 
@@ -12,8 +12,13 @@ import re
 
 import pytest
 
-from data_curator_spark.pipeline.corpus import generate_corpus
-from data_curator_spark.pipeline.runner import OUTPUT_COLS, stage_output, with_bucket
+from data_curator_spark.pipeline.corpus import generate_corpus, write_corpus_parquet
+from data_curator_spark.pipeline.runner import (
+    OUTPUT_COLS,
+    run_pipeline,
+    stage_output,
+    with_bucket,
+)
 from data_curator_spark.pipeline.stages import (
     _lit,
     content_rule_checks,
@@ -157,6 +162,28 @@ def test_build_py4j_round_trip_ceiling(spark, monkeypatch):
     )
     assert 0 < n <= BUILD_ROUND_TRIP_CEILING, (n, n_ref)
     assert n_ref > 5 * n
+
+
+# py4j round trips of one whole run_pipeline call (read, plan, stage
+# chain, write, per-bucket re-read, commit): a crash call that fails 8
+# of 16 buckets, then the resume that completes them. The ceiling is
+# the count each call made (263, on 20 files) before the two layouts'
+# writers shared one plan → write → commit core; the core adds none.
+CALL_ROUND_TRIP_CEILING = 263
+
+
+def test_pipeline_call_py4j_round_trip_ceiling(spark, monkeypatch, tmp_path):
+    corpus = write_corpus_parquet(str(tmp_path / "c.parquet"), 20, 3)
+
+    def call(name, **kw):
+        d = tmp_path / name
+        return run_pipeline(spark, corpus, str(d / "out"), str(d / "m"), n_buckets=16, **kw)
+
+    call("warm")  # the score UDF and its broadcasts exist
+    crash = _count_round_trips(monkeypatch, lambda: call("run", fail_buckets=set(range(0, 16, 2))))
+    resume = _count_round_trips(monkeypatch, lambda: call("run"))
+    assert 0 < crash <= CALL_ROUND_TRIP_CEILING, crash
+    assert 0 < resume <= CALL_ROUND_TRIP_CEILING, resume
 
 
 def test_model_score_broadcasts_made_once_per_context(spark):
