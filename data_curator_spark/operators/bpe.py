@@ -36,8 +36,7 @@ from data_curator_spark.operators.dedup import WS_RE, size_gated_broadcast
 MAX_VOCAB_ROWS = 10_000_000
 
 # broadcast budget for the (word, n_pieces) encode table — the same
-# word→value shape and ~80 MB-at-cap budget as lm.VOCAB_BROADCAST_CAP /
-# dedup.BROADCAST_LABEL_CAP; above it the encode join falls back to a
+# row cap as dedup.BROADCAST_LABEL_CAP (~80 MB at cap); above it the encode join falls back to a
 # shuffle join rather than shipping a multi-hundred-MB string table to
 # every executor. Deliberately SMALLER than MAX_VOCAB_ROWS: the collect
 # guard bounds driver memory for training, the broadcast cap bounds

@@ -39,9 +39,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_curator_spark.engine.cache import persist_tracked
-from data_curator_spark.operators.dedup import size_gated_broadcast
 from data_curator_spark.operators.kernels import map_docs, md5_60
-from data_curator_spark.operators.lm import LP_SCALE_BITS, VOCAB_BROADCAST_CAP
+from data_curator_spark.operators.lm import LP_SCALE_BITS
 
 NB_DEFAULT_BUCKETS = 32768
 NB_DEFAULT_GRAM = 3
@@ -180,14 +179,8 @@ def _score_from_feats(
     join on bucket, per-class whole-stage-codegen integer sums in one
     groupBy(id), (score DESC, class DESC) tie-break."""
     # model rows are bounded by n_buckets BY CONSTRUCTION — broadcast
-    # without a count probe below the vocab cap (a caller asking for a
-    # giant feature space opted into the size-gated path)
-    hint = (
-        F.broadcast
-        if nb.n_buckets <= VOCAB_BROADCAST_CAP
-        else size_gated_broadcast
-    )
-    scored = feats.join(hint(nb.model), on="bucket", how="left")
+    # without a count probe
+    scored = feats.join(F.broadcast(nb.model), on="bucket", how="left")
     score_cols = [
         F.sum(
             F.col("cnt")

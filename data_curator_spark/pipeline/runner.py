@@ -441,7 +441,6 @@ def run_buckets(
     ``stage_opts`` go to ``run_stages``; its corpus-global stages see
     only this run's buckets (see ``stages.with_near_dup``)."""
     t0 = time.time()
-    raw = with_bucket(read_corpus(spark, input_path), n_buckets)
     latest = latest_entries(spark, manifest_path)
     redo = set(reprocess_buckets or ())
     skip = (set(latest) - redo) | set(fail_buckets or ())
@@ -455,8 +454,9 @@ def run_buckets(
             "post-pass over the output"
         )
     new_buckets = [b for b in range(n_buckets) if b not in skip]
-    result = None  # a no-op re-submit builds no stage chain
+    result = None  # a no-op re-submit reads no input and builds no stage chain
     if new_buckets:
+        raw = with_bucket(read_corpus(spark, input_path), n_buckets)
         todo = raw if len(new_buckets) == n_buckets else raw.filter(bucket_in(new_buckets))
         result = stage_output(todo, spark, repo_min_keep_bp=repo_min_keep_bp, **stage_opts)
     operation = "append" if not latest else ("backfill" if redo else "append-resume")

@@ -3402,44 +3402,22 @@ ORDER BY cnt DESC, pair ASC LIMIT 30
 
 
 def q_heldout_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Held-out KenLM-style scoring, BOTH n-gram orders in one gate row:
-    train on the 80% md5-gate split of documents, score the held-out
-    20% under (a) the Laplace-smoothed unigram
-    (operators/lm.py:heldout_surprisal — unseen words take the
-    quantized UNK log-prob) and (b) the stupid-backoff bigram
-    (operators/lm.py:heldout_bigram_surprisal — unseen transitions back
-    off to 0.4·P_laplace(r)). This is the north-rule's actual gate
-    shape (clean reference corpus scores candidate corpus); the
-    self-scoring surprisal queries are its anomaly-gate siblings.
-    Integer micro-nat outputs — exact across engines. The two scorers
-    join on doc_id (unigram side is the superset: 1-token docs have no
-    bigram positions → null bg_* columns)."""
-    from data_curator_spark.operators.lm import (
-        _laplace_vocab,
-        _tokens,
-        heldout_bigram_surprisal,
-        heldout_surprisal,
-    )
+    """Held-out KenLM-style scoring, BOTH n-gram orders in one gate row
+    (operators/lm.py:heldout_scores): train on the 80% md5-gate split
+    of documents, score the held-out 20% under the Laplace-smoothed
+    unigram (unseen words take the quantized UNK log-prob) and the
+    stupid-backoff bigram (unseen transitions back off to
+    0.4·P_laplace(r)). This is the north-rule's actual gate shape
+    (clean reference corpus scores candidate corpus); the self-scoring
+    surprisal queries are its anomaly-gate siblings. Integer micro-nat
+    outputs — exact across engines. 1-token docs have no bigram
+    positions → null bg_* columns."""
+    from data_curator_spark.operators.lm import heldout_scores
     from data_curator_spark.operators.sampling import sample_gate
 
     d = _spread(_t(spark, sf_dir, "documents"), by="doc_id")
     gate = sample_gate(F.col("doc_id"), "r6lm")
-    train, score = d.filter(gate < 800), d.filter(gate >= 800)
-    # train the shared Laplace unigram ONCE (it is both the unigram
-    # scorer and the bigram scorer's backoff distribution)
-    model = _laplace_vocab(_tokens(train, "doc_id", "text"))
-    uni = heldout_surprisal(
-        train, score, "doc_id", "text", laplace_model=model
-    )
-    bg = heldout_bigram_surprisal(
-        train, score, "doc_id", "text", laplace_model=model
-    ).select(
-        "doc_id",
-        F.col("n_bigrams").alias("n_bigrams"),
-        F.col("surprisal_unats").alias("bg_surprisal_unats"),
-        F.col("mean_surprisal_unats").alias("bg_mean_surprisal_unats"),
-    )
-    return uni.join(bg, on="doc_id", how="left")
+    return heldout_scores(d.filter(gate < 800), d.filter(gate >= 800), "doc_id", "text")
 
 
 def _heldout_perplexity_oracle_sql() -> str:

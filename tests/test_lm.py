@@ -1,4 +1,5 @@
-"""Corpus-trained unigram surprisal: anomaly ordering, edge cases,
+"""Corpus-trained LM scorers: anomaly ordering, exact held-out and
+DSIR values, edge cases (empty input, empty train split),
 partitioning invariance."""
 
 from __future__ import annotations
@@ -81,7 +82,7 @@ def test_heldout_unseen_words_take_unk_logprob(spark):
     all-unseen; UNK is the most surprising value in the model."""
     import math
 
-    from data_curator_spark.operators.lm import LP_SCALE_BITS, heldout_surprisal
+    from data_curator_spark.operators.lm import LP_SCALE_BITS, heldout_scores
 
     train = spark.createDataFrame(
         [(i, "the cat sat on the mat") for i in range(10)],
@@ -97,7 +98,7 @@ def test_heldout_unseen_words_take_unk_logprob(spark):
     )
     out = {
         r.doc_id: r
-        for r in heldout_surprisal(train, score, "doc_id", "text").collect()
+        for r in heldout_scores(train, score, "doc_id", "text").collect()
     }
     assert set(out) == {100, 101, 102}
     # replicate the Laplace estimator: T=60 tokens, V=5 types
@@ -118,7 +119,7 @@ def test_heldout_train_and_score_are_independent_frames(spark):
     """Scoring must not leak score-split tokens into training: the same
     score doc gets a different surprisal when the train corpus changes,
     and an identical one when only the SCORE set grows."""
-    from data_curator_spark.operators.lm import heldout_surprisal
+    from data_curator_spark.operators.lm import heldout_scores
 
     train_a = spark.createDataFrame(
         [(1, "alpha beta gamma")], "doc_id long, text string"
@@ -131,12 +132,12 @@ def test_heldout_train_and_score_are_independent_frames(spark):
         [(9, "alpha beta"), (10, "alpha alpha alpha alpha")],
         "doc_id long, text string",
     )
-    a = heldout_surprisal(train_a, score, "doc_id", "text").collect()[0]
-    b = heldout_surprisal(train_b, score, "doc_id", "text").collect()[0]
+    a = heldout_scores(train_a, score, "doc_id", "text").collect()[0]
+    b = heldout_scores(train_b, score, "doc_id", "text").collect()[0]
     assert a.surprisal_unats != b.surprisal_unats
     a2 = {
         r.doc_id: r
-        for r in heldout_surprisal(train_a, score_more, "doc_id", "text").collect()
+        for r in heldout_scores(train_a, score_more, "doc_id", "text").collect()
     }[9]
     assert a2.surprisal_unats == a.surprisal_unats
 
@@ -173,13 +174,13 @@ def test_dsir_weights_favor_target_like_docs(spark):
 def test_heldout_bigram_backoff_values_exact(spark):
     """Seen transitions score the MLE conditional; unseen transitions
     take STUPID_BACKOFF_LP + Laplace unigram (UNK for unseen words);
-    1-token docs are excluded — all hand-computed integers."""
+    1-token docs have NULL bigram columns — all hand-computed integers."""
     import math
 
     from data_curator_spark.operators.lm import (
         LP_SCALE_BITS,
         STUPID_BACKOFF_LP,
-        heldout_bigram_surprisal,
+        heldout_scores,
     )
 
     train = spark.createDataFrame(
@@ -191,26 +192,27 @@ def test_heldout_bigram_backoff_values_exact(spark):
     )
     out = {
         r.doc_id: r
-        for r in heldout_bigram_surprisal(
-            train, score, "doc_id", "text"
-        ).collect()
+        for r in heldout_scores(train, score, "doc_id", "text").collect()
     }
     q = 1 << LP_SCALE_BITS
     # train: c(a,b)=2, c(a,c)=1, c_l(a)=3; unigram T=6, V=3, denom=10
     lp_ab = math.floor(math.log(2 / 3) * q)
     lp_uni_a = math.floor(math.log(4 / 10) * q)
     unk = math.floor(math.log(1 / 10) * q)
-    assert set(out) == {10, 11, 12}  # "a" has no bigram positions
-    assert out[10].surprisal_unats == -lp_ab
-    assert out[11].surprisal_unats == -(STUPID_BACKOFF_LP + lp_uni_a)
-    assert out[12].surprisal_unats == -(STUPID_BACKOFF_LP + unk)
-    assert all(r.n_bigrams == 1 for r in out.values())
+    assert set(out) == {10, 11, 12, 13}
+    # "a" has no bigram positions
+    assert (out[13].n_bigrams, out[13].bg_surprisal_unats) == (None, None)
+    assert out[10].bg_surprisal_unats == -lp_ab
+    assert out[11].bg_surprisal_unats == -(STUPID_BACKOFF_LP + lp_uni_a)
+    assert out[12].bg_surprisal_unats == -(STUPID_BACKOFF_LP + unk)
+    assert all(out[i].n_bigrams == 1 for i in (10, 11, 12))
+    assert out[13].surprisal_unats == -lp_uni_a
 
 
 def test_heldout_bigram_prefers_seen_transitions(spark):
     """A doc made of trained transitions must score lower surprisal
     than token salad over the same vocabulary."""
-    from data_curator_spark.operators.lm import heldout_bigram_surprisal
+    from data_curator_spark.operators.lm import heldout_scores
 
     train = spark.createDataFrame(
         [(i, "the quick brown fox jumps") for i in range(5)],
@@ -222,13 +224,59 @@ def test_heldout_bigram_prefers_seen_transitions(spark):
     )
     out = {
         r.doc_id: r
-        for r in heldout_bigram_surprisal(
-            train, score, "doc_id", "text"
-        ).collect()
+        for r in heldout_scores(train, score, "doc_id", "text").collect()
     }
     assert (
-        out[100].mean_surprisal_unats < out[101].mean_surprisal_unats
+        out[100].bg_mean_surprisal_unats < out[101].bg_mean_surprisal_unats
     )
+
+
+def test_heldout_empty_train_split_scores_zero(spark):
+    """An empty train split has T = V = 0, so the Laplace denominator is
+    1 and every word, seen or not, has lp = FLOOR(ln(1/1) · 2^20) = 0:
+    every held-out doc scores 0 at both orders (STUPID_BACKOFF_LP on
+    each bigram position). SUM over no rows is NULL, so a denominator
+    without its COALESCE would score NULL instead."""
+    from data_curator_spark.operators.lm import STUPID_BACKOFF_LP, heldout_scores
+
+    train = spark.createDataFrame([(1, None), (2, "   ")], "doc_id long, text string")
+    score = spark.createDataFrame(
+        [(10, "a b c"), (11, "z")], "doc_id long, text string"
+    )
+    out = {
+        r.doc_id: tuple(r)[1:]
+        for r in heldout_scores(train, score, "doc_id", "text").collect()
+    }
+    backoff = -STUPID_BACKOFF_LP
+    assert out == {
+        10: (3, 0, 0, 2, 2 * backoff, backoff),
+        11: (1, 0, 0, None, None, None),
+    }
+
+
+def test_dsir_empty_target_takes_zero_target_lp(spark):
+    """An empty target corpus gives every token lp_t = 0, so a doc's
+    log weight is −Σ lp_s under the source's Laplace unigram."""
+    import math
+
+    from data_curator_spark.operators.lm import LP_SCALE_BITS, dsir_log_weights
+
+    q = 1 << LP_SCALE_BITS
+    target = spark.createDataFrame([], "doc_id long, text string")
+    source = spark.createDataFrame(
+        [(1, "a a b"), (2, "b c")], "doc_id long, text string"
+    )
+    out = {
+        r.doc_id: (r.n_tokens, r.log_weight_unats)
+        for r in dsir_log_weights(target, source, source, "doc_id", "text").collect()
+    }
+    # source: T=5, V=3, denom=9; c(a)=2, c(b)=2, c(c)=1
+    lp = {w: math.floor(math.log((c + 1) / 9) * q) for w, c in
+          {"a": 2, "b": 2, "c": 1}.items()}
+    assert out == {
+        1: (3, -(2 * lp["a"] + lp["b"])),
+        2: (2, -(lp["b"] + lp["c"])),
+    }
 
 
 def test_bigram_repetition_stats_arrow_matches_expression(spark):

@@ -275,6 +275,36 @@ def test_lm_surprisal_broadcast_vocab_single_doc_exchange(spark):
                 assert "REPARTITION" in line, (name, line)
 
 
+LM_QUERIES = ("unigram_surprisal", "bigram_surprisal", "heldout_perplexity", "dsir_importance")
+
+
+def test_lm_vocab_joins_fall_back_to_shuffle_by_bytes(spark):
+    """The LM vocab joins carry no hint and no row-count probe: the byte
+    thresholds alone choose the join. With both set to -1 every LM query
+    plans a sort-merge join and returns the rows it returns under the
+    session's 64 MB threshold."""
+    want = {n: sorted(map(tuple, QUERIES[n](spark, SF).collect())) for n in LM_QUERIES}
+    conf = {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
+    }
+    old = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        for name in LM_QUERIES:
+            plan = _plan(spark, name)
+            assert "SortMergeJoin" in plan and "BroadcastHashJoin" not in plan, name
+            got = sorted(map(tuple, QUERIES[name](spark, SF).collect()))
+            assert got == want[name], name
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def test_bpe_merge_candidates_heap_topk_over_distinct_words(spark):
     """BPE pair mining: top-k compiles to TakeOrderedAndProject and the
     pair counts aggregate with map-side partials — never a global sort
