@@ -114,8 +114,8 @@ def _bigram_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 def _laplace(toks: DataFrame, sfx: str = "") -> tuple[DataFrame, DataFrame]:
     """Add-one unigram model over an open vocabulary, trained on a
     (.., w) token frame: the count table (w, c<sfx>) and its one-row
-    denominator (den<sfx> = T + V + 1, which is 1 on an empty train
-    split because SUM over no rows is NULL). Score a word with
+    denominator den<sfx> = T + V + 1. On an empty train split SUM over
+    no rows is NULL; the COALESCE makes den 1 there. Score a word with
     ``_laplace_lp``."""
     counts = toks.groupBy("w").agg(F.count(F.lit(1)).alias(f"c{sfx}"))
     den = counts.agg(
@@ -294,9 +294,10 @@ def heldout_scores(
         "n_tokens", F.count(F.lit(1)),
         "surprisal_unats", -F.sum(_laplace_lp()),
     )
+    bg_lp = _bigram_lp(_bigram_pairs(train_df, id_col, text_col))
     scored = (
         _bigram_pairs(score_df, id_col, text_col)
-        .join(_bigram_lp(_bigram_pairs(train_df, id_col, text_col)), on=["l", "r"], how="left")
+        .join(bg_lp, on=["l", "r"], how="left")
         .join(counts.withColumnRenamed("w", "r"), on="r", how="left")
         .crossJoin(den)
     )
