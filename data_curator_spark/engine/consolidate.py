@@ -16,8 +16,8 @@ Spark-first:
 
 Scale notes: endpoint tables of one logical dataset share the PK, so the
 whole consolidation is shuffles on the PK only; AQE handles skewed PKs.
-Small endpoint tables (events like dividends/splits) should be passed
-pre-``F.broadcast()`` by the caller.
+No join carries a hint: the session's byte threshold broadcasts a small
+endpoint table (events like dividends/splits) on its own.
 """
 
 from __future__ import annotations
@@ -46,9 +46,7 @@ def missing_rows(common: DataFrame, subset: DataFrame, keys: list[str]) -> DataF
     return common.join(subset, on=cond, how="left_anti")
 
 
-def coalescing_merge(
-    endpoints: list[DataFrame], pk: list[str], broadcast_small: bool = False
-) -> DataFrame:
+def coalescing_merge(endpoints: list[DataFrame], pk: list[str]) -> DataFrame:
     """N-way outer combine: union of PKs, left-align every endpoint,
     first-non-null-wins per shared field (data_provider_toolkit.py:227-529).
 
@@ -68,8 +66,6 @@ def coalescing_merge(
     for i, ep in enumerate(endpoints):
         cols = [c for c in ep.columns if c not in pk]
         renamed = ep.select(*pk, *[F.col(c).alias(f"__ep{i}__{c}") for c in cols])
-        if broadcast_small:
-            renamed = F.broadcast(renamed)
         aligned = aligned.join(renamed, on=pk, how="left")
         for c in cols:
             field_sources.setdefault(c, []).append(f"__ep{i}__{c}")
@@ -131,11 +127,12 @@ def clear_rows_by_pk(
     ``bad_pks`` — the discrepancy-repair step
     (data_provider_toolkit.py:1271-1382; wrapper :182-224).
 
-    ``bad_pks`` is expected to be small (a conflict set) → broadcast.
+    ``bad_pks`` is usually small (a conflict set); the session's byte
+    threshold broadcasts it then, and shuffles it when it is not.
     """
     preserve = set(preserve or []) | set(pk)
     marked = df.join(
-        F.broadcast(bad_pks.select(*pk).dropDuplicates(pk).withColumn("__bad", F.lit(True))),
+        bad_pks.select(*pk).dropDuplicates(pk).withColumn("__bad", F.lit(True)),
         on=pk,
         how="left",
     )

@@ -237,7 +237,8 @@ def expand_dated_factors(
     factor-fields; each factor value lands only on its exact date, null
     elsewhere (column_builder.py:228-285 _expand_dated_factors).
 
-    Event tables are tiny (dividends/splits) → broadcast joins.
+    Event tables (dividends/splits) are usually tiny, and the session's
+    byte threshold then broadcasts them; a large one is shuffled.
     """
     out = dates_df
     for dfield in date_fields:
@@ -246,7 +247,7 @@ def expand_dated_factors(
             F.col(dfield).alias(date_col),
             *[F.col(f).alias(f"{dfield}__{f}") for f in factor_fields],
         ).where(F.col(date_col).isNotNull())
-        out = out.join(F.broadcast(ev), on=[id_col, date_col], how="left")
+        out = out.join(ev, on=[id_col, date_col], how="left")
     return out
 
 

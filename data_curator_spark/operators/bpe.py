@@ -13,8 +13,10 @@ HF tokenizers, both public):
   so a degenerate tokenization can never silently collect a corpus;
 - corpus ENCODING is distributed again, with Python touching only the
   DISTINCT-word table: each unique word is encoded once by an Arrow
-  batch UDF, and the per-doc token counts come from a broadcast join +
-  integer aggregation — the token stream itself never enters Python.
+  batch UDF, and the per-doc token counts come from a join of that
+  table (broadcast or shuffled, as the session's byte threshold
+  decides) + integer aggregation — the token stream itself never
+  enters Python.
 
 The single-iteration pair-mining view of this loop is
 queries.py:q_bpe_merge_candidates; this module is the full trainer.
@@ -28,20 +30,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from data_curator_spark.operators.dedup import WS_RE, size_gated_broadcast
+from data_curator_spark.operators.dedup import WS_RE
 
 # word-count tables above this row count abort training: a vocabulary
 # this large means pre-tokenization is broken (binary spill, no
 # whitespace), and collecting it would be a driver OOM, not a model
 MAX_VOCAB_ROWS = 10_000_000
-
-# broadcast budget for the (word, n_pieces) encode table — the same
-# row cap as dedup.BROADCAST_LABEL_CAP (~80 MB at cap); above it the encode join falls back to a
-# shuffle join rather than shipping a multi-hundred-MB string table to
-# every executor. Deliberately SMALLER than MAX_VOCAB_ROWS: the collect
-# guard bounds driver memory for training, the broadcast cap bounds
-# executor memory for encoding, and the two failure modes differ.
-ENCODE_BROADCAST_CAP = 5_000_000
 
 
 def train_bpe_merges(
@@ -201,10 +195,11 @@ def bpe_encode_counts(
     (id, n_words, n_bpe_tokens). The encoder runs ONCE PER DISTINCT
     WORD (Arrow batch UDF over the deduplicated word table — at web
     scale that is vocab-sized Python work, corpus-sized never enters
-    Python); per-doc counts are a broadcast join of the tiny
-    (word → n_pieces) table onto the exploded token stream plus one
-    integer aggregation. Docs with null/blank text are excluded (no
-    tokens to encode)."""
+    Python); per-doc counts are a join of the (word → n_pieces) table
+    onto the per-doc word counts plus one integer aggregation. The join
+    carries no hint: the session's byte threshold broadcasts the table
+    while it is small and shuffles it otherwise. Docs with null/blank
+    text are excluded (no tokens to encode)."""
     import pandas as pd
 
     ranks = {p: i for i, p in enumerate(merges)}
@@ -241,16 +236,9 @@ def bpe_encode_counts(
     gcounts = persist_tracked(
         toks.groupBy(id_col, "w").agg(F.count(F.lit(1)).alias("__cnt"))
     )
-    # persist BEFORE the broadcast gate: the gate's size probe is an
-    # action, and without the persist the distinct+encode pipeline
-    # would run twice (probe + join)
-    pieces = persist_tracked(
-        gcounts.select("w")
-        .distinct()
-        .mapInPandas(enc, "w string, n_pieces long")
-    )
+    pieces = gcounts.select("w").distinct().mapInPandas(enc, "w string, n_pieces long")
     return (
-        gcounts.join(size_gated_broadcast(pieces, ENCODE_BROADCAST_CAP), on="w")
+        gcounts.join(pieces, on="w")
         .groupBy(id_col)
         .agg(
             F.sum("__cnt").alias("n_words"),

@@ -67,15 +67,6 @@ from pyspark.sql.types import (  # noqa: E402  (grouped with its consumer)
 _CC_DRIVER_SOLVE_TYPES = (ByteType, ShortType, IntegerType, LongType, StringType)
 
 
-def size_gated_broadcast(df: DataFrame, cap: int = BROADCAST_LABEL_CAP) -> DataFrame:
-    """``F.broadcast(df)`` only when df is provably small: bounded
-    probe (limit(cap+1).count()), shuffle-join fallback above the cap.
-    The single broadcast-gating idiom for every small side in the
-    operator library — keep call sites on this helper so the gate
-    convention cannot drift."""
-    return F.broadcast(df) if df.limit(cap + 1).count() <= cap else df
-
-
 def hex_prefix_long(c: Column, n_hex: int) -> Column:
     """First ``n_hex`` hex digits of md5(c) as a non-negative long.
 
@@ -847,10 +838,10 @@ def strip_hot_segments(
     rows of hot segments reach that aggregation — which LEFT-join the
     unexploded segment arrays, so document text never shuffles and is
     never reassembled. Null-text rows rejoin via a column-pruned union.
-    Both broadcast hints are size-gated like every other small side in
-    this module (BROADCAST_LABEL_CAP) — an adversarial corpus where
-    'boilerplate' is most of the data falls back to the AQE-planned
-    shuffle join instead of OOMing the driver.
+    Neither join carries a hint: the session's byte threshold
+    (session.py) broadcasts the hot tables while they are small, and an
+    adversarial corpus where 'boilerplate' is most of the data gets the
+    AQE-planned shuffle join instead.
 
     min_df is ABSOLUTE; callers wanting a fraction-of-corpus threshold
     compute it from a count (see queries.q_boilerplate_strip, which
@@ -870,16 +861,15 @@ def strip_hot_segments(
             lambda txt: enumerate(txt.split(delimiter)), emit_first=True,
         )
     )
-    hot = persist_tracked(
+    hot = (
         rows.filter(F.col("first"))
         .groupBy("h")
         .count()
         .filter(F.col("count") >= min_df)
         .select("h")
     )
-    hint = F.broadcast if hot.count() <= BROADCAST_LABEL_CAP else (lambda d: d)
     hot_pos = (
-        rows.join(hint(hot), on="h", how="inner")
+        rows.join(hot, on="h", how="inner")
         .groupBy(id_col)
         .agg(F.collect_list("pos").alias("__hpos"))
     )
@@ -894,9 +884,9 @@ def strip_hot_segments(
             "__segs", lambda x, i: ~F.array_contains(F.col("__hpos"), i)
         )
     )
-    rebuilt = arr.join(
-        size_gated_broadcast(hot_pos), on=id_col, how="left"
-    ).select(F.col(id_col), F.array_join(kept, delimiter).alias(out_col))
+    rebuilt = arr.join(hot_pos, on=id_col, how="left").select(
+        F.col(id_col), F.array_join(kept, delimiter).alias(out_col)
+    )
     null_rows = base.filter(F.col(text_col).isNull()).select(
         F.col(id_col), F.lit(None).cast("string").alias(out_col)
     )
@@ -956,9 +946,9 @@ def dedup_segments_global(
     — the "losers" table holds ONLY duplicate occurrences (in a mostly-
     unique corpus, a small fraction) and collapses to one row of loser
     positions per affected doc. (2) Those rows LEFT-join the unexploded
-    segment arrays — size-gated broadcast with AQE shuffle-join
-    fallback — and the dropped segments are filtered out by position,
-    so document text never shuffles.
+    segment arrays — a broadcast or a shuffle join as the session's
+    byte threshold decides — and the dropped segments are filtered out
+    by position, so document text never shuffles.
     """
     if min_len < 1:
         raise ValueError(f"min_len must be >= 1, got {min_len}")
@@ -982,7 +972,7 @@ def dedup_segments_global(
     )
     # one row per AFFECTED doc carrying its loser positions — bounded by
     # corpus duplication, not corpus size
-    losers = persist_tracked(
+    losers = (
         occ.select(
             F.col(id_col), "pos", F.row_number().over(w).alias("__rn")
         )
@@ -990,7 +980,7 @@ def dedup_segments_global(
         .groupBy(id_col)
         .agg(F.collect_list("pos").alias("__lpos"))
     )
-    flagged = arr.join(size_gated_broadcast(losers), on=id_col, how="left")
+    flagged = arr.join(losers, on=id_col, how="left")
     kept = F.when(
         F.col("__lpos").isNull(), F.col("__segs")
     ).otherwise(
@@ -1087,11 +1077,12 @@ def exact_substring_dedup(
     starts collapse to ONE row per affected doc — (id, int-array of
     marked starts / cut positions), bounded by corpus duplication, not
     corpus size; ids-only shuffles throughout. (3) Those per-doc arrays
-    LEFT-join the unexploded token arrays — size-gated broadcast with
-    AQE shuffle-join fallback — and coverage/cutting is whole-stage-
-    codegen array work; untouched docs (the vast majority in a mostly-
-    unique corpus) take the null branch. The 60-bit hash is engine-
-    portable, so the DuckDB oracle reproduces every value exactly.
+    LEFT-join the unexploded token arrays — a broadcast or a shuffle
+    join as the session's byte threshold decides — and coverage/cutting
+    is whole-stage-codegen array work; untouched docs (the vast
+    majority in a mostly-unique corpus) take the null branch. The
+    60-bit hash is engine-portable, so the DuckDB oracle reproduces
+    every value exactly.
     """
     if span_len < 2:
         raise ValueError(f"span_len must be >= 2, got {span_len}")
@@ -1164,10 +1155,8 @@ def exact_substring_dedup(
         )
         p = F.size("__lstarts") > 0
         keep_pred = p if keep_pred is None else (keep_pred | p)
-    affected = persist_tracked(
-        marked.filter(dup_pred).groupBy(id_col).agg(*agg_cols).filter(keep_pred)
-    )
-    out = base.join(size_gated_broadcast(affected), on=id_col, how="left")
+    affected = marked.filter(dup_pred).groupBy(id_col).agg(*agg_cols).filter(keep_pred)
+    out = base.join(affected, on=id_col, how="left")
 
     def span_union(starts: Column) -> Column:
         return F.array_distinct(

@@ -20,20 +20,11 @@ from pyspark.sql import functions as F
 from data_curator_spark.engine.cache import persist_tracked
 
 
-# query-side (id, vector) frames are broadcast only below this row
-# count (~2M × (8B + 64×8B) ≈ 1 GB worst case at dim=64 — inside the
-# usual executor/driver broadcast budget; scale the cap down for wider
-# vectors). Above it — e.g. corpus-vs-corpus self-ANN — we fall back to
-# a shuffle join instead of failing the job on broadcast OOM. Same
-# pattern as dedup.BROADCAST_LABEL_CAP (ADVICE r3).
-BROADCAST_QUERY_CAP = 2_000_000
-
-
-def _gated_broadcast(df: DataFrame, cap: int = BROADCAST_QUERY_CAP) -> DataFrame:
-    """``F.broadcast(df)`` only when df is provably small. The probe is
-    a bounded scan (``limit(cap+1).count()``), never a full count of an
-    unbounded side."""
-    return F.broadcast(df) if df.limit(cap + 1).count() <= cap else df
+# pq_ann_topk collects its query vectors to the driver and builds one
+# m×k lookup table per query there; more queries than this raise
+# instead of collecting (~2M × 64 doubles ≈ 1 GB of driver memory at
+# dim=64)
+PQ_MAX_QUERIES = 2_000_000
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -170,7 +161,8 @@ def lsh_ann_topk(
     rows cross the band self-join — the ×n_tables explode never carries
     a vector, and ``dropDuplicates`` runs over 2-column id pairs. Query
     and corpus vectors are re-attached exactly once AFTER pair-dedup
-    (queries broadcast; corpus vectors shuffle once on neighbor_id).
+    (each join broadcast or shuffled as the session's byte threshold
+    decides).
     Same shape as embedding_near_dup_pairs; plan-guarded by
     tests/test_plans.py::test_lsh_ann_band_join_is_ids_only."""
     tables = plane_tables(n_planes, n_tables, dim, seed)
@@ -199,8 +191,8 @@ def lsh_ann_topk(
         .select("query_id", "neighbor_id")
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    qv = _gated_broadcast(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__queryvec"))
+    qv = queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__queryvec")
     )
     cv = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__neighborvec")
@@ -529,9 +521,8 @@ def ivf_ann_topk(
     # embedding vectors per candidate pair (the anti-pattern
     # lsh_ann_topk fixed in r2). Without it the only post-join shuffle
     # is the ids+sim window partitioning.
-    cand = (
-        _gated_broadcast(probes).join(cells, on="cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
+    cand = probes.join(cells, on="cell").filter(
+        F.col("query_id") != F.col("neighbor_id")
     )
     sim = F.round(cosine(F.col("__qvec"), F.col("__cvec")), 6)
     scored = cand.select("query_id", "neighbor_id", sim.alias("sim"))
@@ -768,9 +759,14 @@ def pq_ann_topk(
         queries.select(id_col, vec_col)
         .filter(F.col(vec_col).isNotNull() & (F.size(vec_col) == dim))
         .orderBy(id_col)
-        .limit(BROADCAST_QUERY_CAP)
+        .limit(PQ_MAX_QUERIES + 1)
         .collect()
     )
+    if len(qrows) > PQ_MAX_QUERIES:
+        raise ValueError(
+            f"pq_ann_topk takes at most PQ_MAX_QUERIES={PQ_MAX_QUERIES} "
+            "query vectors; refusing to collect more to the driver"
+        )
     sub = dim // m
     books_np = [np.asarray(b, dtype=np.float64) for b in books]
     lut_rows = []
@@ -893,8 +889,9 @@ def centroid_outliers(
 
     Scale shape: 3 narrow exchanges. (1) posexplode → (group, pos)
     integer partial sums — map-side combine, 16 B per coordinate.
-    (2) collect the per-group centroid arrays (n_groups × dim rows —
-    tiny) and BROADCAST them back onto the corpus: vectors never
+    (2) collect the per-group centroid arrays (n_groups × dim rows) and
+    join them back onto the corpus with no hint: while the table is
+    under the session's byte threshold it broadcasts and vectors never
     shuffle for the join. (3) the top-k window shuffles only
     (id, group, sim) — the vector columns are dropped before the rank
     exchange. The per-group k is a heap-sized window, never a global
@@ -925,8 +922,9 @@ def _centroid_scored(
 ) -> DataFrame:
     """Shared centroid-scoring kernel of centroid_outliers /
     semdedup_prune: per valid row, (id, group, __xq quantized vector,
-    centroid_sim) with the integer-exact group centroid broadcast back
-    onto the corpus. All determinism/quantization/scale notes live on
+    centroid_sim) with the integer-exact group centroid joined back
+    onto the corpus (no hint: the session's byte threshold picks the
+    join). All determinism/quantization/scale notes live on
     centroid_outliers' docstring."""
     if not 1 <= scale_bits <= 24:
         # 2·scale_bits + log2(dim) must stay far inside the 63-bit
@@ -962,15 +960,10 @@ def _centroid_scored(
         ).alias("__cq")
     )
 
-    # size-gated like every small side in this module: SemDeDup-style
-    # usage can have millions of cluster groups × high dim — an
-    # unconditional broadcast of n_groups×dim bigints would OOM instead
-    # of falling back to the AQE-planned shuffle join. Persist FIRST:
-    # the gate's size probe is an action, and without it the whole
-    # corpus-wide explode→sum centroid pipeline would run twice (probe
-    # + join)
-    cent = persist_tracked(cent)
-    joined = base.join(_gated_broadcast(cent), on=group_col)
+    # no hint: SemDeDup-style usage can have millions of cluster groups
+    # × high dim, so the session's byte threshold picks broadcast or
+    # shuffle for the n_groups×dim centroid table
+    joined = base.join(cent, on=group_col)
     dot = F.aggregate(
         F.zip_with("__xq", "__cq", lambda a, b: a * b),
         F.lit(0).cast("long"),
@@ -1044,16 +1037,13 @@ def semdedup_prune(
 
     Scale shape: ONE exchange of the quantized vectors keyed by
     group for the self-join (AQE-planned; both sides are the same
-    persisted frame), after the centroid broadcast join of
-    _centroid_scored. Clusters above ``max_cluster`` rows skip the
-    pairwise scan entirely (semdedup_drop=false, the documented
-    degrade — k-means sizing, not this operator, bounds cluster
-    cardinality). The drop aggregation is min_by over (sim-partner)
-    pairs — ids and two doubles through the final shuffle, never
-    vectors.
+    persisted frame), after the centroid join of _centroid_scored.
+    Clusters above ``max_cluster`` rows skip the pairwise scan entirely
+    (semdedup_drop=false, the documented degrade — k-means sizing, not
+    this operator, bounds cluster cardinality). The drop aggregation is
+    min_by over (sim-partner) pairs — ids and two doubles through the
+    final shuffle, never vectors.
     """
-    from data_curator_spark.engine.cache import persist_tracked
-
     scored = persist_tracked(
         _centroid_scored(df, id_col, vec_col, group_col, scale_bits, dim)
     )
@@ -1069,10 +1059,7 @@ def semdedup_prune(
     )
 
     sizes = scored.groupBy(group_col).agg(F.count(F.lit(1)).alias("__gn"))
-    small = scored.join(
-        _gated_broadcast(sizes.filter(F.col("__gn") <= max_cluster)),
-        on=group_col,
-    )
+    small = scored.join(sizes.filter(F.col("__gn") <= max_cluster), on=group_col)
     # integer square-norms computed ONCE PER ROW before the self-join —
     # the per-pair expression re-folded both sides' norms for every
     # (x, y) combination (interpreted higher-order folds; 3 per pair →

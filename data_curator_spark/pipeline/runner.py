@@ -51,6 +51,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from data_curator_spark.engine.cache import cache_scope
 from data_curator_spark.pipeline.stages import run_stages
 
 OUTPUT_COLS = [
@@ -439,7 +440,9 @@ def run_buckets(
     mid-job crash. The operation is ``append`` on an empty manifest,
     ``backfill`` with ``reprocess_buckets``, else ``append-resume``.
     ``stage_opts`` go to ``run_stages``; its corpus-global stages see
-    only this run's buckets (see ``stages.with_near_dup``)."""
+    only this run's buckets (see ``stages.with_near_dup``). The run
+    plans and commits inside one ``cache_scope``, so the stages' persists
+    and checkpoints are released when it returns or raises."""
     t0 = time.time()
     latest = latest_entries(spark, manifest_path)
     redo = set(reprocess_buckets or ())
@@ -454,16 +457,17 @@ def run_buckets(
             "post-pass over the output"
         )
     new_buckets = [b for b in range(n_buckets) if b not in skip]
-    result = None  # a no-op re-submit reads no input and builds no stage chain
-    if new_buckets:
-        raw = with_bucket(read_corpus(spark, input_path), n_buckets)
-        todo = raw if len(new_buckets) == n_buckets else raw.filter(bucket_in(new_buckets))
-        result = stage_output(todo, spark, repo_min_keep_bp=repo_min_keep_bp, **stage_opts)
     operation = "append" if not latest else ("backfill" if redo else "append-resume")
-    return commit_run(
-        spark, output_path, manifest_path, sink, result, new_buckets, len(skip),
-        latest, operation, t0, crash_before_commit,
-    )
+    with cache_scope():
+        result = None  # a no-op re-submit reads no input and builds no stage chain
+        if new_buckets:
+            raw = with_bucket(read_corpus(spark, input_path), n_buckets)
+            todo = raw if len(new_buckets) == n_buckets else raw.filter(bucket_in(new_buckets))
+            result = stage_output(todo, spark, repo_min_keep_bp=repo_min_keep_bp, **stage_opts)
+        return commit_run(
+            spark, output_path, manifest_path, sink, result, new_buckets, len(skip),
+            latest, operation, t0, crash_before_commit,
+        )
 
 
 def _overwrite_buckets(

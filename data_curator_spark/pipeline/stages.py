@@ -561,11 +561,10 @@ def with_near_dup(
     Scale shape: signatures shuffle k×8B per doc; the band self-join
     carries ids only; the CC loop and the canonical groupBy are
     pair-graph sized (singletons never enter them). The corpus streams
-    once through the final join against the broadcast-sized cluster
-    table."""
+    once through the final left join against the cluster table, which
+    the session's byte threshold broadcasts while it is small."""
     from data_curator_spark.engine.cache import persist_tracked
     from data_curator_spark.operators.dedup import (
-        BROADCAST_LABEL_CAP,
         connected_components,
         lsh_candidate_ids,
         minhash_signatures,
@@ -587,27 +586,23 @@ def with_near_dup(
         assume_unique_pairs=True,  # lsh_candidate_ids ends in dropDuplicates
     ).select("__doc_id", "cluster_id")
     # non-singleton clusters only (= pair-touched ids): everything from
-    # here to the final corpus join is pair-graph sized. Persist once so
-    # the size probe and both consumers reuse it, and GATE the broadcast
-    # hint on the same cap as connected_components — a heavily
-    # duplicated crawl can make the touched set itself huge, and an
-    # unconditional broadcast would OOM instead of falling back to the
-    # AQE-chosen shuffle join
-    cc_t = persist_tracked(cc.join(touched, on="__doc_id"))
-    hint = F.broadcast if cc_t.count() <= BROADCAST_LABEL_CAP else (lambda f: f)
-    keep_flags = keyed.select("__doc_id", "keep").join(hint(cc_t), on="__doc_id")
+    # here to the final corpus join is pair-graph sized. No hint: a
+    # heavily duplicated crawl can make the touched set itself huge, so
+    # the byte threshold picks broadcast or shuffle per join
+    cc_t = cc.join(touched, on="__doc_id")
+    keep_flags = keyed.select("__doc_id", "keep").join(cc_t, on="__doc_id")
     canon = keep_flags.groupBy("cluster_id").agg(
         F.coalesce(
             F.min(F.when(F.col("keep"), F.col("__doc_id"))),
             F.min("__doc_id"),
         ).alias("__canon")
     )
-    info = cc_t.join(hint(canon), on="cluster_id").select(
+    info = cc_t.join(canon, on="cluster_id").select(
         "__doc_id",
         F.col("cluster_id").alias("near_dup_cluster"),
         (F.col("__doc_id") == F.col("__canon")).alias("near_dup_canonical"),
     )
-    out = keyed.join(hint(info), on="__doc_id", how="left")
+    out = keyed.join(info, on="__doc_id", how="left")
     out = out.withColumn(
         "near_dup_cluster", F.coalesce("near_dup_cluster", "__doc_id")
     ).withColumn(
@@ -671,7 +666,7 @@ def with_span_dedup(
 
     Scale shape: the marking kernel shuffles (id, pos, 8-byte hash)
     only; the demotion table is filtered to OVER-threshold docs before
-    the size-gated-broadcast join back, so the corpus streams once."""
+    the left join back, so the corpus streams once."""
     from data_curator_spark.operators.dedup import duplicated_span_stats
 
     return _demote_over_threshold(
@@ -695,20 +690,17 @@ def _demote_over_threshold(
     """Shared demote-by-threshold skeleton of the corpus-global marking
     stages (decontamination, span-dedup, CDC-dedup): key with
     _doc_identity, compute per-doc stats via ``stats_fn(keyed)``, filter to
-    over-threshold docs, size-gated-broadcast join back, and flip
-    keep/drop_reason for previously-KEPT rows only. One definition so
-    demotion semantics (null-keep handling, persist lifecycle) cannot
-    drift between stages."""
-    from data_curator_spark.engine.cache import persist_tracked
-    from data_curator_spark.operators.dedup import size_gated_broadcast
-
+    over-threshold docs, left-join them back (the session's byte
+    threshold picks broadcast or shuffle), and flip keep/drop_reason for
+    previously-KEPT rows only. One definition so demotion semantics
+    (null-keep handling) cannot drift between stages."""
     keyed = df.withColumn("__doc_id", _doc_identity())
-    flagged = persist_tracked(
+    flagged = (
         stats_fn(keyed)
         .filter(F.col(stat_col) >= max_bp)
         .select("__doc_id", stat_col)
     )
-    out = keyed.join(size_gated_broadcast(flagged), on="__doc_id", how="left")
+    out = keyed.join(flagged, on="__doc_id", how="left")
     demoted = F.col("keep") & F.col(stat_col).isNotNull()
     return (
         out.withColumn(
@@ -742,7 +734,7 @@ def with_cdc_dedup(
 
     Scale shape: chunk rows carry ids + 8-byte hashes only; duplication
     is one count window on chunk_hash; the demotion table is filtered to
-    over-threshold docs before the size-gated-broadcast join back.
+    over-threshold docs before the left join back.
 
     Chunk-size defaults are CODE-TUNED, smaller than the operator's
     (16/64/512 vs 32/256/1024): source files repeat a small token
@@ -787,8 +779,9 @@ def with_repo_demotion(
     Scale shape: the rollup is one groupBy(repo) over two tiny columns
     with map-side partial aggregation — the shuffle carries one row per
     repo per task, and mega-repo skew is irrelevant to an aggregate
-    this narrow. The flagged-repo table (repos-only, filtered) joins
-    back through size_gated_broadcast, so the corpus streams once.
+    this narrow. The flagged-repo table (repos-only, filtered) left-joins
+    back, broadcast or shuffled as the session's byte threshold
+    decides, so the corpus streams once.
 
     REQUIRES GLOBAL INPUT: the rollup must see every file of a repo.
     Unlike the near-dup per-run caveat (which only under-detects), a
@@ -796,23 +789,15 @@ def with_repo_demotion(
     repos, so the bucketed writers (runner.run_buckets) refuse
     repo_min_keep_bp on a resume/backfill; run it on a full pass or as
     a batch post-pass over the completed output."""
-    from data_curator_spark.engine.cache import persist_tracked
-    from data_curator_spark.operators.dedup import size_gated_broadcast
-
     stats = df.groupBy(repo_col).agg(
         F.count(F.lit(1)).alias("__repo_files"),
         F.sum(F.col("keep").cast("long")).alias("__repo_kept"),
     )
-    flagged = persist_tracked(
-        stats.filter(
-            (F.col("__repo_files") >= min_files)
-            & (
-                F.col("__repo_kept") * 10_000
-                < min_keep_bp * F.col("__repo_files")
-            )
-        ).select(repo_col, F.lit(True).alias("__repo_flagged"))
-    )
-    out = df.join(size_gated_broadcast(flagged), on=repo_col, how="left")
+    flagged = stats.filter(
+        (F.col("__repo_files") >= min_files)
+        & (F.col("__repo_kept") * 10_000 < min_keep_bp * F.col("__repo_files"))
+    ).select(repo_col, F.lit(True).alias("__repo_flagged"))
+    out = df.join(flagged, on=repo_col, how="left")
     demoted = F.col("keep") & F.col("__repo_flagged").isNotNull()
     return (
         out.withColumn(

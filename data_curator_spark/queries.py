@@ -1060,9 +1060,9 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the seeded plane buckets and the verify filter exactly."""
     from data_curator_spark.operators.similarity import embedding_near_dup_pairs
 
-    # the union feeds the bucket explode + both verify sides (×3):
-    # persist = compute the scan + perturbation + union once
-    u = persist_tracked(_embeddings_with_near_dups(spark, sf_dir))
+    # no persist: the union feeds the bucket explode and both verify
+    # sides, but rescanning it measured no slower than caching it
+    u = _embeddings_with_near_dups(spark, sf_dir)
     return embedding_near_dup_pairs(u, "vec_id", "embedding", threshold=0.95)
 
 

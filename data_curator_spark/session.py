@@ -4,7 +4,14 @@
 + skew-join splitting), Arrow for every pandas-UDF exchange, shuffle
 partitions sized for the local test harness, and no per-call Python
 call-site capture, which would cost py4j round trips on every
-DataFrame/Column call while a query is built. ``cluster_conf`` is the
+DataFrame/Column call while a query is built.
+
+Join policy: the 64 MB ``spark.sql.autoBroadcastJoinThreshold`` (which
+AQE's run-time threshold inherits) chooses every join whose sides are
+not bounded by construction. Operators add no ``F.broadcast`` hint and
+run no size probe for such a join; a hint is kept only on a side whose
+size the code bounds, such as a TPC-H dimension, a one-row aggregate or
+a driver-built query table. ``cluster_conf`` is the
 conf set that replaces the local defaults in a real spark-submit
 deployment. The testdata tables are read by ``queries._t``, with the
 declared schemas in ``queries.TABLE_SCHEMAS``, and a pipeline corpus by
@@ -60,7 +67,7 @@ def build_session(
         # --- Arrow everywhere Python touches data
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # --- broadcast joins for small dims (TPC-H nation/region etc.)
+        # --- the join policy (see docstring): broadcast below 64 MB
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # --- local-mode memory headroom
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

@@ -21,15 +21,12 @@ import re as _re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from data_curator_spark.engine.cache import persist_tracked
 from data_curator_spark.operators.classifier import NB_DEFAULT_BUCKETS, NB_DEFAULT_GRAM
 from data_curator_spark.operators.dedup import (
-    BROADCAST_LABEL_CAP,
     P31,
     WS_RE,
     hex_prefix_long,
     minhash_params,
-    size_gated_broadcast,
     span_window_grams,
     word_shingles,
 )
@@ -123,17 +120,14 @@ def strip_hot_segments(
     doc_hashes = base.filter(F.col(text_col).isNotNull()).select(
         F.explode(F.array_distinct(segs)).alias("seg")
     ).select(hex_prefix_long(F.col("seg"), 15).alias("h"))
-    hot = persist_tracked(
-        doc_hashes.groupBy("h").count().filter(F.col("count") >= min_df).select("h")
-    )
-    hint = F.broadcast if hot.count() <= BROADCAST_LABEL_CAP else (lambda d: d)
+    hot = doc_hashes.groupBy("h").count().filter(F.col("count") >= min_df).select("h")
     arr = base.filter(F.col(text_col).isNotNull()).select(
         F.col(id_col), segs.alias("__segs")
     )
     hot_pos = arr.select(
         F.col(id_col), F.posexplode("__segs").alias("pos", "seg")
     ).join(
-        hint(hot),
+        hot,
         on=hex_prefix_long(F.col("seg"), 15) == F.col("h"),
         how="inner",
     ).groupBy(id_col).agg(F.collect_list("pos").alias("__hpos"))
@@ -144,9 +138,9 @@ def strip_hot_segments(
             "__segs", lambda x, i: ~F.array_contains(F.col("__hpos"), i)
         )
     )
-    rebuilt = arr.join(
-        size_gated_broadcast(hot_pos), on=id_col, how="left"
-    ).select(F.col(id_col), F.array_join(kept, delimiter).alias(out_col))
+    rebuilt = arr.join(hot_pos, on=id_col, how="left").select(
+        F.col(id_col), F.array_join(kept, delimiter).alias(out_col)
+    )
     null_rows = base.filter(F.col(text_col).isNull()).select(
         F.col(id_col), F.lit(None).cast("string").alias(out_col)
     )

@@ -454,6 +454,22 @@ def test_run_stages_span_dedup_end_to_end(spark, corpus_path):
             assert base[k]["keep"] is True
 
 
+@pytest.mark.parametrize("opts", [{"near_dup": True}, {"span_dedup_bp": 5000}], ids=str)
+def test_corpus_global_run_leaves_no_cached_data(spark, tmp_path, opts):
+    """A pipeline run with a corpus-global stage releases every persist
+    and checkpoint its stages made: the session's persisted RDDs are the
+    same after the run as before it."""
+    from data_curator_spark.engine.cache import persisted_rdd_ids
+
+    corpus = write_corpus_parquet(str(tmp_path / "c.parquet"), 200, 7)
+    before = persisted_rdd_ids(spark)
+    res = run_pipeline(
+        spark, corpus, str(tmp_path / "out"), str(tmp_path / "m"), n_buckets=4, **opts
+    )
+    assert res["buckets_processed"] == 4
+    assert persisted_rdd_ids(spark) == before
+
+
 def test_repo_demotion_flags_junk_repo(spark):
     """Repo-level curation: a repo whose kept fraction is below the
     threshold has its surviving files demoted to

@@ -275,15 +275,23 @@ def test_lm_surprisal_broadcast_vocab_single_doc_exchange(spark):
                 assert "REPARTITION" in line, (name, line)
 
 
-LM_QUERIES = ("unigram_surprisal", "bigram_surprisal", "heldout_perplexity", "dsir_importance")
+# queries whose joins of unbounded sides carry no hint and no row-count
+# probe, among them the four LM queries' vocab joins
+UNHINTED_JOIN_QUERIES = (
+    "unigram_surprisal", "bigram_surprisal", "heldout_perplexity", "dsir_importance",
+    "boilerplate_strip", "line_repetition", "bpe_encode", "centroid_outliers",
+    "ann_lsh", "ann_ivf",
+)
 
 
-def test_lm_vocab_joins_fall_back_to_shuffle_by_bytes(spark):
-    """The LM vocab joins carry no hint and no row-count probe: the byte
-    thresholds alone choose the join. With both set to -1 every LM query
-    plans a sort-merge join and returns the rows it returns under the
-    session's 64 MB threshold."""
-    want = {n: sorted(map(tuple, QUERIES[n](spark, SF).collect())) for n in LM_QUERIES}
+def test_unhinted_joins_fall_back_to_shuffle_by_bytes(spark):
+    """The byte thresholds alone choose these queries' joins. With both
+    set to -1 every query plans a sort-merge join and no broadcast hash
+    join, and returns the rows it returns under the session's 64 MB
+    threshold."""
+    want = {
+        n: sorted(map(tuple, QUERIES[n](spark, SF).collect())) for n in UNHINTED_JOIN_QUERIES
+    }
     conf = {
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
@@ -291,13 +299,17 @@ def test_lm_vocab_joins_fall_back_to_shuffle_by_bytes(spark):
     old = {k: spark.conf.get(k, None) for k in conf}
     for k, v in conf.items():
         spark.conf.set(k, v)
+    # a persist the first runs made would hand its cached plan, joins
+    # chosen under the 64 MB threshold, to the runs below
+    spark.catalog.clearCache()
     try:
-        for name in LM_QUERIES:
+        for name in UNHINTED_JOIN_QUERIES:
             plan = _plan(spark, name)
             assert "SortMergeJoin" in plan and "BroadcastHashJoin" not in plan, name
             got = sorted(map(tuple, QUERIES[name](spark, SF).collect()))
             assert got == want[name], name
     finally:
+        spark.catalog.clearCache()
         for k, v in old.items():
             if v is None:
                 spark.conf.unset(k)

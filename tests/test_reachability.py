@@ -29,8 +29,6 @@ ALLOWED = {
     ("data_curator_spark.engine.consolidate", "consolidate_with_repair"),
     # the reference port's curate loop (PAPER.md)
     ("data_curator_spark.curator", "curate"),
-    # the caller's release scope for every persist_tracked operator cache
-    ("data_curator_spark.engine.cache", "cache_scope"),
     # nb_langid's at-scale split: train on a labeled sample...
     ("data_curator_spark.operators.classifier", "train_nb"),
     # ...then score the full corpus against that model

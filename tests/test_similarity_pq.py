@@ -78,6 +78,21 @@ def test_pq_ann_recall_vs_exact(spark, emb):
             assert abs(r.sim - exact_sim[key]) < 1e-9
 
 
+def test_pq_ann_refuses_more_queries_than_the_cap(spark, emb, monkeypatch):
+    """Past PQ_MAX_QUERIES, pq_ann_topk raises; it never drops the
+    queries beyond the cap. At the cap every query is answered."""
+    from data_curator_spark.operators import similarity
+
+    monkeypatch.setattr(similarity, "PQ_MAX_QUERIES", 2)
+    opts = dict(k=3, m=8, n_codes=16, refine=2, dim=64)
+    three = emb.filter(F.col("id").isin(0, 40, 80))
+    with pytest.raises(ValueError, match="PQ_MAX_QUERIES=2"):
+        similarity.pq_ann_topk(three, emb, "id", "vec", **opts)
+    two = emb.filter(F.col("id").isin(0, 40))
+    got = similarity.pq_ann_topk(two, emb, "id", "vec", **opts).collect()
+    assert {r.query_id for r in got} == {0, 40}
+
+
 def test_pq_validation_and_nulls(spark):
     from data_curator_spark.operators.similarity import (
         pq_encode,
