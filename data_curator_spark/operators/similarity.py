@@ -17,8 +17,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from data_curator_spark.engine.cache import persist_tracked
-
 
 # pq_ann_topk collects its query vectors to the driver and builds one
 # m×k lookup table per query there; more queries than this raise
@@ -277,173 +275,152 @@ def embedding_near_dup_pairs(
 # as numpy matrix ops
 ASSIGN_EXPR_MAX_CENTROIDS = 32
 
+# ivf_ann_topk and pq_ann_topk collect the corpus vectors to the driver
+# to train there; more rows than this raise instead of collecting
+# (1M × 64 doubles ≈ 0.5 GB of driver memory, and as much again per
+# 128 centroids for the trainer's distance matrix)
+TRAIN_MAX_VECTORS = 1_000_000
 
-def _assign_expr(vec: Column, centroids: list[list[float]]) -> Column:
-    """Index of the nearest centroid (squared L2), pure column
-    expression. Null / wrong-width vectors yield NULL — without the
-    guard the null-poisoned distances sort FIRST in the struct min and
-    silently land every bad row in cell 0 (and the pandas twin must
-    agree; tests pin both paths)."""
-    dim = len(centroids[0])
-    dists = [
-        F.aggregate(
-            F.zip_with(
-                vec, F.array(*[F.lit(float(x)) for x in c]),
-                lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
+
+def _sq_dists(x, c):
+    """(n, k) squared L2 distances between the rows of ``x`` (n × dim)
+    and of ``c`` (k × dim), accumulated as a SEQUENTIAL fold over
+    dimensions (d += (x_j − c_j)² in j order). That is the order of
+    _nearest_expr's SQL aggregate fold and of the oracles' DuckDB
+    list_sum; numpy's pairwise sum, einsum or matmul can differ by an
+    ulp and flip a near-tie between the engines."""
+    import numpy as np
+
+    d = np.zeros((x.shape[0], c.shape[0]))
+    for j in range(c.shape[1]):
+        t = x[:, j, None] - c[None, :, j]
+        d += t * t
+    return d
+
+
+def _nearest_expr(vec_col: str, centroids: list[list[float]], n: int) -> Column:
+    """The ``n`` nearest centroid indexes of ``vec_col``, ascending by
+    (squared L2, index): the _sq_dists fold written once as a SQL
+    ``aggregate``, with each centroid a string array cast to
+    ``ARRAY<DOUBLE>`` (exact round trip through ``repr``, as in
+    hyperplane_signature) so that the expression costs one py4j call,
+    not one per coordinate. A NULL or wrong-width vector yields NULL;
+    unguarded, its null-poisoned distances would sort first and land
+    every bad row in cells 0..n-1."""
+    v = f"`{vec_col}`"
+
+    def dist(c: list[float]) -> str:
+        w = ", ".join(f"'{float(x)!r}'" for x in c)
+        return (
+            f"aggregate(zip_with({v}, CAST(array({w}) AS ARRAY<DOUBLE>), "
+            "(a, b) -> (CAST(a AS DOUBLE) - b) * (CAST(a AS DOUBLE) - b)), "
+            "0D, (acc, x) -> acc + x)"
         )
-        for c in centroids
-    ]
-    arr = F.array(*[
-        F.struct(d.alias("d"), F.lit(i).alias("i")) for i, d in enumerate(dists)
-    ])
-    return F.when(vec.isNotNull() & (F.size(vec) == dim), F.array_min(arr)["i"])
+
+    ds = ", ".join(
+        f"named_struct('d', {dist(c)}, 'i', {i})" for i, c in enumerate(centroids)
+    )
+    return F.expr(
+        f"IF({v} IS NOT NULL AND size({v}) = {len(centroids[0])}, "
+        f"transform(slice(array_sort(array({ds})), 1, {n}), s -> s.i), NULL)"
+    )
+
+
+def _per_vector_udf(width: int, kernel):
+    """Arrow-batched pandas UDF returning ``array<int>`` per row:
+    ``kernel`` maps the (n, width) float64 matrix of a batch's
+    well-formed vectors to an (n, ·) int matrix. A NULL or wrong-width
+    vector gets NULL, as in _nearest_expr, and must neither crash
+    np.asarray (ragged rows) nor land in cell 0."""
+    import numpy as np
+    import pandas as pd
+
+    # no type hints: PEP-563 string annotations (future-import above)
+    # break pandas-UDF type inference; the explicit returnType governs
+    def run(batch):
+        rows = batch.tolist()
+        valid = [i for i, r in enumerate(rows) if r is not None and len(r) == width]
+        out = [None] * len(rows)
+        if valid:
+            got = kernel(np.asarray([rows[i] for i in valid], dtype=np.float64))
+            for i, r in zip(valid, got.tolist()):
+                out[i] = r
+        return pd.Series(out)
+
+    return F.pandas_udf(run, "array<int>")
 
 
 def _nearest_cells_udf(centroids: list[list[float]], n_probe: int):
     """Arrow-batched assigner for LARGE centroid counts: embedding →
     array of the ``n_probe`` nearest cell ids, ascending by (distance,
-    cell id) — the big-n_centroids twin of _assign_expr / the probe
-    array_sort.
-
-    Bit-compatibility contract: distances accumulate as a SEQUENTIAL
-    fold over dimensions (d += (x_j − c_j)² in j order), identical to
-    F.aggregate's fold and train_ivf_centroids_numpy — numpy's pairwise
-    einsum/matmul could ulp-diverge on a near-tie and desynchronize
-    assignments from the expression path and the oracle replica. Ties
-    break to the lowest cell id (stable argsort == first-min struct)."""
+    cell id) — the big-n_centroids twin of _nearest_expr, on the same
+    _sq_dists fold and therefore bit-compatible with it and with the
+    trainer. Ties break to the lowest cell id (stable argsort ==
+    first-min struct)."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql import functions as F  # noqa: F811 — local for clarity
 
     C = np.asarray(centroids, dtype=np.float64)  # (k, dim); broadcast per task
-
-    # no type hints: PEP-563 string annotations (future-import above)
-    # break pandas-UDF type inference; the explicit returnType governs
-    def nearest(batch):
-        rows = batch.tolist()
-        # null / wrong-width vectors get a NULL result (matching the
-        # expression path, where aggregates over null fold to null) —
-        # they must neither crash np.asarray (inhomogeneous shapes)
-        # nor silently land in cell 0
-        valid = [
-            i for i, r in enumerate(rows) if r is not None and len(r) == C.shape[1]
-        ]
-        out = [None] * len(rows)
-        if valid:
-            X = np.asarray([rows[i] for i in valid], dtype=np.float64)
-            d = np.zeros((X.shape[0], C.shape[0]))
-            for j in range(C.shape[1]):
-                t = X[:, j, None] - C[None, :, j]
-                d += t * t
-            order = np.argsort(d, axis=1, kind="stable")[:, :n_probe]
-            for k, i in enumerate(valid):
-                out[i] = [int(x) for x in order[k]]
-        return pd.Series(out)
-
-    return F.pandas_udf(nearest, "array<int>")
+    return _per_vector_udf(
+        C.shape[1],
+        lambda X: np.argsort(_sq_dists(X, C), axis=1, kind="stable")[:, :n_probe],
+    )
 
 
-def _assign_cell(vec: Column, centroids: list[list[float]]) -> Column:
-    """Nearest-cell id, choosing the expression tree for small centroid
-    counts and the broadcast-matrix pandas UDF above
-    ASSIGN_EXPR_MAX_CENTROIDS (both bit-identical by construction)."""
+def _nearest_cells(vec_col: str, centroids: list[list[float]], n: int) -> Column:
+    """The ``n`` nearest cell ids of ``vec_col``: the expression tree for
+    small centroid counts, the broadcast-matrix pandas UDF above
+    ASSIGN_EXPR_MAX_CENTROIDS (bit-identical by construction)."""
     if len(centroids) <= ASSIGN_EXPR_MAX_CENTROIDS:
-        return _assign_expr(vec, centroids)
-    return F.element_at(_nearest_cells_udf(centroids, 1)(vec), 1)
+        return _nearest_expr(vec_col, centroids, n)
+    return _nearest_cells_udf(centroids, n)(F.col(vec_col))
+
+
+def _training_matrix(tbl, dim: int):
+    """The (n, dim) float64 training matrix of an Arrow table whose two
+    columns are (id, vector): rows with a NULL or wrong-width vector
+    dropped, the rest in id order (a stable sort). ivf_ann_topk and
+    pq_ann_topk build it from Spark's ``toArrow()``, the ann_ivf and
+    pq_ann oracle generators from DuckDB's ``arrow()``, so both engines
+    train on the same matrix. Raises ValueError past TRAIN_MAX_VECTORS
+    rows, and on a NULL element inside a kept vector (it would train as
+    NaN)."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    if tbl.num_rows > TRAIN_MAX_VECTORS:
+        raise ValueError(
+            f"k-means training takes at most TRAIN_MAX_VECTORS={TRAIN_MAX_VECTORS} "
+            "vectors; refusing to collect more to the driver"
+        )
+    tbl = tbl.filter(pc.fill_null(pc.equal(pc.list_value_length(tbl.column(1)), dim), False))
+    flat = pc.list_flatten(tbl.take(pc.sort_indices(tbl.column(0))).column(1))
+    if flat.null_count:
+        raise ValueError("a training vector holds a NULL element")
+    return flat.to_numpy().astype(np.float64).reshape(-1, dim)
 
 
 def train_ivf_centroids(
-    corpus: DataFrame,
-    vec_col: str,
-    n_centroids: int = 16,
-    iters: int = 5,
-    dim: int = 64,
-    seed: int = 42,
-    id_col: str | None = None,
+    x, n_centroids: int = 16, iters: int = 5, seed: int = 42
 ) -> list[list[float]]:
-    """Lloyd's k-means with deterministic seeded init. Each iteration is
-    one distributed assign (column expression) + one dim-exploded groupBy
-    average; ONLY the (n_centroids × dim) centroid matrix ever reaches
-    the driver — the iterative-algorithm pattern for Spark (no data
-    collect).
-
-    Reproducibility contract (lets a non-Spark replica — e.g. the DuckDB
-    oracle generator's train_ivf_centroids_numpy — produce the identical
-    matrix): pass ``id_col`` so the init sample is the first n×20 rows in
-    id order, and note each iteration's centroid means are rounded to 6
-    decimals (Python round, banker's) — the distributed avg and a numpy
-    mean then agree exactly except on ~1e-14-wide rounding-boundary ties.
-    """
+    """Lloyd's k-means on the driver over ``x``, an (n, dim) float64
+    matrix in id order (_training_matrix). Deterministic, so an oracle
+    generator that trains on the same matrix emits the same centroids:
+    the seeded init picks from the first n_centroids·20 rows, each row
+    goes to its first-min centroid under the _sq_dists fold (the
+    struct-min tie-break of the Spark assigners), and each iteration's
+    means are rounded to 6 decimals with Python's round. A centroid
+    that loses all its rows keeps its position."""
     import numpy as np
 
+    x = np.asarray(x, dtype=np.float64)
     rng = np.random.default_rng(seed)
-    # null / wrong-width vectors never train: _assign_cell maps them to a
-    # NULL cell, and a None group key would crash the centroid rebuild
-    # (sorted(new) on mixed None/int). The numpy replica cannot even
-    # represent ragged rows in its 2D array, so skipping keeps parity.
-    corpus = corpus.filter(
-        F.col(vec_col).isNotNull() & (F.size(vec_col) == dim)
-    )
-    # init from a deterministic sample of the corpus
-    sample_src = corpus.orderBy(id_col) if id_col is not None else corpus
-    sample = sample_src.select(vec_col).limit(n_centroids * 20).collect()
-    idx = rng.choice(len(sample), size=min(n_centroids, len(sample)), replace=False)
-    centroids = [list(map(float, sample[i][0])) for i in idx]
-
-    for _ in range(iters):
-        assigned = corpus.select(
-            _assign_cell(F.col(vec_col), centroids).alias("__c"), F.col(vec_col).alias("__v")
-        )
-        agg = (
-            assigned.select("__c", F.posexplode("__v").alias("__pos", "__x"))
-            .groupBy("__c", "__pos")
-            .agg(F.avg("__x").alias("__m"))
-            .collect()
-        )
-        new = {c: list(cent) for c, cent in enumerate(centroids)}
-        for r in agg:
-            new.setdefault(r["__c"], [0.0] * dim)
-            new[r["__c"]][r["__pos"]] = round(float(r["__m"]), 6)
-        centroids = [new[i] for i in sorted(new)]
-    return centroids
-
-
-def train_ivf_centroids_numpy(
-    arr,  # np.ndarray (n, dim) in id order, float32 or float64
-    n_centroids: int = 16,
-    iters: int = 5,
-    dim: int = 64,
-    seed: int = 42,
-) -> list[list[float]]:
-    """Driver-side replica of train_ivf_centroids for oracle generation:
-    identical seeded init, identical argmin tie-break (first index),
-    identical per-iteration 6-decimal rounding."""
-    import numpy as np
-
-    a = np.asarray(arr, dtype=np.float64)
-    rng = np.random.default_rng(seed)
-    sample = a[: n_centroids * 20]
+    sample = x[: n_centroids * 20]
     idx = rng.choice(len(sample), size=min(n_centroids, len(sample)), replace=False)
     centroids = [list(map(float, sample[i])) for i in idx]
-
     for _ in range(iters):
-        c = np.array(centroids)
-        # SEQUENTIAL left-fold over dimensions (d += term_j in j order),
-        # bit-matching Spark's F.aggregate fold and DuckDB's list_sum —
-        # numpy's pairwise .sum() could ulp-diverge and flip a near-tie
-        # argmin, desynchronizing the cascade from the Spark training
-        d = np.zeros((len(a), len(c)))
-        for j in range(c.shape[1]):
-            t = a[:, j, None] - c[None, :, j]
-            d += t * t
-        assign = d.argmin(axis=1)  # first-min index == Spark's (d, i) struct-min
-        new = {ci: list(cent) for ci, cent in enumerate(centroids)}
+        assign = _sq_dists(x, np.array(centroids)).argmin(axis=1)
         for ci in np.unique(assign):
-            new[int(ci)] = [round(float(x), 6) for x in a[assign == ci].mean(axis=0)]
-        centroids = [new[i] for i in sorted(new)]
+            centroids[ci] = [round(float(v), 6) for v in x[assign == ci].mean(axis=0)]
     return centroids
 
 
@@ -463,55 +440,28 @@ def ivf_ann_topk(
     ``n_probe`` nearest cells per query, exact cosine re-rank within the
     probed candidates.
 
-    At 10^12 scale the cell assignment is a write-once partition column
-    (cluster-pruned scans); queries touch n_probe/n_centroids of the
-    corpus instead of all of it."""
-    centroids = train_ivf_centroids(
-        corpus, vec_col, n_centroids, iters, dim, seed, id_col=id_col
+    Training collects the corpus (id, vector) pairs once, in one Spark
+    job, and runs train_ivf_centroids on the driver, the trainer the
+    ann_ivf oracle uses; past TRAIN_MAX_VECTORS corpus rows it raises.
+    The cell assignment and the probes are column expressions (pandas
+    UDF above ASSIGN_EXPR_MAX_CENTROIDS). At scale the cell is a
+    write-once partition column (cluster-pruned scans); queries touch
+    n_probe/n_centroids of the corpus instead of all of it."""
+    x = _training_matrix(
+        corpus.select(id_col, vec_col).limit(TRAIN_MAX_VECTORS + 1).toArrow(), dim
     )
+    centroids = train_ivf_centroids(x, n_centroids, iters, seed)
 
     cells = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("__cvec"),
-        _assign_cell(F.col(vec_col), centroids).alias("cell"),
+        F.element_at(_nearest_cells(vec_col, centroids, 1), 1).alias("cell"),
     )
-
-    # per query: the n_probe nearest cells (same small/large split as
-    # the cell assignment)
-    if len(centroids) <= ASSIGN_EXPR_MAX_CENTROIDS:
-        dists = [
-            F.aggregate(
-                F.zip_with(
-                    F.col(vec_col), F.array(*[F.lit(float(x)) for x in c]),
-                    lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-            for c in centroids
-        ]
-        probe_arr = F.slice(
-            F.array_sort(
-                F.array(*[F.struct(d.alias("d"), F.lit(i).alias("i")) for i, d in enumerate(dists)])
-            ),
-            1,
-            n_probe,
-        )
-        # same bad-vector guard as _assign_expr: a null / wrong-width
-        # QUERY vector yields NULL (explode drops the query), matching
-        # the UDF branch — unguarded, the null-poisoned distances would
-        # probe cells 0..n_probe-1 and emit ranked rows with sim=NULL
-        probe_cells = F.when(
-            F.col(vec_col).isNotNull()
-            & (F.size(F.col(vec_col)) == len(centroids[0])),
-            F.transform(probe_arr, lambda s: s["i"]),
-        )
-    else:
-        probe_cells = _nearest_cells_udf(centroids, n_probe)(F.col(vec_col))
+    # a bad query vector probes no cell: explode drops its NULL
     probes = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("__qvec"),
-        F.explode(probe_cells).alias("cell"),
+        F.explode(_nearest_cells(vec_col, centroids, n_probe)).alias("cell"),
     )
 
     # NO dedup needed: each corpus row sits in exactly ONE cell and a
@@ -540,168 +490,44 @@ def ivf_ann_topk(
 
 
 def train_pq_codebooks(
-    corpus: DataFrame,
-    vec_col: str,
-    m: int = 8,
-    k: int = 16,
-    iters: int = 5,
-    dim: int = 64,
-    seed: int = 42,
-    id_col: str | None = None,
+    x, m: int = 8, k: int = 16, iters: int = 5, seed: int = 42
 ) -> list[list[list[float]]]:
-    """Product-quantization codebooks: the vector is split into ``m``
-    equal subspaces and each gets its own ``k``-centroid k-means
-    (train_ivf_centroids on the sliced column, per-subspace seed), so
-    the whole model is m·k·(dim/m) floats on the driver. A PQ code is
-    then m small ints — 8 bytes/vector at m=8 — which is what makes a
-    10^12-vector index fit in cluster memory (raw float32x64 = 256 B/vec,
-    PQ8x16 = 8 B/vec, 32× smaller; distances stay ~cosine-faithful
-    after re-rank)."""
-    if dim % m != 0:
-        raise ValueError(f"dim={dim} not divisible by m={m} subspaces")
-    import numpy as np
-
-    sub = dim // m
-    # full-width filter BEFORE slicing: F.slice silently truncates a
-    # short vector, so without this a wrong-width row would train
-    # subspaces 0..j and be dropped from the rest — diverging from
-    # train_pq_codebooks_numpy / the pq_ann oracle, which exclude such
-    # rows from EVERY subspace
-    corpus = corpus.filter(
-        F.col(vec_col).isNotNull() & (F.size(vec_col) == dim)
-    )
-
-    # init: ONE driver sample of full vectors (the same first k·20 rows
-    # in id order every per-subspace trainer would collect), sliced
-    # locally with each subspace's own seed — bit-identical to m
-    # independent train_ivf_centroids inits
-    sample_src = corpus.orderBy(id_col) if id_col is not None else corpus
-    sample = sample_src.select(vec_col).limit(k * 20).collect()
-    books: list[list[list[float]]] = []
-    for s in range(m):
-        rng = np.random.default_rng(seed + s)
-        idx = rng.choice(len(sample), size=min(k, len(sample)), replace=False)
-        books.append(
-            [
-                [float(x) for x in sample[i][0][s * sub : (s + 1) * sub]]
-                for i in idx
-            ]
-        )
-
-    # iterations: ALL m subspaces train in ONE corpus pass each — the
-    # vector explodes into m tagged sub-slices, the assignment is a
-    # per-subspace _assign_cell behind a lazy when-chain (each row
-    # evaluates only its own subspace's k distances), and one
-    # groupBy(s, cell, pos) average rebuilds every codebook. The naive
-    # per-subspace loop was m·iters corpus scans + m init collects;
-    # this is iters scans + 1 init collect, same math: per-(s, cell)
-    # means with the same 6-decimal rounding, so the result is
-    # bit-identical to train_pq_codebooks_numpy except on the documented
-    # ~1e-14 rounding-boundary ties (the IVF reproducibility contract).
-    for _ in range(iters):
-        exploded = corpus.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(s).alias("s"),
-                            F.slice(F.col(vec_col), s * sub + 1, sub).alias("v"),
-                        )
-                        for s in range(m)
-                    ]
-                )
-            ).alias("sv")
-        ).select(F.col("sv.s").alias("__s"), F.col("sv.v").alias("__v"))
-        assign = None
-        for s in range(m):
-            cell_s = _assign_cell(F.col("__v"), books[s])
-            assign = (
-                F.when(F.col("__s") == s, cell_s)
-                if assign is None
-                else assign.when(F.col("__s") == s, cell_s)
-            )
-        agg = (
-            exploded.select("__s", assign.alias("__c"), "__v")
-            .select("__s", "__c", F.posexplode("__v").alias("__pos", "__x"))
-            .groupBy("__s", "__c", "__pos")
-            .agg(F.avg("__x").alias("__mu"))
-            .collect()
-        )
-        new_books = [
-            {ci: list(cent) for ci, cent in enumerate(b)} for b in books
-        ]
-        for r in agg:
-            d = new_books[r["__s"]]
-            d.setdefault(r["__c"], [0.0] * sub)
-            d[r["__c"]][r["__pos"]] = round(float(r["__mu"]), 6)
-        books = [[d[i] for i in sorted(d)] for d in new_books]
-    return books
-
-
-def train_pq_codebooks_numpy(
-    arr,  # np.ndarray (n, dim) in id order
-    m: int = 8,
-    k: int = 16,
-    iters: int = 5,
-    dim: int = 64,
-    seed: int = 42,
-) -> list[list[list[float]]]:
-    """Driver-side replica of train_pq_codebooks for oracle generation:
-    per subspace, the same train_ivf_centroids_numpy with seed+s on the
-    sliced columns — bit-identical codebooks by the IVF reproducibility
-    contract."""
-    import numpy as np
-
+    """Product-quantization codebooks over ``x``, an (n, dim) float64
+    matrix in id order (_training_matrix): the vector is split into
+    ``m`` equal subspaces and each gets its own ``k``-centroid
+    train_ivf_centroids with seed+s, so the whole model is
+    m·k·(dim/m) floats. A PQ code is then m small ints — 8 bytes/vector
+    at m=8 — which is what makes a 10^12-vector index fit in cluster
+    memory (raw float32x64 = 256 B/vec, PQ8x16 = 8 B/vec, 32× smaller;
+    distances stay ~cosine-faithful after re-rank)."""
+    dim = x.shape[1]
     if dim % m != 0:
         raise ValueError(f"dim={dim} not divisible by m={m} subspaces")
     sub = dim // m
-    a = np.asarray(arr, dtype=np.float64)
     return [
-        train_ivf_centroids_numpy(
-            a[:, s * sub : (s + 1) * sub], n_centroids=k, iters=iters,
-            dim=sub, seed=seed + s,
-        )
+        train_ivf_centroids(x[:, s * sub : (s + 1) * sub], k, iters, seed + s)
         for s in range(m)
     ]
 
 
 def _pq_encode_udf(codebooks: list[list[list[float]]]):
-    """Arrow-batched encoder: per subspace, numpy argmin over the
-    (k × sub) codebook — first-min index, matching _assign_cell's
-    tie-break."""
+    """Arrow-batched encoder: per subspace, the first-min index under
+    the _sq_dists fold over the (k × sub) codebook, the tie-break of
+    the Spark assigners."""
     import numpy as np
-    import pandas as pd
 
     books = [np.asarray(b, dtype=np.float64) for b in codebooks]
     sub = books[0].shape[1]
-    m = len(books)
-
-    # no type hints: PEP-563 string annotations (future-import above)
-    # break pandas-UDF type inference; the explicit returnType governs
-    def encode(vecs):
-        out = []
-        arrs, idxs = [], []
-        for i, v in enumerate(vecs):
-            if v is not None and len(v) == m * sub:
-                arrs.append(v)
-                idxs.append(i)
-        codes_by_row: dict[int, list[int]] = {}
-        if arrs:
-            a = np.asarray(arrs, dtype=np.float64).reshape(len(arrs), m, sub)
-            for s, book in enumerate(books):
-                # sequential-fold distance (see train_ivf_centroids_numpy)
-                d = np.zeros((len(arrs), book.shape[0]))
-                for j in range(sub):
-                    t = a[:, s, j, None] - book[None, :, j]
-                    d += t * t
-                assign = d.argmin(axis=1)
-                for row, c in zip(idxs, assign):
-                    codes_by_row.setdefault(row, []).append(int(c))
-        for i in range(len(vecs)):
-            out.append(codes_by_row.get(i))
-        return pd.Series(out)
-
-    return F.pandas_udf(encode, "array<int>")
+    return _per_vector_udf(
+        len(books) * sub,
+        lambda X: np.stack(
+            [
+                _sq_dists(X[:, s * sub : (s + 1) * sub], b).argmin(axis=1)
+                for s, b in enumerate(books)
+            ],
+            axis=1,
+        ),
+    )
 
 
 def pq_encode(
@@ -736,24 +562,27 @@ def pq_ann_topk(
     """PQ ANN with asymmetric distance (ADC) + exact re-rank: corpus
     vectors are PQ-encoded once; each query precomputes a per-subspace
     lookup table LUT[s][c] = ||q_s − codebook[s][c]||² on the driver
-    (m·k doubles), approximate distance is the pure-JVM fold
-    Σ_s LUT[s][code[s]] over the m-int code — NO floating vectors move
-    for the scan — and the ``refine·k`` best candidates per query are
-    re-ranked with exact cosine against the full vectors.
+    (m·k doubles, the _sq_dists fold), approximate distance is the
+    pure-JVM fold Σ_s LUT[s][code[s]] over the m-int code — NO floating
+    vectors move for the scan — and the ``refine·k`` best candidates per
+    query are re-ranked with exact cosine against the full vectors.
 
-    100-TB shape: the scan touches only (id, 8-byte code) + a broadcast
-    LUT literal; full vectors are read for refine·k·|queries| rows via
-    an ids-only semi-join. Determinism: seeded training, first-min
-    encode, (dist, id) tie-breaks end-to-end."""
-    books = train_pq_codebooks(
-        corpus, vec_col, m=m, k=n_codes, iters=iters, dim=dim, seed=seed,
-        id_col=id_col,
+    The codebooks train on the driver: one Spark job collects the
+    corpus (id, vector) pairs (raising past TRAIN_MAX_VECTORS rows) for
+    train_pq_codebooks, the trainer the pq_ann oracle uses. 100-TB
+    shape: the scan touches only (id, 8-byte code) + a broadcast LUT
+    literal; full vectors are read for refine·k·|queries| rows via an
+    ids-only semi-join. Determinism: seeded training, first-min encode,
+    (dist, id) tie-breaks end-to-end."""
+    import numpy as np
+
+    x = _training_matrix(
+        corpus.select(id_col, vec_col).limit(TRAIN_MAX_VECTORS + 1).toArrow(), dim
     )
+    books = train_pq_codebooks(x, m=m, k=n_codes, iters=iters, seed=seed)
     codes = pq_encode(corpus, id_col, vec_col, books).filter(
         F.col("pq_code").isNotNull()
     ).withColumnRenamed(id_col, "neighbor_id")
-
-    import numpy as np
 
     qrows = (
         queries.select(id_col, vec_col)
@@ -768,24 +597,14 @@ def pq_ann_topk(
             "query vectors; refusing to collect more to the driver"
         )
     sub = dim // m
-    books_np = [np.asarray(b, dtype=np.float64) for b in books]
-    lut_rows = []
-    for r in qrows:
-        q = np.asarray(r[vec_col], dtype=np.float64).reshape(m, sub)
-        lut = []
-        for s in range(m):
-            row = []
-            for c in books_np[s]:
-                # SEQUENTIAL fold over j (numpy .sum() is pairwise and
-                # can differ by an ulp — enough to flip a ROUND(...,6)
-                # boundary vs the oracle's list_sum)
-                acc = 0.0
-                for j in range(sub):
-                    t = q[s, j] - c[j]
-                    acc += t * t
-                row.append(float(acc))
-            lut.append(row)
-        lut_rows.append((r[id_col], lut))
+    q = np.asarray([r[vec_col] for r in qrows], dtype=np.float64).reshape(-1, dim)
+    luts = [
+        _sq_dists(q[:, s * sub : (s + 1) * sub], np.asarray(b, dtype=np.float64))
+        for s, b in enumerate(books)
+    ]
+    lut_rows = [
+        (r[id_col], [lut[i].tolist() for lut in luts]) for i, r in enumerate(qrows)
+    ]
     spark = queries.sparkSession
     qlut = F.broadcast(
         spark.createDataFrame(
@@ -844,35 +663,32 @@ def pq_ann_topk(
     )
 
 
-def centroid_outliers(
+def _centroid_scored(
     df: DataFrame,
     id_col: str,
     vec_col: str,
     group_col: str,
-    k: int = 5,
-    scale_bits: int = 15,
-    dim: int | None = None,
+    scale_bits: int,
+    dim: int | None,
 ) -> DataFrame:
-    """Per-group embedding OUTLIERS by cosine distance to the group
-    centroid — the SemDeDup/self-curation-style pruning signal that
-    flags mislabeled, off-topic or garbage documents inside each
-    cluster/language/source bucket.
+    """Per-group embedding centrality, semdedup_prune's scoring kernel:
+    per valid row, (id, group, __xq quantized vector, centroid_sim),
+    the cosine to the integer-exact group centroid. The SemDeDup /
+    self-curation pruning signal: ranked ascending per group it puts
+    mislabeled, off-topic or garbage documents first.
 
-    Output: the ``k`` least-central rows per group as
-    (``id_col``, ``group_col``, centroid_sim, outlier_rank), rank 1 =
-    farthest from the centroid; ties broken by id. Rows with a null
-    vector, any null element, or (when ``dim`` is given) the wrong
-    length are excluded (Spark's fold would null-poison where DuckDB's
-    list_sum skips nulls — excluding the whole malformed vector keeps
-    both engines and both aggregation layers consistent); an all-zero
-    vector (or group) gets a null similarity and ranks FIRST (nulls are
-    the most suspicious rows).
+    Rows with a null vector, any null element, or (when ``dim`` is
+    given) the wrong length are excluded (Spark's fold would
+    null-poison where DuckDB's list_sum skips nulls — excluding the
+    whole malformed vector keeps both engines and both aggregation
+    layers consistent); an all-zero vector (or group) gets a null
+    similarity.
 
     PRECONDITION: vectors within a group share one dimension. A ragged
-    row zip_with-pads against the centroid (null sim, ranks first) in
-    Spark but gets a partial dot in a range-indexed SQL oracle — pass
-    ``dim`` to filter ragged rows out deterministically when the
-    source cannot guarantee uniform length.
+    row zip_with-pads against the centroid (null sim) in Spark but gets
+    a partial dot in a range-indexed SQL oracle — pass ``dim`` to
+    filter ragged rows out deterministically when the source cannot
+    guarantee uniform length.
 
     Determinism (what makes this oracle-able when a float centroid is
     not): coordinates are quantized to integers with
@@ -887,45 +703,11 @@ def centroid_outliers(
     outputs). Overflow-safe by construction: |dot| ≤ dim·2^(2·scale_bits)
     = 2^36 at the defaults, far inside BIGINT.
 
-    Scale shape: 3 narrow exchanges. (1) posexplode → (group, pos)
-    integer partial sums — map-side combine, 16 B per coordinate.
-    (2) collect the per-group centroid arrays (n_groups × dim rows) and
-    join them back onto the corpus with no hint: while the table is
-    under the session's byte threshold it broadcasts and vectors never
-    shuffle for the join. (3) the top-k window shuffles only
-    (id, group, sim) — the vector columns are dropped before the rank
-    exchange. The per-group k is a heap-sized window, never a global
-    sort."""
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    from pyspark.sql import Window
-
-    scored = _centroid_scored(
-        df, id_col, vec_col, group_col, scale_bits, dim
-    ).select(id_col, group_col, "centroid_sim")
-    w = Window.partitionBy(group_col).orderBy(
-        F.col("centroid_sim").asc_nulls_first(), F.col(id_col).asc()
-    )
-    return (
-        scored.select("*", F.row_number().over(w).alias("outlier_rank"))
-        .filter(F.col("outlier_rank") <= k)
-    )
-
-
-def _centroid_scored(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    group_col: str,
-    scale_bits: int,
-    dim: int | None,
-) -> DataFrame:
-    """Shared centroid-scoring kernel of centroid_outliers /
-    semdedup_prune: per valid row, (id, group, __xq quantized vector,
-    centroid_sim) with the integer-exact group centroid joined back
-    onto the corpus (no hint: the session's byte threshold picks the
-    join). All determinism/quantization/scale notes live on
-    centroid_outliers' docstring."""
+    Scale shape: (1) posexplode → (group, pos) integer partial sums —
+    map-side combine, 16 B per coordinate. (2) collect the per-group
+    centroid arrays (n_groups × dim rows) and join them back onto the
+    corpus with no hint: while the table is under the session's byte
+    threshold it broadcasts and vectors never shuffle for the join."""
     if not 1 <= scale_bits <= 24:
         # 2·scale_bits + log2(dim) must stay far inside the 63-bit
         # budget even for high-dim embeddings (4096-dim at 24 bits:
@@ -1021,8 +803,9 @@ def semdedup_prune(
 
     Output (ALL valid rows, one per input): (id, group, centroid_sim,
     outlier_rank, semdedup_drop, drop_against) where outlier_rank is
-    centroid_outliers' full rank (1 = farthest from centroid — the
-    top-k outlier query is this output filtered to rank ≤ k),
+    the row's rank in its group by (centroid_sim, id), nulls first
+    (1 = farthest from centroid — the top-k outlier query is this
+    output filtered to rank ≤ k; see _centroid_scored),
     semdedup_drop is true iff a strictly-better near-duplicate exists
     (y beats x when cos(x,y) ≥ eps and (y.centroid_sim, y.id) <
     (x.centroid_sim, x.id)), and drop_against is that best partner's
@@ -1036,17 +819,17 @@ def semdedup_prune(
     comparison is on the rounded value, identical in both engines.
 
     Scale shape: ONE exchange of the quantized vectors keyed by
-    group for the self-join (AQE-planned; both sides are the same
-    persisted frame), after the centroid join of _centroid_scored.
+    group for the self-join (AQE-planned), after the centroid join of
+    _centroid_scored. ``scored`` is not persisted: build + collect at
+    sf0.01 and sf0.1 timed the same with and without the persist, and
+    without it the query runs 6 fewer jobs and leaves nothing cached.
     Clusters above ``max_cluster`` rows skip the pairwise scan entirely
     (semdedup_drop=false, the documented degrade — k-means sizing, not
     this operator, bounds cluster cardinality). The drop aggregation is
     min_by over (sim-partner) pairs — ids and two doubles through the
     final shuffle, never vectors.
     """
-    scored = persist_tracked(
-        _centroid_scored(df, id_col, vec_col, group_col, scale_bits, dim)
-    )
+    scored = _centroid_scored(df, id_col, vec_col, group_col, scale_bits, dim)
 
     from pyspark.sql import Window
 

@@ -1800,14 +1800,13 @@ LEFT JOIN nb ON ts.doc_id = nb.doc_id
 
 
 def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN: k-means coarse cells (trained distributed, centroids-only
-    on the driver) + probed exact re-rank
-    (operators/similarity.py:ivf_ann_topk). Training is deterministic
-    (seeded init over id-ordered sample, 6-decimal centroid rounding per
-    iteration), so the oracle regenerates the identical centroid matrix
-    with train_ivf_centroids_numpy and interpolates it as SQL literals
-    (_ann_ivf_oracle_sql) — cell assignment + probe + re-rank verified
-    end-to-end. Recall vs exact pinned by tests/test_similarity.py."""
+    """IVF ANN: k-means coarse cells (trained on the driver over the
+    embeddings collected once) + probed exact re-rank
+    (operators/similarity.py:ivf_ann_topk). The oracle trains the same
+    train_ivf_centroids on the same id-ordered matrix read by DuckDB and
+    interpolates the centroids as SQL literals (_ann_ivf_oracle_sql) —
+    cell assignment + probe + re-rank verified end-to-end. Recall vs
+    exact pinned by tests/test_similarity.py."""
     from data_curator_spark.operators.similarity import ivf_ann_topk
 
     e = _t(spark, sf_dir, "embeddings")
@@ -1827,23 +1826,22 @@ def _ann_ivf_oracle_sql(
     seed: int = 42,
     query_pred: str = "vec_id < 5",
 ) -> str:
-    """Generate the IVF oracle at call time: replicate the deterministic
-    k-means on the actual embeddings (numpy replica of the Spark
-    training), then emit assignment/probe/re-rank SQL with the centroid
-    matrix as literals."""
+    """Generate the IVF oracle at call time: train ivf_ann_topk's
+    k-means on the actual embeddings, then emit assignment/probe/re-rank
+    SQL with the centroid matrix as literals."""
     import duckdb
 
-    import numpy as np
-
-    from data_curator_spark.operators.similarity import train_ivf_centroids_numpy
+    from data_curator_spark.operators.similarity import (
+        _training_matrix,
+        train_ivf_centroids,
+    )
 
     con = duckdb.connect()
-    rows = con.execute(
-        f"SELECT embedding FROM read_parquet('{sf_dir}/embeddings.parquet') ORDER BY vec_id"
-    ).fetchall()
+    tbl = con.execute(
+        f"SELECT vec_id, embedding FROM read_parquet('{sf_dir}/embeddings.parquet')"
+    ).arrow()
     con.close()
-    arr = np.array([r[0] for r in rows], dtype=np.float64)
-    cents = train_ivf_centroids_numpy(arr, n_centroids, iters, dim, seed)
+    cents = train_ivf_centroids(_training_matrix(tbl, dim), n_centroids, iters, seed)
     # string-element list cast — see _bucket_cte_sql string-cast plane values (the
     # 6-decimal centroids are DECIMAL-safe today, but keep one convention)
     vals = ",\n    ".join(
@@ -1886,7 +1884,8 @@ FROM ranked WHERE rank <= {k}
 
 def q_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN (operators/similarity.py:pq_ann_topk):
-    seeded per-subspace codebooks, 8-byte codes, pure-JVM ADC scan,
+    seeded per-subspace codebooks trained on the driver (the trainer
+    _pq_ann_oracle_sql also calls), 8-byte codes, pure-JVM ADC scan,
     exact cosine re-rank of the refine·k shortlist."""
     from data_curator_spark.operators.similarity import pq_ann_topk
 
@@ -1909,26 +1908,26 @@ def _pq_ann_oracle_sql(
     seed: int = 42,
     query_pred: str = "vec_id < 5",
 ) -> str:
-    """Generate the PQ oracle at call time: numpy replica of the
-    per-subspace codebook training on the actual embeddings, then emit
-    encode (per-subspace argmin) / ADC (6-decimal rounded, matching the
-    Spark fold's rounding) / exact-re-rank SQL with the codebooks as
+    """Generate the PQ oracle at call time: train pq_ann_topk's
+    per-subspace codebooks on the actual embeddings, then emit encode
+    (per-subspace argmin) / ADC (6-decimal rounded, matching the Spark
+    fold's rounding) / exact-re-rank SQL with the codebooks as
     literals."""
     import duckdb
 
-    import numpy as np
-
-    from data_curator_spark.operators.similarity import train_pq_codebooks_numpy
+    from data_curator_spark.operators.similarity import (
+        _training_matrix,
+        train_pq_codebooks,
+    )
 
     con = duckdb.connect()
-    rows = con.execute(
-        f"SELECT embedding FROM read_parquet('{sf_dir}/embeddings.parquet')"
-        " WHERE embedding IS NOT NULL AND len(embedding) = "
-        f"{dim} ORDER BY vec_id"
-    ).fetchall()
+    tbl = con.execute(
+        f"SELECT vec_id, embedding FROM read_parquet('{sf_dir}/embeddings.parquet')"
+    ).arrow()
     con.close()
-    arr = np.array([r[0] for r in rows], dtype=np.float64)
-    books = train_pq_codebooks_numpy(arr, m=m, k=n_codes, iters=iters, dim=dim, seed=seed)
+    books = train_pq_codebooks(
+        _training_matrix(tbl, dim), m=m, k=n_codes, iters=iters, seed=seed
+    )
     sub = dim // m
     vals = ",\n    ".join(
         "({}, {}, CAST(['{}'] AS DOUBLE[]))".format(

@@ -37,8 +37,6 @@ ALLOWED = {
     ("data_curator_spark.operators.dedup", "remove_duplicated_spans"),
     # scan-level filter over sample_gate, the hash every sampler shares
     ("data_curator_spark.operators.sampling", "hash_sample"),
-    # top-k form of _centroid_scored (the gate reaches it via semdedup_prune)
-    ("data_curator_spark.operators.similarity", "centroid_outliers"),
     # the MVCC layout's current-state reader (the CLI exports via read_snapshot)
     ("data_curator_spark.pipeline.mvcc", "read_current"),
     # run from the spark-submit command line in session.py's docstring

@@ -119,8 +119,9 @@ def test_ivf_ann_recall(spark, vectors):
 
 def test_ivf_centroids_deterministic(spark, vectors):
     df, _ = vectors
-    c1 = S.train_ivf_centroids(df, "embedding", n_centroids=4, iters=2, dim=16)
-    c2 = S.train_ivf_centroids(df, "embedding", n_centroids=4, iters=2, dim=16)
+    x = S._training_matrix(df.toArrow(), 16)
+    c1 = S.train_ivf_centroids(x, n_centroids=4, iters=2)
+    c2 = S.train_ivf_centroids(x, n_centroids=4, iters=2)
     assert c1 == c2
 
 
@@ -160,14 +161,11 @@ def test_ivf_cells_partition_pruned_storage(spark, vectors, tmp_path):
     (PartitionFilters metadata pruning), not the whole corpus."""
     from pyspark.sql import functions as F
 
-    from data_curator_spark.operators.similarity import _assign_expr, train_ivf_centroids
-
-    df, _ = vectors
-    cents = train_ivf_centroids(df, "embedding", n_centroids=4, iters=2, dim=16, id_col="vec_id")
+    df, arr = vectors
+    cents = S.train_ivf_centroids(arr, n_centroids=4, iters=2)
     out = str(tmp_path / "ivf_cells")
-    df.withColumn("cell", _assign_expr(F.col("embedding"), cents)).write.partitionBy(
-        "cell"
-    ).parquet(out)
+    cell = F.element_at(S._nearest_expr("embedding", cents, 1), 1)
+    df.withColumn("cell", cell).write.partitionBy("cell").parquet(out)
     probed = spark.read.parquet(out).filter(F.col("cell").isin([0, 2]))
     plan = probed._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
@@ -189,9 +187,9 @@ def test_pandas_assigner_bit_matches_expression_path(spark, vectors):
     from pyspark.sql import functions as F
 
     df, arr = vectors
-    cents = S.train_ivf_centroids_numpy(arr, n_centroids=8, iters=2, dim=16)
+    cents = S.train_ivf_centroids(arr, n_centroids=8, iters=2)
     expr = df.select(
-        "vec_id", S._assign_expr(F.col("embedding"), cents).alias("cell")
+        "vec_id", F.element_at(S._nearest_expr("embedding", cents, 1), 1).alias("cell")
     ).collect()
     udf = df.select(
         "vec_id",
@@ -209,10 +207,12 @@ def test_pandas_assigner_bit_matches_expression_path(spark, vectors):
         dists += t * t
     want = np.argsort(dists, axis=1, kind="stable")[:, :3]
     got = df.select(
-        "vec_id", S._nearest_cells_udf(cents, 3)(F.col("embedding")).alias("p")
+        "vec_id",
+        S._nearest_cells_udf(cents, 3)(F.col("embedding")).alias("p"),
+        S._nearest_expr("embedding", cents, 3).alias("e"),
     ).collect()
     for r in got:
-        assert list(r["p"]) == [int(x) for x in want[r["vec_id"]]]
+        assert list(r["p"]) == list(r["e"]) == [int(x) for x in want[r["vec_id"]]]
 
 
 def test_ivf_256_centroids_reasonable(spark):
@@ -224,9 +224,8 @@ def test_ivf_256_centroids_reasonable(spark):
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     assert 256 > S.ASSIGN_EXPR_MAX_CENTROIDS
-    cents = S.train_ivf_centroids(
-        emb, "embedding", n_centroids=256, iters=2, dim=64, seed=42, id_col="vec_id"
-    )
+    x = S._training_matrix(emb.select("vec_id", "embedding").toArrow(), 64)
+    cents = S.train_ivf_centroids(x, n_centroids=256, iters=2, seed=42)
     assert len(cents) == 256 and len(cents[0]) == 64
     out = S.ivf_ann_topk(
         emb.filter(F.col("vec_id") < 3), emb, "vec_id", "embedding",
@@ -235,17 +234,6 @@ def test_ivf_256_centroids_reasonable(spark):
     rows = out.collect()
     assert len(rows) > 0
     assert all(0 <= r["rank"] <= 3 for r in rows)
-    # oracle-replica parity holds at the large-centroid path too
-    import duckdb
-
-    arr = np.array(
-        [r[0] for r in duckdb.sql(
-            "SELECT embedding FROM read_parquet('/root/testdata/sf0.01/embeddings.parquet') ORDER BY vec_id"
-        ).fetchall()],
-        dtype=np.float64,
-    )
-    cents_np = S.train_ivf_centroids_numpy(arr, n_centroids=256, iters=2, dim=64, seed=42)
-    assert cents == cents_np
 
 
 def test_assigners_agree_on_null_and_ragged_vectors(spark):
@@ -263,7 +251,7 @@ def test_assigners_agree_on_null_and_ragged_vectors(spark):
     expr = {
         r["vec_id"]: r["cell"]
         for r in df.select(
-            "vec_id", S._assign_expr(F.col("embedding"), cents).alias("cell")
+            "vec_id", F.element_at(S._nearest_expr("embedding", cents, 1), 1).alias("cell")
         ).collect()
     }
     udf = {
@@ -287,7 +275,9 @@ def test_ivf_tolerates_bad_corpus_and_query_vectors(spark):
     bad = [Row(vec_id=100, embedding=None), Row(vec_id=101, embedding=[0.5])]
     df = spark.createDataFrame(good + bad, "vec_id long, embedding array<float>")
 
-    cents = S.train_ivf_centroids(df, "embedding", n_centroids=2, iters=2, dim=2, seed=1)
+    x = S._training_matrix(df.toArrow(), 2)
+    assert x.shape == (8, 2)
+    cents = S.train_ivf_centroids(x, n_centroids=2, iters=2, seed=1)
     assert len(cents) == 2 and all(len(c) == 2 for c in cents)
 
     out = S.ivf_ann_topk(
@@ -311,15 +301,68 @@ def test_ivf_tolerates_bad_corpus_and_query_vectors(spark):
     assert sorted(map(tuple, out_udf)) == sorted(map(tuple, rows))
 
 
-def test_centroid_outliers_flags_the_planted_outlier(spark):
-    from data_curator_spark.operators.similarity import centroid_outliers
+def test_training_matrix_spark_equals_duckdb(spark, tmp_path):
+    """ivf_ann_topk and pq_ann_topk train on the matrix built from
+    Spark's toArrow(), the ann_ivf and pq_ann oracles on the one built
+    from DuckDB's arrow(); the trainer is one function, so the models
+    agree when the matrices do. Checked on sf0.01 embeddings, and on
+    them plus hand rows read back through shuffled partitions: a NULL
+    vector, a wrong-width vector and ids above 2^31. A NULL element
+    inside a full-width vector raises."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
 
+    emb = "/root/testdata/sf0.01/embeddings.parquet"
+    big = 1 << 31
+    hand = pa.table(
+        {
+            "vec_id": pa.array([big + 9, big + 1, 3 * big, big + 5], pa.int64()),
+            "embedding": pa.array(
+                [[0.5] * 64, [-1.25] * 64, None, [1.0, 2.0]], pa.list_(pa.float32())
+            ),
+        }
+    )
+    pq.write_table(hand, tmp_path / "hand.parquet")
+    n = pq.read_metadata(emb).num_rows
+
+    def both(paths, shuffle):
+        df = spark.read.parquet(*paths).select("vec_id", "embedding")
+        if shuffle:
+            df = df.repartition(7, F.rand(5))
+        listed = ", ".join(f"'{p}'" for p in paths)
+        duck = duckdb.sql(f"SELECT vec_id, embedding FROM read_parquet([{listed}])").arrow()
+        return S._training_matrix(df.toArrow(), 64), S._training_matrix(duck, 64)
+
+    got, want = both([emb], shuffle=False)
+    assert got.shape == (n, 64) and got.dtype == np.float64
+    assert np.array_equal(got, want)
+    got, want = both([emb, str(tmp_path / "hand.parquet")], shuffle=True)
+    assert got.shape == (n + 2, 64)
+    assert np.array_equal(got, want)
+    assert np.array_equal(got[-2:], [[-1.25] * 64, [0.5] * 64])  # ids big+1, big+9
+
+    holed = pa.table({"vec_id": [1, 2], "embedding": [[1.0, 2.0], [None, 2.0]]})
+    with pytest.raises(ValueError, match="NULL element"):
+        S._training_matrix(holed, 2)
+
+
+def _outliers(df, k, **kw):
+    """The centroid_outliers gate query's top-k form: semdedup_prune's
+    rows filtered to outlier_rank <= k."""
+    return S.semdedup_prune(df, "vec_id", "vec", "grp", eps=0.5, **kw).filter(
+        f"outlier_rank <= {k}"
+    )
+
+
+def test_centroid_outliers_flags_the_planted_outlier(spark):
     # group 'a': 9 vectors near (1, 0), one planted at (-1, 0)
     rows = [(i, "a", [1.0, 0.01 * i]) for i in range(9)]
     rows.append((99, "a", [-1.0, 0.0]))
     rows += [(200 + i, "b", [0.0, 1.0]) for i in range(4)]
     df = spark.createDataFrame(rows, "vec_id long, grp string, vec array<float>")
-    out = centroid_outliers(df, "vec_id", "vec", "grp", k=2)
+    out = _outliers(df, 2)
     got = {(r.grp, r.outlier_rank): r.vec_id for r in out.collect()}
     assert got[("a", 1)] == 99  # the planted outlier ranks first
     assert len([k for k in got if k[0] == "a"]) == 2
@@ -327,8 +370,6 @@ def test_centroid_outliers_flags_the_planted_outlier(spark):
 
 
 def test_centroid_outliers_null_and_zero_vectors(spark):
-    from data_curator_spark.operators.similarity import centroid_outliers
-
     rows = [
         (1, "g", [1.0, 1.0]),
         (2, "g", [1.0, 0.9]),
@@ -336,7 +377,7 @@ def test_centroid_outliers_null_and_zero_vectors(spark):
         (4, "g", None),         # null vector -> excluded entirely
     ]
     df = spark.createDataFrame(rows, "vec_id long, grp string, vec array<float>")
-    out = centroid_outliers(df, "vec_id", "vec", "grp", k=10).collect()
+    out = _outliers(df, 10).collect()
     ids = [r.vec_id for r in sorted(out, key=lambda r: r.outlier_rank)]
     assert 4 not in ids
     assert ids[0] == 3
@@ -344,27 +385,19 @@ def test_centroid_outliers_null_and_zero_vectors(spark):
 
 
 def test_centroid_outliers_validation(spark):
-    import pytest as _pytest
-
-    from data_curator_spark.operators.similarity import centroid_outliers
-
     df = spark.createDataFrame([(1, "g", [1.0])], "vec_id long, grp string, vec array<float>")
-    with _pytest.raises(ValueError):
-        centroid_outliers(df, "vec_id", "vec", "grp", k=0)
-    with _pytest.raises(ValueError):
-        centroid_outliers(df, "vec_id", "vec", "grp", scale_bits=30)
+    with pytest.raises(ValueError, match="scale_bits"):
+        _outliers(df, 1, scale_bits=30)
 
 
 def test_centroid_outliers_dim_filter_excludes_ragged(spark):
-    from data_curator_spark.operators.similarity import centroid_outliers
-
     rows = [
         (1, "g", [1.0, 0.0]),
         (2, "g", [0.9, 0.1]),
         (3, "g", [1.0]),  # ragged
     ]
     df = spark.createDataFrame(rows, "vec_id long, grp string, vec array<float>")
-    out = centroid_outliers(df, "vec_id", "vec", "grp", k=10, dim=2).collect()
+    out = _outliers(df, 10, dim=2).collect()
     assert {r.vec_id for r in out} == {1, 2}
 
 
@@ -388,7 +421,7 @@ def test_semdedup_prune_drops_redundant_keeps_diverse(spark):
     assert not out[4].semdedup_drop  # orthogonal: no near-dup at 0.9
     assert out[1].semdedup_drop and out[1].drop_against == 3
     assert out[2].semdedup_drop and out[2].drop_against == 3
-    # rank column matches centroid_outliers semantics (1 = farthest)
+    # outlier rank: 1 = farthest from the centroid
     assert out[4].outlier_rank == 1
     # and the decision columns are consistent with the sims
     assert out[3].centroid_sim < out[1].centroid_sim

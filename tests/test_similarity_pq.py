@@ -25,11 +25,12 @@ def emb(spark):
 
 def test_pq_encode_deterministic_and_partitioning_invariant(spark, emb):
     from data_curator_spark.operators.similarity import (
+        _training_matrix,
         pq_encode,
         train_pq_codebooks,
     )
 
-    books = train_pq_codebooks(emb, "vec", m=8, k=16, dim=64, id_col="id")
+    books = train_pq_codebooks(_training_matrix(emb.toArrow(), 64), m=8, k=16)
     assert len(books) == 8 and all(len(b[0]) == 8 for b in books)
     a = {r.id: tuple(r.pq_code) for r in pq_encode(emb, "id", "vec", books).collect()}
     b = {
@@ -80,7 +81,9 @@ def test_pq_ann_recall_vs_exact(spark, emb):
 
 def test_pq_ann_refuses_more_queries_than_the_cap(spark, emb, monkeypatch):
     """Past PQ_MAX_QUERIES, pq_ann_topk raises; it never drops the
-    queries beyond the cap. At the cap every query is answered."""
+    queries beyond the cap. Past TRAIN_MAX_VECTORS corpus rows, both
+    trained ANN operators raise; they never train on a truncated
+    corpus. At the caps every query is answered."""
     from data_curator_spark.operators import similarity
 
     monkeypatch.setattr(similarity, "PQ_MAX_QUERIES", 2)
@@ -89,12 +92,19 @@ def test_pq_ann_refuses_more_queries_than_the_cap(spark, emb, monkeypatch):
     with pytest.raises(ValueError, match="PQ_MAX_QUERIES=2"):
         similarity.pq_ann_topk(three, emb, "id", "vec", **opts)
     two = emb.filter(F.col("id").isin(0, 40))
+    monkeypatch.setattr(similarity, "TRAIN_MAX_VECTORS", 319)
+    with pytest.raises(ValueError, match="TRAIN_MAX_VECTORS=319"):
+        similarity.pq_ann_topk(two, emb, "id", "vec", **opts)
+    with pytest.raises(ValueError, match="TRAIN_MAX_VECTORS=319"):
+        similarity.ivf_ann_topk(two, emb, "id", "vec", k=3, dim=64)
+    monkeypatch.setattr(similarity, "TRAIN_MAX_VECTORS", 320)
     got = similarity.pq_ann_topk(two, emb, "id", "vec", **opts).collect()
     assert {r.query_id for r in got} == {0, 40}
 
 
 def test_pq_validation_and_nulls(spark):
     from data_curator_spark.operators.similarity import (
+        _training_matrix,
         pq_encode,
         train_pq_codebooks,
     )
@@ -103,26 +113,11 @@ def test_pq_validation_and_nulls(spark):
         [(1, [float(i) for i in range(64)]), (2, None), (3, [1.0, 2.0])],
         "id long, vec array<double>",
     )
-    with pytest.raises(ValueError):
-        train_pq_codebooks(df, "vec", m=7, dim=64)
-    books = train_pq_codebooks(df, "vec", m=8, k=2, dim=64, id_col="id")
+    x = _training_matrix(df.toArrow(), 64)
+    assert x.shape == (1, 64)
+    with pytest.raises(ValueError, match="m=7"):
+        train_pq_codebooks(x, m=7)
+    books = train_pq_codebooks(x, m=8, k=2)
     out = {r.id: r.pq_code for r in pq_encode(df, "id", "vec", books).collect()}
     assert out[1] is not None
     assert out[2] is None and out[3] is None  # null / wrong width
-
-
-def test_pq_codebooks_spark_equals_numpy(spark, emb):
-    """The oracle contract: the distributed trainer and the driver-side
-    numpy replica produce the IDENTICAL codebook matrices."""
-    import pandas as pd
-
-    from data_curator_spark.operators.similarity import (
-        train_pq_codebooks,
-        train_pq_codebooks_numpy,
-    )
-
-    pdf = emb.orderBy("id").toPandas()
-    arr = np.array([list(v) for v in pdf["vec"]], dtype=np.float64)
-    a = train_pq_codebooks(emb, "vec", m=4, k=8, iters=3, dim=64, id_col="id")
-    b = train_pq_codebooks_numpy(arr, m=4, k=8, iters=3, dim=64)
-    assert a == b

@@ -30,6 +30,7 @@ def test_chunk_and_fim_are_streaming_safe(spark, tmp_path):
     stream_df = spark.readStream.schema(batch_df.schema).parquet(str(land))
 
     from data_curator_spark.operators.similarity import (
+        _training_matrix,
         pq_encode,
         train_pq_codebooks,
     )
@@ -40,7 +41,7 @@ def test_chunk_and_fim_are_streaming_safe(spark, tmp_path):
         [(i, [float((i * 7 + j) % 13) for j in range(16)]) for i in range(40)],
         "doc_id long, vec array<double>",
     )
-    books = train_pq_codebooks(emb, "vec", m=4, k=4, iters=2, dim=16, id_col="doc_id")
+    books = train_pq_codebooks(_training_matrix(emb.toArrow(), 16), m=4, k=4, iters=2)
     epath = tmp_path / "emb"
     epath.mkdir()
     emb.toPandas().to_parquet(str(epath / "e.parquet"), index=False)
