@@ -277,9 +277,12 @@ ASSIGN_EXPR_MAX_CENTROIDS = 32
 
 # ivf_ann_topk and pq_ann_topk collect the corpus vectors to the driver
 # to train there; more rows than this raise instead of collecting
-# (1M × 64 doubles ≈ 0.5 GB of driver memory, and as much again per
-# 128 centroids for the trainer's distance matrix)
+# (1M × 64 doubles ≈ 0.5 GB per copy, and _training_matrix holds up to
+# three while it filters, sorts and converts; the trainer's distances
+# stay at 2 × TRAIN_BLOCK × k doubles, 256 MB at 256 centroids)
 TRAIN_MAX_VECTORS = 1_000_000
+# rows per distance block in train_ivf_centroids
+TRAIN_BLOCK = 65_536
 
 
 def _sq_dists(x, c):
@@ -292,9 +295,11 @@ def _sq_dists(x, c):
     import numpy as np
 
     d = np.zeros((x.shape[0], c.shape[0]))
+    t = np.empty_like(d)
     for j in range(c.shape[1]):
-        t = x[:, j, None] - c[None, :, j]
-        d += t * t
+        np.subtract(x[:, j, None], c[None, :, j], out=t)
+        np.multiply(t, t, out=t)
+        d += t
     return d
 
 
@@ -418,7 +423,13 @@ def train_ivf_centroids(
     idx = rng.choice(len(sample), size=min(n_centroids, len(sample)), replace=False)
     centroids = [list(map(float, sample[i])) for i in idx]
     for _ in range(iters):
-        assign = _sq_dists(x, np.array(centroids)).argmin(axis=1)
+        c = np.array(centroids)
+        assign = np.concatenate(
+            [
+                _sq_dists(x[i : i + TRAIN_BLOCK], c).argmin(axis=1)
+                for i in range(0, len(x), TRAIN_BLOCK)
+            ]
+        )
         for ci in np.unique(assign):
             centroids[ci] = [round(float(v), 6) for v in x[assign == ci].mean(axis=0)]
     return centroids
@@ -444,9 +455,9 @@ def ivf_ann_topk(
     job, and runs train_ivf_centroids on the driver, the trainer the
     ann_ivf oracle uses; past TRAIN_MAX_VECTORS corpus rows it raises.
     The cell assignment and the probes are column expressions (pandas
-    UDF above ASSIGN_EXPR_MAX_CENTROIDS). At scale the cell is a
-    write-once partition column (cluster-pruned scans); queries touch
-    n_probe/n_centroids of the corpus instead of all of it."""
+    UDF above ASSIGN_EXPR_MAX_CENTROIDS) and stay distributed: the cell
+    is a write-once partition column (cluster-pruned scans); queries
+    touch n_probe/n_centroids of the corpus instead of all of it."""
     x = _training_matrix(
         corpus.select(id_col, vec_col).limit(TRAIN_MAX_VECTORS + 1).toArrow(), dim
     )
@@ -485,7 +496,8 @@ def ivf_ann_topk(
 
 
 # ---------------------------------------------------------------------------
-# Product quantization (memory-bounded ANN at 10^12-vector scale)
+# Product quantization (memory-bounded ANN: training is capped at
+# TRAIN_MAX_VECTORS corpus rows, encode / scan / re-rank are not)
 # ---------------------------------------------------------------------------
 
 
@@ -497,9 +509,10 @@ def train_pq_codebooks(
     ``m`` equal subspaces and each gets its own ``k``-centroid
     train_ivf_centroids with seed+s, so the whole model is
     m·k·(dim/m) floats. A PQ code is then m small ints — 8 bytes/vector
-    at m=8 — which is what makes a 10^12-vector index fit in cluster
-    memory (raw float32x64 = 256 B/vec, PQ8x16 = 8 B/vec, 32× smaller;
-    distances stay ~cosine-faithful after re-rank)."""
+    at m=8, so the encoded index is 32× smaller than the raw vectors
+    (raw float32x64 = 256 B/vec, PQ8x16 = 8 B/vec; distances stay
+    ~cosine-faithful after re-rank). Training itself runs on the driver
+    over at most TRAIN_MAX_VECTORS rows."""
     dim = x.shape[1]
     if dim % m != 0:
         raise ValueError(f"dim={dim} not divisible by m={m} subspaces")
@@ -568,11 +581,12 @@ def pq_ann_topk(
     query are re-ranked with exact cosine against the full vectors.
 
     The codebooks train on the driver: one Spark job collects the
-    corpus (id, vector) pairs (raising past TRAIN_MAX_VECTORS rows) for
-    train_pq_codebooks, the trainer the pq_ann oracle uses. 100-TB
-    shape: the scan touches only (id, 8-byte code) + a broadcast LUT
-    literal; full vectors are read for refine·k·|queries| rows via an
-    ids-only semi-join. Determinism: seeded training, first-min encode,
+    corpus (id, vector) pairs for train_pq_codebooks, the trainer the
+    pq_ann oracle uses, and a corpus of more than TRAIN_MAX_VECTORS rows
+    raises. The encode, scan and re-rank are distributed: the scan
+    touches only (id, 8-byte code) + a broadcast LUT literal; full
+    vectors are read for refine·k·|queries| rows via an ids-only
+    semi-join. Determinism: seeded training, first-min encode,
     (dist, id) tie-breaks end-to-end."""
     import numpy as np
 

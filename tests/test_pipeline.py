@@ -457,19 +457,21 @@ def test_run_stages_span_dedup_end_to_end(spark, corpus_path):
 @pytest.mark.parametrize("opts", [{"near_dup": True}, {"span_dedup_bp": 5000}], ids=str)
 def test_corpus_global_run_leaves_no_cached_data(spark, tmp_path, opts):
     """A pipeline run with a corpus-global stage releases every persist
-    and checkpoint its stages made: no RDD persisted after the run was
-    not persisted before it. (An RDD that earlier tests left behind may
-    be released during the run: the ContextCleaner frees an unscoped
-    localCheckpoint once its frame is garbage-collected.)"""
-    from data_curator_spark.engine.cache import persisted_rdd_ids
+    and checkpoint its stages made: the session's persisted RDDs are the
+    same after the run as before it. Storage starts empty, so an RDD
+    that an earlier test left to the ContextCleaner cannot be released
+    during the run and change the set."""
+    from data_curator_spark.engine.cache import persisted_rdd_ids, unpersist_rdd_ids
 
     corpus = write_corpus_parquet(str(tmp_path / "c.parquet"), 200, 7)
+    spark.catalog.clearCache()
+    unpersist_rdd_ids(spark, persisted_rdd_ids(spark), blocking=True)
     before = persisted_rdd_ids(spark)
     res = run_pipeline(
         spark, corpus, str(tmp_path / "out"), str(tmp_path / "m"), n_buckets=4, **opts
     )
     assert res["buckets_processed"] == 4
-    assert persisted_rdd_ids(spark) - before == set()
+    assert persisted_rdd_ids(spark) == before
 
 
 def test_repo_demotion_flags_junk_repo(spark):
