@@ -96,44 +96,32 @@ def main() -> None:
     # ---- line_repetition decomposition ---------------------------------
     from data_curator_spark.operators.dedup import (
         dedup_segments_global,
-        duplicated_span_stats,
         exact_substring_dedup,
+        hex_prefix_long,
+        span_window_grams,
     )
+    from data_curator_spark.operators.kernels import nonblank, ws_tokens
 
     from data_curator_spark.queries import _spread
 
     dnn = lambda: _spread(docs().filter(F.col("text").isNotNull()))  # noqa: E731
 
     run("lr.seg_dedup", lambda: dedup_segments_global(dnn(), "doc_id", "text", delimiter=" "))
-    run("lr.span_stats", lambda: duplicated_span_stats(dnn(), "doc_id", "text", span_len=8))
     run(
-        "lr.exact_substr_both",
-        lambda: exact_substring_dedup(
-            dnn(), "doc_id", "text", span_len=8, stats=True, removal=True
-        ),
+        "lr.span_stats",
+        lambda: exact_substring_dedup(dnn(), "doc_id", "text", span_len=8, removal=False),
     )
+    run("lr.exact_substr_both", lambda: exact_substring_dedup(dnn(), "doc_id", "text", span_len=8))
     run(
         "lr.exact_substr_grams_only",
-        lambda: dnn()
-        .filter(F.col("text").isNotNull() & (F.trim(F.col("text")) != ""))
-        .select(
-            "doc_id", F.split(F.trim(F.col("text")), "[ \\n\\t\\r]+").alias("__ws")
-        )
+        lambda: nonblank(dnn(), "text")
+        .select("doc_id", ws_tokens("text").alias("__ws"))
         .filter(F.size("__ws") >= 8)
-        .select(
-            "doc_id",
-            F.explode(
-                __import__(
-                    "data_curator_spark.operators.dedup", fromlist=["span_window_grams"]
-                ).span_window_grams(F.col("__ws"), 8)
-            ).alias("pg"),
-        )
+        .select("doc_id", F.explode(span_window_grams(F.col("__ws"), 8)).alias("pg"))
         .select(
             "doc_id",
             F.col("pg.pos").alias("pos"),
-            __import__(
-                "data_curator_spark.operators.dedup", fromlist=["hex_prefix_long"]
-            ).hex_prefix_long(F.col("pg.g"), 15).alias("h"),
+            hex_prefix_long(F.col("pg.g"), 15).alias("h"),
         ),
     )
 

@@ -11,15 +11,17 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-WS_RE = "[ \\n\\t\\r]+"
+from data_curator_spark.operators.kernels import ws_tokens
+
 # BPE-ish pre-tokenizer: word pieces, numbers, or single non-space symbols
 BPE_RE = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \\n\\t\\r]"
 
 
 def whitespace_token_count(text: Column) -> Column:
     """Number of whitespace-separated tokens (0 for empty/blank)."""
-    t = F.trim(text)
-    return F.when(F.length(t) == 0, F.lit(0)).otherwise(F.size(F.split(t, WS_RE)))
+    return F.when(F.length(F.trim(text)) == 0, F.lit(0)).otherwise(
+        F.size(ws_tokens(text))
+    )
 
 
 def bpe_token_count(text: Column) -> Column:
@@ -30,8 +32,7 @@ def bpe_token_count(text: Column) -> Column:
 
 def stopword_ratio(text: Column, stopwords: list[str]) -> Column:
     """Fraction of tokens that are stopwords."""
-    t = F.trim(F.lower(text))
-    words = F.split(t, WS_RE)
+    words = ws_tokens(F.lower(text))
     sw = F.size(F.filter(words, lambda x: x.isin(*stopwords)))
     return F.when(F.size(words) > 0, sw.cast("double") / F.size(words))
 
@@ -43,8 +44,7 @@ def punct_ratio(text: Column) -> Column:
 
 
 def mean_word_length(text: Column) -> Column:
-    t = F.trim(text)
-    words = F.split(t, WS_RE)
+    words = ws_tokens(text)
     total = F.aggregate(words, F.lit(0), lambda acc, x: acc + F.length(x))
     return F.when(F.size(words) > 0, total.cast("double") / F.size(words))
 

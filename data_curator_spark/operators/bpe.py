@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from data_curator_spark.operators.dedup import WS_RE
+from data_curator_spark.operators.kernels import nonblank, ws_tokens
 
 # word-count tables above this row count abort training: a vocabulary
 # this large means pre-tokenization is broken (binary spill, no
@@ -149,12 +149,9 @@ def encode_word(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:
 
 
 def _word_counts(df: DataFrame, text_col: str) -> DataFrame:
-    words = F.split(F.trim(F.col(text_col)), WS_RE)
     return (
-        df.filter(
-            F.col(text_col).isNotNull() & (F.trim(F.col(text_col)) != "")
-        )
-        .select(F.explode(words).alias("w"))
+        nonblank(df, text_col)
+        .select(F.explode(ws_tokens(text_col)).alias("w"))
         .filter(F.col("w") != "")
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -204,12 +201,9 @@ def bpe_encode_counts(
 
     ranks = {p: i for i, p in enumerate(merges)}
 
-    words = F.split(F.trim(F.col(text_col)), WS_RE)
     toks = (
-        df.filter(
-            F.col(text_col).isNotNull() & (F.trim(F.col(text_col)) != "")
-        )
-        .select(F.col(id_col), F.explode(words).alias("w"))
+        nonblank(df, text_col)
+        .select(F.col(id_col), F.explode(ws_tokens(text_col)).alias("w"))
         .filter(F.col("w") != "")
     )
 

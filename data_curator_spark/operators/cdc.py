@@ -195,7 +195,7 @@ def cdc_dup_stats(
     """Per-document shift-robust duplication signal: of the doc's CDC
     chunks, how many (and how many bytes) occur verbatim more than once
     corpus-wide — another doc OR another position of the SAME doc, the
-    identical occurrence-count rule as duplicated_span_stats (a
+    identical occurrence-count rule as exact_substring_dedup (a
     self-repeating template doc IS duplicated content) — at
     content-defined granularity, immune to position shifts. Output:
     (id, n_chunks, n_dup_chunks, dup_bytes, dup_chunk_bp).

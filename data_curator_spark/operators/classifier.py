@@ -11,10 +11,8 @@ iterations, which is what makes supervised training tractable in one
 pass over a 100-TB corpus (an SGD loop would re-shuffle the corpus
 per epoch; NB's sufficient statistics are a groupBy).
 
-Train/score are separable (`train_nb` → `score_nb`): at scale you
-train on a labeled sample and score the full corpus; `nb_langid`
-composes both over ONE per-doc feature pass for the self-train audit
-mode the gate query uses.
+`nb_langid` trains and scores over ONE per-doc feature pass: the
+self-train audit mode the gate query uses.
 
 Reference analog: none (the reference has no ML); engine-added for the
 north-rule pipeline.
@@ -57,8 +55,6 @@ class NBModel:
     classes: tuple[str, ...]
     default_q: dict[str, int]
     prior_q: dict[str, int]
-    gram_len: int
-    n_buckets: int
 
 
 def _doc_feats(
@@ -101,7 +97,6 @@ def _train_from_feats(
     feats: DataFrame,
     id_col: str,
     label_col: str,
-    gram_len: int,
     n_buckets: int,
 ) -> NBModel:
     """Closed-form NB training from a per-doc feature table — the class
@@ -164,8 +159,6 @@ def _train_from_feats(
         classes=tuple(classes),
         default_q=default_q,
         prior_q=prior_q,
-        gram_len=gram_len,
-        n_buckets=n_buckets,
     )
 
 
@@ -173,11 +166,11 @@ def _score_from_feats(
     feats: DataFrame,
     nb: NBModel,
     id_col: str,
-    carry_cols: tuple[str, ...],
+    label_col: str,
 ) -> DataFrame:
     """Score a per-doc feature table against a trained model: broadcast
     join on bucket, per-class whole-stage-codegen integer sums in one
-    groupBy(id), (score DESC, class DESC) tie-break."""
+    groupBy(id, label), (score DESC, class DESC) tie-break."""
     # model rows are bounded by n_buckets BY CONSTRUCTION — broadcast
     # without a count probe
     scored = feats.join(F.broadcast(nb.model), on="bucket", how="left")
@@ -188,7 +181,7 @@ def _score_from_feats(
         ).alias(f"__s_{i}")
         for i, c in enumerate(nb.classes)
     ]
-    per_doc = scored.groupBy(id_col, *carry_cols).agg(*score_cols)
+    per_doc = scored.groupBy(id_col, label_col).agg(*score_cols)
     ranked = F.sort_array(
         F.array(
             *[
@@ -206,62 +199,12 @@ def _score_from_feats(
         if len(nb.classes) > 1
         else F.lit(0).cast("long")
     )
-    return per_doc.select(
+    return per_doc.select(id_col, label_col, ranked.alias("__r")).select(
         id_col,
-        *carry_cols,
-        ranked.alias("__r"),
-    ).select(
-        id_col,
-        *carry_cols,
+        label_col,
         F.col("__r")[0]["cls"].alias("nb_pred"),
         margin.alias("nb_margin_unats"),
     )
-
-
-def train_nb(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    label_col: str,
-    gram_len: int = NB_DEFAULT_GRAM,
-    n_buckets: int = NB_DEFAULT_BUCKETS,
-) -> NBModel:
-    """Train multinomial NB on a labeled corpus (one corpus pass + one
-    bounded collect). Rows with NULL labels are excluded — no claimed
-    language to train on. Use with ``score_nb`` to score a DIFFERENT
-    (e.g. unlabeled, much larger) corpus; see ``nb_langid`` for the
-    single-pass self-train audit."""
-    # persist: the model DataFrame is LAZY over feats — without the
-    # cache, every downstream action on score_nb output would re-scan
-    # and re-aggregate the training corpus (the "one corpus pass"
-    # contract would silently become one-per-action)
-    feats = persist_tracked(
-        _doc_feats(
-            df.filter(F.col(label_col).isNotNull()),
-            id_col,
-            text_col,
-            (label_col,),
-            gram_len,
-            n_buckets,
-        )
-    )
-    return _train_from_feats(feats, id_col, label_col, gram_len, n_buckets)
-
-
-def score_nb(
-    df: DataFrame,
-    nb: NBModel,
-    id_col: str,
-    text_col: str,
-) -> DataFrame:
-    """Score any corpus against a trained model: one corpus pass to
-    per-doc bucket counts, broadcast model join, integer sums. Output:
-    (id, nb_pred, nb_margin_unats) — one row per doc with
-    ≥ model.gram_len chars."""
-    feats = _doc_feats(
-        df, id_col, text_col, (), nb.gram_len, nb.n_buckets
-    )
-    return _score_from_feats(feats, nb, id_col, ())
 
 
 def nb_langid(
@@ -294,9 +237,7 @@ def nb_langid(
     statistics) and scoring (broadcast model join + integer sums in
     one groupBy(id)), so self-train never scans the corpus twice.
     Class list and totals are driver-collected — bounded by the label
-    alphabet, not the data. At 100 TB, train on a sample with
-    ``train_nb`` and score the full corpus with ``score_nb`` — this
-    function is that pair over one shared feature pass.
+    alphabet, not the data.
 
     Rows with a NULL label are excluded — no claimed language to train
     on or audit (without the filter a None key would crash the sorted()
@@ -312,5 +253,5 @@ def nb_langid(
             n_buckets,
         )
     )
-    nb = _train_from_feats(feats, id_col, label_col, gram_len, n_buckets)
-    return _score_from_feats(feats, nb, id_col, (label_col,))
+    nb = _train_from_feats(feats, id_col, label_col, n_buckets)
+    return _score_from_feats(feats, nb, id_col, label_col)

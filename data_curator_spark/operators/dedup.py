@@ -35,11 +35,12 @@ from pyspark.sql import functions as F
 from data_curator_spark.engine.cache import persist_tracked
 from data_curator_spark.operators.kernels import (
     P31,
-    WS_RE,
     map_docs,
     md5_60,
+    nonblank,
     tokens,
     word_grams,
+    ws_tokens,
 )
 
 # connected_components broadcasts its (id, label) frames into the corpus
@@ -158,7 +159,7 @@ def word_shingles(text: Column, n: int = 3) -> Column:
     slice + array_join per gram, not n element_at lookups: one bounds
     check instead of n, measured ~2× faster at sf0.1 with byte-identical
     output (so the DuckDB shingle oracles are unaffected)."""
-    words = F.split(F.trim(text), WS_RE)
+    words = ws_tokens(text)
     idx = F.sequence(F.lit(1), F.size(words) - n + 1)
     grams = F.transform(idx, lambda i: F.array_join(F.slice(words, i, n), " "))
     return F.when(F.size(words) >= n, F.array_distinct(grams)).otherwise(
@@ -374,7 +375,7 @@ def simhash(df: DataFrame, id_col: str, content_col: str) -> DataFrame:
 
     Near-dups are docs whose fingerprints differ in ≤ max_hamming bits
     (compare with ``bit_count(a ^ b)``)."""
-    toks = F.filter(F.split(F.trim(F.col(content_col)), WS_RE), lambda t: t != "")
+    toks = F.filter(ws_tokens(content_col), lambda t: t != "")
     ex = df.select(F.col(id_col), F.explode(toks).alias("tok"))
     h = hex_prefix_long(F.col("tok"), 15)
     hx = ex.select(F.col(id_col), h.alias("h"))
@@ -1041,7 +1042,6 @@ def exact_substring_dedup(
     id_col: str,
     text_col: str,
     span_len: int = 8,
-    stats: bool = True,
     removal: bool = True,
     out_col: str = "text_despanned",
 ) -> DataFrame:
@@ -1050,23 +1050,23 @@ def exact_substring_dedup(
     ExactSubstr; the suffix-array reference implementation is
     github.com/google-research/deduplicate-text-datasets). Every
     ``span_len``-token window that occurs verbatim more than once
-    corpus-wide is "duplicated"; the MARKING half (``stats=True``)
-    reports per doc how many of its windows are duplicated and how many
-    tokens they cover, the REMOVAL half (``removal=True``) keeps each
-    window's globally-FIRST occurrence — first by (``id_col`` asc,
-    position asc), the same keep rule as ``dedup_segments_global`` —
-    and cuts every token covered by a later occurrence. Overlapping
-    duplicate windows union before counting/cutting.
+    corpus-wide is "duplicated"; the MARKING half reports per doc how
+    many of its windows are duplicated and how many tokens they cover,
+    the REMOVAL half (``removal=True``) keeps each window's
+    globally-FIRST occurrence — first by (``id_col`` asc, position
+    asc), the same keep rule as ``dedup_segments_global`` — and cuts
+    every token covered by a later occurrence. Overlapping duplicate
+    windows union before counting/cutting.
 
-    Tokenization is whitespace (``WS_RE``); rebuilt text joins
+    Tokenization is ``kernels.ws_tokens``; rebuilt text joins
     surviving tokens with a single space (the token view of the
     corpus, as in the reference implementation's detokenized re-emit).
 
-    Output: one row per non-null/non-blank-text input row. Always
-    (id, n_tokens); ``stats`` adds (n_dup_windows, dup_tokens,
-    dup_span_bp = dup_tokens·10000 DIV n_tokens, exact integer basis
-    points); ``removal`` adds (``out_col``, n_dropped). Docs shorter
-    than ``span_len`` tokens have no windows: zeros, text unchanged
+    Output: one row per non-null/non-blank-text input row —
+    (id, n_tokens, n_dup_windows, dup_tokens, dup_span_bp =
+    dup_tokens·10000 DIV n_tokens, exact integer basis points), plus
+    (``out_col``, n_dropped) with ``removal``. Docs shorter than
+    ``span_len`` tokens have no windows: zeros, text unchanged
     (space-normalized).
 
     Scale shape: the corpus TEXT never shuffles. (1) ONE ids-only
@@ -1086,75 +1086,61 @@ def exact_substring_dedup(
     """
     if span_len < 2:
         raise ValueError(f"span_len must be >= 2, got {span_len}")
-    if not (stats or removal):
-        raise ValueError("at least one of stats/removal must be requested")
     from pyspark.sql import Window
 
-    words = F.split(F.trim(F.col(text_col)), WS_RE)
-    base = df.filter(
-        F.col(text_col).isNotNull() & (F.trim(F.col(text_col)) != "")
-    ).select(F.col(id_col), words.alias("__ws"))
+    base = nonblank(df, text_col).select(
+        F.col(id_col), ws_tokens(text_col).alias("__ws")
+    )
 
     grams = _span_hash_rows(df, id_col, text_col, span_len)
-    mark_cols = []
     w_rn = Window.partitionBy("h").orderBy(
         F.col(id_col).asc(), F.col("pos").asc()
     )
-    if stats and removal:
+    if removal:
         # count over the SAME (partition, order) spec as the row_number
         # with an explicit whole-partition frame — identical value to a
         # frameless partition count, but both functions then share ONE
         # WindowExec pass over the sorted partitions instead of two
-        mark_cols.append(
+        mark_cols = [
             F.count(F.lit(1))
             .over(
                 w_rn.rowsBetween(
                     Window.unboundedPreceding, Window.unboundedFollowing
                 )
             )
-            .alias("__c")
-        )
-    elif stats:
-        # stats-only callers keep the frameless count: no orderBy means
-        # the window needs no (id, pos) sort at all
-        mark_cols.append(
-            F.count(F.lit(1)).over(Window.partitionBy("h")).alias("__c")
-        )
-    if removal:
-        mark_cols.append(F.row_number().over(w_rn).alias("__rn"))
+            .alias("__c"),
+            F.row_number().over(w_rn).alias("__rn"),
+        ]
+    else:
+        # marking alone keeps the frameless count: no orderBy means the
+        # window needs no (id, pos) sort at all
+        mark_cols = [F.count(F.lit(1)).over(Window.partitionBy("h")).alias("__c")]
     marked = grams.select(id_col, "pos", *mark_cols)
 
     # ONE groupBy(id) pass serves both halves: collect_list skips the
     # nulls the when() produces, so each doc row carries exactly its
-    # duplicated starts (stats) and/or its loser starts (removal);
-    # the post-agg filter keeps the join table bounded by AFFECTED
-    # docs, not docs-with-windows
+    # duplicated starts and, with removal, its loser starts; the
+    # post-agg filter keeps the join table bounded by AFFECTED docs,
+    # not docs-with-windows.
     # drop the non-duplicated windows BEFORE the per-doc groupBy: a row
     # with __c == 1 and __rn == 1 contributes null to every collected
     # list (collect_list skips nulls), so filtering it first is a pure
     # no-op on the output while shrinking the groupBy input from
     # every-window-in-the-corpus to just the duplicated ones — in a
     # mostly-unique corpus, orders of magnitude fewer rows
-    dup_pred = None
-    agg_cols, keep_pred = [], None
-    if stats:
-        dup_pred = F.col("__c") > 1
-        agg_cols.append(
-            F.collect_list(F.when(F.col("__c") > 1, F.col("pos"))).alias(
-                "__starts"
-            )
-        )
-        keep_pred = F.size("__starts") > 0
+    dup_pred = F.col("__c") > 1
+    agg_cols = [
+        F.collect_list(F.when(F.col("__c") > 1, F.col("pos"))).alias("__starts")
+    ]
+    keep_pred = F.size("__starts") > 0
     if removal:
-        p_rn = F.col("__rn") > 1
-        dup_pred = p_rn if dup_pred is None else (dup_pred | p_rn)
+        dup_pred = dup_pred | (F.col("__rn") > 1)
         agg_cols.append(
             F.collect_list(F.when(F.col("__rn") > 1, F.col("pos"))).alias(
                 "__lstarts"
             )
         )
-        p = F.size("__lstarts") > 0
-        keep_pred = p if keep_pred is None else (keep_pred | p)
+        keep_pred = keep_pred | (F.size("__lstarts") > 0)
     affected = marked.filter(dup_pred).groupBy(id_col).agg(*agg_cols).filter(keep_pred)
     out = base.join(affected, on=id_col, how="left")
 
@@ -1165,18 +1151,18 @@ def exact_substring_dedup(
             )
         )
 
-    cols = [F.col(id_col), F.size("__ws").cast("long").alias("n_tokens")]
-    if stats:
-        cols += [
-            F.when(F.col("__starts").isNull(), F.lit(0))
-            .otherwise(F.size("__starts"))
-            .cast("long")
-            .alias("n_dup_windows"),
-            F.when(F.col("__starts").isNull(), F.lit(0))
-            .otherwise(F.size(span_union(F.col("__starts"))))
-            .cast("long")
-            .alias("dup_tokens"),
-        ]
+    cols = [
+        F.col(id_col),
+        F.size("__ws").cast("long").alias("n_tokens"),
+        F.when(F.col("__starts").isNull(), F.lit(0))
+        .otherwise(F.size("__starts"))
+        .cast("long")
+        .alias("n_dup_windows"),
+        F.when(F.col("__starts").isNull(), F.lit(0))
+        .otherwise(F.size(span_union(F.col("__starts"))))
+        .cast("long")
+        .alias("dup_tokens"),
+    ]
     if removal:
         cuts = span_union(F.col("__lstarts"))
         kept = F.when(
@@ -1197,65 +1183,6 @@ def exact_substring_dedup(
             .cast("long")
             .alias("n_dropped"),
         ]
-    out = out.select(*cols)
-    if stats:
-        out = out.withColumn(
-            "dup_span_bp", F.expr("dup_tokens * 10000 DIV n_tokens")
-        )
-    return out
-
-
-def duplicated_span_stats(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    span_len: int = 8,
-) -> DataFrame:
-    """The MARKING half of exact-substring dedup — see
-    ``exact_substring_dedup`` (this is that kernel with
-    ``removal=False``, so the cut/rebuild subtree is never built).
-    Output: one row per non-null/non-blank-text input row —
-    (id, n_tokens, n_dup_windows, dup_tokens, dup_span_bp)."""
-    return exact_substring_dedup(
-        df, id_col, text_col, span_len=span_len, stats=True, removal=False
-    ).select(id_col, "n_tokens", "n_dup_windows", "dup_tokens", "dup_span_bp")
-
-
-def remove_duplicated_spans(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    span_len: int = 8,
-    out_col: str = "text_despanned",
-) -> DataFrame:
-    """The REMOVAL half of exact-substring dedup — see
-    ``exact_substring_dedup`` (this is that kernel with ``stats=False``,
-    so the marking subtree is never built), plus the row-completeness
-    contract: one row per INPUT row — null text stays null (null
-    counts), whitespace-only text becomes the empty string with
-    n_tokens = 0. Output: (id, ``out_col``, n_tokens, n_dropped)."""
-    core = exact_substring_dedup(
-        df,
-        id_col,
-        text_col,
-        span_len=span_len,
-        stats=False,
-        removal=True,
-        out_col=out_col,
-    ).select(id_col, out_col, "n_tokens", "n_dropped")
-    base = df.select(F.col(id_col), F.col(text_col))
-    blank_rows = base.filter(
-        F.col(text_col).isNotNull() & (F.trim(F.col(text_col)) == "")
-    ).select(
-        F.col(id_col),
-        F.lit("").alias(out_col),
-        F.lit(0).cast("long").alias("n_tokens"),
-        F.lit(0).cast("long").alias("n_dropped"),
+    return out.select(*cols).withColumn(
+        "dup_span_bp", F.expr("dup_tokens * 10000 DIV n_tokens")
     )
-    null_rows = base.filter(F.col(text_col).isNull()).select(
-        F.col(id_col),
-        F.lit(None).cast("string").alias(out_col),
-        F.lit(None).cast("long").alias("n_tokens"),
-        F.lit(None).cast("long").alias("n_dropped"),
-    )
-    return core.unionByName(blank_rows).unionByName(null_rows)

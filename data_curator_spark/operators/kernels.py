@@ -11,9 +11,12 @@ bigint id never detours through a pandas float64).
 The tokenizer, gram builder and hash are defined here once, each equal
 to the Spark expression the DuckDB oracles mirror:
 
-- ``tokens(x)`` == ``split(trim(x), WS_RE)``: Spark's ``trim`` strips
-  0x20 only (Python ``.strip(" ")``), and ``re.split`` keeps leading
-  and trailing empty fields like Java ``split`` with limit −1.
+- ``ws_tokens(c)`` is the one whitespace tokenizer of the package,
+  ``split(trim(c), WS_RE)`` as a Column; ``nonblank(df, c)`` keeps the
+  docs whose text is neither NULL nor blank, the rows it has tokens
+  for. ``tokens(x)`` is its Python twin: Spark's ``trim`` strips 0x20
+  only (Python ``.strip(" ")``), and ``re.split`` keeps leading and
+  trailing empty fields like Java ``split`` with limit −1.
 - ``md5_60(g)`` == ``hex_prefix_long(g, 15)``, the first 60 bits of
   md5 as a non-negative long; ``md5_60(g) >> 28`` is the first 32 bits
   (``md5[:8]``), the MinHash base before ``% P31``.
@@ -26,7 +29,8 @@ import itertools
 import re
 
 import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_type
 from pyspark.sql.types import StructField, StructType
 
@@ -38,6 +42,18 @@ MEMO_SIZE = 1 << 18
 
 _WS = re.compile(WS_RE)
 _MEMO: dict[str, int] = {}
+
+
+def ws_tokens(c: Column | str) -> Column:
+    """Whitespace tokens of text column ``c``: ``split(trim(c), WS_RE)``."""
+    return F.split(F.trim(c), WS_RE)
+
+
+def nonblank(df: DataFrame, text_col: str) -> DataFrame:
+    """The rows of ``df`` whose ``text_col`` is neither NULL nor blank."""
+    return df.filter(
+        F.col(text_col).isNotNull() & (F.trim(F.col(text_col)) != "")
+    )
 
 
 def tokens(txt: str | None) -> list[str] | None:

@@ -15,9 +15,10 @@ documents against that model, with no external artifact:
 
 The core every trainer and scorer shares:
 
-- ``_words`` is the one tokenizer, ``split(trim(text), WS_RE)`` over
-  docs with non-blank text (``kernels.tokens`` is its Python twin). It
-  feeds ``_tokens`` (id, w) and ``_bigram_pairs`` (id, l, r).
+- ``_tokens`` (id, w) and ``_bigram_pairs`` (id, l, r) tokenize the
+  docs that ``kernels.nonblank`` keeps with the package's one
+  tokenizer, ``kernels.ws_tokens`` (``kernels.tokens`` is its Python
+  twin).
 - Training is a hash aggregation to a count table. A denominator (the
   token total T for MLE, T + V + 1 for Laplace) is a one-row aggregate
   cross-joined into the plan, never collected, so building a scorer
@@ -55,7 +56,7 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from data_curator_spark.operators.kernels import WS_RE, map_docs, tokens
+from data_curator_spark.operators.kernels import map_docs, nonblank, tokens, ws_tokens
 
 # micro-nat quantization: FLOOR(ln(p) · 2^20). |ln(p)| < 50 for any
 # vocab above 1e-22 probability → |lp_q| < 2^26; a doc of 10^9 tokens
@@ -80,25 +81,22 @@ def _lp(num: Column, den: Column) -> Column:
     ).cast("long")
 
 
-def _words(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, __ws): the whitespace tokens of every doc with non-blank
-    text — the one tokenizer of this module."""
-    text = F.trim(F.col(text_col))
-    return df.filter(F.col(text_col).isNotNull() & (text != "")).select(
-        F.col(id_col), F.split(text, WS_RE).alias("__ws")
-    )
-
-
 def _tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, w): one row per token."""
-    return _words(df, id_col, text_col).select(
-        id_col, F.explode("__ws").alias("w")
+    return (
+        nonblank(df, text_col)
+        .select(F.col(id_col), ws_tokens(text_col).alias("__ws"))
+        .select(id_col, F.explode("__ws").alias("w"))
     )
 
 
 def _bigram_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, l, r): bigram positions 1..n-1 of each ≥2-token doc."""
-    ws = _words(df, id_col, text_col).filter(F.size("__ws") >= 2)
+    ws = (
+        nonblank(df, text_col)
+        .select(F.col(id_col), ws_tokens(text_col).alias("__ws"))
+        .filter(F.size("__ws") >= 2)
+    )
     pair = F.transform(
         F.sequence(F.lit(1), F.size("__ws") - 1),
         lambda i: F.struct(
@@ -322,7 +320,7 @@ def bigram_repetition_stats(
 
     ONE ``map_docs`` pass: the grouping key is the document, so per-doc
     Counters need no explode and no shuffle at all. Tokens are
-    ``split(trim(text), WS_RE)``; bigram identity by token PAIR equals
+    ``kernels.tokens``; bigram identity by token PAIR equals
     the space-joined gram string because tokens cannot contain
     whitespace."""
 

@@ -42,15 +42,6 @@ def _strata_case(strata_col: str, mapping: dict[str, int], default: int) -> Colu
     return out
 
 
-def hash_sample(
-    df: DataFrame, id_col: str, rate_permille: int, salt: str = "sample"
-) -> DataFrame:
-    """Keep ~rate_permille/1000 of rows, deterministically by id. The
-    predicate is a pure scan-level filter — no shuffle, no state, prunes
-    at the source."""
-    return df.filter(sample_gate(F.col(id_col), salt) < rate_permille)
-
-
 def stratified_sample(
     df: DataFrame,
     id_col: str,
@@ -62,7 +53,8 @@ def stratified_sample(
     """Per-stratum deterministic sampling: each stratum value gets its
     own keep-rate (out-of-dict strata use ``default_permille``). The
     rate map becomes a CASE expression — still a scan-level filter, so
-    downsampling a dominant source costs zero shuffle."""
+    downsampling a dominant source costs zero shuffle. An empty rate
+    map is a uniform sample at ``default_permille``."""
     gate = sample_gate(F.col(id_col), salt)
     return df.filter(gate < _strata_case(strata_col, rates_permille, default_permille))
 
@@ -77,7 +69,7 @@ def hash_split(
     """Deterministic disjoint train/val/test-style assignment: each row
     lands in exactly one named split by its id hash. ``splits`` maps
     name -> permille and must sum to 1000 (total partition — every row
-    is assigned; use ``hash_sample`` first to subsample).
+    is assigned; use ``stratified_sample`` first to subsample).
 
     Assignment is insertion-order cumulative: {"train": 900, "val": 50,
     "test": 50} puts gate<900 in train, 900-949 in val, 950-999 in

@@ -667,12 +667,12 @@ def with_span_dedup(
     Scale shape: the marking kernel shuffles (id, pos, 8-byte hash)
     only; the demotion table is filtered to OVER-threshold docs before
     the left join back, so the corpus streams once."""
-    from data_curator_spark.operators.dedup import duplicated_span_stats
+    from data_curator_spark.operators.dedup import exact_substring_dedup
 
     return _demote_over_threshold(
         df,
-        lambda keyed: duplicated_span_stats(
-            keyed, "__doc_id", content, span_len=span_len
+        lambda keyed: exact_substring_dedup(
+            keyed, "__doc_id", content, span_len=span_len, removal=False
         ),
         stat_col="dup_span_bp",
         reason="dup_spans",

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_curator_spark.engine.cache import persist_tracked
+from data_curator_spark.operators import kernels
 
 MONEY = "decimal(14,2)"  # covers all money/qty/rate columns in testdata
 
@@ -692,7 +693,7 @@ HAVING COUNT(*) > 1
 # md5-prefix + affine-mod-2^31−1 scheme, so DuckDB reproduces the exact
 # MinHash/SimHash integers) -------------------------------------------------
 
-_WS_SQL = "'[ \\n\\t\\r]+'"  # same charset as dedup.WS_RE
+_WS_SQL = f"'{kernels.WS_RE}'"  # the tokenizer's regex as a SQL literal
 
 
 def _hex_long_sql(col: str, n_hex: int) -> str:
@@ -2729,10 +2730,8 @@ def _lang_tokens(d: DataFrame) -> DataFrame:
     distinct_sketch — one definition, kept in lockstep with the
     oracles' string_split_regex(trim(text), _WS_SQL) / tok <> '' CTEs
     (the two queries are meant to be compared against each other)."""
-    from data_curator_spark.operators.dedup import WS_RE
-
     return _spread(d).select(
-        "lang", F.explode(F.split(F.trim("text"), WS_RE)).alias("tok")
+        "lang", F.explode(kernels.ws_tokens("text")).alias("tok")
     ).filter(F.col("tok") != "")
 
 
@@ -2774,12 +2773,11 @@ def q_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-threshold sampling — 1/16 of the distinct space shuffles, the
     estimate is an exact integer function of the data (oracle-exact,
     unlike HLL). Compare with vocab_stats.n_types for the error."""
-    from data_curator_spark.operators.dedup import WS_RE
     from data_curator_spark.operators.sampling import theta_distinct_estimate
 
     d = _t(spark, sf_dir, "documents")
     toks = d.select(
-        "lang", F.explode(F.split(F.trim("text"), WS_RE)).alias("tok")
+        "lang", F.explode(kernels.ws_tokens("text")).alias("tok")
     ).filter(F.col("tok") != "")
     return theta_distinct_estimate(toks, "lang", "tok", log2_ratio=4)
 
@@ -2860,11 +2858,11 @@ def q_line_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_segments_global — the C4/RefinedWeb repeated-paragraph
     removal, word granularity on this single-line table), and the
     the Lee-et-al exact-substring duplicated-SPAN marking stats
-    (operators/dedup.py:duplicated_span_stats, span_len=8: per doc,
+    (operators/dedup.py:exact_substring_dedup, span_len=8: per doc,
     how many 8-token windows occur verbatim anywhere else in the
     corpus and how many tokens they cover), and its REMOVAL half
-    (operators/dedup.py:remove_duplicated_spans — cut every token
-    covered by a non-globally-first duplicate window; despan_sha pins
+    (the same kernel — cut every token covered by a
+    non-globally-first duplicate window; despan_sha pins
     the exact rebuilt text, n_span_dropped the cut count). Line stats
     are a zero-shuffle projection; bigram stats keep their (doc, gram)
     map-side-combined aggregate; segment dedup adds one ids-only hash
@@ -2898,9 +2896,7 @@ def q_line_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # marking + removal halves of ExactSubstr from ONE kernel call —
     # the shared (id, pos, hash) window layout is computed once
-    es = exact_substring_dedup(
-        d, "doc_id", "text", span_len=8, stats=True, removal=True
-    ).select(
+    es = exact_substring_dedup(d, "doc_id", "text", span_len=8).select(
         "doc_id",
         "n_dup_windows",
         "dup_tokens",
@@ -3356,11 +3352,9 @@ def q_bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject (per-partition heaps, no global sort).
     Character slicing is UTF-8-character-based in both engines, so CJK
     text counts identically."""
-    from data_curator_spark.operators.dedup import WS_RE
-
     d = _spread(_t(spark, sf_dir, "documents"))
     toks = d.select(
-        F.explode(F.split(F.trim("text"), WS_RE)).alias("w")
+        F.explode(kernels.ws_tokens("text")).alias("w")
     ).filter(F.col("w") != "")
     wc = toks.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
     pairs = wc.filter(F.length("w") >= 2).select(

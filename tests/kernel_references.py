@@ -24,12 +24,14 @@ from pyspark.sql import functions as F
 from data_curator_spark.operators.classifier import NB_DEFAULT_BUCKETS, NB_DEFAULT_GRAM
 from data_curator_spark.operators.dedup import (
     P31,
-    WS_RE,
     hex_prefix_long,
     minhash_params,
     span_window_grams,
     word_shingles,
 )
+# the tokenizer is written out again below, not called through
+# kernels.ws_tokens: a reference must not share the code it checks
+from data_curator_spark.operators.kernels import WS_RE
 from data_curator_spark.operators.similarity import dot
 from data_curator_spark.pipeline import spec
 

@@ -105,81 +105,6 @@ def test_nb_langid_all_null_raises(spark):
         nb_langid(df, "doc_id", "text", "lang")
 
 
-def test_train_score_split_heldout(spark):
-    """train_nb on a labeled sample, score_nb on UNSEEN docs from the
-    same separable distributions: held-out generalization — every
-    held-out doc classified correctly with positive margin."""
-    import random
-
-    from data_curator_spark.operators.classifier import score_nb, train_nb
-
-    rng = random.Random(29)
-
-    def doc(alpha):
-        return " ".join(
-            "".join(rng.choice(alpha) for _ in range(5)) for _ in range(12)
-        )
-
-    train_rows = []
-    i = 0
-    for _ in range(25):
-        train_rows.append((i, doc("abcdef"), "aa")); i += 1
-        train_rows.append((i, doc("uvwxyz"), "zz")); i += 1
-    heldout = []
-    for _ in range(10):
-        heldout.append((i, doc("abcdef"), "aa")); i += 1
-        heldout.append((i, doc("uvwxyz"), "zz")); i += 1
-
-    model = train_nb(
-        _mk(spark, train_rows), "doc_id", "text", "lang"
-    )
-    assert model.classes == ("aa", "zz")
-    scored = {
-        r["doc_id"]: (r["nb_pred"], r["nb_margin_unats"])
-        for r in score_nb(
-            _mk(spark, heldout).select("doc_id", "text"),
-            model,
-            "doc_id",
-            "text",
-        ).collect()
-    }
-    truth = {i: lang for i, _, lang in heldout}
-    assert set(scored) == set(truth)
-    for i, (pred, margin) in scored.items():
-        assert pred == truth[i]
-        assert margin > 0
-
-
-def test_self_train_composition_matches_nb_langid(spark):
-    """nb_langid ≡ train_nb + score_nb over the same corpus (the shared
-    feature-pass composition changes the plan, not the values)."""
-    from data_curator_spark.operators.classifier import (
-        nb_langid,
-        score_nb,
-        train_nb,
-    )
-
-    rows = [
-        (1, "hello world the quick brown fox", "en"),
-        (2, "der schnelle braune fuchs springt", "de"),
-        (3, "hello welt the quick fuchs", "en"),
-        (4, "der brown world springt quick", "de"),
-    ]
-    df = _mk(spark, rows)
-    a = {
-        r["doc_id"]: (r["nb_pred"], r["nb_margin_unats"])
-        for r in nb_langid(df, "doc_id", "text", "lang").collect()
-    }
-    model = train_nb(df, "doc_id", "text", "lang")
-    b = {
-        r["doc_id"]: (r["nb_pred"], r["nb_margin_unats"])
-        for r in score_nb(
-            df.select("doc_id", "text"), model, "doc_id", "text"
-        ).collect()
-    }
-    assert a == b
-
-
 def test_doc_feats_arrow_matches_expression(spark):
     """The Arrow per-doc bucket-count kernel must equal the JVM
     explode+groupBy reference exactly (same md5 buckets, same counts),

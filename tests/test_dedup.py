@@ -400,7 +400,7 @@ def test_duplicated_span_stats_cross_doc(spark):
     """Windows shared across docs mark both docs; coverage is the
     distinct-token union of overlapping duplicated windows; short and
     unique docs report zeros; null text is excluded."""
-    from data_curator_spark.operators.dedup import duplicated_span_stats
+    from data_curator_spark.operators.dedup import exact_substring_dedup
 
     rows = [
         (1, "a b c d e f"),
@@ -412,8 +412,8 @@ def test_duplicated_span_stats_cross_doc(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = {
         r.doc_id: (r.n_tokens, r.n_dup_windows, r.dup_tokens, r.dup_span_bp)
-        for r in duplicated_span_stats(
-            df, "doc_id", "text", span_len=3
+        for r in exact_substring_dedup(
+            df, "doc_id", "text", span_len=3, removal=False
         ).collect()
     }
     # "b c d" and "c d e" are shared; union covers tokens 2-5 (4 of 6)
@@ -427,12 +427,14 @@ def test_duplicated_span_stats_cross_doc(spark):
 def test_duplicated_span_stats_intra_doc_repeat(spark):
     """A span repeated inside ONE doc is duplicated too (count is over
     all occurrences, not distinct docs) — the Lee et al. rule."""
-    from data_curator_spark.operators.dedup import duplicated_span_stats
+    from data_curator_spark.operators.dedup import exact_substring_dedup
 
     df = spark.createDataFrame(
         [(1, "m n o z m n o")], "doc_id long, text string"
     )
-    (r,) = duplicated_span_stats(df, "doc_id", "text", span_len=3).collect()
+    (r,) = exact_substring_dedup(
+        df, "doc_id", "text", span_len=3, removal=False
+    ).collect()
     # "m n o" occurs at pos 1 and pos 5 -> both marked, covering 6 of 7
     assert (r.n_tokens, r.n_dup_windows, r.dup_tokens, r.dup_span_bp) == (
         7, 2, 6, 8571,
@@ -442,19 +444,19 @@ def test_duplicated_span_stats_intra_doc_repeat(spark):
 def test_duplicated_span_stats_validates(spark):
     import pytest
 
-    from data_curator_spark.operators.dedup import duplicated_span_stats
+    from data_curator_spark.operators.dedup import exact_substring_dedup
 
     df = spark.createDataFrame([(1, "a")], "doc_id long, text string")
     with pytest.raises(ValueError, match="span_len"):
-        duplicated_span_stats(df, "doc_id", "text", span_len=1)
+        exact_substring_dedup(df, "doc_id", "text", span_len=1, removal=False)
 
 
 def test_remove_duplicated_spans_keeps_global_first(spark):
     """The globally-first occurrence (by id, pos) of a duplicated
     window survives intact; later occurrences lose the union of their
-    covered tokens. Short/unique docs pass through; null stays null;
-    whitespace-only becomes empty with zero counts."""
-    from data_curator_spark.operators.dedup import remove_duplicated_spans
+    covered tokens. Short/unique docs pass through; null and
+    whitespace-only text have no row."""
+    from data_curator_spark.operators.dedup import exact_substring_dedup
 
     rows = [
         (1, "a b c d e f"),
@@ -466,8 +468,8 @@ def test_remove_duplicated_spans_keeps_global_first(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = {
         r.doc_id: (r.text_despanned, r.n_tokens, r.n_dropped)
-        for r in remove_duplicated_spans(
-            df, "doc_id", "text", span_len=3
+        for r in exact_substring_dedup(
+            df, "doc_id", "text", span_len=3, removal=True
         ).collect()
     }
     # doc 1 holds the first occurrence of both shared windows -> intact
@@ -476,26 +478,27 @@ def test_remove_duplicated_spans_keeps_global_first(spark):
     # 2..5 cut as one block
     assert out[2] == ("x y", 6, 4)
     assert out[3] == ("p q r", 3, 0)
-    assert out[4] == ("", 0, 0)
-    assert out[5] == (None, None, None)
+    assert set(out) == {1, 2, 3}
 
 
 def test_remove_duplicated_spans_intra_doc(spark):
     """A window repeated inside ONE doc keeps its first position and
     cuts the later one — the Lee et al. rule at intra-doc granularity."""
-    from data_curator_spark.operators.dedup import remove_duplicated_spans
+    from data_curator_spark.operators.dedup import exact_substring_dedup
 
     df = spark.createDataFrame(
         [(1, "m n o z m n o")], "doc_id long, text string"
     )
-    (r,) = remove_duplicated_spans(df, "doc_id", "text", span_len=3).collect()
+    (r,) = exact_substring_dedup(
+        df, "doc_id", "text", span_len=3, removal=True
+    ).collect()
     assert (r.text_despanned, r.n_tokens, r.n_dropped) == ("m n o z", 7, 3)
 
 
 def test_remove_duplicated_spans_overlap_union(spark):
     """Overlapping duplicate windows in the SAME later doc union into
     one cut block (no double counting)."""
-    from data_curator_spark.operators.dedup import remove_duplicated_spans
+    from data_curator_spark.operators.dedup import exact_substring_dedup
 
     # doc 2 repeats doc 1's full 4-token run: windows (pos1, pos2)
     # overlap on tokens 2-3 -> union covers tokens 1-4 exactly once
@@ -503,8 +506,8 @@ def test_remove_duplicated_spans_overlap_union(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = {
         r.doc_id: (r.text_despanned, r.n_dropped)
-        for r in remove_duplicated_spans(
-            df, "doc_id", "text", span_len=3
+        for r in exact_substring_dedup(
+            df, "doc_id", "text", span_len=3, removal=True
         ).collect()
     }
     assert out[1] == ("a b c d", 0)
@@ -514,11 +517,11 @@ def test_remove_duplicated_spans_overlap_union(spark):
 def test_remove_duplicated_spans_validates(spark):
     import pytest
 
-    from data_curator_spark.operators.dedup import remove_duplicated_spans
+    from data_curator_spark.operators.dedup import exact_substring_dedup
 
     df = spark.createDataFrame([(1, "a")], "doc_id long, text string")
     with pytest.raises(ValueError, match="span_len"):
-        remove_duplicated_spans(df, "doc_id", "text", span_len=1)
+        exact_substring_dedup(df, "doc_id", "text", span_len=1, removal=True)
 
 
 def _ref_exact_substr(docs, span):

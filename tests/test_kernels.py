@@ -15,7 +15,7 @@ from data_curator_spark.operators.dedup import (
     hex_prefix_long,
     minhash_signatures,
 )
-from data_curator_spark.operators.kernels import P31, WS_RE, md5_60, tokens
+from data_curator_spark.operators.kernels import P31, md5_60, tokens, ws_tokens
 from data_curator_spark.operators.lm import bigram_repetition_stats
 
 # the adversarial strings of the differential tests in test_dedup.py,
@@ -41,7 +41,7 @@ def test_tokenizer_and_hash_match_spark_expressions(spark):
         list(enumerate(ADVERSARIAL)), "i int, text string"
     ).select(
         "i",
-        F.split(F.trim("text"), WS_RE).alias("toks"),
+        ws_tokens("text").alias("toks"),
         hex_prefix_long(F.col("text"), 15).alias("h60"),
         (hex_prefix_long(F.col("text"), 8) % F.lit(P31)).alias("base"),
     )

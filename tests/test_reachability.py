@@ -29,15 +29,8 @@ ALLOWED = {
     ("data_curator_spark.engine.consolidate", "consolidate_with_repair"),
     # the reference port's curate loop (PAPER.md)
     ("data_curator_spark.curator", "curate"),
-    # nb_langid's at-scale split: train on a labeled sample...
-    ("data_curator_spark.operators.classifier", "train_nb"),
-    # ...then score the full corpus against that model
-    ("data_curator_spark.operators.classifier", "score_nb"),
-    # row-complete removal half of exact_substring_dedup (line_repetition's kernel)
-    ("data_curator_spark.operators.dedup", "remove_duplicated_spans"),
-    # scan-level filter over sample_gate, the hash every sampler shares
-    ("data_curator_spark.operators.sampling", "hash_sample"),
-    # the MVCC layout's current-state reader (the CLI exports via read_snapshot)
+    # the MVCC layout's current-state read, which the lifecycle property
+    # test pins (the CLI exports via read_snapshot)
     ("data_curator_spark.pipeline.mvcc", "read_current"),
     # run from the spark-submit command line in session.py's docstring
     ("data_curator_spark.session", "cluster_conf"),
@@ -223,3 +216,39 @@ def test_resolution_goes_through_imports(tmp_path):
     refs = _references(index, src)
     assert ("data_curator_spark.functions.text", "whitespace_token_count") in refs
     assert ("data_curator_spark.functions.text", "fingerprint") not in refs
+
+
+def _tokenizer_copies(path: Path) -> list[str]:
+    """Where a package module outside ``operators/kernels.py`` names
+    ``WS_RE`` or spells out its regex: every such module must tokenize
+    through ``kernels.ws_tokens``. The one exception is the assignment
+    in queries.py that turns the regex into the oracles' SQL literal."""
+    mod = _module_name(path)
+    if mod == f"{PKG}.operators.kernels":
+        return []
+    tree = ast.parse(path.read_text(), str(path))
+    allowed: set[int] = set()
+    if mod == f"{PKG}.queries":
+        for node in tree.body:
+            if isinstance(node, ast.Assign) and any(
+                isinstance(t, ast.Name) and t.id == "_WS_SQL" for t in node.targets
+            ):
+                allowed |= {id(n) for n in ast.walk(node)}
+    found = []
+    for node in ast.walk(tree):
+        if id(node) in allowed:
+            continue
+        hit = (
+            (isinstance(node, ast.Name) and node.id == "WS_RE")
+            or (isinstance(node, ast.Attribute) and node.attr == "WS_RE")
+            or (isinstance(node, ast.alias) and node.name == "WS_RE")
+            or (isinstance(node, ast.Constant) and node.value == "[ \\n\\t\\r]+")
+        )
+        if hit:
+            found.append(f"{mod}:{node.lineno}")
+    return found
+
+
+def test_one_whitespace_tokenizer():
+    copies = [hit for path in _package_files() for hit in _tokenizer_copies(path)]
+    assert not copies, "tokenize with kernels.ws_tokens, not WS_RE: " + ", ".join(copies)

@@ -5,24 +5,27 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from data_curator_spark.operators.sampling import hash_sample, stratified_sample
+from data_curator_spark.operators.sampling import stratified_sample
+
+
+def uniform_sample(df, rate_permille, salt="sample"):
+    """A uniform hash sample: the empty rate map sends every row through
+    ``sample_gate`` at ``rate_permille``."""
+    return stratified_sample(df, "doc_id", "doc_id", {}, rate_permille, salt=salt)
 
 
 def test_sample_invariant_under_partitioning(spark):
     df = spark.range(5000).select(F.col("id").alias("doc_id"))
-    a = {r["doc_id"] for r in hash_sample(df, "doc_id", 100).collect()}
-    b = {
-        r["doc_id"]
-        for r in hash_sample(df.repartition(17), "doc_id", 100).collect()
-    }
+    a = {r["doc_id"] for r in uniform_sample(df, 100).collect()}
+    b = {r["doc_id"] for r in uniform_sample(df.repartition(17), 100).collect()}
     assert a == b  # df.sample would fail this
     assert 0.07 < len(a) / 5000 < 0.13  # ~10%
 
 
 def test_salts_give_independent_samples(spark):
     df = spark.range(5000).select(F.col("id").alias("doc_id"))
-    a = {r["doc_id"] for r in hash_sample(df, "doc_id", 200, salt="s1").collect()}
-    b = {r["doc_id"] for r in hash_sample(df, "doc_id", 200, salt="s2").collect()}
+    a = {r["doc_id"] for r in uniform_sample(df, 200, salt="s1").collect()}
+    b = {r["doc_id"] for r in uniform_sample(df, 200, salt="s2").collect()}
     overlap = len(a & b) / max(len(a), 1)
     assert 0.1 < overlap < 0.35  # ~rate of an independent 20% sample
 
@@ -50,7 +53,7 @@ def test_scan_level_filter_no_shuffle(spark, tmp_path):
     df = spark.range(1000).select(F.col("id").alias("doc_id"))
     df.write.mode("overwrite").parquet(str(tmp_path / "ids"))
     src = spark.read.parquet(str(tmp_path / "ids"))
-    plan = hash_sample(src, "doc_id", 100)._jdf.queryExecution().explainString(
+    plan = uniform_sample(src, 100)._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
     assert "Exchange" not in plan

@@ -35,7 +35,9 @@ def main() -> None:
             )
         except Exception as e:  # noqa: BLE001
             plan = f"ERROR: {e}"
-        plan = re.sub(r"#\d+", "#", plan)  # strip expr ids for diffability
+        # strip expression and exchange ids: they count up per session
+        plan = re.sub(r"#\d+", "#", plan)
+        plan = re.sub(r"plan_id=\d+", "plan_id=", plan)
         n_ex = len(re.findall(r"\(\d+\) Exchange", plan))
         out.append(f"\n## {name}  (exchanges: {n_ex})\n\n```\n{plan.strip()}\n```\n")
     with open(ROOT / "PLANS.md", "w") as f:
