@@ -92,14 +92,30 @@ def _spread(df: DataFrame, by: str | None = None) -> DataFrame:
     core; at cluster scale inputs arrive in many splits and this is a
     no-op (partitions already ≥ parallelism).
 
-    ``by``: HASH-partition on that column instead of round-robin. Use
-    it when the downstream pipeline aggregates per ``by`` (per-doc
-    token/gram groupBys): HashPartitioning(by) satisfies the clustered
-    distribution of every groupBy whose keys include ``by``, so those
-    aggregations reuse THIS exchange instead of shuffling the (much
-    larger) exploded gram rows — measured one Exchange total for
-    repartition→explode→groupBy(id,g)→groupBy(id) vs three (guide
-    §2.4: operations keyed the same way share one exchange)."""
+    ``by``: HASH-partition on that column instead of round-robin.
+    HashPartitioning(by) satisfies the clustered distribution of every
+    groupBy whose keys include ``by``, and it survives JVM operators
+    that keep the column (project, filter, explode, broadcast joins, a
+    persist). A per-``by`` aggregation above those reuses THIS exchange
+    instead of shuffling the (much larger) exploded gram rows: one
+    Exchange for repartition→explode→groupBy(id,g)→groupBy(id) instead
+    of three (guide §2.4: operations keyed the same way share one
+    exchange). The executed plans show that reuse in simhash_near,
+    bpe_encode and the LM queries (unigram_surprisal, bigram_surprisal,
+    dsir_importance, and heldout_perplexity, whose two per-doc branches
+    also join on doc_id with no exchange).
+
+    The partitioning does NOT survive a ``mapInArrow``/``mapInPandas``
+    kernel: it emits new attributes, so Spark no longer knows how its
+    output is partitioned. decontaminate (``hashpartitioning(doc_id, h)``
+    and ``(doc_id)``), doc_quality_stats (``(doc_id, lang)`` after the
+    NB feature kernel) and boilerplate_strip (``(doc_id)`` for the
+    per-doc collect_list) shuffle again after their Arrow pass.
+    line_repetition's per-doc collect_lists shuffle on ``(doc_id)`` too,
+    and would even without the kernel: they sit above a window keyed by
+    the segment hash. In those, and in minhash_lsh, ngram_jaccard,
+    dedup_clusters and repetition_profile, which aggregate nothing per
+    doc after the kernel, ``by`` only spreads the kernel's input."""
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target, F.col(by)) if by else df.repartition(target)

@@ -7,7 +7,11 @@ measured after one untimed warm-up pass over all of them:
   the query function builds its DataFrame, before any action;
 - ``noop_jobs``/``noop_s``: the same for writing that DataFrame to the
   ``noop`` sink, which materialises every output column (``count()``
-  would let Catalyst prune part of the query).
+  would let Catalyst prune part of the query);
+- ``build_compiles``/``noop_compiles``: Janino compilations of
+  generated classes in each phase (``CodegenMetrics``' compilation
+  count, one JVM-wide counter), so a pass that recompiles classes the
+  warm-up already compiled shows up here.
 
 Jobs are counted per phase with ``setJobGroup`` and the status tracker.
 The cache is cleared before each query, as the oracle harness does.
@@ -36,6 +40,7 @@ def profile_one(spark, name: str, fn, sf_dir: str) -> dict[str, float | int]:
     """Build ``fn``'s DataFrame, then write it to the noop sink, each
     phase under its own job group."""
     sc = spark.sparkContext
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     spark.catalog.clearCache()
     row: dict[str, float | int] = {}
     df = None
@@ -43,12 +48,13 @@ def profile_one(spark, name: str, fn, sf_dir: str) -> dict[str, float | int]:
         group = f"profile-{name}-{phase}-{time.monotonic_ns()}"
         sc.setJobGroup(group, f"{name} {phase}", True)
         try:
-            t0 = time.perf_counter()
+            c0, t0 = compiles.getCount(), time.perf_counter()
             if phase == "build":
                 df = fn(spark, sf_dir)
             else:
                 df.write.format("noop").mode("overwrite").save()
             row[f"{phase}_s"] = round(time.perf_counter() - t0, 4)
+            row[f"{phase}_compiles"] = compiles.getCount() - c0
             row[f"{phase}_jobs"] = len(sc.statusTracker().getJobIdsForGroup(group))
         finally:
             sc.setJobGroup("", "", False)
@@ -79,7 +85,9 @@ def main(argv: list[str] | None = None) -> int:
 
     totals = {
         key: round(sum(r[key] for r in rows.values()), 4)
-        for key in ("build_jobs", "build_s", "noop_jobs", "noop_s")
+        for key in (
+            "build_jobs", "build_s", "build_compiles", "noop_jobs", "noop_s", "noop_compiles",
+        )
     }
     print(json.dumps({
         "sf_dir": args.sf_dir,
